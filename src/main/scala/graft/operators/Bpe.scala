@@ -368,7 +368,7 @@ object Bpe {
 
   /** Persist a trained tokenizer at `path` as a build-once serving
     * artifact: `merges/` = (rank, a, b, n) in learned order. Plain
-    * overwrite semantics like [[LmScore.saveLm]] — a tokenizer is
+    * overwrite semantics like [[LmScore.save]] — a tokenizer is
     * retrained, never patched (every merge after an edited one would
     * shift), so there is no merge log and no incremental form; atomic
     * replacement for a LIVE tokenizer rides

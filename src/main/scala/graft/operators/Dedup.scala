@@ -1206,7 +1206,7 @@ object Dedup {
   }
 
   /** c8: near-dup clusters with LM-QUALITY survivor selection — the
-    * c2 pipeline's cluster stage composed with [[LmScore.surprisal]]
+    * c2 pipeline's cluster stage composed with the add-½ [[LmScore.score]]
     * as the keep rule: per cluster, keep the most FLUENT member
     * (lowest mean bigram surprisal, ties to the lowest id) instead of
     * c2's longest-text proxy — the CCNet-style refinement where the
@@ -1217,7 +1217,7 @@ object Dedup {
     * Scale shape: identical to [[dedupPipelineSummary]] through the
     * components stage (pairs never outlive the CC loop); the LM score
     * adds one corpus-read train pass + one scoring pass (count tables
-    * checkpointed — see [[LmScore.trainBigram]]), and the survivor
+    * checkpointed — see [[LmScore.train]]), and the survivor
     * pick stays one window pass shuffling on the component key.
     *
     * Membership caveat (inherited by the target-LM variant): a bigram
@@ -1238,24 +1238,31 @@ object Dedup {
     * single-relation oracle. */
   def lmSurvivorClusters(docs: DataFrame, k: Int, bands: Int,
                          rowsPerBand: Int, threshold: Double): DataFrame =
-    lmSurvivorsWith(docs, LmScore.surprisal(docs, docs), k, bands,
+    lmSurvivorsWith(docs,
+      LmScore.score(LmScore.train(SurvivorLm, docs), docs), k, bands,
       rowsPerBand, threshold)
 
   /** c9: [[lmSurvivorClusters]] scored against a PERSISTED
-    * target-domain LM ([[LmScore.saveLm]]) — the CCNet-faithful form:
+    * target-domain LM ([[LmScore.save]]) — the CCNet-faithful form:
     * the keep rule measures fluency under a reference corpus (e.g.
     * Wikipedia), not under the duplicate-laden corpus being deduped,
     * so a 10 000-copy boilerplate cluster cannot vote its own phrasing
     * into the training set. Same cluster stage, same tie rules; only
     * the LM the surprisal comes from changes
-    * ([[LmScore.surprisalAgainstLm]] — one pruned read of the saved
-    * bigram/unigram tables, broadcast when the vocab fits). */
+    * ([[LmScore.load]] — one pruned read of the saved bigram/unigram
+    * tables, broadcast when the vocab fits). The model at `lmPath` is
+    * the global add-½ spec. */
   def lmSurvivorClustersAgainstLm(docs: DataFrame,
                                   spark: org.apache.spark.sql.SparkSession,
                                   lmPath: String, k: Int, bands: Int,
                                   rowsPerBand: Int, threshold: Double): DataFrame =
-    lmSurvivorsWith(docs, LmScore.surprisalAgainstLm(docs, spark, lmPath),
+    lmSurvivorsWith(docs,
+      LmScore.score(LmScore.load(spark, SurvivorLm, lmPath), docs),
       k, bands, rowsPerBand, threshold)
+
+  /** The survivor rule's LM: one global add-½ bigram model. */
+  private val SurvivorLm =
+    LmScore.LmSpec(LmScore.Smoothing.AddHalf, perLang = false)
 
   /** Shared cluster-then-pick body of the two lm-survivor entry points:
     * LSH pairs → connected components → lowest-surprisal member (ties
@@ -1274,7 +1281,7 @@ object Dedup {
     // checkpointed inside the scorer — unpinned, the whole scoring
     // subtree (corpus bigram stream ⋈ model ⋈ backoff + per-doc sum)
     // executes once per consumer, the same once-per-branch pathology
-    // the trainBigram comment documents. The table is |docs| rows of
+    // the LmScore.train comment documents. The table is |docs| rows of
     // four fixed-width columns.
     val scored = scored0.localCheckpoint()
     val quality = scored.select(col("doc_id").as("id"),

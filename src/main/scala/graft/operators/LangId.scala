@@ -75,7 +75,7 @@ object LangId {
             buckets: Int = Buckets): (DataFrame, DataFrame) = {
     val b = lit(buckets.toDouble)
     // the count table feeds the model rows AND the per-lang totals —
-    // checkpoint so the labeled corpus is read once (the trainBigram
+    // checkpoint so the labeled corpus is read once (the LmScore.train
     // pattern); the table is (lang × buckets)-bounded
     val c = feats(labeled, textCol, buckets, Seq("lang"))
       .groupBy(col("lang"), col("f")).agg(count(lit(1)).as("cf"))
@@ -213,18 +213,22 @@ object LangId {
     langConst.coalesce(1).write.mode("overwrite").parquet(s"$path/li_const")
   }
 
-  /** (model, langConst) at `path`; partition-column type inference
-    * disabled so numeric language codes round-trip as the strings the
-    * score joins expect ([[LmScore.loadLmPerLang]]'s reason). */
+  /** The persisted layout: (directory, stated DDL) of the model and
+    * const tables. Stated schemas skip parquet inference on every
+    * load; `lang STRING` keeps numeric language codes from loading as
+    * integer partitions ([[LmScore.load]]'s reason). */
+  private[graft] val layout: Seq[(String, String)] = Seq(
+    "li_model" -> "f BIGINT, dlp BIGINT, lang STRING",
+    "li_const" -> "lang STRING, lp_unseen BIGINT, prior BIGINT, buckets INT")
+
+  /** (model, langConst) at `path`, read with the [[layout]] schemas. */
   def loadLangId(spark: org.apache.spark.sql.SparkSession, path: String)
       : (DataFrame, DataFrame) = {
-    def rd(ddl: String, p: String) = spark.read
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(ddl)).parquet(p)
-    // schemas stated (no per-load parquet inference); `lang STRING`
-    // keeps numeric language codes from loading as integer partitions
-    (rd("f BIGINT, dlp BIGINT, lang STRING", s"$path/li_model"),
-      rd("lang STRING, lp_unseen BIGINT, prior BIGINT, buckets INT",
-        s"$path/li_const"))
+    val Seq(model, const) = layout.map { case (dir, ddl) =>
+      spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
+        .parquet(s"$path/$dir")
+    }
+    (model, const)
   }
 
   /** Predict against the PERSISTED classifier at `path` — equals
@@ -248,31 +252,6 @@ object LangId {
                    buckets: Int = Buckets): DataFrame = {
     val (model, langConst) = train(labeled, textCol, buckets)
     predict(model, langConst, docs, textCol, buckets)
-  }
-
-  /** [[trainPredict]] with scoring in the aggregation-free PARTS shape
-    * (the [[langScorePartsAgainst]] row algebra on in-memory model
-    * frames) — r16 A/B candidate: one (doc_id, lang) exchange instead
-    * of predict's (doc_id, f) pre-aggregation + per-doc-total join.
-    * Integer micro-nat sums are order-free, so the scores (and the
-    * argmax) are bit-identical to [[predict]]'s. Dev/probe use only. */
-  private[operators] def trainPredictParts(labeled: DataFrame,
-      docs: DataFrame, textCol: String = "text",
-      buckets: Int = Buckets): DataFrame = {
-    val (model, langConst) = train(labeled, textCol, buckets)
-    val lc = langConst.drop("buckets")
-    val base = docs.select(col("doc_id"), lower(col(textCol)).as("t"))
-      .where(length(col("t")) >= 3)
-      .select(col("doc_id"), (length(col("t")) - 2).cast("long").as("tf"))
-      .crossJoin(broadcast(lc))
-      .select(col("doc_id"), col("lang"),
-        (col("prior") + col("tf") * col("lp_unseen")).as("v"))
-    val deltas = feats(docs, textCol, buckets, Seq("doc_id"))
-      .join(broadcast(model), "f")
-      .select(col("doc_id"), col("lang"), col("dlp").as("v"))
-    argmax(base.unionByName(deltas)
-      .groupBy(col("doc_id"), col("lang"))
-      .agg(sum(col("v")).as("score")))
   }
 
   /** DuckDB twin of [[trainPredict]] as a CTE chain ending in

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.functions.{PolyHash64, TextFunctions => TF}
 
 /** N-gram language-model quality scoring — the CCNet/KenLM stage the
@@ -11,6 +12,25 @@ import graft.functions.{PolyHash64, TextFunctions => TF}
   * documents into head/middle/tail thirds (CCNet's split) for curation.
   * Also implements DSIR-style hashed-n-gram importance weights (target
   * vs raw log-likelihood ratio) for importance resampling.
+  *
+  * ONE bigram core serves every estimator and scope. An [[LmSpec]]
+  * names the estimator ([[Smoothing]]: add-½, interpolated Kneser–Ney,
+  * modified Kneser–Ney) and whether `lang` keys one model per language;
+  * a global model is the same plan with an empty key set, its one-row
+  * meta table cross-joining as a broadcast scalar. Every consumer —
+  * the q5–q13 queries, the c8–c20 curation gates, the streaming
+  * enrich — runs the same four steps:
+  *
+  *   [[train]] (spec, docs)      → [[LmModel]]  count table → u1/cont/meta → lm
+  *   [[save]] / [[load]]         ↔ a directory with stated schemas
+  *   [[lpRows]] (model, docs)    → (doc_id[, lang], lp) per transition
+  *   [[score]] (model, docs)     → (doc_id[, lang], n_bigrams, logp_micro, surprisal)
+  *
+  * Each estimator contributes only its meta, u1 and seen-bigram lp
+  * expressions (in [[train]]) and its per-transition interpolation arms
+  * (in [[lpRows]]). The two trigram scorers ([[surprisalTrigram]],
+  * [[surprisalKnTrigram]]) keep their own recurrences; the `*Sql`
+  * builders are the DuckDB oracle twins and are independent of the core.
   *
   * Relation to t9/t11 (TextQueries): those likelihood scores stay in
   * LINEAR fixed-point space precisely to dodge ln()'s cross-engine ulp
@@ -27,27 +47,493 @@ import graft.functions.{PolyHash64, TextFunctions => TF}
   * arbitrary shuffle order would not hash-match any single-node oracle).
   * An ulp disagreement changes the quantized value only when
   * ln(p)*1e6 lands within ~1e-10 of a rounding boundary; the division
-  * num/den itself is IEEE-exact in both engines.
+  * num/den itself is IEEE-exact in both engines. The KN family's
+  * probabilities are ×4-scaled integer-valued numerators/denominators
+  * promoted to DOUBLE with identical association on both engines.
   *
-  * Scale shape (100 TB): bigram extraction is map-side (slice+zip, no
-  * join); counting is one hash-agg shuffle on (w1,w2) with map-side
-  * combine; the unigram totals re-aggregate the (much smaller) bigram
-  * COUNT table, not the corpus. Scoring is two shuffle joins (bigram
-  * table, then unigram backoff) that AQE turns into broadcasts whenever
-  * the vocabulary fits — no collected LM, no driver loop. Bucketing
-  * reuses [[Ranking.globalRank]] with `lang` as the leading sort key, so
+  * Scale shape (100 TB): bigram extraction is map-side (one native
+  * word-gram explode, no join); counting is one hash-agg shuffle on
+  * (keys, w1, w2) with map-side combine, checkpointed because it feeds
+  * every model table; u1/cont/meta re-aggregate that (vocab-bounded)
+  * count table, not the corpus. Per-language training is the SAME
+  * shuffles as one model (`lang` joins the aggregation keys — no
+  * per-language loop, no per-language hot partition). Scoring is two
+  * or three left joins that AQE turns into broadcasts whenever the
+  * vocabulary fits — no collected LM, no driver loop. Bucketing reuses
+  * [[Ranking.globalRank]] with `lang` as the leading sort key, so
   * per-language ranks come out of ONE global range-partitioned rank
   * (rank − per-lang offset) with no per-language single partition.
   */
 object LmScore {
 
-  /** Stream of adjacent token pairs per document: map-side only.
-    * Documents with <2 tokens contribute nothing (a bigram model has no
-    * estimate for them; callers LEFT-join scores back when needed). */
-  def bigrams(docs: DataFrame, textCol: String = "text"): DataFrame =
+  /** The bigram estimators. */
+  sealed trait Smoothing
+  object Smoothing {
+
+    /** P(w2|w1) = (c12 + ½) / (c1 + ½·V), V = distinct continuations + 1
+      * (UNK). An unseen w2 under a seen w1 takes the same formula with
+      * c12 = 0 (the per-w1 `lp_unk`); an unseen w1 takes uniform 1/V. */
+    case object AddHalf extends Smoothing
+
+    /** Interpolated Kneser–Ney, the KenLM estimator CCNet runs (KenLM
+      * uses modified KN at order 5; this is the exact interpolated
+      * recurrence at order 2 with one rational discount d = ¾):
+      *
+      *   P(w2|w1) = max(c(w1,w2) − d, 0)/c(w1) + d·N1+(w1,·)/c(w1) · Pc(w2)
+      *   Pc(w2)   = max(N1+(·,w2) − d, 0)/T + d·Du/T · 1/V
+      *
+      * N1+ are distinct-continuation / distinct-context counts, T the
+      * distinct bigram-type total, Du the distinct continuation words,
+      * V = Du + 1. Add-½ gives a word seen 1000× in ONE document the
+      * same backoff mass as one spread over 1000 documents; KN
+      * redistributes discounted mass by HOW MANY DISTINCT CONTEXTS a
+      * word follows (Kneser & Ney 1995; Chen & Goodman 1999). Every
+      * transition has positive mass — no backoff cliff, no flat penalty. */
+    case object Kn extends Smoothing
+
+    /** Modified Kneser–Ney, KenLM's default configuration at the bigram
+      * level: three discounts derived from the count-of-counts
+      * (nₖ = |{(w1,w2) : c(w1,w2) = k}|, Chen & Goodman 1998)
+      *
+      *   Y  = n₁ / (n₁ + 2·n₂)
+      *   D₁ = 1 − 2·Y·n₂/n₁,  D₂ = 2 − 3·Y·n₃/n₂,  D₃₊ = 3 − 4·Y·n₄/n₃
+      *
+      * each seen bigram discounted by the D of its own count tier, the
+      * redistributed mass γ(w1) = D₁·N₁(w1) + D₂·N₂(w1) + D₃₊·N₃₊(w1)
+      * pre-folded into u1. The continuation level is [[Kn]]'s. A
+      * spectrum that cannot estimate valid discounts (any nₖ = 0, or a
+      * Dⱼ outside [0, j]) takes KenLM's `--discount_fallback`
+      * 0.5/1/1.5 — per language when keyed, so a thin language never
+      * poisons a rich one; meta's `estimated` flag records which arm
+      * ran. Divisions are GREATEST-guarded so the fallback arm never
+      * divides by zero (Spark yields Infinity there, DuckDB NULL). */
+    case object Mkn extends Smoothing
+  }
+
+  /** What to train: an estimator, and whether `lang` keys one model per
+    * language (CCNet's prescription) or one model covers every doc. */
+  final case class LmSpec(smoothing: Smoothing, perLang: Boolean) {
+    def keys: Seq[String] = if (perLang) Seq("lang") else Nil
+  }
+
+  /** A trained or loaded model; every table carries the spec's keys.
+    *  - `lm`: seen bigrams (w1, w2, lp);
+    *  - `u1`: per-w1 backoff — add-½ (w1, lp_unk), KN (w1, c1, n1p),
+    *    modified KN (w1, c1, g);
+    *  - `cont`: KN family only, continuation numerators (w2, pcnum);
+    *  - `meta`: one row per key — add-½ (v, lp_unseen), KN (t, du, v,
+    *    pcden, pcnum_unk), modified KN adds (d1, d2, d3, estimated). */
+  final case class LmModel(spec: LmSpec, lm: DataFrame, u1: DataFrame,
+                           cont: Option[DataFrame], meta: DataFrame) {
+    private[LmScore] def tables: Seq[DataFrame] = Seq(lm, u1) ++ cont :+ meta
+  }
+
+  /** Stream of adjacent token pairs per document, carrying `keys`
+    * (e.g. `lang`) through the map-side explode — no id→key join
+    * shuffle. Documents with <2 tokens contribute nothing (a bigram
+    * model has no estimate for them; callers LEFT-join scores back
+    * when needed). */
+  def bigrams(docs: DataFrame, textCol: String = "text",
+              keys: Seq[String] = Nil): DataFrame =
+    docs.select((col("doc_id") +: keys.map(col)) :+
+        explode(graft.functions.Registry.wordGrams(col(textCol), 2)).as("b"): _*)
+      .select((col("doc_id") +: keys.map(col)) ++
+        Seq(col("b.w1").as("w1"), col("b.w2").as("w2")): _*)
+
+  /** log((num)/(den)) in integer micro-nats. floor(x+0.5) rather than
+    * round(): floor is exact on doubles in both engines, while ROUND's
+    * half-away-from-zero vs half-up convention differs for negatives. */
+  def lpMicro(num: Column, den: Column): Column =
+    floor(log(num / den) * lit(1e6) + lit(0.5)).cast("long")
+
+  /** `df` joined to a meta table: a broadcast cross join of its one row
+    * when `keys` is empty, a broadcast equi-join on `keys` otherwise. */
+  private def joinMeta(df: DataFrame, meta: DataFrame, keys: Seq[String],
+                       how: String): DataFrame =
+    if (keys.isEmpty) df.crossJoin(broadcast(meta))
+    else df.join(broadcast(meta), keys, how)
+
+  /** Train the model `spec` names on `docs` (doc_id[, lang], textCol).
+    * The count table is materialized once (`localCheckpoint`): it
+    * feeds every model table and, through them, the scorer — without
+    * the cut none of those branches share (AQE's broadcast conversions
+    * defeat ReusedExchange) and the plan re-reads the whole training
+    * corpus once per branch (measured: 14 parquet scans for q5). */
+  def train(spec: LmSpec, docs: DataFrame, textCol: String = "text"): LmModel = {
+    val k = spec.keys
+    def kc(names: String*): Seq[Column] = (k ++ names).map(col)
+    def withMeta(df: DataFrame, meta: DataFrame) = joinMeta(df, meta, k, "inner")
+    val c12 = bigrams(docs, textCol, k)
+      .groupBy(kc("w1", "w2"): _*).agg(count(lit(1)).as("c12"))
+      .localCheckpoint()
+    spec.smoothing match {
+      case Smoothing.AddHalf =>
+        val c1 = c12.groupBy(kc("w1"): _*).agg(sum(col("c12")).as("c1"))
+        val v = c12.groupBy(kc(): _*)
+          .agg((countDistinct(col("w2")) + 1).cast("double").as("v"))
+        val lm = withMeta(c12.join(c1, k :+ "w1"), v)
+          .select(kc("w1", "w2") :+ lpMicro(col("c12") + lit(0.5),
+            col("c1") + lit(0.5) * col("v")).as("lp"): _*)
+        val unk = withMeta(c1, v)
+          .select(kc("w1") :+ lpMicro(lit(0.5),
+            col("c1") + lit(0.5) * col("v")).as("lp_unk"): _*)
+        val meta = v.select(kc("v") :+
+          lpMicro(lit(1.0), col("v")).as("lp_unseen"): _*)
+        LmModel(spec, lm, unk, None, meta)
+      case kn =>
+        val mkn = kn == Smoothing.Mkn
+        def tier(p: Column): Column = sum(when(p, lit(1L)).otherwise(lit(0L)))
+        val counts = c12.groupBy(kc(): _*).agg(
+          count(lit(1)).cast("double").as("t"),
+          (countDistinct(col("w2")).cast("double").as("du") +:
+            (if (mkn) (1 to 4).map(i => tier(col("c12") === i).as(s"n$i"))
+             else Nil)): _*)
+        val knMeta = Seq(col("t"), col("du"), (col("du") + lit(1.0)).as("v"),
+          (lit(4.0) * col("t") * (col("du") + lit(1.0))).as("pcden"),
+          (lit(3) * col("du")).as("pcnum_unk"))
+        val meta =
+          if (!mkn) counts.select(k.map(col) ++ knMeta: _*)
+          else counts
+            .withColumn("y",
+              col("n1") / greatest(col("n1") + lit(2.0) * col("n2"), lit(1.0)))
+            .withColumn("d1r", lit(1.0) -
+              lit(2.0) * col("y") * col("n2") / greatest(col("n1"), lit(1L)))
+            .withColumn("d2r", lit(2.0) -
+              lit(3.0) * col("y") * col("n3") / greatest(col("n2"), lit(1L)))
+            .withColumn("d3r", lit(3.0) -
+              lit(4.0) * col("y") * col("n4") / greatest(col("n3"), lit(1L)))
+            .withColumn("ok",
+              col("n1") > 0 && col("n2") > 0 && col("n3") > 0 && col("n4") > 0 &&
+                col("d1r") >= 0 && col("d1r") <= 1 &&
+                col("d2r") >= 0 && col("d2r") <= 2 &&
+                col("d3r") >= 0 && col("d3r") <= 3)
+            .select(k.map(col) ++ knMeta ++ Seq(
+              when(col("ok"), col("d1r")).otherwise(lit(0.5)).as("d1"),
+              when(col("ok"), col("d2r")).otherwise(lit(1.0)).as("d2"),
+              when(col("ok"), col("d3r")).otherwise(lit(1.5)).as("d3"),
+              col("ok").as("estimated")): _*)
+        val u1 =
+          if (!mkn) c12.groupBy(kc("w1"): _*)
+            .agg(sum(col("c12")).as("c1"), count(lit(1)).as("n1p"))
+          else withMeta(
+            c12.groupBy(kc("w1"): _*).agg(sum(col("c12")).as("c1"),
+              tier(col("c12") === 1).as("nn1"), tier(col("c12") === 2).as("nn2"),
+              tier(col("c12") >= 3).as("nn3")),
+            meta.select(kc("d1", "d2", "d3"): _*))
+            .select(kc("w1", "c1") :+ (col("d1") * col("nn1") +
+              col("d2") * col("nn2") + col("d3") * col("nn3")).as("g"): _*)
+        // ×4·T·V-scaled continuation numerator — precomputed per w2 so
+        // the scorer's per-row arithmetic is one multiply-add
+        val cont = withMeta(
+            c12.groupBy(kc("w2"): _*).agg(count(lit(1)).as("nc")),
+            meta.select(kc("v", "du"): _*))
+          .select(kc("w2") :+ ((lit(4) * col("nc") - lit(3)) * col("v") +
+            lit(3) * col("du")).as("pcnum"): _*)
+        val lp =
+          if (!mkn) lpMicro(
+            (lit(4) * col("c12") - lit(3)) * col("pcden") +
+              lit(3) * col("n1p") * col("pcnum"),
+            lit(4) * col("c1") * col("pcden"))
+          else lpMicro(
+            (col("c12") - when(col("c12") === 1, col("d1"))
+              .when(col("c12") === 2, col("d2"))
+              .otherwise(col("d3"))) * col("pcden") +
+              col("g") * col("pcnum"),
+            col("c1") * col("pcden"))
+        val lm = withMeta(c12.join(u1, k :+ "w1").join(cont, k :+ "w2"), meta)
+          .select(kc("w1", "w2") :+ lp.as("lp"): _*)
+        LmModel(spec, lm, u1, Some(cont), meta)
+    }
+  }
+
+  /** The persisted layout of an [[LmModel]], in `tables` order: one
+    * (directory, stated DDL) per table. Model tables are
+    * lang-PARTITIONED when keyed (a scorer for one language prunes to
+    * its own partition), so `lang` comes last in their stated schema;
+    * the meta table is one small file with `lang` first. Stated
+    * schemas skip parquet inference on every load, and `lang STRING`
+    * keeps a numeric-looking language code (e.g. "001") from loading
+    * as an integer partition column — which would make the scorer's
+    * string-keyed join silently match nothing. */
+  private[graft] def layout(spec: LmSpec): Seq[(String, String)] = {
+    val bigram = "w1 STRING, w2 STRING, lp BIGINT"
+    val cont = "w2 STRING, pcnum DOUBLE"
+    val knMeta = "t DOUBLE, du DOUBLE, v DOUBLE, pcden DOUBLE, pcnum_unk DOUBLE"
+    val tables = spec.smoothing match {
+      case Smoothing.AddHalf => Seq("bigrams" -> bigram,
+        "unigrams" -> "w1 STRING, lp_unk BIGINT",
+        "meta" -> "v DOUBLE, lp_unseen BIGINT")
+      case Smoothing.Kn => Seq("kn_bigrams" -> bigram,
+        "kn_u1" -> "w1 STRING, c1 BIGINT, n1p BIGINT",
+        "kn_cont" -> cont, "kn_meta" -> knMeta)
+      case Smoothing.Mkn => Seq("mkn_bigrams" -> bigram,
+        "mkn_u1" -> "w1 STRING, c1 BIGINT, g DOUBLE",
+        "mkn_cont" -> cont, "mkn_meta" ->
+          s"$knMeta, d1 DOUBLE, d2 DOUBLE, d3 DOUBLE, estimated BOOLEAN")
+    }
+    if (!spec.perLang) tables
+    else tables.init.map { case (d, ddl) => d -> s"$ddl, lang STRING" } :+
+      (tables.last._1 -> s"lang STRING, ${tables.last._2}")
+  }
+
+  /** Train `spec` on `train` and persist it at `path` in [[layout]].
+    * An n-gram LM is retrained, not patched — counts are corpus
+    * globals, so no partial update preserves the smoothing
+    * denominators — hence plain overwrite semantics, no merge log;
+    * atomic replacement of a LIVE model dir rides
+    * [[Maintenance.retrainAndSwap]]. */
+  def save(spec: LmSpec, train: DataFrame, path: String,
+           textCol: String = "text"): Unit = {
+    val tables = this.train(spec, train, textCol).tables
+    val dirs = layout(spec).map(_._1)
+    dirs.init.zip(tables.init).foreach { case (dir, t) =>
+      val w = t.write.mode("overwrite")
+      (if (spec.perLang) w.partitionBy("lang") else w).parquet(s"$path/$dir")
+    }
+    tables.last.coalesce(1).write.mode("overwrite").parquet(s"$path/${dirs.last}")
+  }
+
+  /** The model `spec` persisted at `path`, read with its stated schemas. */
+  def load(spark: SparkSession, spec: LmSpec, path: String): LmModel = {
+    val t = layout(spec).map { case (dir, ddl) =>
+      spark.read.schema(StructType.fromDDL(ddl)).parquet(s"$path/$dir")
+    }
+    LmModel(spec, t.head, t(1), if (t.size == 4) Some(t(2)) else None, t.last)
+  }
+
+  /** The estimator whose persisted layout sits at a model root, told
+    * apart by its seen-bigram directory; `exists` probes a directory
+    * name under the root. */
+  def persistedSmoothing(exists: String => Boolean): Option[Smoothing] =
+    Seq(Smoothing.AddHalf, Smoothing.Kn, Smoothing.Mkn)
+      .find(s => exists(layout(LmSpec(s, perLang = false)).head._1))
+
+  /** Per-transition log-prob stream of `docs` (doc_id[, lang], textCol)
+    * under `model`: (doc_id[, lang], lp). The one scoring join
+    * skeleton — seen-bigram table, per-w1 table, continuation table
+    * (KN family), meta — with each estimator's interpolation arms:
+    *  - add-½: seen bigram → lp; seen w1 → lp_unk; else uniform 1/V;
+    *  - KN: seen bigram → lp; seen w1 → the continuation-weighted
+    *    backoff; else the continuation distribution itself (an OOV w2
+    *    takes the UNK continuation share);
+    *  - modified KN: KN's arms with γ(w1) as the backoff weight.
+    * A keyed model adds a trailing 0L arm for a document whose language
+    * has NO model — reachable only when train and score corpora differ
+    * (a persisted target model): lp 0 per transition, "no opinion",
+    * rather than a NULL-poisoned sum. The SQL twins carry the same arm.
+    *
+    * Shared by [[score]] and the streaming enrich
+    * (graft.streaming.DocStreams), so the two cannot drift: on a stream
+    * the final per-doc sum runs in a stateless group shell instead of
+    * groupBy, but every lp this emits is identical.
+    *
+    * Join strategy is deliberately left to AQE rather than hinted: a
+    * saturated real-corpus vocabulary keeps the model tables far under
+    * the broadcast threshold (AQE converts the joins — PlanSpec-pinned
+    * at realistic vocab), while the synthetic vocab-grows-with-corpus
+    * ramp (PipelineScaleBench's per-token rewrite) legitimately needs
+    * the shuffle fallback; a forced broadcast() would OOM exactly
+    * there. The fallback shuffles on (w1, w2), whose hottest keys are
+    * the most frequent bigrams — functional, and the documented cost
+    * of an unsaturated vocab. */
+  def lpRows(model: LmModel, docs: DataFrame, textCol: String = "text"): DataFrame = {
+    val k = model.spec.keys
+    val seen = bigrams(docs, textCol, k)
+      .join(model.lm, k ++ Seq("w1", "w2"), "left")
+      .join(model.u1, k :+ "w1", "left")
+    val withMeta = joinMeta(
+      model.cont.fold(seen)(seen.join(_, k :+ "w2", "left")), model.meta, k, "left")
+    val pcnumC = coalesce(col("pcnum"), col("pcnum_unk"))
+    val lp = model.spec.smoothing match {
+      case Smoothing.AddHalf =>
+        coalesce(col("lp"), col("lp_unk"), col("lp_unseen"))
+      case Smoothing.Kn =>
+        when(col("lp").isNotNull, col("lp"))
+          .when(col("c1").isNotNull,
+            lpMicro(lit(3) * col("n1p") * pcnumC,
+              lit(4) * col("c1") * col("pcden")))
+          .otherwise(lpMicro(pcnumC, col("pcden")))
+      case Smoothing.Mkn =>
+        when(col("lp").isNotNull, col("lp"))
+          .when(col("c1").isNotNull,
+            lpMicro(col("g") * pcnumC, col("c1") * col("pcden")))
+          .otherwise(lpMicro(pcnumC, col("pcden")))
+    }
+    withMeta.select((col("doc_id") +: k.map(col)) :+
+      (if (k.isEmpty) lp else coalesce(lp, lit(0L))).as("lp"): _*)
+  }
+
+  /** Per-document (doc_id[, lang], n_bigrams, logp_micro BIGINT,
+    * surprisal DOUBLE = −logp_micro/n_bigrams, i.e. mean micro-nats per
+    * transition; lower is more fluent) of `docs` under `model` — the
+    * BIGINT fold over [[lpRows]]. */
+  def score(model: LmModel, docs: DataFrame, textCol: String = "text"): DataFrame =
+    lpRows(model, docs, textCol)
+      .groupBy(col("doc_id") +: model.spec.keys.map(col): _*)
+      .agg(count(lit(1)).as("n_bigrams"), sum(col("lp")).as("logp_micro"))
+      .withColumn("surprisal",
+        -col("logp_micro").cast("double") / col("n_bigrams"))
+
+  // ------------------------------------------------ trigram scorers (q10/q12)
+
+  /** Adjacent token TRIPLES per document: map-side, same shape as
+    * [[bigrams]] one order up. Documents with <3 tokens contribute
+    * nothing (the trigram analog of the <2 bigram rule). */
+  private def trigrams(docs: DataFrame, textCol: String): DataFrame =
     docs.select(col("doc_id"),
-        explode(graft.functions.Registry.wordGrams(col(textCol), 2)).as("b"))
-      .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
+        explode(graft.functions.Registry.wordGrams(col(textCol), 3)).as("g"))
+      .select(col("doc_id"), col("g.w1").as("w1"),
+        col("g.w2").as("w2"), col("g.w3").as("w3"))
+
+  /** Stupid-backoff penalty in integer micro-nats: ln(0.4)·10⁶,
+    * quantized with the same floor(x+0.5) rule as [[lpMicro]]. Brants
+    * et al. 2007's α≈0.4 — a transition scored by a lower-order tier
+    * pays this fixed cost relative to one the top tier covered, so
+    * falling out of the trigram table is never free (without it the
+    * surprisal spread the CCNet gate buckets on is compressed). A pure
+    * integer add, so the BIGINT-sum discipline is untouched. */
+  val BackoffPenaltyMicro: Long = -916291L
+
+  /** TRIGRAM surprisal with bigram→unigram backoff (q10) — one order
+    * closer to the 5-gram KenLM CCNet actually runs than add-½ [[score]]:
+    * P(w3|w1w2) add-½-smoothed for trigrams OBSERVED in training
+    * (the table has rows only for seen (w1,w2,w3); any unseen trigram
+    * — even under a seen context — backs off), falling back to the
+    * BIGRAM estimate P(w3|w2) (the same add-½ table [[train]]
+    * builds), then to the per-w2 UNK mass, then to uniform 1/V — each
+    * transition scored by the HIGHEST-order model with an opinion,
+    * with every backed-off tier paying the fixed
+    * [[BackoffPenaltyMicro]] (stupid backoff's α=0.4; one level of
+    * backoff here, since the bigram/UNK/uniform arms are all "the
+    * bigram model's opinion"). Exact integer micro-nats at every tier
+    * (one ln per model row, BIGINT sums everywhere — the whole
+    * cascade hash-matches DuckDB). For the principled estimator fix
+    * (discounted mass moved to CONTINUATION counts rather than a flat
+    * penalty) see [[Smoothing.Kn]].
+    * Scale shape: one extra hash-agg shuffle for the trigram count
+    * table (context totals re-aggregate THAT table, not the corpus;
+    * checkpointed like c12), the scoring join keyed (w1,w2,w3) —
+    * broadcast-able at saturated vocab exactly like [[lpRows]], with
+    * the same documented shuffle fallback. Output: (doc_id,
+    * n_trigrams, logp_micro, surprisal). */
+  def surprisalTrigram(train: DataFrame, docs: DataFrame,
+                       textCol: String = "text"): DataFrame = {
+    val c123 = trigrams(train, textCol)
+      .groupBy(col("w1"), col("w2"), col("w3"))
+      .agg(count(lit(1)).as("c123"))
+      .localCheckpoint()
+    val c12t = c123.groupBy(col("w1"), col("w2")).agg(sum(col("c123")).as("ctx"))
+    val v3 = c123.agg((countDistinct(col("w3")) + 1).cast("double").as("v3"))
+    val lm3 = c123.join(c12t, Seq("w1", "w2")).crossJoin(broadcast(v3))
+      .select(col("w1"), col("w2"), col("w3"),
+        lpMicro(col("c123") + lit(0.5), col("ctx") + lit(0.5) * col("v3"))
+          .as("lp3"))
+    val bg = this.train(LmSpec(Smoothing.AddHalf, perLang = false), train, textCol)
+    val uni = bg.meta.select(col("lp_unseen"))
+    trigrams(docs, textCol)
+      .join(lm3, Seq("w1", "w2", "w3"), "left")
+      .join(bg.lm.select(col("w1").as("w2"), col("w2").as("w3"),
+        col("lp").as("lp2")), Seq("w2", "w3"), "left")
+      .join(bg.u1.select(col("w1").as("w2"), col("lp_unk")), Seq("w2"), "left")
+      .crossJoin(broadcast(uni))
+      .select(col("doc_id"),
+        coalesce(col("lp3"), col("lp2") + lit(BackoffPenaltyMicro),
+          col("lp_unk") + lit(BackoffPenaltyMicro),
+          col("lp_unseen") + lit(BackoffPenaltyMicro)).as("lp"))
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_trigrams"), sum(col("lp")).as("logp_micro"))
+      .withColumn("surprisal",
+        -col("logp_micro").cast("double") / col("n_trigrams"))
+  }
+
+  /** TRIGRAM interpolated Kneser-Ney (q12) — [[Smoothing.Kn]] one order
+    * up, i.e. the actual KenLM recurrence shape at order 3 (KenLM runs
+    * modified KN at order 5; this is interpolated KN with a single
+    * rational discount d = 3/4 at every level):
+    *
+    *   P(w3|w1w2) = max(c123−d,0)/c12 + d·N1+(w1w2·)/c12 · Pm(w3|w2)
+    *   Pm(w3|w2)  = max(cm−d,0)/cm2  + d·N1+(w2·)m/cm2  · Pb(w3)
+    *   Pb(w3)     = max(nb−d,0)/TB   + d·DuB/TB · 1/V
+    *
+    * with the LOWER levels estimated from CONTINUATION counts, the KN
+    * signature: cm(w2,w3) = |{w1 : (w1,w2,w3) seen}| (how many distinct
+    * contexts the bigram continues, not how often it occurs), and
+    * nb(w3) = |{w2 : cm(w2,w3) ≥ 1}|. Unseen (w1,w2) contexts score
+    * Pm directly; unseen w2 scores Pb — a seen top context implies a
+    * seen mid context (∃w3 ⇒ (w2,w3) in the mid table), so every arm
+    * is total. The ×4-scaled numerators telescope exactly like
+    * the KN bigram's (per-level sums equal the level denominator —
+    * spec-pinned on hand counts), all products mirrored term for term
+    * in the SQL twin. Scale shape: the trigram count table is the one
+    * corpus-keyed shuffle (checkpointed, five consumers); mid/bot/meta
+    * re-aggregate it; scoring is four left joins, broadcast-able at
+    * saturated vocab. Output: (doc_id, n_trigrams, logp_micro,
+    * surprisal). */
+  def surprisalKnTrigram(train: DataFrame, docs: DataFrame,
+                         textCol: String = "text"): DataFrame = {
+    val kt3 = trigrams(train, textCol)
+      .groupBy(col("w1"), col("w2"), col("w3"))
+      .agg(count(lit(1)).as("c123"))
+      .localCheckpoint()
+    val ktc = kt3.groupBy(col("w1"), col("w2"))
+      .agg(sum(col("c123")).as("c12t"), count(lit(1)).as("n1pt"))
+    // mid level: continuation counts — distinct contexts per (w2,w3)
+    val mid = kt3.groupBy(col("w2"), col("w3"))
+      .agg(countDistinct(col("w1")).as("cm"))
+    val mc = mid.groupBy(col("w2"))
+      .agg(sum(col("cm")).as("cm2"), count(lit(1)).as("n1pm"))
+    val metab = mid
+      .agg(count(lit(1)).cast("double").as("tb"),
+        countDistinct(col("w3")).cast("double").as("dub"))
+      .select(col("tb"), col("dub"), (col("dub") + lit(1.0)).as("v"),
+        (lit(4.0) * col("tb") * (col("dub") + lit(1.0))).as("pbden"),
+        (lit(3) * col("dub")).as("pbnum_unk"))
+    val pb = mid.groupBy(col("w3")).agg(count(lit(1)).as("nb"))
+      .crossJoin(broadcast(metab.select(col("v"), col("dub"))))
+      .select(col("w3"),
+        ((lit(4) * col("nb") - lit(3)) * col("v") + lit(3) * col("dub"))
+          .as("pbnum"))
+    val pmden = mc.crossJoin(broadcast(metab.select(col("pbden"))))
+      .select(col("w2"), col("n1pm"),
+        (lit(4) * col("cm2") * col("pbden")).as("pmden"))
+    val pm2 = mid.join(mc, "w2").join(pb, "w3")
+      .crossJoin(broadcast(metab.select(col("pbden"))))
+      .select(col("w2"), col("w3"),
+        ((lit(4) * col("cm") - lit(3)) * col("pbden") +
+          lit(3) * col("n1pm") * col("pbnum")).as("pmnum"))
+    val lm3 = kt3.join(ktc, Seq("w1", "w2"))
+      .join(pm2, Seq("w2", "w3"))
+      .join(pmden.select(col("w2"), col("pmden")), "w2")
+      .select(col("w1"), col("w2"), col("w3"),
+        lpMicro(
+          (lit(4) * col("c123") - lit(3)) * col("pmden") +
+            lit(3) * col("n1pt") * col("pmnum"),
+          lit(4) * col("c12t") * col("pmden")).as("lp3"))
+    val pbnumX = coalesce(col("pbnum"), col("pbnum_unk"))
+    val pmnumX = coalesce(col("pmnum"),
+      lit(3) * col("n1pm") * pbnumX)
+    trigrams(docs, textCol)
+      .join(lm3, Seq("w1", "w2", "w3"), "left")
+      .join(ktc, Seq("w1", "w2"), "left")
+      .join(pm2, Seq("w2", "w3"), "left")
+      .join(pmden.select(col("w2"), col("n1pm"), col("pmden")),
+        Seq("w2"), "left")
+      .join(pb, Seq("w3"), "left")
+      .crossJoin(broadcast(metab.select(col("pbden"), col("pbnum_unk"))))
+      .select(col("doc_id"),
+        when(col("lp3").isNotNull, col("lp3"))
+          .when(col("c12t").isNotNull,
+            lpMicro(lit(3) * col("n1pt") * pmnumX,
+              lit(4) * col("c12t") * col("pmden")))
+          .when(col("pmden").isNotNull, lpMicro(pmnumX, col("pmden")))
+          .otherwise(lpMicro(pbnumX, col("pbden"))).as("lp"))
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_trigrams"), sum(col("lp")).as("logp_micro"))
+      .withColumn("surprisal",
+        -col("logp_micro").cast("double") / col("n_trigrams"))
+  }
+
+  // ------------------------------------------------ DuckDB oracle twins
 
   /** DuckDB twin of [[bigrams]] as a CTE body over `from`. */
   def bigramsSql(from: String, textExpr: String = "text"): String = {
@@ -58,61 +544,10 @@ object LmScore {
        |WHERE len(t) >= 2""".stripMargin.replace("\n", " ")
   }
 
-  /** log((num)/(den)) in integer micro-nats. floor(x+0.5) rather than
-    * round(): floor is exact on doubles in both engines, while ROUND's
-    * half-away-from-zero vs half-up convention differs for negatives. */
-  def lpMicro(num: Column, den: Column): Column =
-    floor(log(num / den) * lit(1e6) + lit(0.5)).cast("long")
-
   def lpMicroSql(num: String, den: String): String =
     s"CAST(floor(ln(($num)/($den)) * 1000000 + 0.5) AS BIGINT)"
 
-  /** Add-1/2-smoothed bigram model of `train`:
-    * (bigram logp table, unigram-backoff table, vocab-size scalar frame).
-    * P(w2|w1) = (c12 + ½) / (c1 + ½·V); unseen w2 under a seen w1 gets
-    * the same formula with c12 = 0; V = distinct continuations + 1 (UNK).
-    */
-  def trainBigram(train: DataFrame, textCol: String = "text")
-      : (DataFrame, DataFrame, DataFrame) = {
-    // localCheckpoint the count table: it feeds FIVE downstream branches
-    // (lm join, c1 re-agg, vocab scalar, and through them the scorer) —
-    // without materialization none of them share (AQE's broadcast
-    // conversions defeat ReusedExchange) and the plan re-reads the
-    // whole training corpus once per branch (measured: 14 parquet scans
-    // for q5). Checkpointed, the corpus is read ONCE to build the
-    // vocab^2-bounded count table and every branch reads that.
-    val c12 = bigrams(train, textCol)
-      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
-      .localCheckpoint()
-    // unigram totals from the count table (vocab-sized, not corpus-sized)
-    val c1 = c12.groupBy(col("w1")).agg(sum(col("c12")).as("c1"))
-    val v = c12.agg((countDistinct(col("w2")) + 1).cast("double").as("v"))
-    val lm = c12.join(c1, "w1").crossJoin(broadcast(v))
-      .select(col("w1"), col("w2"),
-        lpMicro(col("c12") + lit(0.5), col("c1") + lit(0.5) * col("v")).as("lp"))
-    val unk = c1.crossJoin(broadcast(v))
-      .select(col("w1"),
-        lpMicro(lit(0.5), col("c1") + lit(0.5) * col("v")).as("lp_unk"))
-    (lm, unk, v)
-  }
-
-  /** Per-document total log-probability of `docs` under the model of
-    * `train`: (doc_id, n_bigrams, logp_micro BIGINT, surprisal DOUBLE =
-    * −logp_micro/n_bigrams, i.e. mean micro-nats per transition; lower
-    * is more fluent). Out-of-vocabulary transitions back off to the
-    * per-w1 UNK mass; a fully unseen w1 gets the uniform 1/V. */
-  def surprisal(train: DataFrame, docs: DataFrame,
-                textCol: String = "text"): DataFrame = {
-    val (lm, unk, v) = trainBigram(train, textCol)
-    val meta = v.select(col("v"), lpMicro(lit(1.0), col("v")).as("lp_unseen"))
-    lpRows(docs, lm, unk, meta, textCol)
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("lp")).as("logp_micro"))
-      .withColumn("surprisal",
-        -col("logp_micro").cast("double") / col("n_bigrams"))
-  }
-
-  /** DuckDB twin of [[surprisal]] (train = score = `from`), as a CTE
+  /** DuckDB twin of add-½ global [[score]] (train = score = `from`), as a CTE
     * chain ending in relation `scored`. */
   def surprisalSql(from: String, textExpr: String = "text"): String =
     s"""bg AS (${bigramsSql(from, textExpr)}),
@@ -135,153 +570,111 @@ object LmScore {
        |                LEFT JOIN unk USING (w1) CROSS JOIN vv) s
        |  GROUP BY doc_id)""".stripMargin.replace("\n", " ")
 
-  /** Per-(doc, lang) bigram stream — [[bigrams]] with `lang` riding
-    * the map-side explode (no id→lang join shuffle). Input needs
-    * (doc_id, lang, textCol). */
-  private def bigramsPerLang(docs: DataFrame, textCol: String): DataFrame =
-    docs
-      .select(col("doc_id"), col("lang"),
-        explode(graft.functions.Registry.wordGrams(col(textCol), 2)).as("b"))
-      .select(col("doc_id"), col("lang"),
-        col("b.w1").as("w1"), col("b.w2").as("w2"))
+  /** DuckDB twin of add-½ global [[score]] with DISTINCT train and score
+    * relations — the target-domain-LM form (c9): the model's counts
+    * come from `trainFrom` (any relation or parenthesized+aliased
+    * subquery), the scored stream from `scoreFrom`. Same CTE contract
+    * as [[surprisalSql]] (ends in `scored`); that one stays the
+    * single-relation emitter so the q5/q6/c8 oracle texts — and their
+    * sf1.0 staged-runner cost — don't change. */
+  def surprisalTrainScoreSql(trainFrom: String, scoreFrom: String,
+                             textExpr: String = "text"): String =
+    s"""bgt AS (${bigramsSql(trainFrom, textExpr)}),
+       |c12 AS (SELECT w1, w2, count(*) AS c12 FROM bgt GROUP BY 1, 2),
+       |c1 AS (SELECT w1, sum(c12) AS c1 FROM c12 GROUP BY 1),
+       |vv AS (SELECT CAST(count(DISTINCT w2) + 1 AS DOUBLE) AS v FROM c12),
+       |lm AS (SELECT w1, w2,
+       |         ${lpMicroSql("c12 + 0.5", "c1 + 0.5*v")} AS lp
+       |       FROM c12 JOIN c1 USING (w1) CROSS JOIN vv),
+       |unk AS (SELECT w1, ${lpMicroSql("0.5", "c1 + 0.5*v")} AS lp_unk
+       |        FROM c1 CROSS JOIN vv),
+       |bgs AS (${bigramsSql(scoreFrom, textExpr)}),
+       |scored AS (
+       |  SELECT doc_id, count(*) AS n_bigrams,
+       |         CAST(sum(lp2) AS BIGINT) AS logp_micro,
+       |         -CAST(sum(lp2) AS DOUBLE) / count(*) AS surprisal
+       |  FROM (SELECT bgs.doc_id,
+       |          COALESCE(lm.lp, unk.lp_unk,
+       |                   ${lpMicroSql("1.0", "v")}) AS lp2
+       |        FROM bgs LEFT JOIN lm USING (w1, w2)
+       |                LEFT JOIN unk USING (w1) CROSS JOIN vv) s
+       |  GROUP BY doc_id)""".stripMargin.replace("\n", " ")
 
-  /** |langs| add-½-smoothed bigram models in ONE pass: the language
-    * key simply JOINS the aggregation keys — counts are (lang, w1,
-    * w2), backoff totals (lang, w1), vocab sizes a #langs-row table —
-    * so "train |langs| models" is the SAME two hash-agg shuffles as
-    * one model, no per-language loop, no per-language hot partition.
-    * Returns (bigram table, unigram-backoff table, vocab-size table),
-    * all lang-keyed — the per-language twin of [[trainBigram]]. */
-  def trainBigramPerLang(train: DataFrame, textCol: String = "text")
-      : (DataFrame, DataFrame, DataFrame) = {
-    // same five-consumer pathology as trainBigram's c12: checkpoint the
-    // vocab²-bounded count table so the corpus is read once
-    val c12 = bigramsPerLang(train, textCol)
-      .groupBy(col("lang"), col("w1"), col("w2"))
-      .agg(count(lit(1)).as("c12"))
-      .localCheckpoint()
-    val c1 = c12.groupBy(col("lang"), col("w1")).agg(sum(col("c12")).as("c1"))
-    val v = c12.groupBy(col("lang"))
-      .agg((countDistinct(col("w2")) + 1).cast("double").as("v"))
-    val lm = c12.join(c1, Seq("lang", "w1")).join(broadcast(v), Seq("lang"))
-      .select(col("lang"), col("w1"), col("w2"),
-        lpMicro(col("c12") + lit(0.5), col("c1") + lit(0.5) * col("v")).as("lp"))
-    val unk = c1.join(broadcast(v), Seq("lang"))
-      .select(col("lang"), col("w1"),
-        lpMicro(lit(0.5), col("c1") + lit(0.5) * col("v")).as("lp_unk"))
-    (lm, unk, v)
+  /** DuckDB twin of add-½ per-language [[score]] (train = score =
+    * `from`): CTE chain ending in
+    * `scored_pl` (doc_id, lang, n_bigrams, logp_micro, surprisal). */
+  def surprisalPerLangSql(from: String, textExpr: String = "text"): String = {
+    val toks = TF.wsTokensSql(s"lower($textExpr)")
+    s"""bgl AS (
+       |  SELECT doc_id, lang, t[i] AS w1, t[i+1] AS w2
+       |  FROM (SELECT doc_id, lang, $toks AS t FROM $from) d,
+       |       LATERAL (SELECT unnest(range(1, len(t))) AS i) g
+       |  WHERE len(t) >= 2),
+       |c12l AS (SELECT lang, w1, w2, count(*) AS c12
+       |         FROM bgl GROUP BY 1, 2, 3),
+       |c1l AS (SELECT lang, w1, sum(c12) AS c1 FROM c12l GROUP BY 1, 2),
+       |vl AS (SELECT lang, CAST(count(DISTINCT w2) + 1 AS DOUBLE) AS v
+       |       FROM c12l GROUP BY 1),
+       |lml AS (SELECT lang, w1, w2,
+       |          ${lpMicroSql("c12 + 0.5", "c1 + 0.5*v")} AS lp
+       |        FROM c12l JOIN c1l USING (lang, w1) JOIN vl USING (lang)),
+       |unkl AS (SELECT lang, w1, ${lpMicroSql("0.5", "c1 + 0.5*v")} AS lp_unk
+       |         FROM c1l JOIN vl USING (lang)),
+       |unil AS (SELECT lang, ${lpMicroSql("1.0", "v")} AS lp_unseen FROM vl),
+       |scored_pl AS (
+       |  SELECT doc_id, lang, count(*) AS n_bigrams,
+       |         CAST(sum(lp2) AS BIGINT) AS logp_micro,
+       |         -CAST(sum(lp2) AS DOUBLE) / count(*) AS surprisal
+       |  FROM (SELECT g.doc_id, g.lang,
+       |          COALESCE(lml.lp, unkl.lp_unk, unil.lp_unseen, 0) AS lp2
+       |        FROM bgl g
+       |        LEFT JOIN lml USING (lang, w1, w2)
+       |        LEFT JOIN unkl USING (lang, w1)
+       |        LEFT JOIN unil USING (lang)) s
+       |  GROUP BY doc_id, lang)""".stripMargin.replace("\n", " ")
   }
 
-  /** Shared per-language scoring tail: bigram stream ⋈ model ⋈ backoff
-    * ⋈ #langs-row uniform table, then the per-(doc, lang) BIGINT sum.
-    * The trailing 0L arm fires when a document's language has NO model
-    * at all — reachable only in the train/score split
-    * ([[surprisalAgainstLmPerLang]], where a language can appear on
-    * the scoring side alone): lp 0 per transition, i.e. "no opinion"
-    * rather than a NULL-poisoned sum. In the self-trained form every
-    * scoring language has model rows by construction. The SQL twins
-    * carry the same COALESCE arm. */
-  private def scorePerLang(bg: DataFrame, lm: DataFrame, unk: DataFrame,
-                           uni: DataFrame): DataFrame =
-    lpRowsPerLangOf(bg, lm, unk, uni)
-      .groupBy(col("doc_id"), col("lang"))
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("lp2")).as("logp_micro"))
-      .withColumn("surprisal",
-        -col("logp_micro").cast("double") / col("n_bigrams"))
-
-  /** Per-transition (doc_id, lang, lp2) stream — the per-language twin
-    * of [[lpRows]], shared by the batch scorer above and the streaming
-    * enrich (graft.streaming.DocStreams.lmScoreEnrichPerLang) so the
-    * two cannot drift: on a stream the final per-(doc, lang) sum runs
-    * in a stateless group shell instead of groupBy, but every lp2 this
-    * emits is identical. */
-  private def lpRowsPerLangOf(bg: DataFrame, lm: DataFrame, unk: DataFrame,
-                              uni: DataFrame): DataFrame =
-    bg
-      .join(lm, Seq("lang", "w1", "w2"), "left")
-      .join(unk, Seq("lang", "w1"), "left")
-      .join(broadcast(uni), Seq("lang"), "left")
-      .select(col("doc_id"), col("lang"),
-        coalesce(col("lp"), col("lp_unk"), col("lp_unseen"), lit(0L)).as("lp2"))
-
-  /** [[lpRowsPerLangOf]] against the persisted per-language models at
-    * `path` — the loaded-artifact form the streaming enrich consumes. */
-  def lpRowsPerLang(docs: DataFrame,
-                    spark: org.apache.spark.sql.SparkSession,
-                    path: String, textCol: String = "text"): DataFrame = {
-    val (lm, unk, meta) = loadLmPerLang(spark, path)
-    lpRowsPerLangOf(bigramsPerLang(docs, textCol), lm, unk,
-      meta.select(col("lang"), col("lp_unseen")))
-  }
-
-  /** Adjacent token TRIPLES per document: map-side, same shape as
-    * [[bigrams]] one order up. Documents with <3 tokens contribute
-    * nothing (the trigram analog of the <2 bigram rule). */
-  private def trigrams(docs: DataFrame, textCol: String): DataFrame =
-    docs.select(col("doc_id"),
-        explode(graft.functions.Registry.wordGrams(col(textCol), 3)).as("g"))
-      .select(col("doc_id"), col("g.w1").as("w1"),
-        col("g.w2").as("w2"), col("g.w3").as("w3"))
-
-  /** Stupid-backoff penalty in integer micro-nats: ln(0.4)·10⁶,
-    * quantized with the same floor(x+0.5) rule as [[lpMicro]]. Brants
-    * et al. 2007's α≈0.4 — a transition scored by a lower-order tier
-    * pays this fixed cost relative to one the top tier covered, so
-    * falling out of the trigram table is never free (without it the
-    * surprisal spread the CCNet gate buckets on is compressed). A pure
-    * integer add, so the BIGINT-sum discipline is untouched. */
-  val BackoffPenaltyMicro: Long = -916291L
-
-  /** TRIGRAM surprisal with bigram→unigram backoff (q10) — one order
-    * closer to the 5-gram KenLM CCNet actually runs than [[surprisal]]:
-    * P(w3|w1w2) add-½-smoothed for trigrams OBSERVED in training
-    * (the table has rows only for seen (w1,w2,w3); any unseen trigram
-    * — even under a seen context — backs off), falling back to the
-    * BIGRAM estimate P(w3|w2) (the same add-½ table [[trainBigram]]
-    * builds), then to the per-w2 UNK mass, then to uniform 1/V — each
-    * transition scored by the HIGHEST-order model with an opinion,
-    * with every backed-off tier paying the fixed
-    * [[BackoffPenaltyMicro]] (stupid backoff's α=0.4; one level of
-    * backoff here, since the bigram/UNK/uniform arms are all "the
-    * bigram model's opinion"). Exact integer micro-nats at every tier
-    * (one ln per model row, BIGINT sums everywhere — the whole
-    * cascade hash-matches DuckDB). For the principled estimator fix
-    * (discounted mass moved to CONTINUATION counts rather than a flat
-    * penalty) see [[surprisalKn]].
-    * Scale shape: one extra hash-agg shuffle for the trigram count
-    * table (context totals re-aggregate THAT table, not the corpus;
-    * checkpointed like c12), the scoring join keyed (w1,w2,w3) —
-    * broadcast-able at saturated vocab exactly like [[lpRows]], with
-    * the same documented shuffle fallback. Output: (doc_id,
-    * n_trigrams, logp_micro, surprisal). */
-  def surprisalTrigram(train: DataFrame, docs: DataFrame,
-                       textCol: String = "text"): DataFrame = {
-    val c123 = trigrams(train, textCol)
-      .groupBy(col("w1"), col("w2"), col("w3"))
-      .agg(count(lit(1)).as("c123"))
-      .localCheckpoint()
-    val c12t = c123.groupBy(col("w1"), col("w2")).agg(sum(col("c123")).as("ctx"))
-    val v3 = c123.agg((countDistinct(col("w3")) + 1).cast("double").as("v3"))
-    val lm3 = c123.join(c12t, Seq("w1", "w2")).crossJoin(broadcast(v3))
-      .select(col("w1"), col("w2"), col("w3"),
-        lpMicro(col("c123") + lit(0.5), col("ctx") + lit(0.5) * col("v3"))
-          .as("lp3"))
-    val (lm2, unk2, v2) = trainBigram(train, textCol)
-    val uni = v2.select(lpMicro(lit(1.0), col("v")).as("lp_unseen"))
-    trigrams(docs, textCol)
-      .join(lm3, Seq("w1", "w2", "w3"), "left")
-      .join(lm2.select(col("w1").as("w2"), col("w2").as("w3"),
-        col("lp").as("lp2")), Seq("w2", "w3"), "left")
-      .join(unk2.select(col("w1").as("w2"), col("lp_unk")), Seq("w2"), "left")
-      .crossJoin(broadcast(uni))
-      .select(col("doc_id"),
-        coalesce(col("lp3"), col("lp2") + lit(BackoffPenaltyMicro),
-          col("lp_unk") + lit(BackoffPenaltyMicro),
-          col("lp_unseen") + lit(BackoffPenaltyMicro)).as("lp"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_trigrams"), sum(col("lp")).as("logp_micro"))
-      .withColumn("surprisal",
-        -col("logp_micro").cast("double") / col("n_trigrams"))
+  /** DuckDB twin of add-½ per-language [[score]] against a [[load]]ed
+    * model — per-language
+    * models trained on `trainFrom`, scored over `scoreFrom` (both
+    * need doc_id, lang, textExpr). DuckDB cannot read the persisted
+    * model dir, so the twin re-derives the SAME deterministic models
+    * from the same train slice (save≡train is LmScoreSpec-pinned —
+    * the c9 pattern). Ends in `scored_pl`; the trailing 0 COALESCE
+    * arm mirrors [[lpRows]]' no-model-for-this-language rule. */
+  def surprisalPerLangTrainScoreSql(trainFrom: String, scoreFrom: String,
+                                    textExpr: String = "text"): String = {
+    val toks = TF.wsTokensSql(s"lower($textExpr)")
+    def bgl(alias: String, from: String) =
+      s"""$alias AS (
+         |  SELECT doc_id, lang, t[i] AS w1, t[i+1] AS w2
+         |  FROM (SELECT doc_id, lang, $toks AS t FROM $from) d,
+         |       LATERAL (SELECT unnest(range(1, len(t))) AS i) g
+         |  WHERE len(t) >= 2)""".stripMargin
+    s"""${bgl("bglt", trainFrom)},
+       |c12l AS (SELECT lang, w1, w2, count(*) AS c12
+       |         FROM bglt GROUP BY 1, 2, 3),
+       |c1l AS (SELECT lang, w1, sum(c12) AS c1 FROM c12l GROUP BY 1, 2),
+       |vl AS (SELECT lang, CAST(count(DISTINCT w2) + 1 AS DOUBLE) AS v
+       |       FROM c12l GROUP BY 1),
+       |lml AS (SELECT lang, w1, w2,
+       |          ${lpMicroSql("c12 + 0.5", "c1 + 0.5*v")} AS lp
+       |        FROM c12l JOIN c1l USING (lang, w1) JOIN vl USING (lang)),
+       |unkl AS (SELECT lang, w1, ${lpMicroSql("0.5", "c1 + 0.5*v")} AS lp_unk
+       |         FROM c1l JOIN vl USING (lang)),
+       |unil AS (SELECT lang, ${lpMicroSql("1.0", "v")} AS lp_unseen FROM vl),
+       |${bgl("bgls", scoreFrom)},
+       |scored_pl AS (
+       |  SELECT doc_id, lang, count(*) AS n_bigrams,
+       |         CAST(sum(lp2) AS BIGINT) AS logp_micro,
+       |         -CAST(sum(lp2) AS DOUBLE) / count(*) AS surprisal
+       |  FROM (SELECT g.doc_id, g.lang,
+       |          COALESCE(lml.lp, unkl.lp_unk, unil.lp_unseen, 0) AS lp2
+       |        FROM bgls g
+       |        LEFT JOIN lml USING (lang, w1, w2)
+       |        LEFT JOIN unkl USING (lang, w1)
+       |        LEFT JOIN unil USING (lang)) s
+       |  GROUP BY doc_id, lang)""".stripMargin.replace("\n", " ")
   }
 
   /** DuckDB twin of [[surprisalTrigram]] with DISTINCT train and score
@@ -327,123 +720,9 @@ object LmScore {
        |  GROUP BY doc_id)""".stripMargin.replace("\n", " ")
   }
 
-  // ------------------------------------------------ Kneser-Ney (q11/c15)
-
-  /** Interpolated KNESER-NEY bigram estimator — the KenLM estimator
-    * CCNet actually runs (modified KN at order 5; this is the exact
-    * interpolated-KN recurrence at order 2 with a single discount).
-    * The add-½ family ([[trainBigram]]) gives a word seen 1000× in ONE
-    * document the same backoff mass as one spread over 1000 documents;
-    * KN's continuation counts fix exactly that: the discounted mass
-    * redistributes by HOW MANY DISTINCT CONTEXTS a word follows, not
-    * how often it occurs (Kneser & Ney 1995; Chen & Goodman 1999).
-    *
-    *   P(w2|w1) = max(c(w1,w2) − d, 0)/c(w1) + d·N1+(w1,·)/c(w1) · Pc(w2)
-    *   Pc(w2)   = max(N1+(·,w2) − d, 0)/T + d·Du/T · 1/V
-    *
-    * with d = 3/4 (the classic discount, chosen RATIONAL so every
-    * probability is a ratio of exact integer-valued terms), N1+ the
-    * distinct-continuation / distinct-context counts, T the distinct
-    * bigram-type total, Du = distinct continuation words, V = Du + 1
-    * (UNK — the same vocab convention as [[trainBigram]]). An unseen
-    * w1 scores Pc(w2) directly; an unseen w2 gets the d·Du/(T·V) UNK
-    * share of the continuation distribution — every transition has
-    * positive mass, no separate backoff cascade and no flat penalty
-    * (interpolation is the principled form of what
-    * [[BackoffPenaltyMicro]] approximates for q10).
-    *
-    * Engine-exactness: probabilities are evaluated as ×4-scaled
-    * integer-valued numerators/denominators promoted to DOUBLE with
-    * identical association on both engines (each promotion and product
-    * is IEEE round-to-nearest — deterministic), then quantized once
-    * through [[lpMicro]]'s floor rule; all aggregation stays BIGINT.
-    * Scale shape identical to [[trainBigram]]+[[lpRows]]: the count
-    * table is the one corpus-keyed shuffle (checkpointed — it feeds
-    * five branches); u1/cont/meta re-aggregate THAT table; scoring is
-    * three left joins that AQE broadcasts at saturated vocab.
-    *
-    * Returns (lm: (w1,w2,lp) seen-bigram micro-nats,
-    *          u1: (w1,c1,n1p), cont: (w2,pcnum), meta 1-row
-    *          (t,du,v,pcden,pcnum_unk)). */
-  def trainKnBigram(train: DataFrame, textCol: String = "text")
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val c12 = bigrams(train, textCol)
-      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
-      .localCheckpoint()
-    val u1 = c12.groupBy(col("w1"))
-      .agg(sum(col("c12")).as("c1"), count(lit(1)).as("n1p"))
-    val cont0 = c12.groupBy(col("w2")).agg(count(lit(1)).as("nc"))
-    val meta = c12
-      .agg(count(lit(1)).cast("double").as("t"),
-        countDistinct(col("w2")).cast("double").as("du"))
-      .select(col("t"), col("du"), (col("du") + lit(1.0)).as("v"),
-        (lit(4.0) * col("t") * (col("du") + lit(1.0))).as("pcden"),
-        (lit(3) * col("du")).as("pcnum_unk"))
-    // ×4·T·V-scaled continuation numerator — precomputed per w2 so the
-    // scorer's per-row arithmetic is one multiply-add
-    val cont = cont0.crossJoin(broadcast(meta.select(col("v"), col("du"))))
-      .select(col("w2"),
-        ((lit(4) * col("nc") - lit(3)) * col("v") + lit(3) * col("du"))
-          .as("pcnum"))
-    val lm = c12.join(u1, "w1").join(cont, "w2").crossJoin(broadcast(meta))
-      .select(col("w1"), col("w2"),
-        lpMicro(
-          (lit(4) * col("c12") - lit(3)) * col("pcden") +
-            lit(3) * col("n1p") * col("pcnum"),
-          lit(4) * col("c1") * col("pcden")).as("lp"))
-    (lm, u1, cont, meta)
-  }
-
-  /** Per-document KN surprisal of `docs` under the model of `train`
-    * — the q11 form of [[surprisal]]: (doc_id, n_bigrams, logp_micro,
-    * surprisal). Every transition is scored by the INTERPOLATED
-    * estimate (seen bigram → precomputed lp; seen w1 → the
-    * continuation-weighted backoff; unseen w1 → the continuation
-    * distribution itself), so there is no tier cliff to penalize. */
-  def surprisalKn(train: DataFrame, docs: DataFrame,
-                  textCol: String = "text"): DataFrame = {
-    val (lm, u1, cont, meta) = trainKnBigram(train, textCol)
-    knLpRows(bigrams(docs, textCol), lm, u1, cont, meta)
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("lp")).as("logp_micro"))
-      .withColumn("surprisal",
-        -col("logp_micro").cast("double") / col("n_bigrams"))
-  }
-
-  /** Shared per-transition KN scorer: (doc_id [, lang], lp). The
-    * trailing 0L arm mirrors [[scorePerLang]]'s no-model rule and is
-    * reachable only in lang-keyed train/score splits. */
-  private def knLpRows(bg: DataFrame, lm: DataFrame, u1: DataFrame,
-                       cont: DataFrame, meta: DataFrame,
-                       langKeyed: Boolean = false): DataFrame = {
-    val keys = if (langKeyed) Seq("lang") else Seq.empty[String]
-    val joined =
-      if (langKeyed)
-        bg.join(lm, keys ++ Seq("w1", "w2"), "left")
-          .join(u1, keys :+ "w1", "left")
-          .join(cont, keys :+ "w2", "left")
-          .join(broadcast(meta), keys, "left")
-      else
-        bg.join(lm, Seq("w1", "w2"), "left")
-          .join(u1, Seq("w1"), "left")
-          .join(cont, Seq("w2"), "left")
-          .crossJoin(broadcast(meta))
-    val pcnumC = coalesce(col("pcnum"), col("pcnum_unk"))
-    val outCols = (Seq(col("doc_id")) ++
-      (if (langKeyed) Seq(col("lang")) else Nil)) :+
-      coalesce(
-        when(col("lp").isNotNull, col("lp"))
-          .when(col("c1").isNotNull,
-            lpMicro(lit(3) * col("n1p") * pcnumC,
-              lit(4) * col("c1") * col("pcden")))
-          .otherwise(lpMicro(pcnumC, col("pcden"))),
-        lit(0L)).as("lp")
-    joined.select(outCols: _*)
-  }
-
-  /** DuckDB twin of [[surprisalKn]] with distinct train/score
+  /** DuckDB twin of KN global [[score]] with distinct train/score
     * relations, ending in CTE `kscored`. Expression association
-    * mirrors the Spark side term for term (see [[trainKnBigram]]'s
+    * mirrors the Spark side term for term (see the class doc's
     * engine-exactness note). */
   def surprisalKnSql(trainFrom: String, scoreFrom: String,
                      textExpr: String = "text"): String =
@@ -484,126 +763,7 @@ object LmScore {
        |                 CROSS JOIN kmeta) s
        |  GROUP BY doc_id)""".stripMargin.replace("\n", " ")
 
-  // ------------------------------------------------ modified KN (q13)
-
-  /** MODIFIED Kneser-Ney bigram trainer — KenLM's default estimator
-    * configuration at the bigram level: instead of [[trainKnBigram]]'s
-    * single rational discount d = ¾, three discounts D₁/D₂/D₃₊ are
-    * DERIVED FROM THE CORPUS's count-of-counts (Chen & Goodman 1998;
-    * nₖ = |{(w1,w2) : c(w1,w2) = k}|):
-    *
-    *   Y  = n₁ / (n₁ + 2·n₂)
-    *   D₁ = 1 − 2·Y·n₂/n₁,  D₂ = 2 − 3·Y·n₃/n₂,  D₃₊ = 3 − 4·Y·n₄/n₃
-    *
-    * and each seen bigram is discounted by the D of ITS OWN count
-    * tier, with the redistributed mass γ(w1) = D₁·N₁(w1) + D₂·N₂(w1)
-    * + D₃₊·N₃₊(w1) (Nₖ(w1) = distinct continuations of w1 with count
-    * k). The continuation LOWER level is [[trainKnBigram]]'s
-    * unchanged (d = ¾ over continuation counts, uniform base) — the
-    * modification is a top-level estimator refinement.
-    *
-    * Exactness: the discounts are RATIONALS of integer count-of-counts
-    * evaluated in double arithmetic with identical association on both
-    * engines (the q11 discipline: hash-exactness needs identical IEEE
-    * evaluation order, not integer representability). A corpus whose
-    * count-of-counts cannot estimate valid discounts (any nₖ = 0, or a
-    * derived Dⱼ outside [0, j] — degenerate discounts would produce
-    * negative probabilities) takes KenLM's documented
-    * `--discount_fallback` escape hatch: fixed D₁/D₂/D₃₊ = 0.5/1/1.5,
-    * lmplz's default fallback values. Divisions are GREATEST-guarded so
-    * the fallback arm never divides by zero (Spark yields Infinity
-    * there, DuckDB NULL — the guard keeps both engines off that path;
-    * under valid counts GREATEST(nₖ, 1) = nₖ exactly).
-    *
-    * Same scale shape as [[trainKnBigram]]: one corpus-keyed shuffle
-    * into the checkpointed count table; u1/cont/meta re-aggregate it;
-    * scoring is three vocab-bounded left joins + a one-row broadcast.
-    * Returns (lm: (w1,w2,lp), u1: (w1,c1,g), cont: (w2,pcnum),
-    * meta 1-row). */
-  def trainMknBigram(train: DataFrame, textCol: String = "text")
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val c12 = bigrams(train, textCol)
-      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
-      .localCheckpoint()
-    val meta = c12
-      .agg(count(lit(1)).cast("double").as("t"),
-        countDistinct(col("w2")).cast("double").as("du"),
-        sum(when(col("c12") === 1, lit(1L)).otherwise(lit(0L))).as("n1"),
-        sum(when(col("c12") === 2, lit(1L)).otherwise(lit(0L))).as("n2"),
-        sum(when(col("c12") === 3, lit(1L)).otherwise(lit(0L))).as("n3"),
-        sum(when(col("c12") === 4, lit(1L)).otherwise(lit(0L))).as("n4"))
-      .withColumn("y",
-        col("n1") / greatest(col("n1") + lit(2.0) * col("n2"), lit(1.0)))
-      .withColumn("d1r", lit(1.0) -
-        lit(2.0) * col("y") * col("n2") / greatest(col("n1"), lit(1L)))
-      .withColumn("d2r", lit(2.0) -
-        lit(3.0) * col("y") * col("n3") / greatest(col("n2"), lit(1L)))
-      .withColumn("d3r", lit(3.0) -
-        lit(4.0) * col("y") * col("n4") / greatest(col("n3"), lit(1L)))
-      .withColumn("ok",
-        col("n1") > 0 && col("n2") > 0 && col("n3") > 0 && col("n4") > 0 &&
-          col("d1r") >= 0 && col("d1r") <= 1 &&
-          col("d2r") >= 0 && col("d2r") <= 2 &&
-          col("d3r") >= 0 && col("d3r") <= 3)
-      .select(col("t"), col("du"), (col("du") + lit(1.0)).as("v"),
-        (lit(4.0) * col("t") * (col("du") + lit(1.0))).as("pcden"),
-        (lit(3) * col("du")).as("pcnum_unk"),
-        when(col("ok"), col("d1r")).otherwise(lit(0.5)).as("d1"),
-        when(col("ok"), col("d2r")).otherwise(lit(1.0)).as("d2"),
-        when(col("ok"), col("d3r")).otherwise(lit(1.5)).as("d3"),
-        col("ok").as("estimated"))
-    val u1 = c12.groupBy(col("w1"))
-      .agg(sum(col("c12")).as("c1"),
-        sum(when(col("c12") === 1, lit(1L)).otherwise(lit(0L))).as("nn1"),
-        sum(when(col("c12") === 2, lit(1L)).otherwise(lit(0L))).as("nn2"),
-        sum(when(col("c12") >= 3, lit(1L)).otherwise(lit(0L))).as("nn3"))
-      .crossJoin(broadcast(meta.select(col("d1"), col("d2"), col("d3"))))
-      .select(col("w1"), col("c1"),
-        (col("d1") * col("nn1") + col("d2") * col("nn2") +
-          col("d3") * col("nn3")).as("g"))
-    val cont = c12.groupBy(col("w2")).agg(count(lit(1)).as("nc"))
-      .crossJoin(broadcast(meta.select(col("v"), col("du"))))
-      .select(col("w2"),
-        ((lit(4) * col("nc") - lit(3)) * col("v") + lit(3) * col("du"))
-          .as("pcnum"))
-    val lm = c12.join(u1, "w1").join(cont, "w2").crossJoin(broadcast(meta))
-      .select(col("w1"), col("w2"),
-        lpMicro(
-          (col("c12") - when(col("c12") === 1, col("d1"))
-            .when(col("c12") === 2, col("d2"))
-            .otherwise(col("d3"))) * col("pcden") +
-            col("g") * col("pcnum"),
-          col("c1") * col("pcden")).as("lp"))
-    (lm, u1, cont, meta)
-  }
-
-  /** Per-document MODIFIED-KN surprisal of `docs` under the model of
-    * `train` — q13's form of [[surprisalKn]], same output columns.
-    * Interpolation arms: seen bigram → tier-discounted estimate; seen
-    * w1 → γ(w1)-weighted continuation backoff; unseen w1 → the
-    * continuation distribution itself. */
-  def surprisalMkn(train: DataFrame, docs: DataFrame,
-                   textCol: String = "text"): DataFrame = {
-    val (lm, u1, cont, meta) = trainMknBigram(train, textCol)
-    bigrams(docs, textCol)
-      .join(lm, Seq("w1", "w2"), "left")
-      .join(u1, Seq("w1"), "left")
-      .join(cont, Seq("w2"), "left")
-      .crossJoin(broadcast(meta))
-      .select(col("doc_id"),
-        when(col("lp").isNotNull, col("lp"))
-          .when(col("c1").isNotNull,
-            lpMicro(col("g") * coalesce(col("pcnum"), col("pcnum_unk")),
-              col("c1") * col("pcden")))
-          .otherwise(lpMicro(coalesce(col("pcnum"), col("pcnum_unk")),
-            col("pcden"))).as("lp"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("lp")).as("logp_micro"))
-      .withColumn("surprisal",
-        -col("logp_micro").cast("double") / col("n_bigrams"))
-  }
-
-  /** DuckDB twin of [[surprisalMkn]] with distinct train/score
+  /** DuckDB twin of modified-KN global [[score]] with distinct train/score
     * relations, ending in CTE `mscored`. Discount arithmetic mirrors
     * the Spark side's association term for term (left-assoc products,
     * integer operands promoted to double at the same nodes). */
@@ -670,137 +830,7 @@ object LmScore {
        |                 CROSS JOIN mmeta) s
        |  GROUP BY doc_id)""".stripMargin.replace("\n", " ")
 
-  /** |langs| KN models in ONE pass — the per-language twin of
-    * [[trainKnBigram]]/[[surprisalKn]] for the c15 gate, built the
-    * [[trainBigramPerLang]] way: `lang` simply joins every aggregation
-    * and join key, so training all models is the SAME shuffles as one
-    * and scoring stays one corpus-keyed pass (meta/cont/u1 re-aggregate
-    * the checkpointed count table; the meta join is a #langs-row
-    * broadcast). Train = score = `docs` (doc_id, lang, textCol);
-    * output (doc_id, lang, n_bigrams, logp_micro, surprisal). */
-  def surprisalKnPerLang(docs: DataFrame,
-                         textCol: String = "text"): DataFrame = {
-    val (lm, u1, cont, meta) = trainKnBigramPerLang(docs, textCol)
-    scoreKnPerLang(bigramsPerLang(docs, textCol), lm, u1, cont, meta)
-  }
-
-  /** The |langs|-models-in-one-pass KN trainer behind
-    * [[surprisalKnPerLang]] and [[saveKnLmPerLang]]: returns
-    * (lm, u1, cont, meta), every table lang-keyed. */
-  def trainKnBigramPerLang(train: DataFrame, textCol: String = "text")
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val c12 = bigramsPerLang(train, textCol)
-      .groupBy(col("lang"), col("w1"), col("w2"))
-      .agg(count(lit(1)).as("c12"))
-      .localCheckpoint()
-    val u1 = c12.groupBy(col("lang"), col("w1"))
-      .agg(sum(col("c12")).as("c1"), count(lit(1)).as("n1p"))
-    val cont0 = c12.groupBy(col("lang"), col("w2"))
-      .agg(count(lit(1)).as("nc"))
-    val meta = c12.groupBy(col("lang"))
-      .agg(count(lit(1)).cast("double").as("t"),
-        countDistinct(col("w2")).cast("double").as("du"))
-      .select(col("lang"), col("t"), col("du"),
-        (col("du") + lit(1.0)).as("v"),
-        (lit(4.0) * col("t") * (col("du") + lit(1.0))).as("pcden"),
-        (lit(3) * col("du")).as("pcnum_unk"))
-    val cont = cont0
-      .join(broadcast(meta.select(col("lang"), col("v"), col("du"))), "lang")
-      .select(col("lang"), col("w2"),
-        ((lit(4) * col("nc") - lit(3)) * col("v") + lit(3) * col("du"))
-          .as("pcnum"))
-    val lm = c12.join(u1, Seq("lang", "w1")).join(cont, Seq("lang", "w2"))
-      .join(broadcast(meta), "lang")
-      .select(col("lang"), col("w1"), col("w2"),
-        lpMicro(
-          (lit(4) * col("c12") - lit(3)) * col("pcden") +
-            lit(3) * col("n1p") * col("pcnum"),
-          lit(4) * col("c1") * col("pcden")).as("lp"))
-    (lm, u1, cont, meta)
-  }
-
-  /** Shared per-language KN scoring tail ([[knLpRows]] + the per-(doc,
-    * lang) BIGINT sum); a scoring language with no model takes the 0L
-    * no-opinion arm, [[scorePerLang]]'s rule. */
-  private def scoreKnPerLang(bg: DataFrame, lm: DataFrame, u1: DataFrame,
-                             cont: DataFrame, meta: DataFrame): DataFrame =
-    foldKnPerLang(knLpRows(bg, lm, u1, cont, meta, langKeyed = true))
-
-  /** The per-(doc, lang) fold over a KN transition stream — shared by
-    * the batch scorers and (as the batch half of the equality spec) the
-    * streaming enrich, which runs the same sum in a stateless group
-    * shell instead of groupBy. */
-  private def foldKnPerLang(rows: DataFrame): DataFrame =
-    rows
-      .groupBy(col("doc_id"), col("lang"))
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("lp")).as("logp_micro"))
-      .withColumn("surprisal",
-        -col("logp_micro").cast("double") / col("n_bigrams"))
-
-  /** Per-transition KN (doc_id, lang, lp) against the persisted
-    * per-language KN models at `path` — the KN twin of
-    * [[lpRowsPerLang]], shared by [[surprisalKnAgainstLmPerLang]] and
-    * the streaming enrich
-    * (graft.streaming.DocStreams.lmScoreEnrichKnPerLang) so the batch
-    * and continuous curation paths gate on the SAME estimator and
-    * cannot drift. A scoring language with no model takes the 0L arm. */
-  def lpRowsKnPerLang(docs: DataFrame,
-                      spark: org.apache.spark.sql.SparkSession,
-                      path: String, textCol: String = "text"): DataFrame = {
-    val (lm, u1, cont, meta) = loadKnLmPerLang(spark, path)
-    knLpRows(bigramsPerLang(docs, textCol), lm, u1, cont, meta,
-      langKeyed = true)
-  }
-
-  /** Persist PER-LANGUAGE KN models at `path` — [[saveLmPerLang]]'s
-    * layout for the KN estimator: `kn_bigrams/`, `kn_u1/`, `kn_cont/`
-    * lang-PARTITIONED, `kn_meta/` one row per lang. Same plain-
-    * overwrite retrain-not-patch semantics (continuation counts are
-    * corpus globals — no partial update preserves them); atomic
-    * replacement of a LIVE model rides
-    * [[Maintenance.retrainAndSwap]]. */
-
-  /** Stated persisted-model table layouts: every load call skips
-    * parquet schema inference (a footer read + driver merge per
-    * table), and `lang STRING` in the stated schema does what the old
-    * partition-type-inference toggle did — a numeric language code can
-    * never load as an integer partition column. */
-  private def rd(spark: org.apache.spark.sql.SparkSession, ddl: String,
-                 path: String): DataFrame =
-    spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
-      .parquet(path)
-
-  def saveKnLmPerLang(train: DataFrame, path: String,
-                      textCol: String = "text"): Unit = {
-    val (lm, u1, cont, meta) = trainKnBigramPerLang(train, textCol)
-    lm.write.mode("overwrite").partitionBy("lang").parquet(s"$path/kn_bigrams")
-    u1.write.mode("overwrite").partitionBy("lang").parquet(s"$path/kn_u1")
-    cont.write.mode("overwrite").partitionBy("lang").parquet(s"$path/kn_cont")
-    meta.coalesce(1).write.mode("overwrite").parquet(s"$path/kn_meta")
-  }
-
-  /** (lm, u1, cont, meta) at `path`; schemas stated (see [[rd]]), so
-    * a numeric lang code still loads as STRING. */
-  def loadKnLmPerLang(spark: org.apache.spark.sql.SparkSession, path: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) =
-    (rd(spark, "w1 STRING, w2 STRING, lp BIGINT, lang STRING", s"$path/kn_bigrams"),
-      rd(spark, "w1 STRING, c1 BIGINT, n1p BIGINT, lang STRING", s"$path/kn_u1"),
-      rd(spark, "w2 STRING, pcnum DOUBLE, lang STRING", s"$path/kn_cont"),
-      rd(spark, "lang STRING, t DOUBLE, du DOUBLE, v DOUBLE, pcden DOUBLE, " +
-        "pcnum_unk DOUBLE", s"$path/kn_meta"))
-
-  /** Score `docs` (doc_id, lang, textCol) against the persisted
-    * per-language KN models at `path`; equals [[surprisalKnPerLang]]
-    * row for row when the artifact was saved from the same corpus
-    * (spec-pinned), with the lp-0 no-opinion arm for model-less
-    * languages. */
-  def surprisalKnAgainstLmPerLang(docs: DataFrame,
-                                  spark: org.apache.spark.sql.SparkSession,
-                                  path: String,
-                                  textCol: String = "text"): DataFrame =
-    foldKnPerLang(lpRowsKnPerLang(docs, spark, path, textCol))
-
-  /** DuckDB twin of [[surprisalKnPerLang]] (train = score = `from`),
+  /** DuckDB twin of KN per-language [[score]] (train = score = `from`),
     * ending in `kscored_pl` (doc_id, lang, n_bigrams, logp_micro,
     * surprisal). */
   def surprisalKnPerLangSql(from: String, textExpr: String = "text"): String = {
@@ -851,7 +881,8 @@ object LmScore {
        |  GROUP BY doc_id, lang)""".stripMargin.replace("\n", " ")
   }
 
-  /** DuckDB twin of [[surprisalKnAgainstLmPerLang]] — per-language KN
+  /** DuckDB twin of KN per-language [[score]] against a [[load]]ed
+    * model — per-language KN
     * models trained on `trainFrom`, scored over `scoreFrom` (both need
     * doc_id, lang, textExpr). DuckDB cannot read the persisted model
     * dir, so the twin re-derives the SAME deterministic models from
@@ -910,180 +941,14 @@ object LmScore {
        |  GROUP BY doc_id, lang)""".stripMargin.replace("\n", " ")
   }
 
-  // ------------------------------ modified KN, per language (c19)
-
-  /** |langs| MODIFIED-KN models in ONE pass — [[trainMknBigram]] the
-    * [[trainKnBigramPerLang]] way: `lang` joins every aggregation and
-    * join key, so training all models is the SAME two hash-agg
-    * shuffles as one (count-of-counts, tier counts, and discounts are
-    * all re-aggregations of the ONE checkpointed count table), and
-    * each language derives ITS OWN D₁/D₂/D₃₊ from its own count
-    * spectrum — or takes KenLM's `--discount_fallback` 0.5/1/1.5
-    * independently (a thin language's degenerate spectrum must not
-    * poison a rich one's estimated discounts). Returns (lm, u1, cont,
-    * meta), every table lang-keyed; u1 carries the per-context
-    * redistributed mass γ(w1) = D₁·N₁(w1) + D₂·N₂(w1) + D₃₊·N₃₊(w1)
-    * pre-folded so scoring's per-row arithmetic stays one
-    * multiply-add. */
-  def trainMknBigramPerLang(train: DataFrame, textCol: String = "text")
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val c12 = bigramsPerLang(train, textCol)
-      .groupBy(col("lang"), col("w1"), col("w2"))
-      .agg(count(lit(1)).as("c12"))
-      .localCheckpoint()
-    val meta = c12.groupBy(col("lang"))
-      .agg(count(lit(1)).cast("double").as("t"),
-        countDistinct(col("w2")).cast("double").as("du"),
-        sum(when(col("c12") === 1, lit(1L)).otherwise(lit(0L))).as("n1"),
-        sum(when(col("c12") === 2, lit(1L)).otherwise(lit(0L))).as("n2"),
-        sum(when(col("c12") === 3, lit(1L)).otherwise(lit(0L))).as("n3"),
-        sum(when(col("c12") === 4, lit(1L)).otherwise(lit(0L))).as("n4"))
-      .withColumn("y",
-        col("n1") / greatest(col("n1") + lit(2.0) * col("n2"), lit(1.0)))
-      .withColumn("d1r", lit(1.0) -
-        lit(2.0) * col("y") * col("n2") / greatest(col("n1"), lit(1L)))
-      .withColumn("d2r", lit(2.0) -
-        lit(3.0) * col("y") * col("n3") / greatest(col("n2"), lit(1L)))
-      .withColumn("d3r", lit(3.0) -
-        lit(4.0) * col("y") * col("n4") / greatest(col("n3"), lit(1L)))
-      .withColumn("ok",
-        col("n1") > 0 && col("n2") > 0 && col("n3") > 0 && col("n4") > 0 &&
-          col("d1r") >= 0 && col("d1r") <= 1 &&
-          col("d2r") >= 0 && col("d2r") <= 2 &&
-          col("d3r") >= 0 && col("d3r") <= 3)
-      .select(col("lang"), col("t"), col("du"),
-        (col("du") + lit(1.0)).as("v"),
-        (lit(4.0) * col("t") * (col("du") + lit(1.0))).as("pcden"),
-        (lit(3) * col("du")).as("pcnum_unk"),
-        when(col("ok"), col("d1r")).otherwise(lit(0.5)).as("d1"),
-        when(col("ok"), col("d2r")).otherwise(lit(1.0)).as("d2"),
-        when(col("ok"), col("d3r")).otherwise(lit(1.5)).as("d3"),
-        col("ok").as("estimated"))
-    val u1 = c12.groupBy(col("lang"), col("w1"))
-      .agg(sum(col("c12")).as("c1"),
-        sum(when(col("c12") === 1, lit(1L)).otherwise(lit(0L))).as("nn1"),
-        sum(when(col("c12") === 2, lit(1L)).otherwise(lit(0L))).as("nn2"),
-        sum(when(col("c12") >= 3, lit(1L)).otherwise(lit(0L))).as("nn3"))
-      .join(broadcast(
-        meta.select(col("lang"), col("d1"), col("d2"), col("d3"))), "lang")
-      .select(col("lang"), col("w1"), col("c1"),
-        (col("d1") * col("nn1") + col("d2") * col("nn2") +
-          col("d3") * col("nn3")).as("g"))
-    val cont = c12.groupBy(col("lang"), col("w2"))
-      .agg(count(lit(1)).as("nc"))
-      .join(broadcast(meta.select(col("lang"), col("v"), col("du"))), "lang")
-      .select(col("lang"), col("w2"),
-        ((lit(4) * col("nc") - lit(3)) * col("v") + lit(3) * col("du"))
-          .as("pcnum"))
-    val lm = c12.join(u1, Seq("lang", "w1")).join(cont, Seq("lang", "w2"))
-      .join(broadcast(meta), "lang")
-      .select(col("lang"), col("w1"), col("w2"),
-        lpMicro(
-          (col("c12") - when(col("c12") === 1, col("d1"))
-            .when(col("c12") === 2, col("d2"))
-            .otherwise(col("d3"))) * col("pcden") +
-            col("g") * col("pcnum"),
-          col("c1") * col("pcden")).as("lp"))
-    (lm, u1, cont, meta)
-  }
-
-  /** Shared per-transition MODIFIED-KN scorer — [[knLpRows]]'s shape
-    * with q13's arms (seen bigram → tier-discounted estimate; seen w1
-    * → γ(w1)-weighted continuation backoff; unseen w1 → the
-    * continuation distribution itself; trailing 0L no-model arm in
-    * lang-keyed splits). [[surprisalMkn]] keeps its own inline twin of
-    * the non-keyed arms (its plan predates this helper and is
-    * oracle-gated as q13 — identical expressions). */
-  private def mknLpRows(bg: DataFrame, lm: DataFrame, u1: DataFrame,
-                        cont: DataFrame, meta: DataFrame): DataFrame = {
-    val joined = bg.join(lm, Seq("lang", "w1", "w2"), "left")
-      .join(u1, Seq("lang", "w1"), "left")
-      .join(cont, Seq("lang", "w2"), "left")
-      .join(broadcast(meta), Seq("lang"), "left")
-    val pcnumC = coalesce(col("pcnum"), col("pcnum_unk"))
-    joined.select(col("doc_id"), col("lang"),
-      coalesce(
-        when(col("lp").isNotNull, col("lp"))
-          .when(col("c1").isNotNull,
-            lpMicro(col("g") * pcnumC, col("c1") * col("pcden")))
-          .otherwise(lpMicro(pcnumC, col("pcden"))),
-        lit(0L)).as("lp"))
-  }
-
-  /** |langs| modified-KN models trained and scored in one pass —
-    * train = score = `docs` (doc_id, lang, textCol); output (doc_id,
-    * lang, n_bigrams, logp_micro, surprisal). The c19 gate's
-    * self-trained form and the save≡train reference. */
-  def surprisalMknPerLang(docs: DataFrame,
-                          textCol: String = "text"): DataFrame = {
-    val (lm, u1, cont, meta) = trainMknBigramPerLang(docs, textCol)
-    foldKnPerLang(mknLpRows(bigramsPerLang(docs, textCol),
-      lm, u1, cont, meta))
-  }
-
-  /** Persist PER-LANGUAGE MODIFIED-KN models at `path` —
-    * [[saveKnLmPerLang]]'s layout for q13's estimator: `mkn_bigrams/`,
-    * `mkn_u1/`, `mkn_cont/` lang-PARTITIONED, `mkn_meta/` one row per
-    * lang (its per-language D₁/D₂/D₃₊ and the `estimated` flag ride
-    * along — an operator can see at a glance which languages fell back
-    * to 0.5/1/1.5). Retrain-not-patch like every LM family; atomic
-    * replacement of a LIVE model rides [[Maintenance.retrainAndSwap]],
-    * whose nightly detects the `mkn_bigrams/` root. */
-  def saveMknLmPerLang(train: DataFrame, path: String,
-                       textCol: String = "text"): Unit = {
-    val (lm, u1, cont, meta) = trainMknBigramPerLang(train, textCol)
-    lm.write.mode("overwrite").partitionBy("lang")
-      .parquet(s"$path/mkn_bigrams")
-    u1.write.mode("overwrite").partitionBy("lang").parquet(s"$path/mkn_u1")
-    cont.write.mode("overwrite").partitionBy("lang")
-      .parquet(s"$path/mkn_cont")
-    meta.coalesce(1).write.mode("overwrite").parquet(s"$path/mkn_meta")
-  }
-
-  /** (lm, u1, cont, meta) at `path`; partition-column type inference
-    * disabled for the same numeric-lang-code reason as
-    * [[loadLmPerLang]]. */
-  def loadMknLmPerLang(spark: org.apache.spark.sql.SparkSession,
-                       path: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) =
-    (rd(spark, "w1 STRING, w2 STRING, lp BIGINT, lang STRING", s"$path/mkn_bigrams"),
-      rd(spark, "w1 STRING, c1 BIGINT, g DOUBLE, lang STRING", s"$path/mkn_u1"),
-      rd(spark, "w2 STRING, pcnum DOUBLE, lang STRING", s"$path/mkn_cont"),
-      rd(spark, "lang STRING, t DOUBLE, du DOUBLE, v DOUBLE, pcden DOUBLE, " +
-        "pcnum_unk DOUBLE, d1 DOUBLE, d2 DOUBLE, d3 DOUBLE, estimated BOOLEAN",
-        s"$path/mkn_meta"))
-
-  /** Per-transition modified-KN (doc_id, lang, lp) against the
-    * persisted per-language models at `path` — shared by
-    * [[surprisalMknAgainstLmPerLang]] and the streaming enrich
-    * (graft.streaming.DocStreams.lmScoreEnrichMknPerLang) so batch and
-    * continuous curation gate on the SAME estimator and cannot drift.
-    * A scoring language with no model takes the 0L arm. */
-  def lpRowsMknPerLang(docs: DataFrame,
-                       spark: org.apache.spark.sql.SparkSession,
-                       path: String, textCol: String = "text"): DataFrame = {
-    val (lm, u1, cont, meta) = loadMknLmPerLang(spark, path)
-    mknLpRows(bigramsPerLang(docs, textCol), lm, u1, cont, meta)
-  }
-
-  /** Score `docs` (doc_id, lang, textCol) against the persisted
-    * per-language modified-KN models at `path`; equals
-    * [[surprisalMknPerLang]] row for row when the artifact was saved
-    * from the same corpus (spec-pinned), with the lp-0 no-opinion arm
-    * for model-less languages. */
-  def surprisalMknAgainstLmPerLang(docs: DataFrame,
-                                   spark: org.apache.spark.sql.SparkSession,
-                                   path: String,
-                                   textCol: String = "text"): DataFrame =
-    foldKnPerLang(lpRowsMknPerLang(docs, spark, path, textCol))
-
-  /** DuckDB twin of [[surprisalMknAgainstLmPerLang]] — per-language
+  /** DuckDB twin of modified-KN per-language [[score]] against a
+    * [[load]]ed model — per-language
     * MODIFIED-KN models trained on `trainFrom`, scored over
     * `scoreFrom` (both need doc_id, lang, textExpr). DuckDB cannot
     * read the persisted model dir, so the twin re-derives the SAME
     * deterministic models from the same train slice (save≡train is
     * LmScoreSpec-pinned — the c12/c17 pattern). Discount arithmetic
-    * mirrors [[trainMknBigramPerLang]]'s association term for term,
+    * mirrors [[train]]'s association term for term,
     * per language; ends in `mscored_pl`; the trailing COALESCE-0 arm
     * mirrors the no-model-for-this-language rule. */
   def surprisalMknPerLangTrainScoreSql(trainFrom: String, scoreFrom: String,
@@ -1163,93 +1028,6 @@ object LmScore {
        |  GROUP BY doc_id, lang)""".stripMargin.replace("\n", " ")
   }
 
-  /** TRIGRAM interpolated Kneser-Ney (q12) — [[surprisalKn]] one order
-    * up, i.e. the actual KenLM recurrence shape at order 3 (KenLM runs
-    * modified KN at order 5; this is interpolated KN with a single
-    * rational discount d = 3/4 at every level):
-    *
-    *   P(w3|w1w2) = max(c123−d,0)/c12 + d·N1+(w1w2·)/c12 · Pm(w3|w2)
-    *   Pm(w3|w2)  = max(cm−d,0)/cm2  + d·N1+(w2·)m/cm2  · Pb(w3)
-    *   Pb(w3)     = max(nb−d,0)/TB   + d·DuB/TB · 1/V
-    *
-    * with the LOWER levels estimated from CONTINUATION counts, the KN
-    * signature: cm(w2,w3) = |{w1 : (w1,w2,w3) seen}| (how many distinct
-    * contexts the bigram continues, not how often it occurs), and
-    * nb(w3) = |{w2 : cm(w2,w3) ≥ 1}|. Unseen (w1,w2) contexts score
-    * Pm directly; unseen w2 scores Pb — a seen top context implies a
-    * seen mid context (∃w3 ⇒ (w2,w3) in the mid table), so every arm
-    * is total. The ×4-scaled numerators telescope exactly like
-    * [[trainKnBigram]]'s (per-level sums equal the level denominator —
-    * spec-pinned on hand counts), all products mirrored term for term
-    * in the SQL twin. Scale shape: the trigram count table is the one
-    * corpus-keyed shuffle (checkpointed, five consumers); mid/bot/meta
-    * re-aggregate it; scoring is four left joins, broadcast-able at
-    * saturated vocab. Output: (doc_id, n_trigrams, logp_micro,
-    * surprisal). */
-  def surprisalKnTrigram(train: DataFrame, docs: DataFrame,
-                         textCol: String = "text"): DataFrame = {
-    val kt3 = trigrams(train, textCol)
-      .groupBy(col("w1"), col("w2"), col("w3"))
-      .agg(count(lit(1)).as("c123"))
-      .localCheckpoint()
-    val ktc = kt3.groupBy(col("w1"), col("w2"))
-      .agg(sum(col("c123")).as("c12t"), count(lit(1)).as("n1pt"))
-    // mid level: continuation counts — distinct contexts per (w2,w3)
-    val mid = kt3.groupBy(col("w2"), col("w3"))
-      .agg(countDistinct(col("w1")).as("cm"))
-    val mc = mid.groupBy(col("w2"))
-      .agg(sum(col("cm")).as("cm2"), count(lit(1)).as("n1pm"))
-    val metab = mid
-      .agg(count(lit(1)).cast("double").as("tb"),
-        countDistinct(col("w3")).cast("double").as("dub"))
-      .select(col("tb"), col("dub"), (col("dub") + lit(1.0)).as("v"),
-        (lit(4.0) * col("tb") * (col("dub") + lit(1.0))).as("pbden"),
-        (lit(3) * col("dub")).as("pbnum_unk"))
-    val pb = mid.groupBy(col("w3")).agg(count(lit(1)).as("nb"))
-      .crossJoin(broadcast(metab.select(col("v"), col("dub"))))
-      .select(col("w3"),
-        ((lit(4) * col("nb") - lit(3)) * col("v") + lit(3) * col("dub"))
-          .as("pbnum"))
-    val pmden = mc.crossJoin(broadcast(metab.select(col("pbden"))))
-      .select(col("w2"), col("n1pm"),
-        (lit(4) * col("cm2") * col("pbden")).as("pmden"))
-    val pm2 = mid.join(mc, "w2").join(pb, "w3")
-      .crossJoin(broadcast(metab.select(col("pbden"))))
-      .select(col("w2"), col("w3"),
-        ((lit(4) * col("cm") - lit(3)) * col("pbden") +
-          lit(3) * col("n1pm") * col("pbnum")).as("pmnum"))
-    val lm3 = kt3.join(ktc, Seq("w1", "w2"))
-      .join(pm2, Seq("w2", "w3"))
-      .join(pmden.select(col("w2"), col("pmden")), "w2")
-      .select(col("w1"), col("w2"), col("w3"),
-        lpMicro(
-          (lit(4) * col("c123") - lit(3)) * col("pmden") +
-            lit(3) * col("n1pt") * col("pmnum"),
-          lit(4) * col("c12t") * col("pmden")).as("lp3"))
-    val pbnumX = coalesce(col("pbnum"), col("pbnum_unk"))
-    val pmnumX = coalesce(col("pmnum"),
-      lit(3) * col("n1pm") * pbnumX)
-    trigrams(docs, textCol)
-      .join(lm3, Seq("w1", "w2", "w3"), "left")
-      .join(ktc, Seq("w1", "w2"), "left")
-      .join(pm2, Seq("w2", "w3"), "left")
-      .join(pmden.select(col("w2"), col("n1pm"), col("pmden")),
-        Seq("w2"), "left")
-      .join(pb, Seq("w3"), "left")
-      .crossJoin(broadcast(metab.select(col("pbden"), col("pbnum_unk"))))
-      .select(col("doc_id"),
-        when(col("lp3").isNotNull, col("lp3"))
-          .when(col("c12t").isNotNull,
-            lpMicro(lit(3) * col("n1pt") * pmnumX,
-              lit(4) * col("c12t") * col("pmden")))
-          .when(col("pmden").isNotNull, lpMicro(pmnumX, col("pmden")))
-          .otherwise(lpMicro(pbnumX, col("pbden"))).as("lp"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_trigrams"), sum(col("lp")).as("logp_micro"))
-      .withColumn("surprisal",
-        -col("logp_micro").cast("double") / col("n_trigrams"))
-  }
-
   /** DuckDB twin of [[surprisalKnTrigram]] with distinct train/score
     * relations, ending in `ktscored`; term association mirrored. */
   def surprisalKnTrigramSql(trainFrom: String, scoreFrom: String,
@@ -1318,234 +1096,7 @@ object LmScore {
        |  GROUP BY doc_id)""".stripMargin.replace("\n", " ")
   }
 
-  /** PER-LANGUAGE bigram LMs in ONE pass (q7) — CCNet proper: one
-    * model per language, each document scored under ITS OWN
-    * language's model ([[surprisal]]/q6 train a single cross-language
-    * model, which lets a dominant language's phrasing set the scale
-    * for every other language's scores). Train = score = `docs`
-    * ([[trainBigramPerLang]] + [[scorePerLang]]); the persisted
-    * target-domain form is [[saveLmPerLang]] →
-    * [[surprisalAgainstLmPerLang]]. Input needs (doc_id, lang,
-    * textCol). Same micro-nat quantization, same BIGINT-sum
-    * discipline as [[surprisal]]. */
-  def surprisalPerLang(docs: DataFrame, textCol: String = "text"): DataFrame = {
-    val (lm, unk, v) = trainBigramPerLang(docs, textCol)
-    val uni = v.select(col("lang"), lpMicro(lit(1.0), col("v")).as("lp_unseen"))
-    scorePerLang(bigramsPerLang(docs, textCol), lm, unk, uni)
-  }
-
-  /** Persist PER-LANGUAGE target-domain models at `path` — the CCNet
-    * prescription proper (one Wikipedia-style target LM per language):
-    * `bigrams/` and `unigrams/` lang-PARTITIONED (a scorer for one
-    * language prunes to its own partition), `meta/` one row per lang.
-    * Same plain-overwrite, retrain-not-patch semantics as [[saveLm]];
-    * atomic replacement of a LIVE model dir rides
-    * [[Maintenance.retrainAndSwap]]. */
-  def saveLmPerLang(train: DataFrame, path: String,
-                    textCol: String = "text"): Unit = {
-    val (lm, unk, v) = trainBigramPerLang(train, textCol)
-    lm.write.mode("overwrite").partitionBy("lang").parquet(s"$path/bigrams")
-    unk.write.mode("overwrite").partitionBy("lang").parquet(s"$path/unigrams")
-    v.select(col("lang"), col("v"),
-        lpMicro(lit(1.0), col("v")).as("lp_unseen"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
-
-  /** (bigram table, unigram-backoff table, per-lang meta) at `path`.
-    * Schemas stated ([[rd]]): `lang STRING` keeps a numeric-looking
-    * language code (e.g. "001") from loading as an integer partition
-    * column, which would make the scorer's string-keyed `lang` join
-    * silently match nothing. */
-  def loadLmPerLang(spark: org.apache.spark.sql.SparkSession, path: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    (rd(spark, "w1 STRING, w2 STRING, lp BIGINT, lang STRING", s"$path/bigrams"),
-      rd(spark, "w1 STRING, lp_unk BIGINT, lang STRING", s"$path/unigrams"),
-      rd(spark, "lang STRING, v DOUBLE, lp_unseen BIGINT", s"$path/meta"))
-  }
-
-  /** Score `docs` (doc_id, lang, textCol) against the persisted
-    * per-language models at `path` — the train/score split form the
-    * [[scorePerLang]] 0L arm exists for: a scoring language with no
-    * model partition gets lp 0 per transition ("no opinion"), never a
-    * NULL-poisoned sum. Equals [[surprisalPerLang]] row for row when
-    * the model was saved from the same corpus (spec-pinned). */
-  def surprisalAgainstLmPerLang(docs: DataFrame,
-                                spark: org.apache.spark.sql.SparkSession,
-                                path: String,
-                                textCol: String = "text"): DataFrame = {
-    val (lm, unk, meta) = loadLmPerLang(spark, path)
-    scorePerLang(bigramsPerLang(docs, textCol), lm, unk,
-      meta.select(col("lang"), col("lp_unseen")))
-  }
-
-  /** DuckDB twin of [[surprisalPerLang]]: CTE chain ending in
-    * `scored_pl` (doc_id, lang, n_bigrams, logp_micro, surprisal). */
-  def surprisalPerLangSql(from: String, textExpr: String = "text"): String = {
-    val toks = TF.wsTokensSql(s"lower($textExpr)")
-    s"""bgl AS (
-       |  SELECT doc_id, lang, t[i] AS w1, t[i+1] AS w2
-       |  FROM (SELECT doc_id, lang, $toks AS t FROM $from) d,
-       |       LATERAL (SELECT unnest(range(1, len(t))) AS i) g
-       |  WHERE len(t) >= 2),
-       |c12l AS (SELECT lang, w1, w2, count(*) AS c12
-       |         FROM bgl GROUP BY 1, 2, 3),
-       |c1l AS (SELECT lang, w1, sum(c12) AS c1 FROM c12l GROUP BY 1, 2),
-       |vl AS (SELECT lang, CAST(count(DISTINCT w2) + 1 AS DOUBLE) AS v
-       |       FROM c12l GROUP BY 1),
-       |lml AS (SELECT lang, w1, w2,
-       |          ${lpMicroSql("c12 + 0.5", "c1 + 0.5*v")} AS lp
-       |        FROM c12l JOIN c1l USING (lang, w1) JOIN vl USING (lang)),
-       |unkl AS (SELECT lang, w1, ${lpMicroSql("0.5", "c1 + 0.5*v")} AS lp_unk
-       |         FROM c1l JOIN vl USING (lang)),
-       |unil AS (SELECT lang, ${lpMicroSql("1.0", "v")} AS lp_unseen FROM vl),
-       |scored_pl AS (
-       |  SELECT doc_id, lang, count(*) AS n_bigrams,
-       |         CAST(sum(lp2) AS BIGINT) AS logp_micro,
-       |         -CAST(sum(lp2) AS DOUBLE) / count(*) AS surprisal
-       |  FROM (SELECT g.doc_id, g.lang,
-       |          COALESCE(lml.lp, unkl.lp_unk, unil.lp_unseen, 0) AS lp2
-       |        FROM bgl g
-       |        LEFT JOIN lml USING (lang, w1, w2)
-       |        LEFT JOIN unkl USING (lang, w1)
-       |        LEFT JOIN unil USING (lang)) s
-       |  GROUP BY doc_id, lang)""".stripMargin.replace("\n", " ")
-  }
-
-  /** DuckDB twin of [[surprisalAgainstLmPerLang]] — per-language
-    * models trained on `trainFrom`, scored over `scoreFrom` (both
-    * need doc_id, lang, textExpr). DuckDB cannot read the persisted
-    * model dir, so the twin re-derives the SAME deterministic models
-    * from the same train slice (save≡train is LmScoreSpec-pinned —
-    * the c9 pattern). Ends in `scored_pl`; the trailing 0 COALESCE
-    * arm mirrors [[scorePerLang]]'s no-model-for-this-language rule. */
-  def surprisalPerLangTrainScoreSql(trainFrom: String, scoreFrom: String,
-                                    textExpr: String = "text"): String = {
-    val toks = TF.wsTokensSql(s"lower($textExpr)")
-    def bgl(alias: String, from: String) =
-      s"""$alias AS (
-         |  SELECT doc_id, lang, t[i] AS w1, t[i+1] AS w2
-         |  FROM (SELECT doc_id, lang, $toks AS t FROM $from) d,
-         |       LATERAL (SELECT unnest(range(1, len(t))) AS i) g
-         |  WHERE len(t) >= 2)""".stripMargin
-    s"""${bgl("bglt", trainFrom)},
-       |c12l AS (SELECT lang, w1, w2, count(*) AS c12
-       |         FROM bglt GROUP BY 1, 2, 3),
-       |c1l AS (SELECT lang, w1, sum(c12) AS c1 FROM c12l GROUP BY 1, 2),
-       |vl AS (SELECT lang, CAST(count(DISTINCT w2) + 1 AS DOUBLE) AS v
-       |       FROM c12l GROUP BY 1),
-       |lml AS (SELECT lang, w1, w2,
-       |          ${lpMicroSql("c12 + 0.5", "c1 + 0.5*v")} AS lp
-       |        FROM c12l JOIN c1l USING (lang, w1) JOIN vl USING (lang)),
-       |unkl AS (SELECT lang, w1, ${lpMicroSql("0.5", "c1 + 0.5*v")} AS lp_unk
-       |         FROM c1l JOIN vl USING (lang)),
-       |unil AS (SELECT lang, ${lpMicroSql("1.0", "v")} AS lp_unseen FROM vl),
-       |${bgl("bgls", scoreFrom)},
-       |scored_pl AS (
-       |  SELECT doc_id, lang, count(*) AS n_bigrams,
-       |         CAST(sum(lp2) AS BIGINT) AS logp_micro,
-       |         -CAST(sum(lp2) AS DOUBLE) / count(*) AS surprisal
-       |  FROM (SELECT g.doc_id, g.lang,
-       |          COALESCE(lml.lp, unkl.lp_unk, unil.lp_unseen, 0) AS lp2
-       |        FROM bgls g
-       |        LEFT JOIN lml USING (lang, w1, w2)
-       |        LEFT JOIN unkl USING (lang, w1)
-       |        LEFT JOIN unil USING (lang)) s
-       |  GROUP BY doc_id, lang)""".stripMargin.replace("\n", " ")
-  }
-
-  /** DuckDB twin of [[surprisal]] with DISTINCT train and score
-    * relations — the target-domain-LM form (c9): the model's counts
-    * come from `trainFrom` (any relation or parenthesized+aliased
-    * subquery), the scored stream from `scoreFrom`. Same CTE contract
-    * as [[surprisalSql]] (ends in `scored`); that one stays the
-    * single-relation emitter so the q5/q6/c8 oracle texts — and their
-    * sf1.0 staged-runner cost — don't change. */
-  def surprisalTrainScoreSql(trainFrom: String, scoreFrom: String,
-                             textExpr: String = "text"): String =
-    s"""bgt AS (${bigramsSql(trainFrom, textExpr)}),
-       |c12 AS (SELECT w1, w2, count(*) AS c12 FROM bgt GROUP BY 1, 2),
-       |c1 AS (SELECT w1, sum(c12) AS c1 FROM c12 GROUP BY 1),
-       |vv AS (SELECT CAST(count(DISTINCT w2) + 1 AS DOUBLE) AS v FROM c12),
-       |lm AS (SELECT w1, w2,
-       |         ${lpMicroSql("c12 + 0.5", "c1 + 0.5*v")} AS lp
-       |       FROM c12 JOIN c1 USING (w1) CROSS JOIN vv),
-       |unk AS (SELECT w1, ${lpMicroSql("0.5", "c1 + 0.5*v")} AS lp_unk
-       |        FROM c1 CROSS JOIN vv),
-       |bgs AS (${bigramsSql(scoreFrom, textExpr)}),
-       |scored AS (
-       |  SELECT doc_id, count(*) AS n_bigrams,
-       |         CAST(sum(lp2) AS BIGINT) AS logp_micro,
-       |         -CAST(sum(lp2) AS DOUBLE) / count(*) AS surprisal
-       |  FROM (SELECT bgs.doc_id,
-       |          COALESCE(lm.lp, unk.lp_unk,
-       |                   ${lpMicroSql("1.0", "v")}) AS lp2
-       |        FROM bgs LEFT JOIN lm USING (w1, w2)
-       |                LEFT JOIN unk USING (w1) CROSS JOIN vv) s
-       |  GROUP BY doc_id)""".stripMargin.replace("\n", " ")
-
-  /** Persist the bigram model of `train` at `path` as a build-once
-    * serving artifact: `bigrams/` (w1, w2, lp), `unigrams/` (w1,
-    * lp_unk) and a one-row `meta/` carrying the vocab size and the
-    * precomputed unseen-w1 uniform log-prob. Unlike the incrementally
-    * maintained index families (LSH/decon/PQ-IVF/registry) an n-gram
-    * LM is retrained, not patched — counts are global, so there is no
-    * partial update that preserves the smoothing denominator — hence
-    * plain overwrite semantics, no merge log, no nightly hook. */
-  def saveLm(train: DataFrame, path: String,
-             textCol: String = "text"): Unit = {
-    val (lm, unk, v) = trainBigram(train, textCol)
-    lm.write.mode("overwrite").parquet(s"$path/bigrams")
-    unk.write.mode("overwrite").parquet(s"$path/unigrams")
-    v.select(col("v"), lpMicro(lit(1.0), col("v")).as("lp_unseen"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
-
-  /** (bigram table, unigram-backoff table, 1-row meta) at `path`. */
-  def loadLm(spark: org.apache.spark.sql.SparkSession, path: String)
-      : (DataFrame, DataFrame, DataFrame) =
-    (rd(spark, "w1 STRING, w2 STRING, lp BIGINT", s"$path/bigrams"),
-      rd(spark, "w1 STRING, lp_unk BIGINT", s"$path/unigrams"),
-      rd(spark, "v DOUBLE, lp_unseen BIGINT", s"$path/meta"))
-
-  /** Per-transition log-prob stream of `docs` under a loaded model:
-    * (doc_id, lp) with the [[surprisal]] OOV cascade. Shared by the
-    * batch scorer below and the streaming enrich
-    * (graft.streaming.DocStreams.lmScoreEnrich), so the two cannot
-    * drift: on a stream the final per-doc sum runs in a stateless
-    * group shell instead of groupBy (append streams cannot aggregate
-    * unbounded), but every lp this emits is identical.
-    *
-    * Join strategy is deliberately left to AQE rather than hinted: a
-    * saturated real-corpus vocabulary keeps the model tables far under
-    * the broadcast threshold (AQE converts both joins —
-    * PlanSpec-pinned at realistic vocab), while the synthetic
-    * vocab-grows-with-corpus ramp (PipelineScaleBench's per-token
-    * rewrite) legitimately needs the shuffle fallback; a forced
-    * broadcast() would OOM exactly there. The fallback shuffles on
-    * (w1, w2), whose hottest keys are the most frequent bigrams —
-    * functional, and the documented cost of an unsaturated vocab. */
-  def lpRows(docs: DataFrame, lm: DataFrame, unk: DataFrame,
-             meta: DataFrame, textCol: String = "text"): DataFrame =
-    bigrams(docs, textCol)
-      .join(lm, Seq("w1", "w2"), "left")
-      .join(unk, Seq("w1"), "left")
-      .crossJoin(broadcast(meta.select(col("lp_unseen"))))
-      .select(col("doc_id"),
-        coalesce(col("lp"), col("lp_unk"), col("lp_unseen")).as("lp"))
-
-  /** Batch scoring against a persisted model — equals
-    * [[surprisal]](train, docs) for the train the model was saved
-    * from, row for row (spec-pinned). */
-  def surprisalAgainstLm(docs: DataFrame,
-                         spark: org.apache.spark.sql.SparkSession,
-                         path: String, textCol: String = "text"): DataFrame = {
-    val (lm, unk, meta) = loadLm(spark, path)
-    lpRows(docs, lm, unk, meta, textCol)
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_bigrams"), sum(col("lp")).as("logp_micro"))
-      .withColumn("surprisal",
-        -col("logp_micro").cast("double") / col("n_bigrams"))
-  }
+  // ------------------------------------------------ CCNet buckets, DSIR
 
   /** CCNet-style per-language head/middle/tail thirds by surprisal.
     * Input must carry (doc_id, lang, surprisal). Per-language rank =
@@ -1598,7 +1149,7 @@ object LmScore {
     // checkpoint the two bucket-count tables (<= `buckets` rows each):
     // each feeds both the ratio table and its total scalar — without
     // materialization each consumer re-derives the corpus feature
-    // stream (same 14-scan pathology as trainBigram's c12)
+    // stream (same 14-scan pathology as train's count table)
     val cr = feats(raw).groupBy(col("f")).agg(count(lit(1)).as("cr"))
       .localCheckpoint()
     val ct = feats(target).groupBy(col("f")).agg(count(lit(1)).as("ct"))

@@ -57,11 +57,11 @@ object Maintenance {
                        rebuildAtRowsPerPart: Long = 16L * 1000 * 1000)
 
   /** Retrain-and-swap for the RETRAINED (never patched) artifact
-    * families — bigram LMs ([[LmScore.saveLm]] /
-    * [[LmScore.saveLmPerLang]]) and BPE tokenizers
+    * families — bigram LMs ([[LmScore.save]], every estimator and
+    * scope) and BPE tokenizers
     * ([[Bpe.saveTokenizer]]): counts and merge sequences are global,
     * so there is no partial update that preserves their semantics
-    * (the saveLm scaladoc's argument), but the OPERATIONAL form still
+    * (the LmScore.save scaladoc's argument), but the OPERATIONAL form still
     * needs atomicity — a plain `save` over a live dir rewrites three
     * tables one after another, and a crash between them serves a
     * MIXED model (new bigrams under old smoothing meta) to every
@@ -76,7 +76,7 @@ object Maintenance {
     * files re-reads defensively; the swap is between jobs).
     *
     *   Maintenance.retrainAndSwap(spark, lmPath)(tmp =>
-    *     LmScore.saveLmPerLang(freshTrain, tmp))
+    *     LmScore.save(spec, freshTrain, tmp))
     */
   def retrainAndSwap(spark: SparkSession, path: String)(
       save: String => Unit): Unit = {
@@ -130,23 +130,22 @@ object Maintenance {
       graft.sources.TableSwap.recover(fs, path, "bloom")
       graft.sources.TableSwap.recover(fs, path, "meta")
     }
-    // the retrained families (LM roots carry bigrams/+unigrams/+meta,
-    // KN roots kn_bigrams/+kn_u1/+kn_cont/+kn_meta, modified-KN roots
-    // mkn_bigrams/+mkn_u1/+mkn_cont/+mkn_meta, tokenizer roots
-    // merges/) have no incremental maintenance by
+    // the retrained families (LM roots in any estimator's layout, whose
+    // directory names only LmScore knows; tokenizer roots merges/;
+    // LangId roots li_model/) have no incremental maintenance by
     // design — retrains ride [[retrainAndSwap]], whose crash window is
     // exactly the root swap the heal above covers. Return before the
     // index-family detection (a tokenizer root has no meta/ at all).
-    if (exists("bigrams") || exists("merges") || exists("kn_bigrams") ||
-        exists("mkn_bigrams") || exists("li_model")) {
-      val fam = if (exists("merges")) "tokenizer"
-        else if (exists("mkn_bigrams")) "mkn-lm"
-        else if (exists("kn_bigrams")) "kn-lm"
-        else if (exists("li_model")) "langid"
-        else "lm"
-      return NightlyReport(path, fam,
+    val retrained =
+      if (exists("merges")) Some("tokenizer")
+      else LmScore.persistedSmoothing(exists).map {
+        case LmScore.Smoothing.AddHalf => "lm"
+        case LmScore.Smoothing.Kn => "kn-lm"
+        case LmScore.Smoothing.Mkn => "mkn-lm"
+      }.orElse(if (exists("li_model")) Some("langid") else None)
+    if (retrained.isDefined)
+      return NightlyReport(path, retrained.get,
         if (rootStaged) Seq("heal-swap") else Nil, None, None)
-    }
     // margin-index roots ([[Similarity.saveMarginIndex]] layout:
     // cells/ + centroids/ + yden/ + margin_meta/) would otherwise be
     // misdetected as PQ by the cells/ probe below and crash the drift

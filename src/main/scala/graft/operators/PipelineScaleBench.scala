@@ -124,7 +124,7 @@ object PipelineScaleBench {
     // EQUIVALENTS = total task input bytes across the query's jobs
     // (parquet + cached-block reads) divided by the corpus's on-disk
     // bytes. The claim under test: the localCheckpointed count table
-    // (LmScore.trainBigram) keeps corpus READS flat as volume grows —
+    // (LmScore.train) keeps corpus READS flat as volume grows —
     // one read builds the vocab-bounded count table, one read streams
     // the scoring bigrams; without the cut, every downstream branch
     // re-reads the corpus (the measured 14-scan q5 pathology). The

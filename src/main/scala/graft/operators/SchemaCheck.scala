@@ -2,12 +2,12 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Dev-only: builds every persisted artifact at sf0.001 and prints the
-  * schema parquet inference would produce — the source of truth for the
-  * STATED schemas in the hot-path loaders (Dedup index tables, Clusters
-  * registry, LmScore/LangId models). Re-run after changing any writer
-  * and diff against the stated DDL strings: a drift would otherwise
-  * surface as misread columns at probe time. */
+/** Dev-only: builds the cluster registry and the decon index at sf0.001
+  * and prints the schema parquet inference would produce — the source
+  * of truth for the STATED schemas in their loaders. Re-run after
+  * changing either writer and diff against the stated DDL strings: a
+  * drift would otherwise surface as misread columns at probe time. The
+  * LmScore and LangId layouts are checked by LmSchemaDriftSpec. */
 object SchemaCheck {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[4]")
@@ -16,26 +16,9 @@ object SchemaCheck {
     graft.functions.Registry.registerAll(spark)
     val dir = "/root/testdata/sf0.001"
     val docs = graft.sources.Tables.documents(spark, dir)
-    val labeled = docs.where(pmod(col("doc_id"), lit(3)) === 1)
-      .select(col("doc_id"), col("lang"), col("text"))
     def show(root: String, tables: Seq[String]): Unit = tables.foreach { t =>
       println(s"SCHEMA $root/$t: " + spark.read.parquet(s"$root/$t").schema.toDDL)
     }
-    val d1 = java.nio.file.Files.createTempDirectory("sc_lm").toString
-    LmScore.saveLmPerLang(labeled, d1)
-    show(d1, Seq("bigrams","unigrams","meta"))
-    val d2 = java.nio.file.Files.createTempDirectory("sc_kn").toString
-    LmScore.saveKnLmPerLang(labeled, d2)
-    show(d2, Seq("kn_bigrams","kn_u1","kn_cont","kn_meta"))
-    val d3 = java.nio.file.Files.createTempDirectory("sc_mkn").toString
-    LmScore.saveMknLmPerLang(labeled, d3)
-    show(d3, Seq("mkn_bigrams","mkn_u1","mkn_cont","mkn_meta"))
-    val d4 = java.nio.file.Files.createTempDirectory("sc_li").toString
-    LangId.saveLangId(labeled, d4)
-    show(d4, Seq("li_model","li_const"))
-    val d5 = java.nio.file.Files.createTempDirectory("sc_lm1").toString
-    LmScore.saveLm(labeled, d5)
-    show(d5, Seq("bigrams","unigrams","meta"))
     val d6 = java.nio.file.Files.createTempDirectory("sc_reg").toString
     Clusters.updateRegistry(spark, d6, 0L, docs.select(col("doc_id")).limit(50),
       spark.range(0).select(col("id").as("bid"), col("id").as("cid")), nDocParts = 4)

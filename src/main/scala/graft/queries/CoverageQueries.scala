@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
 import graft.functions.{Num, TextFunctions => TF}
+import graft.operators.LmScore
+import graft.operators.LmScore.{LmSpec, Smoothing}
 
 /** Coverage batch: the SURVEY §2 operator families not yet exercised by
   * the first two batches, mapped onto the star-schema testdata.
@@ -236,10 +238,10 @@ object CoverageQueries {
     // Wikipedia-style target model per language) where c10
     // deliberately self-trains: the held-out %3==1 benchmark slice
     // plays the target domain, its per-language models are trained
-    // and PERSISTED in one pass (LmScore.saveLmPerLang —
+    // and PERSISTED in one pass (LmScore.save —
     // lang-partitioned artifact), and the gate scores the gated
     // corpus against the loaded artifact
-    // (CurationStages.lmGatedAgainstLm). The full persisted lifecycle
+    // (CurationStages.lmGated with the model path). The full persisted lifecycle
     // (train → save → load → score) runs inside the query; the oracle
     // re-derives the same deterministic models from the same slice
     // (save≡train is LmScoreSpec-pinned — the c9 pattern). Everything
@@ -249,11 +251,11 @@ object CoverageQueries {
       val all = Tables.documents(s, dir)
       val docs = synthesized(all)
       DedupQueries.withIndexScratch(s, "c12_lm") { path =>
-        graft.operators.LmScore.saveLmPerLang(
+        LmScore.save(LmSpec(Smoothing.AddHalf, perLang = true),
           benchSlice(all).select(col("doc_id"), col("lang"), col("text")),
           path)
-        val lmKept = lmGatedAgainstLm(gated(docs),
-          all.select(col("doc_id"), col("lang")), s, path)
+        val lmKept = lmGated(gated(docs),
+          all.select(col("doc_id"), col("lang")), Smoothing.AddHalf, Some(path))
         val kept = decontaminated(lmKept, benchSlice(all))
         quotaRollup(curated(kept, components(nearDupPairs(kept))))
       }
@@ -291,7 +293,8 @@ object CoverageQueries {
       import CurationStages._
       val all = Tables.documents(s, dir)
       val docs = synthesized(all)
-      val lmKept = lmGatedKn(gated(docs), all.select(col("doc_id"), col("lang")))
+      val lmKept = lmGated(gated(docs), all.select(col("doc_id"), col("lang")),
+        Smoothing.Kn)
       val kept = decontaminated(lmKept, benchSlice(all))
       quotaRollup(curated(kept, components(nearDupPairs(kept))))
     }),
@@ -300,7 +303,7 @@ object CoverageQueries {
     // configuration CCNet actually runs (its per-language target
     // models ARE KenLM, i.e. Kneser-Ney): per-language KN models
     // trained on the held-out %3==1 target slice, PERSISTED
-    // (LmScore.saveKnLmPerLang — lang-partitioned artifact), the gate
+    // (LmScore.save, KN spec — lang-partitioned artifact), the gate
     // scoring the gated corpus against the loaded artifact. The full
     // persisted lifecycle runs inside the query; the oracle re-derives
     // the same deterministic models from the same slice (save≡train is
@@ -310,11 +313,11 @@ object CoverageQueries {
       val all = Tables.documents(s, dir)
       val docs = synthesized(all)
       DedupQueries.withIndexScratch(s, "c17_knlm") { path =>
-        graft.operators.LmScore.saveKnLmPerLang(
+        LmScore.save(LmSpec(Smoothing.Kn, perLang = true),
           benchSlice(all).select(col("doc_id"), col("lang"), col("text")),
           path)
-        val lmKept = lmGatedKnAgainstLm(gated(docs),
-          all.select(col("doc_id"), col("lang")), s, path)
+        val lmKept = lmGated(gated(docs),
+          all.select(col("doc_id"), col("lang")), Smoothing.Kn, Some(path))
         val kept = decontaminated(lmKept, benchSlice(all))
         quotaRollup(curated(kept, components(nearDupPairs(kept))))
       }
@@ -325,7 +328,7 @@ object CoverageQueries {
     // default; c17's interpolated-KN is its --interpolate_unigrams
     // simplification at one discount). Per-language MKN models trained
     // on the held-out %3==1 target slice, PERSISTED
-    // (LmScore.saveMknLmPerLang — each language's own count-of-count
+    // (LmScore.save, modified-KN spec — each language's own count-of-count
     // spectrum sets its D1/D2/D3+, or falls back to 0.5/1/1.5
     // independently; at gate SFs the synthetic corpus's degenerate
     // spectra make the FALLBACK arm the oracle-exercised path, exactly
@@ -338,11 +341,11 @@ object CoverageQueries {
       val all = Tables.documents(s, dir)
       val docs = synthesized(all)
       DedupQueries.withIndexScratch(s, "c19_mknlm") { path =>
-        graft.operators.LmScore.saveMknLmPerLang(
+        LmScore.save(LmSpec(Smoothing.Mkn, perLang = true),
           benchSlice(all).select(col("doc_id"), col("lang"), col("text")),
           path)
-        val lmKept = lmGatedMknAgainstLm(gated(docs),
-          all.select(col("doc_id"), col("lang")), s, path)
+        val lmKept = lmGated(gated(docs),
+          all.select(col("doc_id"), col("lang")), Smoothing.Mkn, Some(path))
         val kept = decontaminated(lmKept, benchSlice(all))
         quotaRollup(curated(kept, components(nearDupPairs(kept))))
       }

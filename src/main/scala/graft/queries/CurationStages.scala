@@ -50,55 +50,59 @@ private[graft] object CurationStages {
       .localCheckpoint()
   }
 
-  /** CCNet-style LM quality gate (c10's extra stage): score the gated
-    * docs under PER-LANGUAGE bigram LMs of the gated corpus
-    * ([[LmScore.surprisalPerLang]] — CCNet's actual per-language form;
-    * |langs| models in the same two hash-agg shuffles as one), then
+  /** CCNet-style LM quality gate: score the gated docs under
+    * PER-LANGUAGE bigram LMs of estimator `smoothing`, then
     * per-language thirds by surprisal ([[LmScore.ccnetBuckets]] — ONE
     * global rank, lang leading the sort key), keep head+middle. Sits
     * between the Gopher rule gate and decontamination — the CCNet
     * recipe's position in a curation chain. Sub-2-token docs have no
-    * surprisal row and drop with the tail (the oracle twin replays
-    * the same inner join).
+    * surprisal row and drop with the tail (the oracle twins replay
+    * the same inner join). The chains that use it:
+    *  - c10/c13/c14/c18/c20: add-½, self-trained;
+    *  - c12: add-½, persisted target model;
+    *  - c15: interpolated KN, self-trained — because KN redistributes
+    *    backoff mass by continuation counts, its kept set genuinely
+    *    DIFFERS from c10's (LmScoreSpec pins it on the gate corpus);
+    *  - c17/c19: interpolated / modified KN, persisted target models —
+    *    the configuration CCNet actually runs (its per-language target
+    *    models ARE KenLM, whose default estimator is modified KN).
     *
-    * Train = the gated corpus itself — deliberate, and NOT the c8
+    * With `lmPath` empty the models are trained on the gated corpus
+    * itself ([[LmScore.train]] — |langs| models in the same hash-agg
+    * shuffles as one). That is deliberate, and NOT the c8
     * self-training defect c9 fixes: bucketing keeps the best two
     * RELATIVE thirds per language (rank-based within one corpus), so
     * a corpus-wide shift in absolute surprisal cancels, whereas c8's
     * survivor pick compares absolute scores between near-identical
-    * texts where a dup cluster's own mass tips the scale. The
-    * defense has a LIMIT, though: a language whose crawl is
+    * texts where a dup cluster's own mass tips the scale. The defense
+    * has a LIMIT, though: a language whose crawl is
     * boilerplate-dominated still ranks boilerplate phrasing as head
-    * WITHIN that language under a self-trained model. The
-    * target-domain form that fixes it is [[lmGatedAgainstLm]] (c12).
+    * WITHIN that language under a self-trained model. A persisted
+    * TARGET-domain model at `lmPath` ([[LmScore.save]] of the same
+    * estimator) fixes it: it never learns that phrasing in the first
+    * place. Its tables are lang-partitioned pruned reads,
+    * broadcast-able when each language's vocab fits; a scoring
+    * language absent from the target corpus scores lp 0 per
+    * transition (the documented "no opinion" arm) and buckets by rank
+    * like any other.
+    *
     * Pinned: the decon stage consumes the result twice. The model
     * joins stay broadcast-able (count tables are vocab-bounded per
     * language); everything else in the stage is the corpus-keyed
     * scoring pass + a #langs-row broadcast of bucket offsets. */
-  def lmGated(gatedDocs: DataFrame, langs: DataFrame): DataFrame =
-    lmKeep(gatedDocs,
-      LmScore.surprisalPerLang(gatedDocs.join(langs, "doc_id")))
-
-  /** c12's gate — [[lmGated]] scored under PERSISTED per-language
-    * TARGET-domain models ([[LmScore.saveLmPerLang]] at `lmPath`)
-    * instead of self-training on the gated corpus: the form
-    * [[lmGated]]'s scaladoc names as the principled fix for its
-    * boilerplate-dominated-language limit (a language whose crawl is
-    * mostly boilerplate still ranks boilerplate phrasing as head
-    * under a self-trained model; a target-domain model does not learn
-    * that phrasing in the first place). Same thirds, same
-    * keep-head+middle rule; only the model the surprisal comes from
-    * changes ([[LmScore.surprisalAgainstLmPerLang]] — lang-partitioned
-    * pruned reads, broadcast-able when each language's vocab fits). A
-    * scoring language absent from the target corpus scores lp 0 per
-    * transition (the documented "no opinion" arm) and buckets by rank
-    * like any other. */
-  def lmGatedAgainstLm(gatedDocs: DataFrame, langs: DataFrame,
-                       spark: org.apache.spark.sql.SparkSession,
-                       lmPath: String): DataFrame =
-    lmKeep(gatedDocs,
-      LmScore.surprisalAgainstLmPerLang(gatedDocs.join(langs, "doc_id"),
-        spark, lmPath))
+  def lmGated(gatedDocs: DataFrame, langs: DataFrame,
+              smoothing: LmScore.Smoothing = LmScore.Smoothing.AddHalf,
+              lmPath: Option[String] = None): DataFrame = {
+    val spec = LmScore.LmSpec(smoothing, perLang = true)
+    val docs = gatedDocs.join(langs, "doc_id")
+    val model = lmPath.fold(LmScore.train(spec, docs))(
+      LmScore.load(gatedDocs.sparkSession, spec, _))
+    val keep = LmScore.ccnetBuckets(LmScore.score(model, docs)
+        .select(col("doc_id"), col("lang"), col("surprisal")))
+      .where(col("bucket") =!= "tail")
+      .select(col("doc_id"))
+    gatedDocs.join(keep, Seq("doc_id"), "left_semi").localCheckpoint()
+  }
 
   /** The synthetic messy URL of a document (a pure doc_id formula —
     * the corpus carries no URL column): d18's construction with a
@@ -185,58 +189,6 @@ private[graft] object CurationStages {
     val drops = comps.where(col("id") =!= col("comp"))
       .select((col("id") * 3).as("doc_id"))
     gatedDocs.join(drops, Seq("doc_id"), "left_anti").localCheckpoint()
-  }
-
-  /** c15's gate — [[lmGated]] scored under the interpolated
-    * KNESER-NEY per-language models ([[LmScore.surprisalKnPerLang]])
-    * instead of add-½ + backoff: the ESTIMATOR fix (q11's scaladoc has
-    * the burstiness argument) composed into the position the CCNet
-    * recipe gives it. Same self-training stance as [[lmGated]], same
-    * thirds, same keep-head+middle rule; because KN redistributes
-    * backoff mass by continuation counts, the kept set genuinely
-    * DIFFERS from c10's (LmScoreSpec pins the divergence on a bursty
-    * fixture; the c15 oracle pins this chain's exact output). */
-  def lmGatedKn(gatedDocs: DataFrame, langs: DataFrame): DataFrame =
-    lmKeep(gatedDocs,
-      LmScore.surprisalKnPerLang(gatedDocs.join(langs, "doc_id")))
-
-  /** c17's gate — [[lmGatedKn]] scored under PERSISTED per-language
-    * TARGET-domain KN models ([[LmScore.saveKnLmPerLang]] at `lmPath`):
-    * c12's target-domain stance with c15's estimator, i.e. the actual
-    * CCNet configuration (one Wikipedia-style KenLM per language —
-    * KenLM IS Kneser-Ney). Same thirds, same keep rule; a scoring
-    * language with no model takes the lp-0 no-opinion arm. */
-  def lmGatedKnAgainstLm(gatedDocs: DataFrame, langs: DataFrame,
-                         spark: org.apache.spark.sql.SparkSession,
-                         lmPath: String): DataFrame =
-    lmKeep(gatedDocs,
-      LmScore.surprisalKnAgainstLmPerLang(gatedDocs.join(langs, "doc_id"),
-        spark, lmPath))
-
-  /** c19's gate — [[lmGatedKnAgainstLm]] under q13's MODIFIED-KN
-    * estimator ([[LmScore.saveMknLmPerLang]] at `lmPath`): the KenLM
-    * DEFAULT configuration (lmplz estimates modified KN unless told
-    * otherwise), so this is the gate CCNet gets when its target models
-    * are built with stock KenLM. Each language's own count-of-count
-    * spectrum sets its discounts (or falls back to 0.5/1/1.5
-    * independently); same thirds, same keep rule, same lp-0
-    * no-opinion arm. */
-  def lmGatedMknAgainstLm(gatedDocs: DataFrame, langs: DataFrame,
-                          spark: org.apache.spark.sql.SparkSession,
-                          lmPath: String): DataFrame =
-    lmKeep(gatedDocs,
-      LmScore.surprisalMknAgainstLmPerLang(gatedDocs.join(langs, "doc_id"),
-        spark, lmPath))
-
-  /** Shared bucket-and-keep tail of the two LM gates: per-language
-    * thirds by surprisal (ONE global rank), keep head+middle. */
-  private def lmKeep(gatedDocs: DataFrame, scored0: DataFrame): DataFrame = {
-    val scored = scored0
-      .select(col("doc_id"), col("lang"), col("surprisal"))
-    val keep = LmScore.ccnetBuckets(scored)
-      .where(col("bucket") =!= "tail")
-      .select(col("doc_id"))
-    gatedDocs.join(keep, Seq("doc_id"), "left_semi").localCheckpoint()
   }
 
   /** Frame decontamination: drop docs whose k=8 shingle containment in

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 import graft.operators.LmScore
+import graft.operators.LmScore.{LmSpec, Smoothing}
 
 /** LM-quality extension queries (SURVEY §2.10): CCNet-style bigram-LM
   * surprisal scoring + head/middle/tail bucketing, and DSIR hashed-ngram
@@ -13,6 +14,11 @@ import graft.operators.LmScore
   */
 object LmQueries {
 
+  /** `docs` scored under the model `spec` trains on `train`. */
+  private def scored(spec: LmSpec, train: DataFrame,
+                     docs: DataFrame): DataFrame =
+    LmScore.score(LmScore.train(spec, train), docs)
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Q5: per-doc bigram-LM surprisal (train = score = the corpus) —
@@ -20,7 +26,7 @@ object LmQueries {
     // volume bounded while the model still trains on EVERY document
     "q5_bigram_surprisal" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      LmScore.surprisal(docs, docs)
+      scored(LmSpec(Smoothing.AddHalf, perLang = false), docs, docs)
         .where(pmod(col("doc_id"), lit(25)) === 0)
         .orderBy(col("doc_id"))
     }),
@@ -31,10 +37,10 @@ object LmQueries {
     // id checksum + the exact surprisal span of the bucket
     "q6_ccnet_buckets" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val scored = LmScore.surprisal(docs, docs)
+      val byLang = scored(LmSpec(Smoothing.AddHalf, perLang = false), docs, docs)
         .join(docs.select(col("doc_id"), col("lang")), "doc_id")
         .select(col("doc_id"), col("lang"), col("surprisal"))
-      LmScore.ccnetBuckets(scored)
+      LmScore.ccnetBuckets(byLang)
         .groupBy(col("lang"), col("bucket"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("doc_id")).as("id_checksum"),
@@ -51,7 +57,8 @@ object LmQueries {
     // phrasing set the scale for every other language's scores; this
     // is the per-language form CCNet actually prescribes
     "q7_per_lang_surprisal" -> ((s, dir) => {
-      LmScore.surprisalPerLang(Tables.documents(s, dir))
+      val docs = Tables.documents(s, dir)
+      scored(LmSpec(Smoothing.AddHalf, perLang = true), docs, docs)
         .where(pmod(col("doc_id"), lit(25)) === 0)
         .orderBy(col("doc_id"))
     }),
@@ -94,9 +101,9 @@ object LmQueries {
       val held = docs.where(pmod(col("doc_id"), lit(3)) === 2)
         .select(col("doc_id"), col("text"))
       val pred = graft.operators.LangId.trainPredict(labeled, held)
-      LmScore.surprisalPerLang(
-          held.join(pred.select(col("doc_id"),
-            col("pred_lang").as("lang")), "doc_id"))
+      val keyed = held.join(pred.select(col("doc_id"),
+        col("pred_lang").as("lang")), "doc_id")
+      scored(LmSpec(Smoothing.AddHalf, perLang = true), keyed, keyed)
         .where(pmod(col("doc_id"), lit(5)) === 0)
         .orderBy(col("doc_id"))
     }),
@@ -132,7 +139,7 @@ object LmQueries {
     // ranking flip add-½ cannot express is LmScoreSpec-pinned.
     "q11_kn_surprisal" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      LmScore.surprisalKn(
+      scored(LmSpec(Smoothing.Kn, perLang = false),
           docs.where(pmod(col("doc_id"), lit(2)) === 0),
           docs.where(pmod(col("doc_id"), lit(2)) === 1))
         .where(pmod(col("doc_id"), lit(25)) === 1)
@@ -167,7 +174,7 @@ object LmQueries {
     // LmScoreSpec-pinned.
     "q13_mkn_surprisal" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      LmScore.surprisalMkn(
+      scored(LmSpec(Smoothing.Mkn, perLang = false),
           docs.where(pmod(col("doc_id"), lit(2)) === 0),
           docs.where(pmod(col("doc_id"), lit(2)) === 1))
         .where(pmod(col("doc_id"), lit(25)) === 1)
@@ -193,9 +200,9 @@ object LmQueries {
         k = 3, bands = 8, rowsPerBand = 4, threshold = 0.05)),
 
     // C9: c8 with the CCNet-faithful TARGET-domain LM — the model is
-    // trained on the English slice, PERSISTED (LmScore.saveLm), and
-    // survivor selection scores every cluster member against the saved
-    // artifact (surprisalAgainstLm), so a duplicate-heavy cluster
+    // trained on the English slice, PERSISTED (LmScore.save), and
+    // survivor selection scores every cluster member against the loaded
+    // artifact, so a duplicate-heavy cluster
     // cannot inflate its own phrasing's probability. The full persisted
     // lifecycle (train → save → load → score) runs inside the query;
     // the oracle re-derives the same deterministic model from the same
@@ -204,7 +211,8 @@ object LmQueries {
     "c9_target_lm_survivors" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       DedupQueries.withIndexScratch(s, "c9_lm") { path =>
-        LmScore.saveLm(docs.where(col("lang") === "en"), path)
+        LmScore.save(LmSpec(Smoothing.AddHalf, perLang = false),
+          docs.where(col("lang") === "en"), path)
         graft.operators.Dedup.lmSurvivorClustersAgainstLm(docs, s, path,
           k = 3, bands = 8, rowsPerBand = 4, threshold = 0.05)
       }

@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.operators.Dedup
+import graft.operators.{Dedup, LmScore}
+import graft.operators.LmScore.LmSpec
 
 /** Streaming document operators — the continuous form of the corpus
   * curation loop. The reference has no stream processing; this is the
@@ -851,13 +852,13 @@ object DocStreams {
 
   /** Enrich a stream of (doc_id, text) rows with their bigram-LM
     * surprisal against the persisted model at `path`
-    * ([[graft.operators.LmScore.saveLm]]) — the quality-gate feed of a
-    * continuous ingestion pipeline, stream-static like
-    * [[graft.streaming.VectorStreams.pqIvfEnrich]]. The per-transition
-    * log-probs come from the SAME [[graft.operators.LmScore.lpRows]]
-    * the batch scorer uses (join against the model tables, OOV backoff
-    * cascade included), so streamed scores equal
-    * `surprisalAgainstLm` row for row (spec-pinned). The one
+    * (the global add-½ spec of [[graft.operators.LmScore.save]]) — the
+    * quality-gate feed of a continuous ingestion pipeline,
+    * stream-static like [[graft.streaming.VectorStreams.pqIvfEnrich]].
+    * The per-transition log-probs come from the SAME
+    * [[graft.operators.LmScore.lpRows]] the batch scorer uses (join
+    * against the model tables, OOV backoff cascade included), so
+    * streamed scores equal `LmScore.score` row for row (spec-pinned). The one
     * mechanical difference: append streams cannot run an unbounded
     * groupBy, so the per-doc sum folds in a STATELESS
     * flatMapGroupsWithState shell — every bigram of a document lives
@@ -867,8 +868,9 @@ object DocStreams {
                     textCol: String = "text"): Dataset[DocScore] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val (lm, unk, meta) = graft.operators.LmScore.loadLm(spark, path)
-    graft.operators.LmScore.lpRows(docs, lm, unk, meta, textCol)
+    val model = LmScore.load(spark,
+      LmSpec(LmScore.Smoothing.AddHalf, perLang = false), path)
+    LmScore.lpRows(model, docs, textCol)
       .as[(Long, Long)]
       .groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
@@ -884,20 +886,25 @@ object DocStreams {
                              logp_micro: Long, surprisal: Double)
 
   /** PER-LANGUAGE twin of [[lmScoreEnrich]]: a stream of (doc_id,
-    * lang, text) rows scored against the persisted per-language
-    * target models at `path` ([[graft.operators.LmScore.saveLmPerLang]])
-    * — the continuous form of the c12 gate's scoring stage. Same
-    * shared-lp contract (`LmScore.lpRowsPerLang` IS the batch
-    * scorer's transition stream, including the lp-0 no-opinion arm
-    * for a language with no model), same stateless per-(doc, lang)
-    * fold shell, so streamed scores equal `surprisalAgainstLmPerLang`
-    * row for row (spec-pinned). */
+    * lang, text) rows scored against the persisted per-language target
+    * models of estimator `smoothing` at `path`
+    * ([[graft.operators.LmScore.save]]) — the continuous form of the
+    * c12 (add-½), c17 (KN) and c19 (modified KN) gates' scoring stage,
+    * so the streaming curation path gates on the SAME estimator as the
+    * batch one. Same shared-lp contract ([[graft.operators.LmScore.lpRows]]
+    * IS the batch scorer's transition stream, including the lp-0
+    * no-opinion arm for a language with no model), same stateless
+    * per-(doc, lang) fold shell, so streamed scores equal
+    * `LmScore.score` against the loaded model row for row with zero
+    * state rows (spec-pinned). */
   def lmScoreEnrichPerLang(docs: DataFrame, path: String,
+                           smoothing: LmScore.Smoothing = LmScore.Smoothing.AddHalf,
                            textCol: String = "text")
       : Dataset[DocScorePerLang] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.operators.LmScore.lpRowsPerLang(docs, spark, path, textCol)
+    val model = LmScore.load(spark, LmSpec(smoothing, perLang = true), path)
+    LmScore.lpRows(model, docs, textCol)
       .as[(Long, String, Long)]
       .groupByKey(r => (r._1, r._2))
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
@@ -911,18 +918,6 @@ object DocStreams {
       }
   }
 
-  /** KNESER-NEY twin of [[lmScoreEnrichPerLang]]: a stream of (doc_id,
-    * lang, text) rows scored against the persisted per-language KN
-    * models at `path` ([[graft.operators.LmScore.saveKnLmPerLang]]) —
-    * the continuous form of the c17 gate, so the streaming curation
-    * path gates on the SAME interpolated-KN estimator as the batch
-    * one. The per-transition log-probs come from the shared
-    * `LmScore.lpRowsKnPerLang` (the batch scorer's transition stream,
-    * including the lp-0 no-opinion arm for a language with no model);
-    * the per-(doc, lang) sum folds in the same stateless
-    * flatMapGroupsWithState shell, so streamed scores equal
-    * `surprisalKnAgainstLmPerLang` row for row with zero state rows
-    * (spec-pinned). */
   /** Continuous image near-dup curation against a persisted
     * Hamming-band index ([[graft.operators.Dedup.saveHammingIndex]]
     * layout — m7's daily lifecycle as a stream sink):
@@ -1054,25 +1049,6 @@ object DocStreams {
     } finally cached.unpersist(blocking = false)
   }
 
-  def lmScoreEnrichKnPerLang(docs: DataFrame, path: String,
-                             textCol: String = "text")
-      : Dataset[DocScorePerLang] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    graft.operators.LmScore.lpRowsKnPerLang(docs, spark, path, textCol)
-      .as[(Long, String, Long)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: (Long, String), rows: Iterator[(Long, String, Long)],
-         _: GroupState[Boolean]) =>
-          var n = 0L
-          var s = 0L
-          rows.foreach { r => n += 1; s += r._3 }
-          Iterator.single(DocScorePerLang(key._1, key._2, n, s,
-            -s.toDouble / n))
-      }
-  }
-
   case class DocLangPred(doc_id: Long, pred_lang: String, score_micro: Long)
 
   /** Continuous language identification against the PERSISTED
@@ -1110,32 +1086,6 @@ object DocStreams {
             }
           }
           Iterator.single(DocLangPred(key, bestLang, bestScore))
-      }
-  }
-
-  /** MODIFIED-KN twin of [[lmScoreEnrichKnPerLang]]: scores against
-    * the persisted per-language modified-KN models at `path`
-    * ([[graft.operators.LmScore.saveMknLmPerLang]]) — the continuous
-    * form of the c19 gate, sharing `LmScore.lpRowsMknPerLang` with the
-    * batch scorer so the two paths gate on the SAME estimator
-    * (streamed ≡ `surprisalMknAgainstLmPerLang` row for row with zero
-    * state rows — spec-pinned, including the lp-0 no-model arm). */
-  def lmScoreEnrichMknPerLang(docs: DataFrame, path: String,
-                              textCol: String = "text")
-      : Dataset[DocScorePerLang] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    graft.operators.LmScore.lpRowsMknPerLang(docs, spark, path, textCol)
-      .as[(Long, String, Long)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: (Long, String), rows: Iterator[(Long, String, Long)],
-         _: GroupState[Boolean]) =>
-          var n = 0L
-          var s = 0L
-          rows.foreach { r => n += 1; s += r._3 }
-          Iterator.single(DocScorePerLang(key._1, key._2, n, s,
-            -s.toDouble / n))
       }
   }
 }

@@ -335,11 +335,13 @@ class PlanSpec extends AnyFunSuite {
     // broadcast actually happens, so the shuffle fallback is the
     // documented exception, not the silent default
     import org.apache.spark.sql.functions.col
+    import graft.operators.LmScore
     val docs = graft.sources.Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"))
     val dir = java.nio.file.Files.createTempDirectory("lpbc").toString
-    graft.operators.LmScore.saveLm(docs, dir)
-    val scored = graft.operators.LmScore.surprisalAgainstLm(docs, spark, dir)
+    val spec = LmScore.LmSpec(LmScore.Smoothing.AddHalf, perLang = false)
+    LmScore.save(spec, docs, dir)
+    val scored = LmScore.score(LmScore.load(spark, spec, dir), docs)
     scored.count() // settle AQE
     val p = scored.queryExecution.executedPlan.toString
     val nBroadcast = "BroadcastHashJoin".r.findAllIn(p).length

@@ -2,12 +2,16 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import graft.TestSpark
+import graft.operators.LmScore.{LmModel, LmSpec, Smoothing}
 
-/** Fixture pins for the bigram-LM surprisal scorer (q5/q6) and the DSIR
-  * importance weights (s23). Counts and smoothing are checked against
-  * hand arithmetic; the micro-nat quantization, OOV backoff cascade,
-  * and bucket-boundary integer rule each get an explicit case.
+/** Fixture pins for the n-gram LM core (q5–q13, the c8–c20 gates) and
+  * the DSIR importance weights (s23). Counts and smoothing are checked
+  * against hand arithmetic per estimator; the micro-nat quantization,
+  * OOV backoff cascade, and bucket-boundary integer rule each get an
+  * explicit case; the persisted lifecycle is pinned once over every
+  * spec.
   */
 class LmScoreSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -15,16 +19,27 @@ class LmScoreSpec extends AnyFunSuite {
 
   private def micro(p: Double): Long = math.floor(math.log(p) * 1e6 + 0.5).toLong
 
+  private val globalAddHalf = LmSpec(Smoothing.AddHalf, perLang = false)
+  private val globalKn = LmSpec(Smoothing.Kn, perLang = false)
+  private val globalMkn = LmSpec(Smoothing.Mkn, perLang = false)
+
+  /** `docs` scored under the model `spec` trains on `train`. */
+  private def scored(spec: LmSpec, train: DataFrame, docs: DataFrame) =
+    LmScore.score(LmScore.train(spec, train), docs)
+
+  private def tmpDir(prefix: String) =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
   test("trainBigram: add-half smoothing over hand-counted bigrams") {
     // corpus: "a b a b" -> (a,b) x2, (b,a) x1 ; "b b" -> (b,b) x1
     // c1: a->2, b->2 ; vocab = distinct w2 {a,b} + 1 = 3
     val docs = Seq((1L, "a b a b"), (2L, "b b")).toDF("doc_id", "text")
-    val (lm, unk, _) = LmScore.trainBigram(docs)
-    val got = lm.collect().map(r => ((r.getString(0), r.getString(1)), r.getLong(2))).toMap
+    val m = LmScore.train(globalAddHalf, docs)
+    val got = m.lm.collect().map(r => ((r.getString(0), r.getString(1)), r.getLong(2))).toMap
     assert(got(("a", "b")) === micro((2 + 0.5) / (2 + 1.5)))
     assert(got(("b", "a")) === micro((1 + 0.5) / (2 + 1.5)))
     assert(got(("b", "b")) === micro((1 + 0.5) / (2 + 1.5)))
-    val u = unk.collect().map(r => (r.getString(0), r.getLong(1))).toMap
+    val u = m.u1.collect().map(r => (r.getString(0), r.getLong(1))).toMap
     assert(u("a") === micro(0.5 / 3.5) && u("b") === micro(0.5 / 3.5))
   }
 
@@ -34,14 +49,14 @@ class LmScoreSpec extends AnyFunSuite {
     // "a a":   unseen cont. -> unk(a)
     // "z a":   unseen w1    -> uniform ln(1/3)
     val score = Seq((10L, "a b"), (11L, "a a"), (12L, "z a")).toDF("doc_id", "text")
-    val got = LmScore.surprisal(train, score).orderBy("doc_id")
+    val got = scored(globalAddHalf, train, score).orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(got === Seq(
       (10L, 1L, micro(2.5 / 3.5)),
       (11L, 1L, micro(0.5 / 3.5)),
       (12L, 1L, micro(1.0 / 3.0))))
     // surprisal column = -logp/n as an exact double division
-    val s = LmScore.surprisal(train, score).where($"doc_id" === 10L)
+    val s = scored(globalAddHalf, train, score).where($"doc_id" === 10L)
       .select($"surprisal").head.getDouble(0)
     assert(s === -micro(2.5 / 3.5).toDouble / 1L)
   }
@@ -49,7 +64,7 @@ class LmScoreSpec extends AnyFunSuite {
   test("surprisal: sub-2-token docs contribute no rows; totals are bigint sums") {
     val train = Seq((1L, "a b c a b")).toDF("doc_id", "text")
     val score = Seq((2L, "a"), (3L, ""), (4L, "a b c")).toDF("doc_id", "text")
-    val rows = LmScore.surprisal(train, score).collect()
+    val rows = scored(globalAddHalf, train, score).collect()
     assert(rows.map(_.getLong(0)).toSet === Set(4L))
     assert(rows.head.getLong(1) === 2L) // (a,b), (b,c)
   }
@@ -90,7 +105,7 @@ class LmScoreSpec extends AnyFunSuite {
         Dedup.minhashLshPairs(docs, 3, 8, 4, 0.05)
           .select($"id1", $"id2"), assumeDistinctPairs = true)
       .collect().map(r => r.getLong(0) -> r.getLong(1))
-    val surp = LmScore.surprisal(docs, docs)
+    val surp = scored(globalAddHalf, docs, docs)
       .collect().map(r => r.getLong(0) -> r.getDouble(3)).toMap
     val expect = comps.groupBy(_._2).map { case (comp, members) =>
       val best = members.map(_._1).minBy(id => (surp(id), id))
@@ -117,7 +132,8 @@ class LmScoreSpec extends AnyFunSuite {
     // de: "a a b"   -> (a,a)x1, (a,b)x1; c1: a=2;      V = {a,b}+1 = 3
     val docs = Seq((1L, "en", "a b a b"), (2L, "de", "a a b"))
       .toDF("doc_id", "lang", "text")
-    val got = LmScore.surprisalPerLang(docs).orderBy("doc_id").collect()
+    val got = scored(LmSpec(Smoothing.AddHalf, perLang = true), docs, docs)
+      .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
       .toSeq
     assert(got === Seq(
@@ -125,7 +141,7 @@ class LmScoreSpec extends AnyFunSuite {
       (2L, "de", 2L, 2 * micro(1.5 / 3.5))))
     // the single cross-language model pools counts ((a,b)=3, c1(a)=4,
     // V=3), so doc 2 totals differently — per-lang isolation is real
-    val cross = LmScore.surprisal(docs, docs)
+    val cross = scored(globalAddHalf, docs, docs)
       .where(col("doc_id") === 2).head.getLong(2)
     assert(cross === micro(1.5 / 5.5) + micro(3.5 / 5.5))
     assert(cross !== 2 * micro(1.5 / 3.5))
@@ -146,7 +162,7 @@ class LmScoreSpec extends AnyFunSuite {
     val target = (200L to 204L).map(i => (i, s"$prefix good day"))
       .toDF("doc_id", "text")
     val lmDir = java.nio.file.Files.createTempDirectory("c9lm").toString
-    LmScore.saveLm(target, lmDir)
+    LmScore.save(globalAddHalf, target, lmDir)
     def surv(df: org.apache.spark.sql.DataFrame): Map[Long, (Long, Long)] =
       df.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     val self = surv(Dedup.lmSurvivorClusters(corpus, k = 3, bands = 8,
@@ -193,8 +209,7 @@ class LmScoreSpec extends AnyFunSuite {
     // pcden = 4*3*3 = 36; pcnum(a) = (4-3)*3 + 6 = 9;
     // pcnum(b) = (8-3)*3 + 6 = 21; pcnum_unk = 6
     val docs = Seq((1L, "a b a b"), (2L, "b b")).toDF("doc_id", "text")
-    val (lm, _, _, _) = LmScore.trainKnBigram(docs)
-    val got = lm.collect()
+    val got = LmScore.train(globalKn, docs).lm.collect()
       .map(r => ((r.getString(0), r.getString(1)), r.getLong(2))).toMap
     assert(got(("a", "b")) === micro(((8 - 3) * 36.0 + 3 * 1 * 21) / (8 * 36)))
     assert(got(("b", "a")) === micro((1 * 36.0 + 3 * 2 * 9) / (8 * 36)))
@@ -216,7 +231,7 @@ class LmScoreSpec extends AnyFunSuite {
       (13L, "z a"), // unseen w1 -> continuation distribution
       (14L, "z q")  // unseen w1, OOV w2 -> UNK continuation share
     ).toDF("doc_id", "text")
-    val got = LmScore.surprisalKn(train, score).orderBy("doc_id")
+    val got = scored(globalKn, train, score).orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(got === Seq(
       (10L, 1L, micro(243.0 / 288)),
@@ -273,8 +288,8 @@ class LmScoreSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     def surp(df: org.apache.spark.sql.DataFrame): Map[Long, Double] =
       df.collect().map(r => r.getLong(0) -> r.getDouble(3)).toMap
-    val ah = surp(LmScore.surprisal(train, score))
-    val kn = surp(LmScore.surprisalKn(train, score))
+    val ah = surp(scored(globalAddHalf, train, score))
+    val kn = surp(scored(globalKn, train, score))
     assert(ah(10L) === ah(11L),
       s"add-half backoff is w2-blind, must tie: $ah")
     assert(kn(10L) > kn(11L),
@@ -288,8 +303,7 @@ class LmScoreSpec extends AnyFunSuite {
     val train = Seq(
       (1L, "a b"), (2L, "c d c d"), (3L, "e f e f e f"),
       (4L, "g h g h g h g h")).toDF("doc_id", "text")
-    val (_, _, _, meta) = LmScore.trainMknBigram(train)
-    val m = meta.collect().head
+    val m = LmScore.train(globalMkn, train).meta.collect().head
     val y = 2.0 / (2.0 + 2.0 * 2)
     assert(m.getAs[Double]("d1") === 1.0 - 2.0 * y * 2 / 2)
     assert(m.getAs[Double]("d2") === 2.0 - 3.0 * y * 2 / 2)
@@ -297,8 +311,8 @@ class LmScoreSpec extends AnyFunSuite {
     assert(m.getAs[Boolean]("estimated"))
     // drop the count-4 doc: n4 = 0 → the spectrum cannot estimate D3 →
     // KenLM's --discount_fallback defaults, flagged as unestimated
-    val (_, _, _, metaFb) = LmScore.trainMknBigram(train.where(col("doc_id") =!= 4))
-    val f = metaFb.collect().head
+    val f = LmScore.train(globalMkn, train.where(col("doc_id") =!= 4)).meta
+      .collect().head
     assert((f.getAs[Double]("d1"), f.getAs[Double]("d2"),
       f.getAs[Double]("d3")) === ((0.5, 1.0, 1.5)))
     assert(!f.getAs[Boolean]("estimated"))
@@ -316,8 +330,8 @@ class LmScoreSpec extends AnyFunSuite {
     val score = Seq((10L, "a b"), (11L, "g h")).toDF("doc_id", "text")
     def surp(df: org.apache.spark.sql.DataFrame): Map[Long, Double] =
       df.collect().map(r => r.getLong(0) -> r.getDouble(3)).toMap
-    val kn = surp(LmScore.surprisalKn(train, score))
-    val mkn = surp(LmScore.surprisalMkn(train, score))
+    val kn = surp(scored(globalKn, train, score))
+    val mkn = surp(scored(globalMkn, train, score))
     assert(kn(10L) > kn(11L),
       s"interpolated KN favors the high-count bigram: $kn")
     assert(mkn(10L) < mkn(11L),
@@ -337,7 +351,7 @@ class LmScoreSpec extends AnyFunSuite {
       (12L, "a z"), // seen w1, OOV w2: γ(a)/c1 · UNK continuation
       (13L, "z b")  // unseen w1: the continuation distribution itself
     ).toDF("doc_id", "text")
-    val got = LmScore.surprisalMkn(train, score).orderBy("doc_id")
+    val got = scored(globalMkn, train, score).orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val y = 2.0 / (2.0 + 2.0 * 2)
     val d1 = 1.0 - 2.0 * y * 2 / 2
@@ -361,82 +375,59 @@ class LmScoreSpec extends AnyFunSuite {
     def kept(df: org.apache.spark.sql.DataFrame): Set[Long] =
       df.select("doc_id").collect().map(_.getLong(0)).toSet
     val ah = kept(CurationStages.lmGated(gated, langs))
-    val kn = kept(CurationStages.lmGatedKn(gated, langs))
+    val kn = kept(CurationStages.lmGated(gated, langs, Smoothing.Kn))
     assert(ah.nonEmpty && kn.nonEmpty)
     assert(ah !== kn, s"KN and add-half gates kept identical sets (${ah.size} docs)")
   }
 
-  test("saveLmPerLang → surprisalAgainstLmPerLang equals surprisalPerLang row for row") {
-    val docs = Seq((1L, "en", "a b a b"), (2L, "de", "a a b"),
+  // save → load → score ≡ train → score, one registered case per spec
+  // (the per-language names predate the core and are kept as they were)
+  private val persistedCases = Seq(
+    LmSpec(Smoothing.AddHalf, perLang = true) ->
+      "saveLmPerLang → surprisalAgainstLmPerLang equals surprisalPerLang row for row",
+    LmSpec(Smoothing.Kn, perLang = true) ->
+      "saveKnLmPerLang → surprisalKnAgainstLmPerLang equals surprisalKnPerLang row for row",
+    LmSpec(Smoothing.Mkn, perLang = true) ->
+      "saveMknLmPerLang → surprisalMknAgainstLmPerLang equals surprisalMknPerLang row for row",
+    globalAddHalf -> "global add-half: save → load → score equals train → score row for row",
+    globalKn -> "global KN: save → load → score equals train → score row for row",
+    globalMkn -> "global MKN: save → load → score equals train → score row for row")
+
+  for ((spec, name) <- persistedCases) test(name) {
+    // score more than the train slice: seen bigrams, the seen-w1
+    // backoff arm (a z, b q) and the unseen-w1 arm (z a, q b) all fire
+    val train = Seq((1L, "en", "a b a b"), (2L, "de", "a a b"),
       (3L, "en", "b a"), (4L, "de", "b b a a"))
       .toDF("doc_id", "lang", "text")
-    val dir = java.nio.file.Files.createTempDirectory("pllm").toString
-    LmScore.saveLmPerLang(docs, dir)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("doc_id").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
-        .toSeq
-    assert(rows(LmScore.surprisalAgainstLmPerLang(docs, spark, dir)) ===
-      rows(LmScore.surprisalPerLang(docs)))
+    val docs = train.union(Seq((5L, "en", "a z a b"), (6L, "de", "b q b"),
+      (7L, "en", "z a b"), (8L, "de", "q b a")).toDF("doc_id", "lang", "text"))
+    def rows(m: LmModel) = LmScore.score(m, docs)
+      .orderBy("doc_id").collect().map(_.toSeq).toSeq
+    val dir = tmpDir("lmsave")
+    LmScore.save(spec, train, dir)
+    val served = rows(LmScore.load(spark, spec, dir))
+    assert(served === rows(LmScore.train(spec, train)))
+    assert(served.nonEmpty)
   }
 
-  test("per-lang split form: a scoring language with no model gets the 0L no-opinion arm") {
+  // keyed specs: the 0L no-model arm, on the trained and the loaded model
+  private val noModelCases = Seq(
+    Smoothing.AddHalf -> "per-lang split form: a scoring language with no model gets the 0L no-opinion arm",
+    Smoothing.Kn -> "per-lang KN split form: a scoring language with no model gets the 0L no-opinion arm",
+    Smoothing.Mkn -> "per-lang MKN split form: a scoring language with no model gets the 0L no-opinion arm")
+
+  for ((sm, name) <- noModelCases) test(name) {
     val train = Seq((1L, "en", "a b a b")).toDF("doc_id", "lang", "text")
-    val dir = java.nio.file.Files.createTempDirectory("pllm2").toString
-    LmScore.saveLmPerLang(train, dir)
     val score = Seq((10L, "fr", "x y z")).toDF("doc_id", "lang", "text")
-    val got = LmScore.surprisalAgainstLmPerLang(score, spark, dir).collect()
-    assert(got.length === 1)
-    // 2 transitions, each lp 0: "no opinion", never a NULL-poisoned sum
-    assert(got.head.getLong(2) === 2L && got.head.getLong(3) === 0L)
-  }
-
-  test("saveKnLmPerLang → surprisalKnAgainstLmPerLang equals surprisalKnPerLang row for row") {
-    val docs = Seq((1L, "en", "a b a b"), (2L, "de", "a a b"),
-      (3L, "en", "b a"), (4L, "de", "b b a a"))
-      .toDF("doc_id", "lang", "text")
-    val dir = java.nio.file.Files.createTempDirectory("knpllm").toString
-    LmScore.saveKnLmPerLang(docs, dir)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("doc_id").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
-        .toSeq
-    assert(rows(LmScore.surprisalKnAgainstLmPerLang(docs, spark, dir)) ===
-      rows(LmScore.surprisalKnPerLang(docs)))
-  }
-
-  test("per-lang KN split form: a scoring language with no model gets the 0L no-opinion arm") {
-    val train = Seq((1L, "en", "a b a b")).toDF("doc_id", "lang", "text")
-    val dir = java.nio.file.Files.createTempDirectory("knpllm2").toString
-    LmScore.saveKnLmPerLang(train, dir)
-    val score = Seq((10L, "fr", "x y z")).toDF("doc_id", "lang", "text")
-    val got = LmScore.surprisalKnAgainstLmPerLang(score, spark, dir).collect()
-    assert(got.length === 1)
-    assert(got.head.getLong(2) === 2L && got.head.getLong(3) === 0L)
-  }
-
-  test("saveMknLmPerLang → surprisalMknAgainstLmPerLang equals surprisalMknPerLang row for row") {
-    val docs = Seq((1L, "en", "a b a b"), (2L, "de", "a a b"),
-      (3L, "en", "b a"), (4L, "de", "b b a a"))
-      .toDF("doc_id", "lang", "text")
-    val dir = java.nio.file.Files.createTempDirectory("mknpllm").toString
-    LmScore.saveMknLmPerLang(docs, dir)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("doc_id").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
-        .toSeq
-    assert(rows(LmScore.surprisalMknAgainstLmPerLang(docs, spark, dir)) ===
-      rows(LmScore.surprisalMknPerLang(docs)))
-  }
-
-  test("per-lang MKN split form: a scoring language with no model gets the 0L no-opinion arm") {
-    val train = Seq((1L, "en", "a b a b")).toDF("doc_id", "lang", "text")
-    val dir = java.nio.file.Files.createTempDirectory("mknpllm2").toString
-    LmScore.saveMknLmPerLang(train, dir)
-    val score = Seq((10L, "fr", "x y z")).toDF("doc_id", "lang", "text")
-    val got = LmScore.surprisalMknAgainstLmPerLang(score, spark, dir).collect()
-    assert(got.length === 1)
-    assert(got.head.getLong(2) === 2L && got.head.getLong(3) === 0L)
+    val spec = LmSpec(sm, perLang = true)
+    val dir = tmpDir("lm0")
+    LmScore.save(spec, train, dir)
+    for (m <- Seq(LmScore.train(spec, train), LmScore.load(spark, spec, dir))) {
+      val got = LmScore.score(m, score).collect()
+      assert(got.length === 1)
+      // 2 transitions, each lp 0: "no opinion", never a NULL-poisoned sum
+      assert(got.head.getLong(2) === 2L && got.head.getLong(3) === 0L)
+    }
   }
 
   test("per-lang MKN discounts are per-LANGUAGE: a rich spectrum estimates its own D1/D2/D3+, a thin one falls back independently") {
@@ -453,9 +444,10 @@ class LmScoreSpec extends AnyFunSuite {
       (1L, "en", "a b a b a b a b"), (2L, "en", "c d c d"),
       (3L, "en", "e f e f"), (4L, "en", "g h"), (5L, "en", "i j"),
       (6L, "de", "x y")).toDF("doc_id", "lang", "text")
-    val dir = java.nio.file.Files.createTempDirectory("mknmeta").toString
-    LmScore.saveMknLmPerLang(docs, dir)
-    val meta = spark.read.parquet(s"$dir/mkn_meta")
+    val dir = tmpDir("mknmeta")
+    val spec = LmSpec(Smoothing.Mkn, perLang = true)
+    LmScore.save(spec, docs, dir)
+    val meta = LmScore.load(spark, spec, dir).meta
       .select("lang", "d1", "d2", "d3", "estimated")
       .collect().map(r => r.getString(0) ->
         (r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getBoolean(4)))
@@ -482,11 +474,11 @@ class LmScoreSpec extends AnyFunSuite {
       (201L, "en", "good day dear friend of ours"))
       .toDF("doc_id", "lang", "text")
     val dir = java.nio.file.Files.createTempDirectory("c12lm").toString
-    LmScore.saveLmPerLang(target, dir)
+    LmScore.save(LmSpec(Smoothing.AddHalf, perLang = true), target, dir)
     def kept(df: org.apache.spark.sql.DataFrame): Set[Long] =
       df.select("doc_id").collect().map(_.getLong(0)).toSet
     val self = kept(CurationStages.lmGated(gated, langs))
-    val tgt = kept(CurationStages.lmGatedAgainstLm(gated, langs, spark, dir))
+    val tgt = kept(CurationStages.lmGated(gated, langs, lmPath = Some(dir)))
     // fluent docs: dropped by the self-trained gate, kept by the target
     assert(!self.contains(5L) && tgt.contains(5L),
       s"self=$self target=$tgt")

@@ -518,15 +518,16 @@ class MaintenanceSpec extends AnyFunSuite {
       .toDF("doc_id", "lang", "text")
     val parent = java.nio.file.Files.createTempDirectory("mnt_lm").toString
     val path = parent + "/lm"
-    def scores() = LmScore.surprisalAgainstLmPerLang(score, spark, path)
+    val spec = LmScore.LmSpec(LmScore.Smoothing.AddHalf, perLang = true)
+    def scores() = LmScore.score(LmScore.load(spark, spec, path), score)
       .orderBy("doc_id").collect().map(_.toSeq).toSeq
     // build v1 (fresh path: retrainAndSwap installs without a swap)
     Maintenance.retrainAndSwap(spark, path)(tmp =>
-      LmScore.saveLmPerLang(v1Train, tmp))
+      LmScore.save(spec, v1Train, tmp))
     val v1Scores = scores()
     // happy-path retrain: v2 fully replaces v1 and the scores move
     Maintenance.retrainAndSwap(spark, path)(tmp =>
-      LmScore.saveLmPerLang(v2Train, tmp))
+      LmScore.save(spec, v2Train, tmp))
     val v2Scores = scores()
     assert(v2Scores !== v1Scores, "retrain must change the en model")
     // crash window 1: the staging write died — tmp litter, live intact.
@@ -536,7 +537,7 @@ class MaintenanceSpec extends AnyFunSuite {
       spark.sessionState.newHadoopConf())
     fs.mkdirs(new org.apache.hadoop.fs.Path(parent, "_repair_tmp_lm/bigrams"))
     Maintenance.retrainAndSwap(spark, path)(tmp =>
-      LmScore.saveLmPerLang(v1Train, tmp))
+      LmScore.save(spec, v1Train, tmp))
     assert(scores() === v1Scores)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(parent, "_repair_tmp_lm")))
     // crash window 2: live staged aside, replacement never arrived —

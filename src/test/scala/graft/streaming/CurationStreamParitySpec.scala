@@ -45,7 +45,8 @@ class CurationStreamParitySpec extends AnyFunSuite {
       twinIdx, nBucketParts = 8)
     Clusters.updateRegistry(spark, reg, -1L, role(0).select(col("doc_id")),
       Seq.empty[(Long, Long)].toDF("bid", "cid"), nDocParts = 8)
-    LmScore.saveLm(role(0), lmPath)
+    val lmSpec = LmScore.LmSpec(LmScore.Smoothing.AddHalf, perLang = false)
+    LmScore.save(lmSpec, role(0), lmPath)
 
     // two streaming legs off the same arrivals (production: two
     // queries on one topic): dedup sink in registry mode, LM enrich
@@ -90,7 +91,7 @@ class CurationStreamParitySpec extends AnyFunSuite {
       probed.withColumn("batch_id", lit((b - 1).toLong))
         .select(col("batch_id"), col("doc_id"), col("n_matches"),
           col("match_id"), col("is_dup"))
-        .join(LmScore.surprisalAgainstLm(role(b), spark, lmPath),
+        .join(LmScore.score(LmScore.load(spark, lmSpec, lmPath), role(b)),
           Seq("doc_id"), "left_outer")
         .orderBy(col("doc_id"))
         .collect().map(_.toSeq).toSeq

@@ -4,11 +4,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
 import graft.operators.LmScore
+import graft.operators.LmScore.{LmSpec, Smoothing}
 
 /** The persisted-LM serving path: batch scoring against a saved model
   * must equal the in-memory train+score pipeline, and the streaming
-  * enrich must equal the batch scorer row for row on the same arrivals
-  * with zero streaming state (the per-doc fold is a stateless shell).
+  * enrich must equal the batch scorer against the same loaded model row
+  * for row on the same arrivals with zero streaming state (the per-doc
+  * fold is a stateless shell).
   */
 case class DocRow(doc_id: Long, text: String)
 
@@ -20,11 +22,12 @@ class LmStreamSpec extends AnyFunSuite {
     spark, "/root/testdata/sf0.001").select(col("doc_id"), col("text"))
 
   test("surprisalAgainstLm(savedLm) equals surprisal(train, docs) row for row") {
+    val spec = LmSpec(Smoothing.AddHalf, perLang = false)
     val path = java.nio.file.Files.createTempDirectory("lm_art").toString
-    LmScore.saveLm(docs, path)
-    val direct = LmScore.surprisal(docs, docs)
+    LmScore.save(spec, docs, path)
+    val direct = LmScore.score(LmScore.train(spec, docs), docs)
       .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    val served = LmScore.surprisalAgainstLm(docs, spark, path)
+    val served = LmScore.score(LmScore.load(spark, spec, path), docs)
       .orderBy("doc_id").collect().map(_.toSeq).toSeq
     assert(served === direct)
     assert(served.nonEmpty)
@@ -35,7 +38,8 @@ class LmStreamSpec extends AnyFunSuite {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val path = java.nio.file.Files.createTempDirectory("lm_art2").toString
     // train on the even docs, score the odd ones — OOV paths included
-    LmScore.saveLm(docs.where(col("doc_id") % 2 === 0), path)
+    LmScore.save(LmSpec(Smoothing.AddHalf, perLang = false),
+      docs.where(col("doc_id") % 2 === 0), path)
     val arriving = docs.where(col("doc_id") % 2 === 1)
       .as[DocRow].collect().toSeq
     assert(arriving.nonEmpty)
@@ -55,30 +59,34 @@ class LmStreamSpec extends AnyFunSuite {
           Option(q.lastProgress)
             .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L))
       } finally q.stop()
-    val batch = LmScore.surprisalAgainstLm(arriving.toDF(), spark, path)
+    val batch = LmScore.score(LmScore.load(spark,
+        LmSpec(Smoothing.AddHalf, perLang = false), path), arriving.toDF())
       .orderBy("doc_id").collect().map(_.toSeq).toSeq
     assert(streamed === batch)
     assert(streamed.nonEmpty)
     assert(stateRows === 0L, s"expected stateless shells, got $stateRows rows")
   }
 
-  test("streaming lmScoreEnrichPerLang equals batch surprisalAgainstLmPerLang incl. the no-model lang; zero state") {
+  /** Per-language targets of estimator `smoothing` trained on the even
+    * docs; the odd docs arrive on the stream — seen-bigram, backoff and
+    * unseen-w1 arms all exercised — plus one doc under a language NO
+    * model was trained for (the lp-0 no-opinion arm). Streamed rows must
+    * equal the batch scorer against the loaded model, with zero state. */
+  private def perLangStreamParity(smoothing: Smoothing, noModelId: Long): Unit = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val spec = LmSpec(smoothing, perLang = true)
     val path = java.nio.file.Files.createTempDirectory("pllm_stream").toString
     val all = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
       .select(col("doc_id"), col("lang"), col("text"))
-    // per-language targets trained on the even docs; the odd docs
-    // arrive on the stream, one of them under a language NO model was
-    // trained for (the lp-0 no-opinion arm)
-    LmScore.saveLmPerLang(all.where(col("doc_id") % 2 === 0), path)
+    LmScore.save(spec, all.where(col("doc_id") % 2 === 0), path)
     val arriving = all.where(col("doc_id") % 2 === 1)
       .as[(Long, String, String)].collect().toSeq :+
-      ((900001L, "xx", "some words never modelled"))
+      ((noModelId, "xx", "some words never modelled"))
     val input = MemoryStream[(Long, String, String)]
     val name = s"pllmstream_${System.nanoTime()}"
     val q = DocStreams.lmScoreEnrichPerLang(
-        input.toDF().toDF("doc_id", "lang", "text"), path)
+        input.toDF().toDF("doc_id", "lang", "text"), path, smoothing)
       .writeStream.format("memory").queryName(name)
       .outputMode("append").start()
     val (streamed, stateRows) =
@@ -91,91 +99,26 @@ class LmStreamSpec extends AnyFunSuite {
           Option(q.lastProgress)
             .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L))
       } finally q.stop()
-    val batch = LmScore.surprisalAgainstLmPerLang(
-        arriving.toDF("doc_id", "lang", "text"), spark, path)
+    val batch = LmScore.score(LmScore.load(spark, spec, path),
+        arriving.toDF("doc_id", "lang", "text"))
       .orderBy("doc_id").collect().map(_.toSeq).toSeq
     assert(streamed === batch)
     assert(streamed.nonEmpty)
     // the no-model lang took the 0L arm on BOTH engines
-    assert(streamed.exists(r => r.head == 900001L && r(3) == 0L))
+    assert(streamed.exists(r => r.head == noModelId && r(3) == 0L))
     assert(stateRows === 0L, s"expected stateless shells, got $stateRows rows")
   }
 
-  test("streaming lmScoreEnrichKnPerLang equals batch surprisalKnAgainstLmPerLang incl. the no-model lang; zero state") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val path = java.nio.file.Files.createTempDirectory("knlm_stream").toString
-    val all = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
-      .select(col("doc_id"), col("lang"), col("text"))
-    // per-language KN targets trained on the even docs; odd docs arrive
-    // on the stream — seen-bigram, continuation-backoff, and unseen-w1
-    // tiers all exercised — plus one doc under a never-modelled lang
-    // (the lp-0 no-opinion arm)
-    LmScore.saveKnLmPerLang(all.where(col("doc_id") % 2 === 0), path)
-    val arriving = all.where(col("doc_id") % 2 === 1)
-      .as[(Long, String, String)].collect().toSeq :+
-      ((900002L, "xx", "some words never modelled"))
-    val input = MemoryStream[(Long, String, String)]
-    val name = s"knlmstream_${System.nanoTime()}"
-    val q = DocStreams.lmScoreEnrichKnPerLang(
-        input.toDF().toDF("doc_id", "lang", "text"), path)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    val (streamed, stateRows) =
-      try {
-        input.addData(arriving.take(arriving.size / 2): _*)
-        q.processAllAvailable()
-        input.addData(arriving.drop(arriving.size / 2): _*)
-        q.processAllAvailable()
-        (spark.table(name).orderBy("doc_id").collect().map(_.toSeq).toSeq,
-          Option(q.lastProgress)
-            .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L))
-      } finally q.stop()
-    val batch = LmScore.surprisalKnAgainstLmPerLang(
-        arriving.toDF("doc_id", "lang", "text"), spark, path)
-      .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    assert(streamed === batch)
-    assert(streamed.nonEmpty)
-    assert(streamed.exists(r => r.head == 900002L && r(3) == 0L))
-    assert(stateRows === 0L, s"expected stateless shells, got $stateRows rows")
+  test("streaming lmScoreEnrichPerLang equals batch surprisalAgainstLmPerLang incl. the no-model lang; zero state") {
+    perLangStreamParity(Smoothing.AddHalf, 900001L)
   }
+
+  test("streaming lmScoreEnrichKnPerLang equals batch surprisalKnAgainstLmPerLang incl. the no-model lang; zero state") {
+    perLangStreamParity(Smoothing.Kn, 900002L)
+  }
+
   test("streaming lmScoreEnrichMknPerLang equals batch surprisalMknAgainstLmPerLang incl. the no-model lang; zero state") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val path = java.nio.file.Files.createTempDirectory("mknlm_stream").toString
-    val all = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
-      .select(col("doc_id"), col("lang"), col("text"))
-    // per-language MODIFIED-KN targets trained on the even docs; odd docs arrive
-    // on the stream — seen-bigram, continuation-backoff, and unseen-w1
-    // tiers all exercised — plus one doc under a never-modelled lang
-    // (the lp-0 no-opinion arm)
-    LmScore.saveMknLmPerLang(all.where(col("doc_id") % 2 === 0), path)
-    val arriving = all.where(col("doc_id") % 2 === 1)
-      .as[(Long, String, String)].collect().toSeq :+
-      ((900003L, "xx", "some words never modelled"))
-    val input = MemoryStream[(Long, String, String)]
-    val name = s"mknlmstream_${System.nanoTime()}"
-    val q = DocStreams.lmScoreEnrichMknPerLang(
-        input.toDF().toDF("doc_id", "lang", "text"), path)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    val (streamed, stateRows) =
-      try {
-        input.addData(arriving.take(arriving.size / 2): _*)
-        q.processAllAvailable()
-        input.addData(arriving.drop(arriving.size / 2): _*)
-        q.processAllAvailable()
-        (spark.table(name).orderBy("doc_id").collect().map(_.toSeq).toSeq,
-          Option(q.lastProgress)
-            .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(0L))
-      } finally q.stop()
-    val batch = LmScore.surprisalMknAgainstLmPerLang(
-        arriving.toDF("doc_id", "lang", "text"), spark, path)
-      .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    assert(streamed === batch)
-    assert(streamed.nonEmpty)
-    assert(streamed.exists(r => r.head == 900003L && r(3) == 0L))
-    assert(stateRows === 0L, s"expected stateless shells, got $stateRows rows")
+    perLangStreamParity(Smoothing.Mkn, 900003L)
   }
 
   test("streaming langIdEnrich equals batch predictAgainstLangId row for row; zero state") {
