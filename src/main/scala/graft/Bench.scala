@@ -1,6 +1,19 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** The detail file's JSON. `cpus` is written as a number when the env
+    * value parses as one and omitted otherwise, and `sf` and the note go
+    * through a JSON string encoder, so no env value (`4x`, a path with a
+    * quote or a backslash) can make the file malformed. */
+  private[graft] def detailJson(total: String, coldTotal: String, iso: String,
+      sfDir: String, cpus: String, scalingNote: String, queries: String): String = {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def str(s: String) = mapper.writeValueAsString(s)
+    val cpusField = cpus.trim.toIntOption.fold("")(n => s""""cpus":$n,""")
+    s"""{"total":$total,"cold_total":$coldTotal,"iso":$iso,"sf":${str(sfDir)},$cpusField""" +
+      s""""scaling_note":${str(scalingNote)},"queries":$queries}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -143,7 +156,7 @@ object Bench {
       "overhead-bound; cpu-count ratios near 1 are expected - see " +
       "scripts/psb_evidence_*.json for data-volume scaling"
     try java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
-      s"""{"total":$total,"cold_total":$coldTotal,"iso":${ms(isoRatio)},"sf":"$sfDir","cpus":$cpus,"scaling_note":"$scalingNote","queries":$detail}"""
+      detailJson(total, coldTotal, ms(isoRatio), sfDir, cpus, scalingNote, detail)
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] detail write failed ($detailPath): $e") }

@@ -1318,6 +1318,9 @@ object Similarity {
         params("k_code").toInt, path, trainIters)
     }
 
+  /** In sessions built with `GraftExtensions.install`, `pq_encode` runs once
+    * per vector, not per (vector, query) pair: [[graft.plans.EvalOnce]]
+    * evaluates the join's streamed side before its loop. */
   private def pqTopKWith(emb: DataFrame, cbRows: Seq[(Int, Int, Seq[Double])],
                          m: Int, sampleMod: Int, k: Int,
                          rescoreK: Int): DataFrame = {

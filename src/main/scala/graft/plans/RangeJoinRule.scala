@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 import org.apache.spark.sql.types.{LongType, TimestampType}
 
 /** Optimizer rule: rewrite a pure timestamp-range inner join
@@ -129,8 +130,15 @@ object RangeJoinRule extends Rule[LogicalPlan] {
   }
 }
 
-/** Session wiring for the graft Catalyst extensions. */
+/** Session wiring for the graft Catalyst extensions. [[EvalOnce]] is a
+  * pre-transition columnar rule so it runs before CollapseCodegenStages
+  * in both the adaptive and the non-adaptive planner. */
 object GraftExtensions {
   def install(builder: SparkSession.Builder): SparkSession.Builder =
-    builder.withExtensions(_.injectOptimizerRule(_ => RangeJoinRule))
+    builder.withExtensions { ext =>
+      ext.injectOptimizerRule(_ => RangeJoinRule)
+      ext.injectColumnar(_ => new ColumnarRule {
+        override def preColumnarTransitions: Rule[SparkPlan] = EvalOnce
+      })
+    }
 }

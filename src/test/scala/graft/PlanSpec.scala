@@ -113,6 +113,38 @@ class PlanSpec extends AnyFunSuite {
     assert("WindowGroupLimit".r.findAllIn(p).size >= 2, p)
   }
 
+  test("v7: the nested-loop streamed side sits under EvalOnceExec and the PQ kernels stay fused") {
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    import graft.functions.{PqAdc, PqEncode, PqLut}
+    val df = SparkEntry.queries("v7_pq_topk")(spark, sf)
+    df.collect() // the final adaptive plan is the one codegen collapsed
+    // every node of the final plan, paired with "inside a codegen stage"
+    def walk(p: SparkPlan, fused: Boolean): Seq[(SparkPlan, Boolean)] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan, fused)
+      case s: QueryStageExec => walk(s.plan, fused)
+      case w: WholeStageCodegenExec => walk(w.child, fused = true)
+      case _ => (p, fused) +: p.children.flatMap(walk(_, fused))
+    }
+    val nodes = walk(df.queryExecution.executedPlan, fused = false)
+    val plan = df.queryExecution.executedPlan
+    val joins = nodes.collect { case (j: BroadcastNestedLoopJoinExec, _) => j }
+    assert(joins.nonEmpty, plan)
+    joins.foreach { j =>
+      val streamed = if (j.buildSide == BuildRight) j.left else j.right
+      assert(streamed.isInstanceOf[graft.plans.EvalOnceExec], plan)
+    }
+    for (kernel <- Seq(classOf[PqEncode], classOf[PqLut], classOf[PqAdc])) {
+      val hosts = nodes.filter { case (n, _) =>
+        n.expressions.exists(_.exists(e => kernel.isInstance(e)))
+      }
+      assert(hosts.nonEmpty, s"${kernel.getSimpleName} missing:\n$plan")
+      assert(hosts.forall(_._2), s"${kernel.getSimpleName} outside codegen:\n$plan")
+    }
+  }
+
   test("e3: as-of join compiles to one window pass — no join operator at all") {
     val p = physical("e3_asof_purchase_click")
     assert(!p.contains("Join"), p)
