@@ -13,6 +13,8 @@ tree, plus untracked files) to the `SparkEntry.queries` ids it can move:
 - any other library file: the ids on the COVERAGE.md rows (operator ->
   library -> oracle query tables) that name one of the file's top-level
   classes or objects;
+- src/main/scala/graft/LocalSession.scala: every id (it builds the
+  session every Bench plan runs in);
 - the harness (Bench, Verify, Explain) and non-library files: nothing.
 
 A library file that maps to no id is listed as UNMAPPED: pick its
@@ -24,7 +26,10 @@ import os, re, subprocess, sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 LIB = "src/main/scala/graft/"
 HARNESS = {LIB + f for f in ("Bench.scala", "Verify.scala", "Explain.scala")}
-QUERY_ID = re.compile(r'"([a-z]+\d+_[a-z0-9_]+)"\s*->')
+SESSION = LIB + "LocalSession.scala"
+# a query id is a SparkEntry map key bound to a `((s, dir) => …)` builder;
+# other id-shaped keys (e.g. `"p50_words" -> 0.5`) are not queries
+QUERY_ID = re.compile(r'"([a-z]+\d+_[a-z0-9_]+)"\s*->\s*\(\(')
 
 
 def read(rel):
@@ -79,8 +84,10 @@ def top_level_names(rel):
     return set(TOP_LEVEL.findall(read(rel)))
 
 
-def families(path, rows, cross):
+def families(path, rows, cross, known):
     """(ids, reason) for one changed file."""
+    if path == SESSION:
+        return set(known), "session config: every query"
     if path in HARNESS:
         return set(), "bench/verify harness"
     if not path.startswith(LIB) or not path.endswith(".scala"):
@@ -107,7 +114,7 @@ def main(argv):
     rows, cross = coverage_rows(known), intended_cross()
     selected, unmapped = set(), []
     for path in files:
-        ids, why = families(path, rows, cross)
+        ids, why = families(path, rows, cross, known)
         if not ids and why.startswith(("COVERAGE", "deleted")):
             unmapped.append(path)
         selected |= ids

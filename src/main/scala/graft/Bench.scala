@@ -17,19 +17,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.plans.GraftExtensions.install(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // ContextCleaner frees broadcast/RDD blocks only after their weak
-      // refs are GC'd; the default 30 min periodic GC means a 90 s bench
-      // never gets one. 30 s keeps residue bounded even between scrubs.
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .config(graft.plans.RangeJoinRule.ConfKey, "600")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus.toInt)
     Isolation.begin(spark) // epoch now = everything later is residue
     // Cross-query isolation (graft.Isolation.scrub): without it, residue
     // from one query taxes every later one — the BENCH_r05 86s-vs-52.7s

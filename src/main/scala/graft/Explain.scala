@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Prints formatted physical plans for selected queries — the
   * explain-driven iteration loop (pushdown / broadcast / codegen). */
 object Explain {
@@ -9,11 +8,9 @@ object Explain {
     // formatted output carries [codegen id : n] annotations — the only
     // way a static dump can show whole-stage-codegen span boundaries
     // (AQE's initial plan inserts codegen stages lazily, per query stage)
-    val aqe = if (sys.env.get("SPARK_GRAFT_EXPLAIN_NOAQE").contains("1")) "false" else "true"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions","4")
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.ui.enabled","false").getOrCreate()
+    val spark = LocalSession(4)
+    if (sys.env.get("SPARK_GRAFT_EXPLAIN_NOAQE").contains("1"))
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else Seq(
       "j1_top_orders_by_revenue", "f1_filtered_lineitems", "f6_promo_parts_by_brand",

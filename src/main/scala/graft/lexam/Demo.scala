@@ -1,6 +1,5 @@
 package graft.lexam
 
-import org.apache.spark.sql.SparkSession
 import graft.lexam.pipeline._
 
 /** Runnable walkthrough of the LEXam-shaped surface: seed → explore →
@@ -14,12 +13,7 @@ object Demo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("lexam_demo").toString)
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("lexam-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession(4)
 
     val store = new LexamStore(spark, dir)
     // Seed (S1-ish): in production this is the HF-export ingest; here the

@@ -135,15 +135,17 @@ object Clusters {
   // batch ids and the archive partition is Long.MinValue, which must
   // parse (and every consumer compares against a Long anyway); `part`
   // is written .cast("int") so INT is exact.
-  private val MembersSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "doc_id BIGINT, root BIGINT, batch_id BIGINT, part INT")
-  private val RemapsSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "old_root BIGINT, new_root BIGINT, batch_id BIGINT")
-  private val MetaSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "n_doc_parts INT")
+  private[graft] val registryLayout: Seq[(String, String)] = Seq(
+    "members" -> "doc_id BIGINT, root BIGINT, batch_id BIGINT, part INT",
+    "remaps" -> "old_root BIGINT, new_root BIGINT, batch_id BIGINT",
+    "meta" -> "n_doc_parts INT")
+  private val Seq(membersSchema, remapsSchema, metaSchema) =
+    registryLayout.map { case (_, ddl) =>
+      org.apache.spark.sql.types.StructType.fromDDL(ddl)
+    }
 
   private def readRegistryMeta(spark: SparkSession, path: String): Int =
-    spark.read.schema(MetaSchema).parquet(s"$path/meta").head().getInt(0)
+    spark.read.schema(metaSchema).parquet(s"$path/meta").head().getInt(0)
 
   /** members/ as a frame, or None before the first update. Runs the
     * staged-swap recovery first so a compaction that crashed between
@@ -154,14 +156,14 @@ object Clusters {
     val fs = graft.sources.Hdfs.forPath(spark, path)
     graft.sources.TableSwap.recover(fs, path, "members")
     if (!hasBatchDirs(fs, s"$path/members")) None
-    else Some(spark.read.schema(MembersSchema).parquet(s"$path/members"))
+    else Some(spark.read.schema(membersSchema).parquet(s"$path/members"))
   }
 
   private def readRemaps(spark: SparkSession,
                          path: String): Option[DataFrame] = {
     val fs = graft.sources.Hdfs.forPath(spark, path)
     if (!hasBatchDirs(fs, s"$path/remaps")) None
-    else Some(spark.read.schema(RemapsSchema).parquet(s"$path/remaps"))
+    else Some(spark.read.schema(remapsSchema).parquet(s"$path/remaps"))
   }
 
   /** Collapse the merge log to one-hop form: old_root → final root.

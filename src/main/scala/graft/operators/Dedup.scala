@@ -1569,6 +1569,22 @@ object Dedup {
     } finally hashes.unpersist()
   }
 
+  /** The decon index tables read with a stated schema: (directory,
+    * DDL). `part` is directory-inferred as INT but stated BIGINT — it is
+    * `pmod` of the BIGINT hash and the probe's partition in-list holds
+    * longs. meta and bloom are read schemaless (legacy metas lack
+    * `content_digest`). */
+  private[graft] val deconLayout: Seq[(String, String)] =
+    Seq("hashes" -> "h BIGINT, part BIGINT")
+
+  /** The hash store under the [[deconLayout]] schema; the stated schema
+    * also lets an empty store (no parquet footer to infer from) load. */
+  private[graft] def readDeconHashes(spark: org.apache.spark.sql.SparkSession,
+                                     path: String): DataFrame = {
+    val Seq((dir, ddl)) = deconLayout
+    spark.read.schema(ddl).parquet(s"$path/$dir")
+  }
+
   /** Bloom sizing/serialization shared by [[saveDeconIndex]] and
     * [[rebuildDeconBloom]] — `stat.bloomFilter` NPEs on an empty
     * frame (null treeAggregate buffer), so an unshingleable benchmark
@@ -1604,8 +1620,7 @@ object Dedup {
     graft.sources.TableSwap.recover(fs, path, "bloom")
     graft.sources.TableSwap.recover(fs, path, "meta")
     val m = spark.read.parquet(s"$path/meta").head()
-    val hashes = spark.read.schema("h BIGINT, part BIGINT")
-      .parquet(s"$path/hashes")
+    val hashes = readDeconHashes(spark, path)
     rebuildDeconBloomAs(spark, path, m.getInt(0), m.getDouble(1),
       m.getInt(3), hashes, hashes.count())
   }
@@ -1715,8 +1730,7 @@ object Dedup {
     val digest =
       if (meta.schema.fieldNames.contains("content_digest"))
         m.getAs[Long]("content_digest")
-      else deconContentDigest(spark.read.schema("h BIGINT, part BIGINT")
-        .parquet(s"$path/hashes"))
+      else deconContentDigest(readDeconHashes(spark, path))
     f"v2${fnvMix(m.getInt(0).toLong, digest)}%016x"
   }
 
@@ -1881,8 +1895,7 @@ object Dedup {
     // hash store (no schema-bearing parquet under hashes/), which a
     // schemaless read cannot infer — the probe must still run and
     // score everything clean, not throw far from the bad save
-    val store = spark.read.schema("h BIGINT, part BIGINT")
-      .parquet(s"$path/hashes")
+    val store = readDeconHashes(spark, path)
       .where(col("part").isin(candParts: _*))
     val hits = candidates.join(store, Seq("part", "h"), "left_semi")
       .select(col("h"))
@@ -2038,9 +2051,9 @@ object Dedup {
     * gram TWICE at the no-broadcast (cluster-scale) shape — column
     * pruning makes the two occurrence subtrees unequal and defeats
     * ReuseExchange — and shuffles the occurrence frame twice.
-    * SpanDedupBench races the two at that shape with checksum-identical
-    * outputs: at a realistic duplicate density (320k docs, ~9% of
-    * tokens removed) the windowed form is 1.47x faster (7.0s vs
+    * Raced at that shape with checksum-identical outputs (SURVEY "d11
+    * formulation race"): at a realistic duplicate density (320k docs,
+    * ~9% of tokens removed) the windowed form is 1.47x faster (7.0s vs
     * 10.3s); only at a pathological all-duplicate shape (98% removed,
     * where per-group window buffering dominates a streaming merge) does
     * the join form win by the same factor — the regime a curated

@@ -48,8 +48,9 @@ object Graph {
     * PROVABLY safe iff `scale ≤ 2^63 / (|V| · max(w_max, dampNum))`
     * ([[Graph.safeScale]] with the graph's max weight) — but that
     * worst case assumes FULL concentration, and real hub graphs
-    * spread mass (GraphBench runs 5M nodes at the default 10^12
-    * comfortably, well past the worst-case bound), so rejecting on it
+    * spread mass (a 5M-node run at the default 10^12 completed
+    * comfortably, well past the worst-case bound; SURVEY "PageRank
+    * scaling"), so rejecting on it
     * up front would refuse graphs that are fine. The guard is
     * therefore two-tier:
     * - a HARD precondition `(|V|+1)·scale ≤ 2^63` (total mass plus

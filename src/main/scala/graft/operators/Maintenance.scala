@@ -334,8 +334,7 @@ object Maintenance {
             "will keep refusing; clear it by re-running the nightly pass")
     }
     val m = spark.read.parquet(s"$path/meta").head()
-    val hashes = spark.read.schema("h BIGINT, part BIGINT")
-      .parquet(s"$path/hashes")
+    val hashes = Dedup.readDeconHashes(spark, path)
     val trueN = hashes.count()
     val falseNegatives = scala.util.Try(
         spark.read.parquet(s"$path/bloom").head().getAs[Array[Byte]](0))

@@ -1,8 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.functions.Registry
 
 /** Scale evidence for the three composed pipelines (SURVEY §6): c1
   * (quality gate → exact dedup → importance sample → rollup), c2
@@ -34,16 +32,9 @@ object PipelineScaleBench {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val copiesList =
       if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 8, 64)
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("pipeline-scale-bench")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession(32)
     graft.Isolation.begin(spark) // epoch now = everything later is residue
     spark.sparkContext.setLogLevel("ERROR")
-    Registry.registerAll(spark)
     val base = spark.read.parquet(s"$baseDir/documents.parquet")
     // c4 rides the same corpus: its line-dedup stage is the scale-
     // sensitive part (segment hash shuffle + frequent-set broadcast),
@@ -80,7 +71,10 @@ object PipelineScaleBench {
       "c15_kn_gated_curation", "m6_perceptual_near_dup",
       "c18_image_dedup_curation")
 
-    import BenchTime.timed
+    def timed[A](f: => A): (A, Double) = {
+      val t0 = System.nanoTime(); val a = f
+      (a, (System.nanoTime() - t0) / 1e9)
+    }
     // JIT/codegen warmup at a thin slice so the 1× point isn't taxed
     val warmDir = "/tmp/graft_psb/warm"
     base.limit(500).write.mode("overwrite").parquet(s"$warmDir/documents.parquet")

@@ -1318,9 +1318,11 @@ object Similarity {
         params("k_code").toInt, path, trainIters)
     }
 
-  /** In sessions built with `GraftExtensions.install`, `pq_encode` runs once
-    * per vector, not per (vector, query) pair: [[graft.plans.EvalOnce]]
-    * evaluates the join's streamed side before its loop. */
+  /** `pq_encode` runs once per vector, not per (vector, query) pair:
+    * [[graft.plans.EvalOnce]] evaluates the join's streamed side before
+    * its loop. Every library session ([[graft.LocalSession]]) installs
+    * it; an external caller's session built without
+    * `GraftExtensions.install` keeps the per-pair encode. */
   private def pqTopKWith(emb: DataFrame, cbRows: Seq[(Int, Int, Seq[Double])],
                          m: Int, sampleMod: Int, k: Int,
                          rescoreK: Int): DataFrame = {

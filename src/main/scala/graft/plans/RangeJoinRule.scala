@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   * automatically to any naive range join in the session.
   *
   * Guard rails: fires only when `spark.graft.rangeJoin.binSeconds` > 0
-  * (Verify/Bench/TestSpark set 600), only on INNER joins whose whole
+  * (every [[graft.LocalSession]] sets 600), only on INNER joins whose whole
   * condition is the two-conjunct range pattern (plus optional extra
   * conjuncts, which are preserved), and only when the probe expression
   * is a timestamp. Correctness does not depend on the bin width; W only

@@ -206,9 +206,8 @@ object CoverageQueries {
     // per-source hard quota on the curated corpus. ONE nested-CTE
     // oracle replays the whole chain.
     // Stage bodies live in CurationStages — ONE definition shared with
-    // the stage profiler (operators.C7Profile), so profiled and
-    // benchmarked pipelines cannot drift. The localCheckpoint cuts are
-    // documented there (each pinned frame has 2-3 consumers; the
+    // the c10–c19 chains, so they cannot drift. The localCheckpoint
+    // cuts are documented there (each pinned frame has 2-3 consumers; the
     // oracle materializes the same CTEs for the same reason).
     "c7_curation_pipeline" -> ((s, dir) => {
       import CurationStages._

@@ -5,11 +5,10 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Graph, LmScore, Multimodal, Sampling, TextAnalysis}
 
-/** The c7 curation chain's stage builders — ONE definition shared by the
-  * declared `c7_curation_pipeline` query and the stage profiler
-  * ([[graft.operators.C7Profile]]), so the profiled pipeline can never
-  * drift from the benchmarked/oracle-gated one. Stage semantics are
-  * documented at the query site (CoverageQueries "C7").
+/** The c7 curation chain's stage builders — ONE definition shared by
+  * `c7_curation_pipeline` and the chains built on it (c10–c19), so no
+  * chain can drift from the benchmarked/oracle-gated stages. Stage
+  * semantics are documented at the query site (CoverageQueries "C7").
   *
   * The `localCheckpoint()` cuts are part of the contract, not an
   * optimization detail: `synthesized` feeds both the signal subtree and

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.Multimodal
 import graft.operators.Multimodal._
@@ -12,10 +11,7 @@ import graft.operators.Multimodal._
   */
 object StreamingDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("streaming-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.LocalSession(4)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -438,22 +438,35 @@ class PlanSpec extends AnyFunSuite {
       // const-table cross, read from li_const/ instead of derived
       "q8_trained_langid", "q9_langid_surprisal", "c13_langid_curation",
       "c20_target_langid_curation")
-    // e5 relies on the range-join rule, which activates on the same
-    // conf Bench/Verify set — sweep under production settings
-    spark.conf.set(graft.plans.RangeJoinRule.ConfKey, "600")
-    val offenders =
-      try SparkEntry.queries.keys.toSeq.sorted
-        .filterNot(intendedCross)
-        .flatMap { name =>
-          val p = physical(name)
-          if (p.contains("CartesianProduct") || p.contains("BroadcastNestedLoopJoin"))
-            Some(name)
-          else None
-        }
-      finally spark.conf.unset(graft.plans.RangeJoinRule.ConfKey)
+    // e5 relies on the range-join rule, which the shared session turns
+    // on (LocalSession) — the sweep runs under production settings
+    val offenders = SparkEntry.queries.keys.toSeq.sorted
+      .filterNot(intendedCross)
+      .flatMap { name =>
+        val p = physical(name)
+        if (p.contains("CartesianProduct") || p.contains("BroadcastNestedLoopJoin"))
+          Some(name)
+        else None
+      }
     assert(offenders.isEmpty,
       s"unexpected cross-product joins in: $offenders — every pair algorithm " +
         "must block on an equi-join key (LSH bucket, time bin, cell)")
+  }
+
+  test("session contract: native SQL functions resolve and the session time zone is UTC, no table read first") {
+    import org.apache.spark.sql.SparkSession
+    // a new session on the shared context starts with an empty registry
+    // of temporary functions, so poly_hash64 below can only resolve
+    // through LocalSession's own registration
+    val shared = spark
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val fresh = try LocalSession(4)
+      finally { SparkSession.setDefaultSession(shared); SparkSession.setActiveSession(shared) }
+    assert(fresh ne shared)
+    val r = fresh.sql("SELECT poly_hash64('ab') AS h, current_timezone() AS tz").head()
+    assert(r.getLong(0) === 97L * 131 + 98) // 'a' * base + 'b'
+    assert(r.getString(1) === "UTC")
   }
 
   test("lexam filter pushdown: question predicates reach the parquet scan") {

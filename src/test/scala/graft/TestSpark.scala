@@ -3,20 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (guide: one per suite via
-  * lazy val; sharing across suites is safe and faster). */
+  * lazy val; sharing across suites is safe and faster). Built by
+  * [[LocalSession]], so the suites plan and run under the same rules
+  * and settings as Bench and Verify. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = graft.plans.GraftExtensions.install(SparkSession.builder())
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    // idempotent: suites that exercise operators directly (no Tables
-    // read first) still need the native expressions resolvable
-    graft.functions.Registry.registerAll(s)
-    s
-  }
+  lazy val spark: SparkSession = LocalSession(4)
 }

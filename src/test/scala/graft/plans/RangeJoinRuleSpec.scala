@@ -24,14 +24,22 @@ class RangeJoinRuleSpec extends AnyFunSuite {
       .orderBy(col("window_id"))
   }
 
+  /** Runs `f` at the given bin width (0 = rule off) and restores the
+    * session's previous setting: the shared session turns the rule on,
+    * and an `unset` would turn it off for every suite that runs later. */
   private def withRule[A](binSeconds: Int)(f: => A): A = {
+    val prev = spark.conf.getOption(RangeJoinRule.ConfKey)
     spark.conf.set(RangeJoinRule.ConfKey, binSeconds.toString)
-    try f finally spark.conf.unset(RangeJoinRule.ConfKey)
+    try f
+    finally prev.fold(spark.conf.unset(RangeJoinRule.ConfKey))(
+      spark.conf.set(RangeJoinRule.ConfKey, _))
   }
 
   test("naive range join: rule replaces the nested-loop plan with a bin equi-join") {
-    val off = naiveJoin()
-    assert(off.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin"))
+    withRule(0) {
+      val off = naiveJoin()
+      assert(off.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin"))
+    }
     withRule(600) {
       val on = naiveJoin()
       val p = on.queryExecution.executedPlan.toString
@@ -41,7 +49,9 @@ class RangeJoinRuleSpec extends AnyFunSuite {
   }
 
   test("rewrite preserves results exactly, for bin widths above and below the window") {
-    val expected = naiveJoin().collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val expected = withRule(0) {
+      naiveJoin().collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    }
     for (bin <- Seq(60, 600, 3600)) withRule(bin) {
       val got = naiveJoin().collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       assert(got === expected, s"binSeconds=$bin")
