@@ -15,7 +15,9 @@ tree, plus untracked files) to the `SparkEntry.queries` ids it can move:
   classes or objects;
 - src/main/scala/graft/LocalSession.scala: every id (it builds the
   session every Bench plan runs in);
-- the harness (Bench, Verify, Explain) and non-library files: nothing.
+- the harness (Bench, Verify, Explain), the mains Bench never runs
+  (lexam/Demo, streaming/StreamingDemo, operators/PipelineScaleBench)
+  and non-library files: nothing.
 
 A library file that maps to no id is listed as UNMAPPED: pick its
 families by hand. The last stdout line is the id-prefix list to pass to
@@ -26,6 +28,8 @@ import os, re, subprocess, sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 LIB = "src/main/scala/graft/"
 HARNESS = {LIB + f for f in ("Bench.scala", "Verify.scala", "Explain.scala")}
+OTHER_MAINS = {LIB + f for f in ("lexam/Demo.scala", "streaming/StreamingDemo.scala",
+                                 "operators/PipelineScaleBench.scala")}
 SESSION = LIB + "LocalSession.scala"
 # a query id is a SparkEntry map key bound to a `((s, dir) => …)` builder;
 # other id-shaped keys (e.g. `"p50_words" -> 0.5`) are not queries
@@ -90,6 +94,8 @@ def families(path, rows, cross, known):
         return set(known), "session config: every query"
     if path in HARNESS:
         return set(), "bench/verify harness"
+    if path in OTHER_MAINS:
+        return set(), "a main Bench never runs"
     if not path.startswith(LIB) or not path.endswith(".scala"):
         return set(), "not a library source"
     if not os.path.exists(os.path.join(ROOT, path)):

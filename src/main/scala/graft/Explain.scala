@@ -1,16 +1,12 @@
 package graft
 /** Prints formatted physical plans for selected queries — the
-  * explain-driven iteration loop (pushdown / broadcast / codegen). */
+  * explain-driven iteration loop (pushdown / broadcast / codegen). Each
+  * query runs once first, so the dump is AQE's final plan — with the
+  * per-stage `EvalOnce` nodes and `[codegen id : n]` spans Bench runs. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    // SPARK_GRAFT_EXPLAIN_NOAQE=1: plan WITHOUT AdaptiveSparkPlan so the
-    // formatted output carries [codegen id : n] annotations — the only
-    // way a static dump can show whole-stage-codegen span boundaries
-    // (AQE's initial plan inserts codegen stages lazily, per query stage)
     val spark = LocalSession(4)
-    if (sys.env.get("SPARK_GRAFT_EXPLAIN_NOAQE").contains("1"))
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else Seq(
       "j1_top_orders_by_revenue", "f1_filtered_lineitems", "f6_promo_parts_by_brand",
@@ -30,7 +26,7 @@ object Explain {
       // d14's interesting plan is the PERSISTED-index probe (the DPP
       // pruned band scan) — the in-memory query form has no partitioned
       // scan to prune, so build a throwaway index and explain the probe
-      if (n == "d14_incremental_dedup") {
+      val df = if (n == "d14_incremental_dedup") {
         import org.apache.spark.sql.functions.{col, lit, pmod}
         val docs = graft.sources.Tables.documents(spark, sfDir)
         val path = java.nio.file.Files.createTempDirectory("lsh_explain").toString
@@ -39,8 +35,10 @@ object Explain {
           k = 3, bands = 8, rowsPerBand = 4, path)
         graft.operators.Dedup.dedupAgainstLshIndex(
           docs.where(pmod(col("doc_id"), lit(11)) === 0), path,
-          threshold = 0.05, maxBucket = Some(3)).explain("formatted")
-      } else SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+          threshold = 0.05, maxBucket = Some(3))
+      } else SparkEntry.queries(n)(spark, sfDir)
+      df.collect()
+      df.explain("formatted")
     }
     spark.stop()
   }

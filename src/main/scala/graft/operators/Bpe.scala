@@ -380,18 +380,24 @@ object Bpe {
   def saveTokenizer(spark: org.apache.spark.sql.SparkSession,
                     merges: Seq[Merge], path: String): Unit = {
     import spark.implicits._
-    merges.zipWithIndex
-      .map { case (m, i) => (i, m.a, m.b, m.n) }
-      .toDF("rank", "a", "b", "n")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/merges")
+    val table = TokenizerArtifact("merges")
+    table.writer(merges.zipWithIndex
+        .map { case (m, i) => (i, m.a, m.b, m.n) }
+        .toDF("rank", "a", "b", "n").coalesce(1))
+      .mode("overwrite").parquet(table.at(path))
   }
+
+  /** The persisted tokenizer: `merges/` in learned order. */
+  private[graft] val TokenizerArtifact =
+    graft.sources.Artifact("BPE tokenizer", "saveTokenizer", "merges")(
+      graft.sources.Table("merges", "rank INT, a STRING, b STRING, n BIGINT"))
 
   /** Load a persisted tokenizer back in learned order. The collect is
     * vocabulary-sized (one row per merge — tens of thousands at most),
     * the same driver-side footprint [[encode]]'s closure carries. */
   def loadTokenizer(spark: org.apache.spark.sql.SparkSession,
                     path: String): Seq[Merge] =
-    spark.read.parquet(s"$path/merges").orderBy(col("rank")).collect()
+    TokenizerArtifact("merges").read(spark, path).orderBy(col("rank")).collect()
       .map(r => Merge(r.getAs[String]("a"), r.getAs[String]("b"),
         r.getAs[Long]("n"))).toSeq
 

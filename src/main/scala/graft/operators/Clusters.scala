@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.{Artifact, Table}
 
 /** Persisted incremental near-dup CLUSTER REGISTRY — the operational
   * tail of the dedup lifecycle. The batch operators turn pairs into
@@ -127,25 +128,21 @@ object Clusters {
     fs.exists(hp(dir)) && fs.listStatus(hp(dir))
       .exists(_.getPath.getName.startsWith("batch_id="))
 
-  // table layouts stated once so the lifecycle's many per-call reads
-  // (every update/resolve/lookup re-opens members+remaps+meta) skip
-  // parquet schema inference — the probe-construction driver cost
-  // measured in Dedup.readLshMeta's note. batch_id is BIGINT, not the
-  // INT directory inference yields on small ids: the API takes Long
-  // batch ids and the archive partition is Long.MinValue, which must
-  // parse (and every consumer compares against a Long anyway); `part`
-  // is written .cast("int") so INT is exact.
-  private[graft] val registryLayout: Seq[(String, String)] = Seq(
-    "members" -> "doc_id BIGINT, root BIGINT, batch_id BIGINT, part INT",
-    "remaps" -> "old_root BIGINT, new_root BIGINT, batch_id BIGINT",
-    "meta" -> "n_doc_parts INT")
-  private val Seq(membersSchema, remapsSchema, metaSchema) =
-    registryLayout.map { case (_, ddl) =>
-      org.apache.spark.sql.types.StructType.fromDDL(ddl)
-    }
+  /** The persisted registry layout. The lifecycle re-opens
+    * members+remaps+meta on every update/resolve/lookup. batch_id is
+    * BIGINT, not the INT directory inference yields on small ids: the
+    * API takes Long batch ids and the archive partition is
+    * Long.MinValue, which must parse; `part` is written .cast("int"). */
+  private[graft] val RegistryArtifact =
+    Artifact("cluster registry", "updateRegistry", "meta")(
+      Table("members", "doc_id BIGINT, root BIGINT, batch_id BIGINT, part INT",
+        "batch_id", "part"),
+      Table("remaps", "old_root BIGINT, new_root BIGINT, batch_id BIGINT",
+        "batch_id"),
+      Table("meta", "n_doc_parts INT"))
 
   private def readRegistryMeta(spark: SparkSession, path: String): Int =
-    spark.read.schema(metaSchema).parquet(s"$path/meta").head().getInt(0)
+    RegistryArtifact.meta(spark, path).getAs[Int]("n_doc_parts")
 
   /** members/ as a frame, or None before the first update. Runs the
     * staged-swap recovery first so a compaction that crashed between
@@ -156,14 +153,14 @@ object Clusters {
     val fs = graft.sources.Hdfs.forPath(spark, path)
     graft.sources.TableSwap.recover(fs, path, "members")
     if (!hasBatchDirs(fs, s"$path/members")) None
-    else Some(spark.read.schema(membersSchema).parquet(s"$path/members"))
+    else Some(RegistryArtifact("members").read(spark, path))
   }
 
   private def readRemaps(spark: SparkSession,
                          path: String): Option[DataFrame] = {
     val fs = graft.sources.Hdfs.forPath(spark, path)
     if (!hasBatchDirs(fs, s"$path/remaps")) None
-    else Some(spark.read.schema(remapsSchema).parquet(s"$path/remaps"))
+    else Some(RegistryArtifact("remaps").read(spark, path))
   }
 
   /** Collapse the merge log to one-hop form: old_root → final root.
@@ -342,8 +339,8 @@ object Clusters {
     // every validation above has passed, so a rejected first call can
     // never pin the layout its retry meant to change
     if (!metaExists)
-      Seq(Tuple1(parts)).toDF("n_doc_parts").coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/meta")
+      RegistryArtifact("meta").writeRow(spark, RegistryArtifact("meta").at(path),
+        parts)
     // batch-local transitive closure over (bid ↔ current root):
     // labels = min id per component — batch-sized graph, converges in
     // 2-3 HashMin rounds
@@ -359,9 +356,9 @@ object Clusters {
       .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("root"))
       .withColumn("part", pmod(col("doc_id"), lit(parts.toLong)).cast("int"))
       .withColumn("batch_id", lit(batchId))
-    members.write.mode("overwrite")
+    RegistryArtifact("members").writer(members).mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id", "part").parquet(s"$path/members")
+      .parquet(RegistryArtifact("members").at(path))
     // merge edges: every absorbed pre-existing root points at the
     // component label (strictly smaller — the acyclicity invariant)
     val remapRows = checked.select(col("root")).distinct()
@@ -369,9 +366,9 @@ object Clusters {
       .where(col("comp") =!= col("root"))
       .select(col("root").as("old_root"), col("comp").as("new_root"))
       .withColumn("batch_id", lit(batchId))
-    remapRows.write.mode("overwrite")
+    RegistryArtifact("remaps").writer(remapRows).mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$path/remaps")
+      .parquet(RegistryArtifact("remaps").at(path))
   }
 
   /** The registry's answer: (doc_id, cluster_id) for every registered
@@ -497,7 +494,7 @@ object Clusters {
     }
     fs.create(marker, true).close()
     graft.sources.TableSwap.rewrite(spark, fs, path, "members") { tmp =>
-      archived.write.partitionBy("batch_id", "part").parquet(tmp)
+      RegistryArtifact("members").writer(archived).parquet(tmp)
     }
     // clear BEFORE the log truncation: re-applying remaps to folded
     // members is a no-op (old roots no longer occur), so readers

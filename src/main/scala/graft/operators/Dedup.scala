@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.{Registry, TextFunctions}
+import graft.sources.{Artifact, Table}
 
 /** Deduplication operators for a training-data pipeline: exact
   * (hash-groupBy), n-gram Jaccard (exact near-dup ground truth),
@@ -588,11 +589,12 @@ object Dedup {
                                    rowsPerBand: Int, path: String,
                                    nBucketParts: Int): Unit = {
     val bandRows = bandedFrame(sig, bands, rowsPerBand)
-      .withColumn("part", pmod(col("bucket"), lit(nBucketParts)))
-    bandRows.write.mode("overwrite").partitionBy("part").parquet(s"$path/bands")
-    writeLshStats(bandRows, s"$path/stats", overwrite = true)
-    sig.select(col("doc_id"), col("sh"))
-      .write.mode("overwrite").parquet(s"$path/docs")
+      .withColumn("part", lshPart(nBucketParts))
+    LshArtifact("bands").writer(bandRows).mode("overwrite")
+      .parquet(LshArtifact("bands").at(path))
+    writeLshStats(bandRows, LshArtifact("stats").at(path), overwrite = true)
+    LshArtifact("docs").writer(sig).mode("overwrite")
+      .parquet(LshArtifact("docs").at(path))
     writeLshMeta(sig.sparkSession, k, bands, rowsPerBand, nBucketParts, path)
   }
 
@@ -601,12 +603,15 @@ object Dedup {
   private def writeLshMeta(spark: org.apache.spark.sql.SparkSession, k: Int,
                            bands: Int, rowsPerBand: Int, nBucketParts: Int,
                            path: String): Unit = {
-    import spark.implicits._
-    Seq((k, bands, rowsPerBand, nBucketParts))
-      .toDF("k", "bands", "rows_per_band", "n_bucket_parts")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    LshArtifact("meta").writeRow(spark, LshArtifact("meta").at(path), k, bands,
+      rowsPerBand, nBucketParts)
     spark.catalog.refreshByPath(path)
   }
+
+  /** A band row's bucket partition: INT, the type the partition
+    * directory reads back as and the probe's DPP join key. */
+  private def lshPart(nBucketParts: Int): Column =
+    pmod(col("bucket"), lit(nBucketParts)).cast("int")
 
   /** Per-(part, band, bucket) member counts, written alongside the band
     * data at save/append time so a capped probe reads a tiny pruned
@@ -618,10 +623,10 @@ object Dedup {
     * next to the band rows they describe. */
   private def writeLshStats(bandRows: DataFrame, statsPath: String,
                             overwrite: Boolean): Unit =
-    bandRows.groupBy(col("part"), col("band"), col("bucket"))
-      .agg(count(lit(1)).as("n"))
-      .write.mode(if (overwrite) "overwrite" else "append")
-      .partitionBy("part").parquet(statsPath)
+    LshArtifact("stats").writer(
+        bandRows.groupBy(col("part"), col("band"), col("bucket"))
+          .agg(count(lit(1)).as("n")))
+      .mode(if (overwrite) "overwrite" else "append").parquet(statsPath)
 
   /** Append an accepted batch to a persisted index — the post-dedup
     * step of the daily loop (probe → keep survivors → append them).
@@ -650,8 +655,9 @@ object Dedup {
     val sig = minhashSignatures(newDocs, k, bands * rpb).cache()
     try {
       val bandRows = bandedFrame(sig, bands, rpb)
-        .withColumn("part", pmod(col("bucket"), lit(parts)))
-      bandRows.write.mode("append").partitionBy("part").parquet(s"$path/bands")
+        .withColumn("part", lshPart(parts))
+      LshArtifact("bands").writer(bandRows).mode("append")
+        .parquet(LshArtifact("bands").at(path))
       // stats slice ONLY when the index already carries a COMMITTED
       // stats table (the _SUCCESS gate — a torn stats dir left by a
       // crashed overwrite must not accrete slices on top of partial
@@ -665,9 +671,9 @@ object Dedup {
       // indexes stay on the counting fallback until
       // [[backfillLshStats]] migrates them wholesale.
       if (lshStatsCommitted(spark, path))
-        writeLshStats(bandRows, s"$path/stats", overwrite = false)
-      sig.select(col("doc_id"), col("sh"))
-        .write.mode("append").parquet(s"$path/docs")
+        writeLshStats(bandRows, LshArtifact("stats").at(path), overwrite = false)
+      LshArtifact("docs").writer(sig).mode("append")
+        .parquet(LshArtifact("docs").at(path))
     } finally sig.unpersist()
   }
 
@@ -696,12 +702,11 @@ object Dedup {
     * joining partial sizes. */
   def backfillLshStats(spark: org.apache.spark.sql.SparkSession,
                        path: String): Unit = {
+    LshArtifact.requireSaved(spark, path)
     val fs = graft.sources.Hdfs.forPath(spark, path)
-    require(fs.exists(new org.apache.hadoop.fs.Path(s"$path/meta")),
-      s"$path is not a saved LSH index (no meta/ table — see saveLshIndex)")
     graft.sources.TableSwap.recover(fs, path, "stats")
     graft.sources.TableSwap.rewrite(spark, fs, path, "stats") { tmp =>
-      writeLshStats(spark.read.parquet(s"$path/bands"), tmp, overwrite = true)
+      writeLshStats(LshArtifact("bands").read(spark, path), tmp, overwrite = true)
     }
   }
 
@@ -719,22 +724,12 @@ object Dedup {
     * changes nothing but file layout. */
   def repairLshIndex(spark: org.apache.spark.sql.SparkSession,
                      path: String): Unit = {
-    val fs = graft.sources.Hdfs.forPath(spark, path)
-    require(fs.exists(new org.apache.hadoop.fs.Path(s"$path/meta")),
-      s"$path is not a saved LSH index (no meta/ table — see saveLshIndex)")
-    // crash recovery first, for all three swappable tables
-    Seq("bands", "docs", "stats")
-      .foreach(graft.sources.TableSwap.recover(fs, path, _))
-    def rewrite(t: String)(dedup: DataFrame => DataFrame): Unit =
-      graft.sources.TableSwap.rewrite(spark, fs, path, t) { tmp =>
-        val df = dedup(spark.read.parquet(s"$path/$t"))
-        if (t == "bands") df.write.partitionBy("part").parquet(tmp)
-        else df.write.parquet(tmp)
-      }
+    LshArtifact.requireSaved(spark, path)
+    val Seq(bandsT, docsT) = Seq("bands", "docs").map(LshArtifact(_))
     // band rows are fully determined by (doc_id, band): exact distinct
-    rewrite("bands")(_.dropDuplicates())
+    bandsT.rewrite(spark, path)(bandsT.read(spark, path).dropDuplicates())
     // one shingle-set row per doc
-    rewrite("docs")(_.dropDuplicates("doc_id"))
+    docsT.rewrite(spark, path)(docsT.read(spark, path).dropDuplicates("doc_id"))
     backfillLshStats(spark, path)
   }
 
@@ -750,14 +745,11 @@ object Dedup {
     * the compacted band part ids. */
   def compactLshBands(spark: org.apache.spark.sql.SparkSession, path: String,
                       maxFilesPerPart: Int, targetFiles: Int = 1): Seq[Int] = {
-    val fs = graft.sources.Hdfs.forPath(spark, path)
-    require(fs.exists(new org.apache.hadoop.fs.Path(s"$path/meta")),
-      s"$path is not a saved LSH index (no meta/ table — see saveLshIndex)")
+    LshArtifact.requireSaved(spark, path)
     if (lshStatsCommitted(spark, path))
-      graft.sources.Compaction.compactPartitions(spark, s"$path/stats",
-        "part=", maxFilesPerPart, targetFiles)
-    graft.sources.Compaction.compactPartitions(spark, s"$path/bands",
-      "part=", maxFilesPerPart, targetFiles).map(_.toInt)
+      LshArtifact("stats").compact(spark, path, maxFilesPerPart, targetFiles)
+    LshArtifact("bands").compact(spark, path, maxFilesPerPart, targetFiles)
+      .map(_.toInt)
   }
 
   /** Re-bucket (and optionally re-band) a persisted LSH index from its
@@ -807,20 +799,20 @@ object Dedup {
     // if the crash tore meta itself); the caller's overrides apply
     // only when a FRESH snapshot is taken
     graft.sources.Rebuild.withCommittedSnapshot(spark, path, {
-      val m = spark.read.parquet(s"$path/meta").head()
-      val nb = bands.getOrElse(m.getInt(1))
-      val nr = rowsPerBand.getOrElse(m.getInt(2))
-      val np = nBucketParts.getOrElse(m.getInt(3))
+      val (k, b0, r0, p0) = readLshMeta(spark, path)
+      val nb = bands.getOrElse(b0)
+      val nr = rowsPerBand.getOrElse(r0)
+      val np = nBucketParts.getOrElse(p0)
       require(nb >= 1 && nr >= 1 && np >= 1,
         s"rebuild parameters must be positive: bands=$nb rowsPerBand=$nr nBucketParts=$np")
       // unchanged banding ⇒ band rows are invariant: snapshot THEM
       // (8-byte buckets, no shingle arrays) and skip every hash
-      val rebucket = nb == m.getInt(1) && nr == m.getInt(2)
+      val rebucket = nb == b0 && nr == r0
       val df =
-        if (rebucket) spark.read.parquet(s"$path/bands")
+        if (rebucket) LshArtifact("bands").read(spark, path)
           .select(col("doc_id"), col("band"), col("bucket"))
-        else spark.read.parquet(s"$path/docs").select(col("doc_id"), col("sh"))
-      (df, Map("k" -> m.getInt(0).toString, "bands" -> nb.toString,
+        else LshArtifact("docs").read(spark, path)
+      (df, Map("k" -> k.toString, "bands" -> nb.toString,
            "rows_per_band" -> nr.toString, "n_bucket_parts" -> np.toString,
            "mode" -> (if (rebucket) "rebucket" else "reband")))
     }) { (snap, params) =>
@@ -832,11 +824,10 @@ object Dedup {
       if (params.getOrElse("mode", "reband") == "rebucket") {
         // pure layout: recompute `part`, rewrite bands + stats, leave
         // the doc store untouched; meta (written last) commits
-        val bandRows = snap
-          .withColumn("part", pmod(col("bucket"), lit(np)))
-        bandRows.write.mode("overwrite").partitionBy("part")
-          .parquet(s"$path/bands")
-        writeLshStats(bandRows, s"$path/stats", overwrite = true)
+        val bandRows = snap.withColumn("part", lshPart(np))
+        LshArtifact("bands").writer(bandRows).mode("overwrite")
+          .parquet(LshArtifact("bands").at(path))
+        writeLshStats(bandRows, LshArtifact("stats").at(path), overwrite = true)
         writeLshMeta(spark, k, nb, nr, np, path)
       } else {
         // scope-bounded cache as in saveLshIndex: bands/stats/docs all
@@ -874,32 +865,19 @@ object Dedup {
                                 maxBucket: Option[Int] = None): DataFrame =
     indexProbe(batch, path, threshold, maxBucket)(verifiedPairsAgainstBands)
 
-  /** The persisted-index table layouts, stated once so probes can skip
-    * per-read schema inference (a parquet footer read + driver merge
-    * per `spark.read.parquet` call — measured ~0.45 s of pure driver
-    * time per probe CONSTRUCTION at sf0.1, paid 7× per c6 lifecycle
-    * round). Types match what the writers produce and the reader
-    * infers: `part` is INT (partition-dir value inference), `band` is
-    * the posexplode position (INT), buckets/hashes are BIGINT. */
-  private val LshBandsSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "doc_id BIGINT, band INT, bucket BIGINT, part INT")
-  private val LshDocsSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "doc_id BIGINT, sh ARRAY<BIGINT>")
-  private val LshStatsSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "band INT, bucket BIGINT, n BIGINT, part INT")
-  private val LshMetaSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "k INT, bands INT, rows_per_band INT, n_bucket_parts INT")
+  /** [[saveLshIndex]]'s layout; `part` INT is the probe's DPP key. */
+  private[graft] val LshArtifact = Artifact("LSH index", "saveLshIndex", "meta")(
+    Table("bands", "doc_id BIGINT, band INT, bucket BIGINT, part INT", "part"),
+    Table("docs", "doc_id BIGINT, sh ARRAY<BIGINT>"),
+    Table("stats", "band INT, bucket BIGINT, n BIGINT, part INT", "part"),
+    Table("meta", "k INT, bands INT, rows_per_band INT, n_bucket_parts INT"))
 
-  /** One-row meta read on the hot probe/append path, schema stated
-    * (not inferred) — same driver-cost rationale as the table schemas
-    * above. Column-name field access so a schema drift fails loudly
-    * instead of returning the wrong ordinal. */
+  /** (k, bands, rows_per_band, n_bucket_parts) from the index's meta. */
   private def readLshMeta(spark: org.apache.spark.sql.SparkSession,
                           path: String): (Int, Int, Int, Int) = {
-    val m = spark.read.schema(LshMetaSchema).parquet(s"$path/meta").head()
-    (m.getInt(m.fieldIndex("k")), m.getInt(m.fieldIndex("bands")),
-      m.getInt(m.fieldIndex("rows_per_band")),
-      m.getInt(m.fieldIndex("n_bucket_parts")))
+    val m = LshArtifact.meta(spark, path)
+    (m.getAs[Int]("k"), m.getAs[Int]("bands"), m.getAs[Int]("rows_per_band"),
+      m.getAs[Int]("n_bucket_parts"))
   }
 
   /** Shared probe plumbing: rebuild guard, meta read, operand scans,
@@ -916,7 +894,7 @@ object Dedup {
     val (k, bands, rpb, parts) = readLshMeta(spark, path)
     val stats =
       if (maxBucket.isDefined && lshStatsCommitted(spark, path))
-        Some(spark.read.schema(LshStatsSchema).parquet(s"$path/stats"))
+        Some(LshArtifact("stats").read(spark, path))
       else None
     // the batch's shingle+signature subtree is referenced 4-5 times
     // downstream (probe buckets, candidate join, verification, verdict
@@ -936,8 +914,7 @@ object Dedup {
     // DPP stops pruning the band scan (spec-pinned `dynamicpruning`).
     val batchSig = minhashSignatures(batch, k, bands * rpb).cache()
       .where(size(col("sh")) > 0)
-    f(spark.read.schema(LshBandsSchema).parquet(s"$path/bands"),
-      spark.read.schema(LshDocsSchema).parquet(s"$path/docs"),
+    f(LshArtifact("bands").read(spark, path), LshArtifact("docs").read(spark, path),
       batchSig, bands, rpb, threshold, maxBucket, parts, stats)
   }
 
@@ -1557,33 +1534,29 @@ object Dedup {
       // fingerprint never has to rescan the store
       val digest = deconContentDigest(hashes)
       graft.sources.TableSwap.rewrite(spark, fs, parent, name) { tmp =>
-        hashes.write.mode("overwrite").partitionBy("part")
-          .parquet(s"$tmp/hashes")
-        Seq(Tuple1(bytes)).toDF("bloom").coalesce(1)
-          .write.mode("overwrite").parquet(s"$tmp/bloom")
-        Seq((k, fpp, n, nHashParts, digest, bloomBytesDigest(bytes)))
-          .toDF("k", "fpp", "n_hashes", "n_hash_parts", "content_digest",
-            "bloom_digest")
-          .coalesce(1).write.mode("overwrite").parquet(s"$tmp/meta")
+        DeconArtifact("hashes").writer(hashes).mode("overwrite")
+          .parquet(DeconArtifact("hashes").at(tmp))
+        DeconArtifact("bloom").writeRow(spark, DeconArtifact("bloom").at(tmp), bytes)
+        DeconArtifact("meta").writeRow(spark, DeconArtifact("meta").at(tmp), k,
+          fpp, n, nHashParts, digest, bloomBytesDigest(bytes))
       }
     } finally hashes.unpersist()
   }
 
-  /** The decon index tables read with a stated schema: (directory,
-    * DDL). `part` is directory-inferred as INT but stated BIGINT — it is
-    * `pmod` of the BIGINT hash and the probe's partition in-list holds
-    * longs. meta and bloom are read schemaless (legacy metas lack
-    * `content_digest`). */
-  private[graft] val deconLayout: Seq[(String, String)] =
-    Seq("hashes" -> "h BIGINT, part BIGINT")
+  /** [[saveDeconIndex]]'s layout. `part` is stated BIGINT (directory
+    * inference reads INT): `pmod` of the BIGINT hash, and the probe's
+    * in-list holds longs. A legacy 4-column meta reads NULL digests. */
+  private[graft] val DeconArtifact =
+    Artifact("decontamination index", "saveDeconIndex", "meta")(
+      Table("hashes", "h BIGINT, part BIGINT", "part"),
+      Table("bloom", "bloom BINARY"),
+      Table("meta", "k INT, fpp DOUBLE, n_hashes BIGINT, n_hash_parts INT, " +
+        "content_digest BIGINT, bloom_digest BIGINT"))
 
-  /** The hash store under the [[deconLayout]] schema; the stated schema
-    * also lets an empty store (no parquet footer to infer from) load. */
-  private[graft] def readDeconHashes(spark: org.apache.spark.sql.SparkSession,
-                                     path: String): DataFrame = {
-    val Seq((dir, ddl)) = deconLayout
-    spark.read.schema(ddl).parquet(s"$path/$dir")
-  }
+  /** The bloom sidecar's serialized bytes. */
+  private[graft] def readDeconBloom(spark: org.apache.spark.sql.SparkSession,
+                                    path: String): Array[Byte] =
+    DeconArtifact("bloom").read(spark, path).head().getAs[Array[Byte]]("bloom")
 
   /** Bloom sizing/serialization shared by [[saveDeconIndex]] and
     * [[rebuildDeconBloom]] — `stat.bloomFilter` NPEs on an empty
@@ -1619,10 +1592,11 @@ object Dedup {
     // leftovers of a crashed PRIOR bloom rebuild first
     graft.sources.TableSwap.recover(fs, path, "bloom")
     graft.sources.TableSwap.recover(fs, path, "meta")
-    val m = spark.read.parquet(s"$path/meta").head()
-    val hashes = readDeconHashes(spark, path)
-    rebuildDeconBloomAs(spark, path, m.getInt(0), m.getDouble(1),
-      m.getInt(3), hashes, hashes.count())
+    val m = DeconArtifact.meta(spark, path)
+    val hashes = DeconArtifact("hashes").read(spark, path)
+    rebuildDeconBloomAs(spark, path, m.getAs[Int]("k"),
+      m.getAs[Double]("fpp"), m.getAs[Int]("n_hash_parts"), hashes,
+      hashes.count())
   }
 
   /** [[rebuildDeconBloom]] with the meta row and hash count already in
@@ -1631,23 +1605,17 @@ object Dedup {
   private[graft] def rebuildDeconBloomAs(
       spark: org.apache.spark.sql.SparkSession, path: String,
       k: Int, fpp: Double, parts: Int, hashes: DataFrame, n: Long): Long = {
-    import spark.implicits._
     val fs = graft.sources.Hdfs.forPath(spark, path)
     val bytes = deconBloomBytes(hashes, n, fpp)
     // recomputed from the store, so a heal is digest-IDENTICAL to the
     // original save (same hash set ⇒ same digest) and also migrates
     // legacy pre-digest indexes to the persisted-column layout
     val digest = deconContentDigest(hashes)
-    graft.sources.TableSwap.rewrite(spark, fs, path, "bloom") { tmp =>
-      Seq(Tuple1(bytes)).toDF("bloom").coalesce(1)
-        .write.mode("overwrite").parquet(tmp)
-    }
-    graft.sources.TableSwap.rewrite(spark, fs, path, "meta") { tmp =>
-      Seq((k, fpp, n, parts, digest, bloomBytesDigest(bytes)))
-        .toDF("k", "fpp", "n_hashes", "n_hash_parts", "content_digest",
-          "bloom_digest")
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-    }
+    graft.sources.TableSwap.rewrite(spark, fs, path, "bloom")(
+      DeconArtifact("bloom").writeRow(spark, _, bytes))
+    graft.sources.TableSwap.rewrite(spark, fs, path, "meta")(
+      DeconArtifact("meta").writeRow(spark, _, k, fpp, n, parts, digest,
+        bloomBytesDigest(bytes)))
     n
   }
 
@@ -1712,26 +1680,26 @@ object Dedup {
     * lesson). The value is version-prefixed (`v2...`) so a future
     * format change is distinguishable from a content change inside a
     * crash-replay window. Cost: one driver-side read of the 1-row meta
-    * table; legacy indexes saved before the digest column fall back to
-    * one aggregation over the hash store (the digest lands in meta at
-    * the next save, heal, or nightly tick).
+    * table; legacy indexes saved before the digest column (NULL
+    * `content_digest`) fall back to one aggregation over the hash store
+    * (the digest lands in meta at the next save, heal, or nightly
+    * tick).
     * [[graft.streaming.DocStreams.processCurationBatch]] records it
     * next to each batch's sealed verdicts to catch the one operational
     * misuse its crash contract cannot survive: a benchmark re-save
     * inside a crash-replay window. */
   def deconIndexFingerprint(spark: org.apache.spark.sql.SparkSession,
                             path: String): String =
-    fpFromMeta(spark, path, spark.read.parquet(s"$path/meta"))
+    fpFromMeta(spark, path, DeconArtifact.meta(spark, path))
 
   private def fpFromMeta(spark: org.apache.spark.sql.SparkSession,
                          path: String,
-                         meta: DataFrame): String = {
-    val m = meta.head()
+                         m: org.apache.spark.sql.Row): String = {
     val digest =
-      if (meta.schema.fieldNames.contains("content_digest"))
+      if (!m.isNullAt(m.fieldIndex("content_digest")))
         m.getAs[Long]("content_digest")
-      else deconContentDigest(readDeconHashes(spark, path))
-    f"v2${fnvMix(m.getInt(0).toLong, digest)}%016x"
+      else deconContentDigest(DeconArtifact("hashes").read(spark, path))
+    f"v2${fnvMix(m.getAs[Int]("k").toLong, digest)}%016x"
   }
 
   /** (fingerprint, meta token) from ONE read of the 1-row meta table —
@@ -1744,8 +1712,8 @@ object Dedup {
   private[graft] def deconIndexStamp(
       spark: org.apache.spark.sql.SparkSession,
       path: String): (String, String) = {
-    val meta = spark.read.parquet(s"$path/meta")
-    (fpFromMeta(spark, path, meta), deconMetaToken(spark, path, meta.head()))
+    val m = DeconArtifact.meta(spark, path)
+    (fpFromMeta(spark, path, m), deconMetaToken(spark, path, m))
   }
 
   /** Opaque token over EVERY meta field (names and values) of a decon
@@ -1760,12 +1728,13 @@ object Dedup {
     * re-saves inside one probe window that restore field-identical
     * meta still change it. Comparing the token before and after the
     * probe therefore detects ANY completed meta rewrite in the window
-    * — a benchmark re-save, a bloom heal, or a legacy-meta migration;
-    * the latter two are fingerprint-stable, so the aborted batch's
-    * replay re-enters cleanly. */
+    * — a benchmark re-save, a bloom heal, or a legacy-meta migration
+    * (NULL digests become values); the latter two are
+    * fingerprint-stable, so the aborted batch's replay re-enters
+    * cleanly. */
   private[graft] def deconMetaToken(spark: org.apache.spark.sql.SparkSession,
                                     path: String): String =
-    deconMetaToken(spark, path, spark.read.parquet(s"$path/meta").head())
+    deconMetaToken(spark, path, DeconArtifact.meta(spark, path))
 
   private def deconMetaToken(spark: org.apache.spark.sql.SparkSession,
                              path: String,
@@ -1816,15 +1785,10 @@ object Dedup {
     * protocol; the nightly's entry recovery heals a torn bump. */
   private[graft] def bumpDeconMeta(spark: org.apache.spark.sql.SparkSession,
                                    path: String): Unit = {
-    val fs = graft.sources.Hdfs.forPath(spark, path)
-    // pin the single row BEFORE the swap deletes the files it came from
-    val meta = spark.read.parquet(s"$path/meta")
-    val df = spark.createDataFrame(
-      scala.jdk.CollectionConverters.SeqHasAsJava(meta.collect().toSeq)
-        .asJava, meta.schema)
-    graft.sources.TableSwap.rewrite(spark, fs, path, "meta") { tmp =>
-      df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    }
+    val meta = DeconArtifact("meta")
+    // the replacement is written (read from the live files) before the
+    // swap stages the live table aside
+    meta.rewrite(spark, path)(meta.read(spark, path).coalesce(1))
   }
 
   /** Probe a [[saveDeconIndex]] artifact with an arriving batch: per
@@ -1852,18 +1816,17 @@ object Dedup {
     // concurrently with Maintenance.nightly should use
     // [[decontaminateAgainstDeconIndexBracketed]] instead.
     assertDeconNotCompacting(graft.sources.Hdfs.forPath(spark, path), path)
-    val m = spark.read.parquet(s"$path/meta").head()
-    val (k, parts) = (m.getInt(0), m.getInt(3))
-    val bytes = spark.read.parquet(s"$path/bloom").head()
-      .getAs[Array[Byte]](0)
+    val m = DeconArtifact.meta(spark, path)
+    val (k, parts) = (m.getAs[Int]("k"), m.getAs[Int]("n_hash_parts"))
+    val bytes = readDeconBloom(spark, path)
     // a bloom with false negatives silently drops true contamination
     // hits at the prefilter (the confirm join can only veto false
     // POSITIVES), so a sidecar that does not match the digest meta
     // recorded at save/heal time must refuse, never serve — the bytes
     // are already in driver memory, so the check is free of extra I/O.
-    // Legacy pre-digest metas skip it (migrated at the next save, heal,
-    // or nightly tick).
-    if (m.schema.fieldNames.contains("bloom_digest") &&
+    // Legacy pre-digest metas (NULL digest) skip it (migrated at the
+    // next save, heal, or nightly tick).
+    if (!m.isNullAt(m.fieldIndex("bloom_digest")) &&
         m.getAs[Long]("bloom_digest") != bloomBytesDigest(bytes))
       throw new IllegalStateException(
         s"decon index at $path has a bloom sidecar that does not match " +
@@ -1891,11 +1854,9 @@ object Dedup {
     // re-derived per run)
     val candParts = candidates.select(col("part")).distinct()
       .collect().map(_.getLong(0)).toSeq
-    // explicit schema: an unshingleable benchmark commits an EMPTY
-    // hash store (no schema-bearing parquet under hashes/), which a
-    // schemaless read cannot infer — the probe must still run and
-    // score everything clean, not throw far from the bad save
-    val store = readDeconHashes(spark, path)
+    // stated schema: an unshingleable benchmark's EMPTY store still
+    // loads and scores everything clean
+    val store = DeconArtifact("hashes").read(spark, path)
       .where(col("part").isin(candParts: _*))
     val hits = candidates.join(store, Seq("part", "h"), "left_semi")
       .select(col("h"))
@@ -2598,6 +2559,23 @@ object Dedup {
 
   // ----------------------- persisted Hamming-band index (m7 / d19)
 
+  /** [[saveHammingIndex]]'s layout: BIGINT ids and signatures (every
+    * entry point requires them), `part` INT the probe's DPP key. */
+  private[graft] val HammingArtifact =
+    Artifact("Hamming index", "saveHammingIndex", "meta")(
+      Table("bands", "_id BIGINT, _sig BIGINT, band INT, bucket BIGINT, part INT",
+        "part"),
+      Table("meta", "bits INT, bands INT, n_bucket_parts INT"))
+
+  /** The id and hash columns a Hamming index stores must be BIGINT. */
+  private def requireHammingKeys(df: DataFrame, idCol: String,
+                                 hashCol: String): Unit =
+    Seq(idCol, hashCol).foreach { c =>
+      val t = df.schema(c).dataType
+      require(t == org.apache.spark.sql.types.LongType,
+        s"Hamming index column $c must be BIGINT, got ${t.sql}")
+    }
+
   /** Band rows of a Hamming fingerprint relation, partition column
     * included: (_id, _sig, band, bucket, part) — the full signature
     * rides every row, [[hammingNearDupPairs]]'s zero-exchange
@@ -2605,6 +2583,7 @@ object Dedup {
   private def hammingBandRows(hashes: DataFrame, idCol: String,
                               hashCol: String, bits: Int, bands: Int,
                               nBucketParts: Int): DataFrame = {
+    requireHammingKeys(hashes, idCol, hashCol)
     val width = bits / bands
     val mask = if (width == 64) -1L else (1L << width) - 1
     hashes.select(col(idCol).as("_id"), col(hashCol).as("_sig"),
@@ -2634,34 +2613,19 @@ object Dedup {
                        nBucketParts: Int = LshBucketParts): Unit = {
     require(bits >= bands && bits % bands == 0 && bits <= 64,
       s"bits=$bits must be a positive multiple of bands=$bands, <= 64")
-    hammingBandRows(hashes, idCol, hashCol, bits, bands, nBucketParts)
-      .write.mode("overwrite").partitionBy("part").parquet(s"$path/bands")
-    writeHammingMeta(hashes.sparkSession, bits, bands, nBucketParts, path)
+    HammingArtifact("bands").writer(
+        hammingBandRows(hashes, idCol, hashCol, bits, bands, nBucketParts))
+      .mode("overwrite").parquet(HammingArtifact("bands").at(path))
+    HammingArtifact("meta").writeRow(hashes.sparkSession,
+      HammingArtifact("meta").at(path), bits, bands, nBucketParts)
+    hashes.sparkSession.catalog.refreshByPath(path)
   }
-
-  private def writeHammingMeta(spark: org.apache.spark.sql.SparkSession,
-                               bits: Int, bands: Int, nBucketParts: Int,
-                               path: String): Unit = {
-    import spark.implicits._
-    Seq((bits, bands, nBucketParts))
-      .toDF("bits", "bands", "n_bucket_parts")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    spark.catalog.refreshByPath(path)
-  }
-
-  private val HammingMetaSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "bits INT, bands INT, n_bucket_parts INT")
 
   private def hammingMeta(spark: org.apache.spark.sql.SparkSession,
                           path: String): (Int, Int, Int) = {
-    require(graft.sources.Hdfs.forPath(spark, path)
-        .exists(new org.apache.hadoop.fs.Path(s"$path/meta")),
-      s"$path is not a saved Hamming index (no meta/ table — see saveHammingIndex)")
-    // schema stated, not inferred — the probe-construction driver cost
-    // argument at [[readLshMeta]]
-    val m = spark.read.schema(HammingMetaSchema).parquet(s"$path/meta").head()
-    (m.getInt(m.fieldIndex("bits")), m.getInt(m.fieldIndex("bands")),
-      m.getInt(m.fieldIndex("n_bucket_parts")))
+    val m = HammingArtifact.meta(spark, path)
+    (m.getAs[Int]("bits"), m.getAs[Int]("bands"),
+      m.getAs[Int]("n_bucket_parts"))
   }
 
   /** Append a batch of fingerprints to a persisted Hamming index — the
@@ -2675,8 +2639,9 @@ object Dedup {
                            hashCol: String, path: String): Unit = {
     val spark = newHashes.sparkSession
     val (bits, bands, parts) = hammingMeta(spark, path)
-    hammingBandRows(newHashes, idCol, hashCol, bits, bands, parts)
-      .write.mode("append").partitionBy("part").parquet(s"$path/bands")
+    HammingArtifact("bands").writer(
+        hammingBandRows(newHashes, idCol, hashCol, bits, bands, parts))
+      .mode("append").parquet(HammingArtifact("bands").at(path))
   }
 
   /** Verified near-dup PAIRS of a batch against a persisted Hamming
@@ -2720,16 +2685,7 @@ object Dedup {
       shiftright(sig, b * width).bitwiseAND(lit(mask))
     val keys = Seq("part", "band", "bucket")
     val bBands = hammingBandRows(batch, idCol, hashCol, bits, bands, parts)
-    // skip schema inference on the hot probe read when the index holds
-    // the standard (BIGINT id, BIGINT sig) shape — m6/m7's media ids
-    // and dHashes; exotic id types keep the inferred read
-    val lt = org.apache.spark.sql.types.LongType
-    val corpusBands =
-      if (batch.schema(idCol).dataType == lt && batch.schema(hashCol).dataType == lt)
-        spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(
-          "_id BIGINT, _sig BIGINT, band INT, bucket BIGINT, part INT"))
-          .parquet(s"$path/bands")
-      else spark.read.parquet(s"$path/bands")
+    val corpusBands = HammingArtifact("bands").read(spark, path)
     // corpus rows cohabiting a batch bucket; the join carries `part`
     // so the partition column is an equi-join key — the DPP handle
     val hit = corpusBands
@@ -2785,9 +2741,9 @@ object Dedup {
   def compactHammingBands(spark: org.apache.spark.sql.SparkSession,
                           path: String, maxFilesPerPart: Int,
                           targetFiles: Int = 1): Seq[Int] = {
-    hammingMeta(spark, path)
-    graft.sources.Compaction.compactPartitions(spark, s"$path/bands",
-      "part=", maxFilesPerPart, targetFiles).map(_.toInt)
+    HammingArtifact.requireSaved(spark, path)
+    HammingArtifact("bands").compact(spark, path, maxFilesPerPart, targetFiles)
+      .map(_.toInt)
   }
 
   /** Row hygiene for an append-grown Hamming index — the containment
@@ -2802,13 +2758,9 @@ object Dedup {
     * A clean index round-trips unchanged (spec-pinned). */
   def repairHammingIndex(spark: org.apache.spark.sql.SparkSession,
                          path: String): Unit = {
-    hammingMeta(spark, path)
-    val fs = graft.sources.Hdfs.forPath(spark, path)
-    graft.sources.TableSwap.recover(fs, path, "bands")
-    graft.sources.TableSwap.rewrite(spark, fs, path, "bands") { tmp =>
-      spark.read.parquet(s"$path/bands").distinct()
-        .write.partitionBy("part").parquet(tmp)
-    }
+    HammingArtifact.requireSaved(spark, path)
+    val bands = HammingArtifact("bands")
+    bands.rewrite(spark, path)(bands.read(spark, path).distinct())
   }
 
   /** Re-band a persisted Hamming index under a new bucket-partition
@@ -2830,7 +2782,7 @@ object Dedup {
     val target = nBucketParts.getOrElse(parts)
     Maintenance.retrainAndSwap(spark, path) { tmp =>
       saveHammingIndex(
-        spark.read.parquet(s"$path/bands").where(col("band") === 0)
+        HammingArtifact("bands").read(spark, path).where(col("band") === 0)
           .select(col("_id"), col("_sig")),
         "_id", "_sig", bits, bands, tmp, target)
     }

@@ -208,26 +208,23 @@ object LangId {
   def saveLangId(labeled: DataFrame, path: String,
                  textCol: String = "text", buckets: Int = Buckets): Unit = {
     val (model, langConst) = train(labeled, textCol, buckets)
-    model.write.mode("overwrite").partitionBy("lang")
-      .parquet(s"$path/li_model")
-    langConst.coalesce(1).write.mode("overwrite").parquet(s"$path/li_const")
+    val Seq(m, c) = ModelArtifact.tables
+    m.writer(model).mode("overwrite").parquet(m.at(path))
+    c.writer(langConst.coalesce(1)).mode("overwrite").parquet(c.at(path))
   }
 
-  /** The persisted layout: (directory, stated DDL) of the model and
-    * const tables. Stated schemas skip parquet inference on every
-    * load; `lang STRING` keeps numeric language codes from loading as
-    * integer partitions ([[LmScore.load]]'s reason). */
-  private[graft] val layout: Seq[(String, String)] = Seq(
-    "li_model" -> "f BIGINT, dlp BIGINT, lang STRING",
-    "li_const" -> "lang STRING, lp_unseen BIGINT, prior BIGINT, buckets INT")
+  /** The persisted classifier: lang-partitioned model, const table last
+    * (`lang STRING`: [[LmScore.artifact]]'s reason). */
+  private[graft] val ModelArtifact =
+    graft.sources.Artifact("LangId model", "saveLangId", "li_const")(
+      graft.sources.Table("li_model", "f BIGINT, dlp BIGINT, lang STRING", "lang"),
+      graft.sources.Table("li_const",
+        "lang STRING, lp_unseen BIGINT, prior BIGINT, buckets INT"))
 
-  /** (model, langConst) at `path`, read with the [[layout]] schemas. */
+  /** (model, langConst) at `path`. */
   def loadLangId(spark: org.apache.spark.sql.SparkSession, path: String)
       : (DataFrame, DataFrame) = {
-    val Seq(model, const) = layout.map { case (dir, ddl) =>
-      spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
-        .parquet(s"$path/$dir")
-    }
+    val Seq(model, const) = ModelArtifact.tables.map(_.read(spark, path))
     (model, const)
   }
 

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 import graft.functions.{PolyHash64, TextFunctions => TF}
 
 /** N-gram language-model quality scoring — the CCNet/KenLM stage the
@@ -246,16 +245,13 @@ object LmScore {
     }
   }
 
-  /** The persisted layout of an [[LmModel]], in `tables` order: one
-    * (directory, stated DDL) per table. Model tables are
-    * lang-PARTITIONED when keyed (a scorer for one language prunes to
-    * its own partition), so `lang` comes last in their stated schema;
-    * the meta table is one small file with `lang` first. Stated
-    * schemas skip parquet inference on every load, and `lang STRING`
-    * keeps a numeric-looking language code (e.g. "001") from loading
-    * as an integer partition column — which would make the scorer's
-    * string-keyed join silently match nothing. */
-  private[graft] def layout(spec: LmSpec): Seq[(String, String)] = {
+  /** The persisted layout of an [[LmModel]], in `tables` order, meta
+    * last as the commit marker. Model tables are lang-PARTITIONED when
+    * keyed (a scorer for one language prunes to its own partition); the
+    * meta table is one small file with `lang` first. `lang STRING`
+    * keeps a numeric-looking code ("001") from loading as an integer
+    * partition column the string-keyed join would silently miss. */
+  private[graft] def artifact(spec: LmSpec): graft.sources.Artifact = {
     val bigram = "w1 STRING, w2 STRING, lp BIGINT"
     val cont = "w2 STRING, pcnum DOUBLE"
     val knMeta = "t DOUBLE, du DOUBLE, v DOUBLE, pcden DOUBLE, pcnum_unk DOUBLE"
@@ -271,12 +267,15 @@ object LmScore {
         "mkn_cont" -> cont, "mkn_meta" ->
           s"$knMeta, d1 DOUBLE, d2 DOUBLE, d3 DOUBLE, estimated BOOLEAN")
     }
-    if (!spec.perLang) tables
-    else tables.init.map { case (d, ddl) => d -> s"$ddl, lang STRING" } :+
-      (tables.last._1 -> s"lang STRING, ${tables.last._2}")
+    val stated =
+      if (!spec.perLang) tables.map { case (d, ddl) => graft.sources.Table(d, ddl) }
+      else tables.init.map { case (d, ddl) =>
+        graft.sources.Table(d, s"$ddl, lang STRING", "lang")
+      } :+ graft.sources.Table(tables.last._1, s"lang STRING, ${tables.last._2}")
+    graft.sources.Artifact("n-gram LM", "LmScore.save", stated.last.dir)(stated: _*)
   }
 
-  /** Train `spec` on `train` and persist it at `path` in [[layout]].
+  /** Train `spec` on `train` and persist it at `path` in [[artifact]].
     * An n-gram LM is retrained, not patched — counts are corpus
     * globals, so no partial update preserves the smoothing
     * denominators — hence plain overwrite semantics, no merge log;
@@ -284,20 +283,16 @@ object LmScore {
     * [[Maintenance.retrainAndSwap]]. */
   def save(spec: LmSpec, train: DataFrame, path: String,
            textCol: String = "text"): Unit = {
-    val tables = this.train(spec, train, textCol).tables
-    val dirs = layout(spec).map(_._1)
-    dirs.init.zip(tables.init).foreach { case (dir, t) =>
-      val w = t.write.mode("overwrite")
-      (if (spec.perLang) w.partitionBy("lang") else w).parquet(s"$path/$dir")
+    val a = artifact(spec)
+    a.tables.zip(this.train(spec, train, textCol).tables).foreach { case (st, t) =>
+      st.writer(if (st.dir == a.marker) t.coalesce(1) else t).mode("overwrite")
+        .parquet(st.at(path))
     }
-    tables.last.coalesce(1).write.mode("overwrite").parquet(s"$path/${dirs.last}")
   }
 
   /** The model `spec` persisted at `path`, read with its stated schemas. */
   def load(spark: SparkSession, spec: LmSpec, path: String): LmModel = {
-    val t = layout(spec).map { case (dir, ddl) =>
-      spark.read.schema(StructType.fromDDL(ddl)).parquet(s"$path/$dir")
-    }
+    val t = artifact(spec).tables.map(_.read(spark, path))
     LmModel(spec, t.head, t(1), if (t.size == 4) Some(t(2)) else None, t.last)
   }
 
@@ -306,7 +301,7 @@ object LmScore {
     * name under the root. */
   def persistedSmoothing(exists: String => Boolean): Option[Smoothing] =
     Seq(Smoothing.AddHalf, Smoothing.Kn, Smoothing.Mkn)
-      .find(s => exists(layout(LmSpec(s, perLang = false)).head._1))
+      .find(s => exists(artifact(LmSpec(s, perLang = false)).tables.head.dir))
 
   /** Per-transition log-prob stream of `docs` (doc_id[, lang], textCol)
     * under `model`: (doc_id[, lang], lp). The one scoring join

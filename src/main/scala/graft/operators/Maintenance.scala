@@ -88,7 +88,10 @@ object Maintenance {
   }
 
   /** Run one nightly pass against the index at `path`. The family is
-    * detected from the layout (`cells/` → PQ-IVF, `bands/` → LSH).
+    * detected from the owning modules' descriptors (retrained families
+    * and the margin index by directory, Hamming by its meta footer,
+    * then `cells/` → PQ-IVF, `bands/` → LSH, `bloom/`+`hashes/` →
+    * decon, `members/` → registry), whose marker it then requires.
     * `repair` additionally runs the row-hygiene repair first — the
     * containment step for the streaming sinks' at-least-once append
     * windows; leave it off when no curation stream writes the index. */
@@ -101,8 +104,6 @@ object Maintenance {
         s"rebuildAtRowsPerPart (${lsh.rebuildAtRowsPerPart}) — an inverted " +
         "config would rebuild every night without changing the partitioning")
     val fs = graft.sources.Hdfs.forPath(spark, path)
-    def exists(t: String) =
-      fs.exists(new org.apache.hadoop.fs.Path(s"$path/$t"))
     // heal a crashed ROOT swap first (the decon family's re-save
     // stages the whole artifact aside): family-agnostic and a no-op
     // for the LSH/PQ layouts, which never swap their roots — without
@@ -120,6 +121,17 @@ object Maintenance {
     if (rootStaged)
       graft.sources.TableSwap.recover(fs, root.getParent.toString,
         root.getName)
+    val r = nightlyFamily(spark, path, maxFilesPerPart, pq, lsh, repair)
+    if (rootStaged) r.copy(actions = "heal-swap" +: r.actions) else r
+  }
+
+  /** [[nightly]] after the root-swap heal. */
+  private def nightlyFamily(spark: SparkSession, path: String,
+                            maxFilesPerPart: Int, pq: PqConfig,
+                            lsh: LshConfig, repair: Boolean): NightlyReport = {
+    val fs = graft.sources.Hdfs.forPath(spark, path)
+    def exists(t: String) =
+      fs.exists(new org.apache.hadoop.fs.Path(s"$path/$t"))
     // sub-table leftovers of a crashed bloom/meta rewrite
     // ([[Dedup.rebuildDeconBloom]]'s two swaps) can leave bloom/ or
     // even meta/ missing — recover them BEFORE the meta require and
@@ -137,44 +149,38 @@ object Maintenance {
     // exactly the root swap the heal above covers. Return before the
     // index-family detection (a tokenizer root has no meta/ at all).
     val retrained =
-      if (exists("merges")) Some("tokenizer")
+      if (Bpe.TokenizerArtifact.isSaved(spark, path)) Some("tokenizer")
       else LmScore.persistedSmoothing(exists).map {
         case LmScore.Smoothing.AddHalf => "lm"
         case LmScore.Smoothing.Kn => "kn-lm"
         case LmScore.Smoothing.Mkn => "mkn-lm"
       }.orElse(if (exists("li_model")) Some("langid") else None)
     if (retrained.isDefined)
-      return NightlyReport(path, retrained.get,
-        if (rootStaged) Seq("heal-swap") else Nil, None, None)
+      return NightlyReport(path, retrained.get, Nil, None, None)
     // margin-index roots ([[Similarity.saveMarginIndex]] layout:
     // cells/ + centroids/ + yden/ + margin_meta/) would otherwise be
     // misdetected as PQ by the cells/ probe below and crash the drift
     // check on the missing codebook tables. yden is retrained-not-
     // patched (a corpus property — rebuilds ride [[retrainAndSwap]]),
     // so the nightly here is cell compaction + the root heal above.
-    if (exists("margin_meta")) {
-      val compacted = graft.sources.Compaction.compactPartitions(spark,
-        s"$path/cells", "cell=", maxFilesPerPart)
+    if (Similarity.MarginArtifact.isSaved(spark, path)) {
+      val compacted = Similarity.MarginArtifact("cells")
+        .compact(spark, path, maxFilesPerPart)
       return NightlyReport(path, "margin-ivf",
-        (if (rootStaged) Seq("heal-swap") else Nil) ++
-          (if (compacted.nonEmpty) Seq(s"compact:${compacted.size}") else Nil),
+        if (compacted.nonEmpty) Seq(s"compact:${compacted.size}") else Nil,
         None, None)
     }
     // Hamming-band roots ([[Dedup.saveHammingIndex]] layout: bands/ +
     // meta/, NO docs/ or stats/) would otherwise be misdetected as LSH
     // by the bands/ probe below — same band-partitioned shape, but the
-    // meta row is (bits, bands, n_bucket_parts) and nightlyLsh's
-    // meta.getInt(3) would crash on it (or worse, a future column
-    // alignment would size the growth check from the wrong field).
+    // meta row is (bits, bands, n_bucket_parts), which nightlyLsh's
+    // stated LSH meta read would see as NULL k/rows_per_band.
     // The meta SCHEMA is the discriminator: only this family's meta
-    // carries `bits` (LSH has k/rows_per_band, PQ n_centroids, decon
-    // k/bloom params) — a footer read, no data scan.
-    if (exists("meta") &&
-        spark.read.parquet(s"$path/meta").schema.fieldNames.contains("bits")) {
-      val r = nightlyHamming(spark, path, maxFilesPerPart, lsh, repair)
-      return r.copy(actions =
-        (if (rootStaged) Seq("heal-swap") else Nil) ++ r.actions)
-    }
+    // footer carries every stated Hamming meta column (`bits` is its
+    // own; LSH has k/rows_per_band, PQ n_centroids, decon k/bloom
+    // params) — a footer read, no data scan.
+    if (Dedup.HammingArtifact.holds(spark, path))
+      return nightlyHamming(spark, path, maxFilesPerPart, lsh, repair)
     // registry analogue: a [[Clusters.compactRegistry]] fold that died
     // between TableSwap's two renames leaves members/ absent with the
     // full table staged at _repair_old_members — recover it BEFORE the
@@ -185,8 +191,6 @@ object Maintenance {
     if (exists("remaps") || exists("_repair_old_members"))
       graft.sources.TableSwap.recover(fs, path, "members")
     val inflight = graft.sources.Rebuild.isInflight(spark, path)
-    require(exists("meta") || inflight,
-      s"$path is not a saved index (no meta/ table)")
     // family detection must survive the crash class the heal exists
     // for: a rebuild that died during its FIRST table overwrite leaves
     // cells/ (or bands/) absent for the whole window, so fall back to
@@ -203,16 +207,13 @@ object Maintenance {
       s"$path has neither cells/ (PQ-IVF) nor bands/ (LSH) nor " +
         "bloom/+hashes/ (decon) nor members/ (cluster registry) nor a " +
         "rebuild snapshot identifying the family")
-    if (isDecon) {
-      val r = nightlyDecon(spark, path, maxFilesPerPart)
-      return r.copy(actions =
-        (if (rootStaged) Seq("heal-swap") else Nil) ++ r.actions)
-    }
-    if (isRegistry) {
-      val r = nightlyRegistry(spark, path)
-      return r.copy(actions =
-        (if (rootStaged) Seq("heal-swap") else Nil) ++ r.actions)
-    }
+    // a rebuild in flight may have torn meta itself; its snapshot heals it
+    if (!inflight)
+      (if (isPq) Similarity.PqIvfArtifact else if (isLsh) Dedup.LshArtifact
+       else if (isDecon) Dedup.DeconArtifact else Clusters.RegistryArtifact)
+        .requireSaved(spark, path)
+    if (isDecon) return nightlyDecon(spark, path, maxFilesPerPart)
+    if (isRegistry) return nightlyRegistry(spark, path)
     // heal FIRST: a crashed rebuild left the in-flight marker, so every
     // probe (including tonight's drift check) fails loudly until the
     // rebuild is re-run from its committed snapshot — that re-run is
@@ -316,12 +317,12 @@ object Maintenance {
     // marker at all, so live probes see zero abort windows unless
     // partitions will actually move — the bracket's cost is paid only
     // when its protection is needed
+    val store = Dedup.DeconArtifact("hashes")
     val (staged, fragmented) = graft.sources.Compaction.compactionWork(fs,
-      s"$path/hashes", "part=", maxFilesPerPart)
+      store.at(path), "part=", maxFilesPerPart)
     if (orphaned || staged || fragmented > 0) {
       fs.create(marker, true).close()
-      val compacted = graft.sources.Compaction.compactPartitions(spark,
-        s"$path/hashes", "part=", maxFilesPerPart)
+      val compacted = store.compact(spark, path, maxFilesPerPart)
       if (compacted.nonEmpty) actions += s"compact:${compacted.size}"
       // anything that moved partitions tonight — a compaction, a
       // staged-dir restore, or an orphaned crash's completed swaps —
@@ -333,11 +334,10 @@ object Maintenance {
           s"could not clear the _compacting marker at $marker — probes " +
             "will keep refusing; clear it by re-running the nightly pass")
     }
-    val m = spark.read.parquet(s"$path/meta").head()
-    val hashes = Dedup.readDeconHashes(spark, path)
+    val m = Dedup.DeconArtifact.meta(spark, path)
+    val hashes = Dedup.DeconArtifact("hashes").read(spark, path)
     val trueN = hashes.count()
-    val falseNegatives = scala.util.Try(
-        spark.read.parquet(s"$path/bloom").head().getAs[Array[Byte]](0))
+    val falseNegatives = scala.util.Try(Dedup.readDeconBloom(spark, path))
       .map(bytes => hashes.where(!graft.functions.BloomExprs
         .mightContainLong(col("h"), bytes)).count())
     // legacy pre-digest metas also trip the heal: persisting
@@ -350,13 +350,13 @@ object Maintenance {
     // meta-token bracket — loud and retryable, the replay re-enters
     // cleanly because every nightly action is fingerprint-stable
     // (spec-pinned); that beats a torn probe passing silently
-    val legacyMeta = !m.schema.fieldNames.contains("content_digest") ||
-      !m.schema.fieldNames.contains("bloom_digest")
+    val legacyMeta = m.isNullAt(m.fieldIndex("content_digest")) ||
+      m.isNullAt(m.fieldIndex("bloom_digest"))
     val damaged = falseNegatives.isFailure || falseNegatives.get > 0 ||
-      m.getLong(2) != trueN
+      m.getAs[Long]("n_hashes") != trueN
     if (damaged || legacyMeta) {
-      Dedup.rebuildDeconBloomAs(spark, path, m.getInt(0), m.getDouble(1),
-        m.getInt(3), hashes, trueN)
+      Dedup.rebuildDeconBloomAs(spark, path, m.getAs[Int]("k"),
+        m.getAs[Double]("fpp"), m.getAs[Int]("n_hash_parts"), hashes, trueN)
       actions += (if (damaged) "rebuild-bloom" else "migrate-meta")
     }
     NightlyReport(path, "decon", actions.result(), None, None)
@@ -376,8 +376,8 @@ object Maintenance {
     // compaction runs after a rebuild too: the fresh partitioned write
     // leaves one file per shuffle task per cell, so a rebuild night
     // still ends tidy and the NEXT night is a true no-op
-    val compacted = graft.sources.Compaction.compactPartitions(spark,
-      s"$path/cells", "cell=", maxFilesPerPart)
+    val compacted = Similarity.PqIvfArtifact("cells")
+      .compact(spark, path, maxFilesPerPart)
     if (compacted.nonEmpty) actions += s"compact:${compacted.size}"
     NightlyReport(path, "pq-ivf", actions.result(), Some(report), None)
   }
@@ -400,22 +400,32 @@ object Maintenance {
                              repair: Boolean): NightlyReport = {
     val actions = Seq.newBuilder[String]
     if (repair) { Dedup.repairHammingIndex(spark, path); actions += "repair" }
-    val nParts = spark.read.parquet(s"$path/meta").head().getInt(2)
-    val totalRows = spark.read.parquet(s"$path/bands").count()
+    grow(path, "hamming", actions,
+      Dedup.HammingArtifact.meta(spark, path).getAs[Int]("n_bucket_parts"),
+      Dedup.HammingArtifact("bands").read(spark, path).count(), lsh)(
+      n => Dedup.rebuildHammingIndex(spark, path, nBucketParts = Some(n)),
+      Dedup.compactHammingBands(spark, path, maxFilesPerPart))
+  }
+
+  /** Band-family growth: past the rebuild bound, re-bucket (pure
+    * layout) to the smallest power of two under target rows per part;
+    * then compact — after a rebuild too, so the next night is a no-op. */
+  private def grow(path: String, family: String,
+                   actions: scala.collection.mutable.Builder[String, Seq[String]],
+                   nParts: Int, totalRows: Long, lsh: LshConfig)(
+                   rebuild: Int => Unit, compact: => Seq[Int]): NightlyReport = {
     val rowsPerPart = totalRows.toDouble / nParts
     if (rowsPerPart > lsh.rebuildAtRowsPerPart) {
       var target = nParts.toLong
       while (target < Int.MaxValue / 2 &&
              totalRows.toDouble / target > lsh.targetRowsPerPart)
         target *= 2
-      Dedup.rebuildHammingIndex(spark, path, nBucketParts = Some(target.toInt))
+      rebuild(target.toInt)
       actions += "rebuild"
     }
-    // compaction runs after a rebuild too (fresh write = one file per
-    // shuffle task per part), so the next healthy night is a no-op
-    val compacted = Dedup.compactHammingBands(spark, path, maxFilesPerPart)
+    val compacted = compact
     if (compacted.nonEmpty) actions += s"compact:${compacted.size}"
-    NightlyReport(path, "hamming", actions.result(), None, Some(rowsPerPart))
+    NightlyReport(path, family, actions.result(), None, Some(rowsPerPart))
   }
 
   private def nightlyLsh(spark: SparkSession, path: String,
@@ -429,7 +439,7 @@ object Maintenance {
       Dedup.backfillLshStats(spark, path)
       actions += "backfill-stats"
     }
-    val nParts = spark.read.parquet(s"$path/meta").head().getInt(3)
+    val nParts = Dedup.LshArtifact.meta(spark, path).getAs[Int]("n_bucket_parts")
     // band-row total from the tiny stats side table when committed
     // (slice counts sum to the band rows) — a nightly full scan of the
     // band data just to count it is the kind of cost that matters at
@@ -442,27 +452,14 @@ object Maintenance {
     // occur) restore exactness as a side effect
     val totalRows =
       if (Dedup.lshStatsCommitted(spark, path))
-        spark.read.parquet(s"$path/stats")
+        Dedup.LshArtifact("stats").read(spark, path)
           .agg(org.apache.spark.sql.functions.coalesce(
             org.apache.spark.sql.functions.sum("n"),
             org.apache.spark.sql.functions.lit(0L)))
           .head().getLong(0)
-      else spark.read.parquet(s"$path/bands").count()
-    val rowsPerPart = totalRows.toDouble / nParts
-    if (rowsPerPart > lsh.rebuildAtRowsPerPart) {
-      // smallest power of two holding rows-per-part under target —
-      // growth migration, pure layout (probe verdicts pinned)
-      var target = nParts.toLong
-      while (target < Int.MaxValue / 2 &&
-             totalRows.toDouble / target > lsh.targetRowsPerPart)
-        target *= 2
-      Dedup.rebuildLshIndex(spark, path, nBucketParts = Some(target.toInt))
-      actions += "rebuild"
-    }
-    // compaction runs after a rebuild too (fresh write = one file per
-    // shuffle task per part), so the next healthy night is a no-op
-    val compacted = Dedup.compactLshBands(spark, path, maxFilesPerPart)
-    if (compacted.nonEmpty) actions += s"compact:${compacted.size}"
-    NightlyReport(path, "lsh", actions.result(), None, Some(rowsPerPart))
+      else Dedup.LshArtifact("bands").read(spark, path).count()
+    grow(path, "lsh", actions, nParts, totalRows, lsh)(
+      n => Dedup.rebuildLshIndex(spark, path, nBucketParts = Some(n)),
+      Dedup.compactLshBands(spark, path, maxFilesPerPart))
   }
 }

@@ -368,9 +368,10 @@ object PipelineScaleBench {
       // run would exit(4) at the probe-vs-recompute equality with no
       // self-heal path
       def cachedParamsOk: Boolean = scala.util.Try {
-        val m = spark.read.parquet(s"$idxPath/meta").head()
-        m.getInt(0) == 3 && m.getInt(1) == 8 && m.getInt(2) == 4 &&
-          m.getInt(3) == Dedup.LshBucketParts
+        val m = Dedup.LshArtifact.meta(spark, idxPath)
+        m.getAs[Int]("k") == 3 && m.getAs[Int]("bands") == 8 &&
+          m.getAs[Int]("rows_per_band") == 4 &&
+          m.getAs[Int]("n_bucket_parts") == Dedup.LshBucketParts
       }.getOrElse(false)
       val (_, buildSec) =
         if (corpusSuccess.exists() && idxSuccess.exists() &&
@@ -487,8 +488,9 @@ object PipelineScaleBench {
         val corpusSuccess =
           new java.io.File(s"$dir/documents.parquet/_SUCCESS")
         def cachedParamsOk: Boolean = scala.util.Try {
-          val m = spark.read.parquet(s"$idxPath/meta").head()
-          m.getInt(0) == 56 && m.getInt(1) == 4 && m.getInt(2) == 64
+          val m = Dedup.HammingArtifact.meta(spark, idxPath)
+          m.getAs[Int]("bits") == 56 && m.getAs[Int]("bands") == 4 &&
+            m.getAs[Int]("n_bucket_parts") == 64
         }.getOrElse(false)
         val (_, buildSec) =
           if (corpusSuccess.exists() && idxSuccess.exists() &&
@@ -614,7 +616,8 @@ object PipelineScaleBench {
       val probeBefore = Dedup.dedupAgainstLshIndex(batch, idxPath,
         threshold = 0.05, maxBucket = Some(64)).collect().map(_.toSeq).toSeq
       graft.Isolation.scrub(spark)
-      val parts0 = spark.read.parquet(s"$idxPath/meta").head().getInt(3)
+      val parts0 = Dedup.LshArtifact.meta(spark, idxPath)
+        .getAs[Int]("n_bucket_parts")
       val (_, rebucketSec) = timed(
         Dedup.rebuildLshIndex(spark, idxPath, nBucketParts = Some(parts0 * 4)))
       graft.Isolation.scrub(spark)

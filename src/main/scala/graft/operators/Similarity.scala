@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.Registry
+import graft.sources.{Artifact, Table}
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -25,8 +26,6 @@ object Similarity {
     aggregate(
       zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, v) => acc + v)
-
-  def norm2(a: Column): Column = dot(a, a)
 
   def cosine(a: Column, b: Column, n2a: Column, n2b: Column): Column =
     dot(a, b) / (sqrt(n2a) * sqrt(n2b))
@@ -232,21 +231,50 @@ object Similarity {
     * disk-level analogue of an inverted file. Build once, reuse across
     * queries/sessions. */
   def saveIvf(index: IvfIndex, assigned: DataFrame, path: String): Unit = {
-    val spark = assigned.sparkSession
-    import spark.implicits._
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
-    index.centroids.toSeq.map { case (ci, c) => (ci, c.toSeq) }
-      .toDF("ci", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+    IvfArtifact("cells").writer(assigned).mode("overwrite")
+      .parquet(IvfArtifact("cells").at(path))
+    writeCentroids(index, assigned.sparkSession, path)
   }
 
   def loadIvf(spark: org.apache.spark.sql.SparkSession,
-              path: String): (IvfIndex, DataFrame) = {
-    val centroids = spark.read.parquet(s"$path/centroids").collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1)
-    (IvfIndex(centroids), spark.read.parquet(s"$path/cells"))
-  }
+              path: String): (IvfIndex, DataFrame) =
+    (readCentroids(spark, path), IvfArtifact("cells").read(spark, path))
+
+  private val centroidsTable = Table("centroids", "ci INT, centroid ARRAY<DOUBLE>")
+
+  /** [[saveIvf]]'s layout; `cell` INT is the probe's DPP key. */
+  private[graft] val IvfArtifact = Artifact("IVF index", "saveIvf", "centroids")(
+    Table("cells", "vec_id BIGINT, vec ARRAY<DOUBLE>, cell INT", "cell"),
+    centroidsTable)
+
+  /** [[saveMarginIndex]]'s layout: IVF plus `yden/` and the family
+    * marker `margin_meta/`, written first. */
+  private[graft] val MarginArtifact =
+    Artifact("margin index", "saveMarginIndex", "margin_meta")(
+      IvfArtifact.tables ++ Seq(Table("yden", "tgt_id BIGINT, y_avg DOUBLE"),
+        Table("margin_meta", "k INT")): _*)
+
+  /** [[savePqIvf]]'s layout; meta is written last. */
+  private[graft] val PqIvfArtifact = Artifact("PQ-IVF index", "savePqIvf", "meta")(
+    Table("cells",
+      "vec_id BIGINT, embedding ARRAY<FLOAT>, codes ARRAY<INT>, cell INT", "cell"),
+    centroidsTable,
+    Table("codebooks", "s INT, j INT, cb ARRAY<DOUBLE>"),
+    Table("meta", "m INT, k_code INT, n_centroids INT"))
+
+  private def writeCentroids(index: IvfIndex,
+                             spark: org.apache.spark.sql.SparkSession,
+                             path: String): Unit =
+    centroidsTable.writer(spark.createDataFrame(index.centroids.toSeq
+        .map { case (ci, c) => (ci, c.toSeq) }).toDF("ci", "centroid").coalesce(1))
+      .mode("overwrite").parquet(centroidsTable.at(path))
+
+  private def readCentroids(spark: org.apache.spark.sql.SparkSession,
+                            path: String): IvfIndex =
+    IvfIndex(centroidsTable.read(spark, path).collect()
+      .map(r => r.getAs[Int]("ci") ->
+        r.getSeq[Double](r.fieldIndex("centroid")).toArray)
+      .sortBy(_._1))
 
   /** Incremental index maintenance: assign a batch of NEW vectors with
     * the index's EXISTING centroids and append them to the
@@ -257,8 +285,8 @@ object Similarity {
     * IDENTICAL to a fresh assignment of the union (same centroids ⇒
     * same cells ⇒ same probes — asserted in the spec). */
   def appendToIvf(index: IvfIndex, newVectors: DataFrame, path: String): Unit =
-    assignToCells(index, newVectors)
-      .write.mode("append").partitionBy("cell").parquet(s"$path/cells")
+    IvfArtifact("cells").writer(assignToCells(index, newVectors))
+      .mode("append").parquet(IvfArtifact("cells").at(path))
 
   /** Compact a persisted index's over-fragmented cells: every
     * [[appendToIvf]] batch adds at least one file per arriving cell, so
@@ -271,13 +299,11 @@ object Similarity {
     * (asserted in TrainedIvfSpec). Returns the compacted cell ids. */
   def compactIvfCells(spark: org.apache.spark.sql.SparkSession, path: String,
                       maxFilesPerCell: Int, targetFiles: Int = 1): Seq[Int] = {
-    val fs = graft.sources.Hdfs.forPath(spark, path)
-    require(fs.exists(new org.apache.hadoop.fs.Path(s"$path/cells")),
-      s"$path is not a saved IVF index (no cells/ directory — see saveIvf)")
+    IvfArtifact.requireSaved(spark, path)
     // swap protocol + crash recovery live in sources.Compaction — ONE
     // audited implementation for every partitioned index in the engine
-    graft.sources.Compaction.compactPartitions(spark, s"$path/cells",
-      "cell=", maxFilesPerCell, targetFiles).map(_.toInt)
+    IvfArtifact("cells").compact(spark, path, maxFilesPerCell, targetFiles)
+      .map(_.toInt)
   }
 
   /** Cell-occupancy statistics for an IVF index — the post-append drift
@@ -722,13 +748,8 @@ object Similarity {
     // build is detected as margin-ivf and fails loudly at the first
     // probe of the missing tables instead (atomic replacement of a
     // LIVE index rides Maintenance.retrainAndSwap either way).
-    assigned.sparkSession.createDataFrame(
-        java.util.List.of[org.apache.spark.sql.Row](
-          org.apache.spark.sql.Row(k)),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("k",
-            org.apache.spark.sql.types.IntegerType))))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/margin_meta")
+    MarginArtifact("margin_meta").writeRow(assigned.sparkSession,
+      MarginArtifact("margin_meta").at(path), k)
     saveIvf(index, assigned, path)
     val aSide = assigned.where(pmod(col("vec_id"), lit(2)) === 0)
       .select(col("vec_id").as("a_id"), col("cell"), col("vec"))
@@ -740,8 +761,8 @@ object Similarity {
       .select(col("tgt_id"), col("a_id"), col("cos"))
     val wy = Window.partitionBy(col("tgt_id")).orderBy(desc("cos"), col("a_id"))
     val ytop = yc.withColumn("rn", row_number().over(wy)).where(col("rn") <= k)
-    pivotAvg(ytop, "tgt_id", "y_avg", k)
-      .write.mode("overwrite").parquet(s"$path/yden")
+    MarginArtifact("yden").writer(pivotAvg(ytop, "tgt_id", "y_avg", k))
+      .mode("overwrite").parquet(MarginArtifact("yden").at(path))
   }
 
   /** Mine margin-alignment pairs for a QUERY batch against the
@@ -764,14 +785,14 @@ object Similarity {
     val top = cand.withColumn("rn", row_number().over(wq))
       .where(col("rn") <= k).localCheckpoint()
     marginPick(top, pivotAvg(top, "src_id", "x_avg", k),
-      spark.read.parquet(s"$path/yden"), minMargin)
+      MarginArtifact("yden").read(spark, path), minMargin)
   }
 
   /** The persisted index's build-time k (top-k width shared by the
     * x side and the precomputed yden). */
   def marginIndexK(spark: org.apache.spark.sql.SparkSession,
                    path: String): Int =
-    spark.read.parquet(s"$path/margin_meta").head().getInt(0)
+    MarginArtifact.meta(spark, path).getAs[Int]("k")
 
   /** Shared candidate front half of the batch and streaming
     * against-index miners: assign queries to cells map-side, join the
@@ -1100,18 +1121,35 @@ object Similarity {
     val (index, assigned) = buildIvfTrained(base, nCentroids, maxIter = trainIters)
     val cbRows = trainPqCodebooks(base, m, kCode, trainIters)
     val cbFlat = typedLit(cbRows.sortBy(t => (t._1, t._2)).flatMap(_._3))
-    assigned.toDF().select(col("vec_id"), col("cell"))
+    val cells = assigned.toDF().select(col("vec_id"), col("cell"))
       .join(base, "vec_id")
       .select(col("vec_id"), col("cell"), col("embedding"),
         Registry.pqEncode(col("embedding"), cbFlat, m, kCode).as("codes"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
-    index.centroids.toSeq.map { case (ci, c) => (ci, c.toSeq) }
-      .toDF("ci", "centroid").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    cbRows.toDF("s", "j", "cb").coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/codebooks")
-    Seq((m, kCode, nCentroids)).toDF("m", "k_code", "n_centroids")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    PqIvfArtifact("cells").writer(cells).mode("overwrite")
+      .parquet(PqIvfArtifact("cells").at(path))
+    writeCentroids(index, spark, path)
+    PqIvfArtifact("codebooks").writer(cbRows.toDF("s", "j", "cb").coalesce(1))
+      .mode("overwrite").parquet(PqIvfArtifact("codebooks").at(path))
+    PqIvfArtifact("meta").writeRow(spark, PqIvfArtifact("meta").at(path), m,
+      kCode, nCentroids)
+  }
+
+  /** A loaded [[savePqIvf]] index: its (m, kCode), frozen centroids,
+    * frozen codebooks as one flat literal (s-major, then codeword, then
+    * dimension — the layout the PQ kernels extract) and the cells. */
+  private case class PqIvf(m: Int, kCode: Int, index: IvfIndex,
+                           cbFlat: Column, cells: DataFrame)
+
+  private def loadPqIvf(spark: org.apache.spark.sql.SparkSession,
+                        path: String): PqIvf = {
+    val meta = PqIvfArtifact.meta(spark, path)
+    val cbRows = PqIvfArtifact("codebooks").read(spark, path).collect()
+      .map(r => (r.getAs[Int]("s"), r.getAs[Int]("j"),
+        r.getSeq[Double](r.fieldIndex("cb")))).toSeq
+    PqIvf(meta.getAs[Int]("m"), meta.getAs[Int]("k_code"),
+      readCentroids(spark, path),
+      typedLit(cbRows.sortBy(t => (t._1, t._2)).flatMap(_._3)),
+      PqIvfArtifact("cells").read(spark, path))
   }
 
   /** Incremental maintenance for a [[savePqIvf]] index: assign arriving
@@ -1129,19 +1167,15 @@ object Similarity {
   def appendToPqIvf(newVectors: DataFrame, path: String): Unit = {
     val spark = newVectors.sparkSession
     graft.sources.Rebuild.assertNotInflight(spark, path)
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val (m, kCode) = (meta.getInt(0), meta.getInt(1))
-    val index = IvfIndex(spark.read.parquet(s"$path/centroids").collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).sortBy(_._1))
-    val cbRows = spark.read.parquet(s"$path/codebooks").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2))).toSeq
-    val cbFlat = typedLit(cbRows.sortBy(t => (t._1, t._2)).flatMap(_._3))
+    val pq = loadPqIvf(spark, path)
     val base = newVectors.select(col("vec_id"), col("embedding"))
-    assignToCells(index, base).select(col("vec_id"), col("cell"))
-      .join(base, "vec_id")
-      .select(col("vec_id"), col("cell"), col("embedding"),
-        Registry.pqEncode(col("embedding"), cbFlat, m, kCode).as("codes"))
-      .write.mode("append").partitionBy("cell").parquet(s"$path/cells")
+    PqIvfArtifact("cells").writer(
+        assignToCells(pq.index, base).select(col("vec_id"), col("cell"))
+          .join(base, "vec_id")
+          .select(col("vec_id"), col("cell"), col("embedding"),
+            Registry.pqEncode(col("embedding"), pq.cbFlat, pq.m, pq.kCode)
+              .as("codes")))
+      .mode("append").parquet(PqIvfArtifact("cells").at(path))
   }
 
   /** Repair a [[savePqIvf]] index damaged by an at-least-once replayed
@@ -1155,14 +1189,9 @@ object Similarity {
     * (save/rebuild only) and never need repair. */
   def repairPqIvf(spark: org.apache.spark.sql.SparkSession,
                   path: String): Unit = {
-    val fs = graft.sources.Hdfs.forPath(spark, path)
-    require(fs.exists(new org.apache.hadoop.fs.Path(s"$path/meta")),
-      s"$path is not a saved PQ-IVF index (no meta/ table — see savePqIvf)")
-    graft.sources.TableSwap.recover(fs, path, "cells")
-    graft.sources.TableSwap.rewrite(spark, fs, path, "cells") { tmp =>
-      spark.read.parquet(s"$path/cells").dropDuplicates()
-        .write.partitionBy("cell").parquet(tmp)
-    }
+    PqIvfArtifact.requireSaved(spark, path)
+    val cells = PqIvfArtifact("cells")
+    cells.rewrite(spark, path)(cells.read(spark, path).dropDuplicates())
   }
 
   /** Probe a [[savePqIvf]] index: `nProbe` nearest cells per query
@@ -1212,14 +1241,7 @@ object Similarity {
     // table does not yet hold — ADC scores would be silently wrong;
     // fail loudly instead (heal by re-running the rebuild)
     graft.sources.Rebuild.assertNotInflight(spark, path)
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val (m, kCode) = (meta.getInt(0), meta.getInt(1))
-    val index = IvfIndex(spark.read.parquet(s"$path/centroids").collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).sortBy(_._1))
-    val cbRows = spark.read.parquet(s"$path/codebooks").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2))).toSeq
-    val cbFlat = typedLit(cbRows.sortBy(t => (t._1, t._2)).flatMap(_._3))
-    val cells = spark.read.parquet(s"$path/cells")
+    val PqIvf(m, kCode, index, cbFlat, cells) = loadPqIvf(spark, path)
     val bc = spark.sparkContext.broadcast(index)
     import spark.implicits._
     val qCells = queries.select(col("vec_id").as("q_id"), col("embedding"))
@@ -1272,10 +1294,8 @@ object Similarity {
                       sampleMod: Int, k: Int, nProbe: Int, rescoreK: Int,
                       skewBound: Double = 4.0,
                       recallFloor: Double = 0.9): PqIvfDriftReport = {
-    val index = IvfIndex(spark.read.parquet(s"$path/centroids").collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).sortBy(_._1))
-    val cells = spark.read.parquet(s"$path/cells")
-    val vectors = cells.select(col("vec_id"), col("embedding"))
+    val pq = loadPqIvf(spark, path)
+    val vectors = pq.cells.select(col("vec_id"), col("embedding"))
     val queries = vectors.where(col("vec_id") % sampleMod === 0)
     val truth = bruteForceTopK(vectors, sampleMod, k)
     val approx = pqIvfSearch(spark, path, queries, k, nProbe, rescoreK)
@@ -1284,7 +1304,7 @@ object Similarity {
       .join(truthPairs, Seq("q_id", "neighbor_id")).count()
     val denom = truthPairs.count()
     PqIvfDriftReport(
-      occupancy = ivfCellStats(index, cells),
+      occupancy = ivfCellStats(pq.index, pq.cells),
       sampledQueries = queries.count(),
       recallAtK = if (denom == 0) 1.0 else hit.toDouble / denom,
       skewBound = skewBound, recallFloor = recallFloor)
@@ -1307,12 +1327,11 @@ object Similarity {
     // snapshot's persisted params instead, so it heals even when the
     // crash tore the meta table itself
     graft.sources.Rebuild.withCommittedSnapshot(spark, path, {
-      val meta = spark.read.parquet(s"$path/meta").head()
-      (spark.read.parquet(s"$path/cells")
+      val meta = PqIvfArtifact.meta(spark, path)
+      (PqIvfArtifact("cells").read(spark, path)
          .select(col("vec_id"), col("embedding")),
-       Map("m" -> meta.getInt(0).toString,
-           "k_code" -> meta.getInt(1).toString,
-           "n_centroids" -> meta.getInt(2).toString))
+       Seq("m", "k_code", "n_centroids")
+         .map(f => f -> meta.getAs[Int](f).toString).toMap)
     }) { (snap, params) =>
       savePqIvf(snap, params("n_centroids").toInt, params("m").toInt,
         params("k_code").toInt, path, trainIters)
@@ -1548,14 +1567,6 @@ object Similarity {
        |  FROM rescored)
        |SELECT q_id, rank, vec_id AS neighbor_id, cos FROM ranked
        |WHERE rank <= $k ORDER BY q_id, rank""".stripMargin
-  }
-
-  /** Cosine over two array<double> columns. */
-  def cosineArrays(a: Column, b: Column): Column = {
-    val dot = aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-    val na = aggregate(transform(a, x => x * x), lit(0.0), (acc, v) => acc + v)
-    val nb = aggregate(transform(b, x => x * x), lit(0.0), (acc, v) => acc + v)
-    dot / (sqrt(na) * sqrt(nb))
   }
 
   /** Random-hyperplane LSH (sign sketch): `nBits` fixed deterministic

@@ -35,6 +35,24 @@ object CoverageQueries {
       OrphanCheck("fk_custkey_resolves", "o_custkey", "customer", "c_custkey"))
   }
 
+  /** c12/c17/c19: per-language `sm` target models trained on the
+    * held-out %3==1 slice and PERSISTED (LmScore.save), the gate scoring
+    * the gated corpus against the loaded artifact; c10's chain after. */
+  private def targetLmCuration(s: SparkSession, dir: String, sm: Smoothing,
+                               scratch: String): DataFrame = {
+    import CurationStages._
+    val all = Tables.documents(s, dir)
+    val docs = synthesized(all)
+    DedupQueries.withIndexScratch(s, scratch) { path =>
+      LmScore.save(LmSpec(sm, perLang = true),
+        benchSlice(all).select(col("doc_id"), col("lang"), col("text")), path)
+      val lmKept = lmGated(gated(docs),
+        all.select(col("doc_id"), col("lang")), sm, Some(path))
+      val kept = decontaminated(lmKept, benchSlice(all))
+      quotaRollup(curated(kept, components(nearDupPairs(kept))))
+    }
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // S8: epoch-weighted mixture replication (training-data mixing) —
@@ -245,20 +263,8 @@ object CoverageQueries {
     // re-derives the same deterministic models from the same slice
     // (save≡train is LmScoreSpec-pinned — the c9 pattern). Everything
     // downstream is c10's chain verbatim.
-    "c12_target_lm_curation" -> ((s, dir) => {
-      import CurationStages._
-      val all = Tables.documents(s, dir)
-      val docs = synthesized(all)
-      DedupQueries.withIndexScratch(s, "c12_lm") { path =>
-        LmScore.save(LmSpec(Smoothing.AddHalf, perLang = true),
-          benchSlice(all).select(col("doc_id"), col("lang"), col("text")),
-          path)
-        val lmKept = lmGated(gated(docs),
-          all.select(col("doc_id"), col("lang")), Smoothing.AddHalf, Some(path))
-        val kept = decontaminated(lmKept, benchSlice(all))
-        quotaRollup(curated(kept, components(nearDupPairs(kept))))
-      }
-    }),
+    "c12_target_lm_curation" -> ((s, dir) =>
+      targetLmCuration(s, dir, Smoothing.AddHalf, "c12_lm")),
 
     // C14: the HOST-QUALITY prior composed into c10's chain — the
     // RefinedWeb/Common-Crawl "URL rules first" stage: d18's
@@ -307,20 +313,8 @@ object CoverageQueries {
     // persisted lifecycle runs inside the query; the oracle re-derives
     // the same deterministic models from the same slice (save≡train is
     // LmScoreSpec-pinned). Everything downstream is c10's chain.
-    "c17_target_kn_curation" -> ((s, dir) => {
-      import CurationStages._
-      val all = Tables.documents(s, dir)
-      val docs = synthesized(all)
-      DedupQueries.withIndexScratch(s, "c17_knlm") { path =>
-        LmScore.save(LmSpec(Smoothing.Kn, perLang = true),
-          benchSlice(all).select(col("doc_id"), col("lang"), col("text")),
-          path)
-        val lmKept = lmGated(gated(docs),
-          all.select(col("doc_id"), col("lang")), Smoothing.Kn, Some(path))
-        val kept = decontaminated(lmKept, benchSlice(all))
-        quotaRollup(curated(kept, components(nearDupPairs(kept))))
-      }
-    }),
+    "c17_target_kn_curation" -> ((s, dir) =>
+      targetLmCuration(s, dir, Smoothing.Kn, "c17_knlm")),
 
     // C19: c17 under the MODIFIED-KN estimator — the configuration a
     // stock KenLM build hands CCNet (lmplz estimates modified KN by
@@ -335,20 +329,8 @@ object CoverageQueries {
     // against the loaded artifact. Everything downstream is c10's
     // chain; the oracle re-derives the same deterministic models from
     // the same slice (save≡train is LmScoreSpec-pinned).
-    "c19_target_mkn_curation" -> ((s, dir) => {
-      import CurationStages._
-      val all = Tables.documents(s, dir)
-      val docs = synthesized(all)
-      DedupQueries.withIndexScratch(s, "c19_mknlm") { path =>
-        LmScore.save(LmSpec(Smoothing.Mkn, perLang = true),
-          benchSlice(all).select(col("doc_id"), col("lang"), col("text")),
-          path)
-        val lmKept = lmGated(gated(docs),
-          all.select(col("doc_id"), col("lang")), Smoothing.Mkn, Some(path))
-        val kept = decontaminated(lmKept, benchSlice(all))
-        quotaRollup(curated(kept, components(nearDupPairs(kept))))
-      }
-    }),
+    "c19_target_mkn_curation" -> ((s, dir) =>
+      targetLmCuration(s, dir, Smoothing.Mkn, "c19_mknlm")),
 
     // C18: the m6 PERCEPTUAL image verdict composed into c10's chain —
     // the LAION-shaped stage: each doc under curation carries one

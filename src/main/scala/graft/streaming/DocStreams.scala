@@ -262,7 +262,28 @@ object DocStreams {
       indexPath: String, verdictsPath: String, threshold: Double,
       maxBucket: Option[Int], compactEvery: Int,
       maxFilesPerPart: Int,
-      registryPath: Option[String] = None): Unit = {
+      registryPath: Option[String] = None): Unit =
+    sealedIndexBatch(batch, id, verdictsPath, "doc_id", compactEvery,
+      registryPath)(
+      Dedup.dedupAgainstLshIndex(_, indexPath, threshold, maxBucket),
+      Dedup.dedupPairsAgainstLshIndex(_, indexPath, threshold, maxBucket),
+      // verdict population: docs with at least one shingle
+      Dedup.shingledDocIds(_,
+        Dedup.LshArtifact.meta(batch.sparkSession, indexPath).getAs[Int]("k")),
+      Dedup.appendToLshIndex(_, indexPath),
+      Dedup.compactLshBands(batch.sparkSession, indexPath, maxFilesPerPart))
+
+  /** The sealed-verdict protocol shared by [[processIndexedBatch]] and
+    * [[processImageBatch]], over the index's probes keyed by `idCol`:
+    * `verdicts` and `pairs` probe a batch, `population` is the verdict
+    * population (`doc_id`) of a batch, `append` adds survivors to the
+    * index and `compact` runs on the `compactEvery` cadence. */
+  private def sealedIndexBatch(batch: DataFrame, id: Long,
+      verdictsPath: String, idCol: String, compactEvery: Int,
+      registryPath: Option[String])(
+      verdicts: DataFrame => DataFrame, pairs: DataFrame => DataFrame,
+      population: DataFrame => DataFrame, append: DataFrame => Unit,
+      compact: => Unit): Unit = {
     import org.apache.hadoop.fs.{Path => HPath}
     val spark = batch.sparkSession
     val fs = graft.sources.Hdfs.forPath(spark, verdictsPath)
@@ -292,8 +313,7 @@ object DocStreams {
         if (!fs.exists(verdictSeal)) {
           registryPath match {
             case None =>
-              Dedup.dedupAgainstLshIndex(cached, indexPath, threshold,
-                  maxBucket)
+              verdicts(cached)
                 .withColumn("batch_id", lit(id))
                 .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
@@ -305,16 +325,14 @@ object DocStreams {
               // the persisted form (one band-scan probe total; the
               // read-back is the same materialization barrier as the
               // verdict reuse on replay), seal both under one marker
-              Dedup.dedupPairsAgainstLshIndex(cached, indexPath, threshold,
-                  maxBucket)
+              pairs(cached)
                 .withColumn("batch_id", lit(id))
                 .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("batch_id").parquet(s"$verdictsPath/_pairs")
               seal(pairsSeal)
-              val k = spark.read.parquet(s"$indexPath/meta").head().getInt(0)
-              Dedup.verdictsFromPairs(Dedup.shingledDocIds(cached, k),
-                  storedPairs)
+              Dedup.verdictsFromPairs(population(cached), storedPairs)
+                .withColumnRenamed("doc_id", idCol)
                 .withColumn("batch_id", lit(id))
                 .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
@@ -326,7 +344,7 @@ object DocStreams {
         // materialization barrier as the batch lifecycle, and the
         // replay path by construction). Reading the one partition dir
         // directly keeps the per-trigger listing O(1), not O(every
-        // batch ever committed). A batch whose docs ALL had empty
+        // batch ever committed). An LSH batch whose docs ALL had empty
         // shingle sets (blank/too-short text) probes to zero rows, so
         // the partition dir never exists — nothing to append; reading
         // it anyway would throw on every replay behind the seal.
@@ -334,12 +352,12 @@ object DocStreams {
         if (fs.exists(verdictDir)) {
           val survivors = cached.join(
             spark.read.parquet(verdictDir.toString)
-              .where(!col("is_dup")).select(col("doc_id")),
-            "doc_id")
-          if (!survivors.isEmpty) Dedup.appendToLshIndex(survivors, indexPath)
+              .where(!col("is_dup")).select(col(idCol)),
+            idCol)
+          if (!survivors.isEmpty) append(survivors)
         }
         if (compactEvery > 0 && id % compactEvery == compactEvery - 1)
-          Dedup.compactLshBands(spark, indexPath, maxFilesPerPart)
+          compact
         // phase 3 — cluster registry, off the SEALED pairs (never a
         // re-probe: the index already holds this batch's survivors on
         // a replay). updateRegistry is replay-pure, so any crash
@@ -369,7 +387,7 @@ object DocStreams {
           // duplicate member row (Trust) — its original registration
           // stands and its pairs are dropped with it, deterministically
           graft.operators.Clusters.updateRegistry(spark, reg, id,
-            cached.select(col("doc_id")), storedPairs,
+            cached.select(col(idCol).as("doc_id")), storedPairs,
             onRegistered = graft.operators.Clusters.Skip)
           if (compactEvery > 0 && id % compactEvery == compactEvery - 1)
             graft.operators.Clusters.compactRegistry(spark, reg)
@@ -952,8 +970,7 @@ object DocStreams {
 
   /** One micro-batch of [[imageDedupSink]] — exposed so the replay and
     * crash-window specs can drive it directly. The protocol is
-    * [[processIndexedBatch]]'s with two simplifications the
-    * fingerprint domain buys: every row HAS a fingerprint (no
+    * [[processIndexedBatch]]'s; every row HAS a fingerprint (no
     * empty-shingle population drop — verdicts cover the whole batch),
     * and the index is single-table (no stats slice to tear). */
   private[graft] def processImageBatch(batch: DataFrame, id: Long,
@@ -961,93 +978,16 @@ object DocStreams {
       idCol: String, hashCol: String, compactEvery: Int,
       maxFilesPerPart: Int,
       registryPath: Option[String] = None,
-      maxBucket: Option[Int] = None): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val spark = batch.sparkSession
-    val fs = graft.sources.Hdfs.forPath(spark, verdictsPath)
-    val marker = new HPath(s"$verdictsPath/_committed/batch_$id")
-    if (SinkMarkers.isCommitted(fs, verdictsPath, id)) return
-    def seal(p: HPath): Unit = SinkMarkers.seal(fs, p)
-    val cached = batch.cache()
-    try {
-      if (!cached.isEmpty) {
-        val verdictSeal = new HPath(s"$verdictsPath/_verdicts/batch_$id")
-        def pairsDir = new HPath(s"$verdictsPath/_pairs/batch_id=$id")
-        // zero-pair batches write NOTHING under _pairs (dynamic
-        // overwrite of an empty frame creates no dir) — the seal is
-        // what makes "no matches" distinguishable from "slice lost"
-        val pairsSeal = new HPath(s"$verdictsPath/_pairs_sealed/batch_$id")
-        def storedPairs = if (fs.exists(pairsDir))
-          spark.read.parquet(pairsDir.toString).select(col("bid"), col("cid"))
-        else spark.range(0).select(col("id").as("bid"), col("id").as("cid"))
-        if (!fs.exists(verdictSeal)) {
-          registryPath match {
-            case None =>
-              Dedup.dedupAgainstHammingIndex(cached, idCol, hashCol,
-                  indexPath, maxDist, maxBucket)
-                .withColumn("batch_id", lit(id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id").parquet(verdictsPath)
-            case Some(_) =>
-              // registry mode: persist the verified pairs first,
-              // derive the verdicts from the persisted form (one
-              // band-scan probe total — the read-back is the replay
-              // path's materialization barrier), seal both
-              Dedup.hammingPairsAgainstIndex(cached, idCol, hashCol,
-                  indexPath, maxDist, maxBucket)
-                .withColumn("batch_id", lit(id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id").parquet(s"$verdictsPath/_pairs")
-              seal(pairsSeal)
-              Dedup.verdictsFromPairs(
-                  cached.select(col(idCol).as("doc_id")), storedPairs)
-                .withColumnRenamed("doc_id", idCol)
-                .withColumn("batch_id", lit(id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id").parquet(verdictsPath)
-          }
-          seal(verdictSeal)
-        }
-        // survivors come off the SEALED verdicts — the replay path by
-        // construction. Every batch row has a verdict (fingerprints
-        // always exist), so a nonEmpty batch's partition dir exists.
-        val verdictDir = new HPath(s"$verdictsPath/batch_id=$id")
-        if (fs.exists(verdictDir)) {
-          val survivors = cached.join(
-            spark.read.parquet(verdictDir.toString)
-              .where(!col("is_dup")).select(col(idCol)),
-            idCol)
-          if (!survivors.isEmpty)
-            Dedup.appendToHammingIndex(survivors, idCol, hashCol, indexPath)
-        }
-        if (compactEvery > 0 && id % compactEvery == compactEvery - 1)
-          Dedup.compactHammingBands(spark, indexPath, maxFilesPerPart)
-        registryPath.foreach { reg =>
-          // sealed verdicts with no accounted pairs artifact are
-          // unknowable match history — registering the batch as
-          // all-singletons behind them would be silent corruption
-          if (!fs.exists(pairsSeal) && !fs.exists(pairsDir))
-            throw new IllegalStateException(
-              s"registry mode: batch $id has sealed verdicts but no " +
-                s"pairs artifact ($pairsDir absent and no $pairsSeal) — " +
-                "its match pairs are unknowable, so updating the " +
-                "registry would register the whole batch as singletons. " +
-                "Re-run the batch's probe (discard its _verdicts marker " +
-                "and verdict partition, then replay) before enabling " +
-                "registry mode over it.")
-          graft.operators.Clusters.updateRegistry(spark, reg, id,
-            cached.select(col(idCol).as("doc_id")), storedPairs,
-            onRegistered = graft.operators.Clusters.Skip)
-          if (compactEvery > 0 && id % compactEvery == compactEvery - 1)
-            graft.operators.Clusters.compactRegistry(spark, reg)
-        }
-      }
-      seal(marker)
-    } finally cached.unpersist(blocking = false)
-  }
+      maxBucket: Option[Int] = None): Unit =
+    sealedIndexBatch(batch, id, verdictsPath, idCol, compactEvery,
+      registryPath)(
+      Dedup.dedupAgainstHammingIndex(_, idCol, hashCol, indexPath, maxDist,
+        maxBucket),
+      Dedup.hammingPairsAgainstIndex(_, idCol, hashCol, indexPath, maxDist,
+        maxBucket),
+      _.select(col(idCol).as("doc_id")),
+      Dedup.appendToHammingIndex(_, idCol, hashCol, indexPath),
+      Dedup.compactHammingBands(batch.sparkSession, indexPath, maxFilesPerPart))
 
   case class DocLangPred(doc_id: Long, pred_lang: String, score_micro: Long)
 

@@ -163,7 +163,7 @@ object VectorStreams {
           }
       }
     val scored = top.toDF()
-      .join(spark.read.parquet(s"$path/yden"), Seq("tgt_id"))
+      .join(Similarity.MarginArtifact("yden").read(spark, path), Seq("tgt_id"))
       .withColumn("margin",
         col("cos") / ((col("x_avg") + col("y_avg")) / lit(2.0)))
       // a strict-k NULL y_avg yields a NULL margin; the batch pick can
@@ -270,8 +270,8 @@ object VectorStreams {
             Seq("vec_id"), "left_anti")
         if (!novel.isEmpty) Similarity.appendToPqIvf(novel, indexPath)
         if (compactEvery > 0 && id % compactEvery == compactEvery - 1)
-          graft.sources.Compaction.compactPartitions(spark,
-            s"$indexPath/cells", "cell=", maxFilesPerPart)
+          Similarity.PqIvfArtifact("cells").compact(spark, indexPath,
+            maxFilesPerPart)
         if (driftCheckEvery > 0 && id % driftCheckEvery == driftCheckEvery - 1) {
           val report = Similarity.pqIvfDriftCheck(spark, indexPath,
             driftSampleMod, k, nProbe, rescoreK, skewBound, recallFloor)

@@ -203,4 +203,25 @@ class HammingIndexSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("saveHammingIndex"))
   }
+
+  test("an INT-typed id column fails at save and at probe, naming the column") {
+    val intIds = corpus.select(col("media_id").cast("int").as("media_id"),
+      col("fp"))
+    val atSave = intercept[IllegalArgumentException] {
+      Dedup.saveHammingIndex(intIds, "media_id", "fp", bits = 16, bands = 4,
+        newIdx(), nBucketParts = 8)
+    }
+    assert(atSave.getMessage.contains("column media_id must be BIGINT"),
+      atSave.getMessage)
+    val idx = newIdx()
+    Dedup.saveHammingIndex(corpus, "media_id", "fp", bits = 16, bands = 4,
+      idx, nBucketParts = 8)
+    val atProbe = intercept[IllegalArgumentException] {
+      Dedup.dedupAgainstHammingIndex(
+        batch.select(col("media_id").cast("int").as("media_id"), col("fp")),
+        "media_id", "fp", idx, maxDist = 3)
+    }
+    assert(atProbe.getMessage.contains("column media_id must be BIGINT"),
+      atProbe.getMessage)
+  }
 }
