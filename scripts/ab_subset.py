@@ -20,13 +20,20 @@ tree, plus untracked files) to the `SparkEntry.queries` ids it can move:
   and non-library files: nothing.
 
 A library file that maps to no id is listed as UNMAPPED: pick its
-families by hand. The last stdout line is the id-prefix list to pass to
-`sbt "runMain graft.Bench <prefixes>"`; add an untouched control query.
+families by hand. The second-to-last stdout line is the id-prefix list to
+pass to `sbt "runMain graft.Bench <prefixes>"`; add an untouched control
+query. The last line names the perfbench workloads the change must A/B
+(`perfbench/run.py --workload W`): `lexam_session` for any change under
+src/main/scala/graft/lexam/, `curation_bulk` when the ids include a v7 or
+m6 query; "none" when neither applies.
 """
 import os, re, subprocess, sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 LIB = "src/main/scala/graft/"
+LEXAM = LIB + "lexam/"
+# perfbench's curation_bulk workload runs exactly these query families
+CURATION_BULK = ("v7", "m6")
 HARNESS = {LIB + f for f in ("Bench.scala", "Verify.scala", "Explain.scala")}
 OTHER_MAINS = {LIB + f for f in ("lexam/Demo.scala", "streaming/StreamingDemo.scala",
                                  "operators/PipelineScaleBench.scala")}
@@ -114,7 +121,20 @@ def families(path, rows, cross, known):
     return hits, "COVERAGE rows naming " + ", ".join(sorted(names))
 
 
+def workloads(files, selected):
+    """The perfbench workloads whose code paths the change touches."""
+    out = []
+    if any(f.startswith(LEXAM) for f in files):
+        out.append("lexam_session")
+    if any(q.split("_")[0] in CURATION_BULK for q in selected):
+        out.append("curation_bulk")
+    return out
+
+
 def main(argv):
+    if any(a in ("-h", "--help") for a in argv):
+        print(__doc__.strip())
+        return
     files = changed_files(argv[0] if argv else "HEAD")
     known = all_query_ids()
     rows, cross = coverage_rows(known), intended_cross()
@@ -129,6 +149,7 @@ def main(argv):
         print(f"UNMAPPED {path}: choose its query families by hand")
     print(f"{len(selected)} queries: " + " ".join(sorted(selected)))
     print(" ".join(sorted(q.split("_")[0] for q in selected)))
+    print("perfbench workloads: " + (" ".join(workloads(files, selected)) or "none"))
 
 
 if __name__ == "__main__":

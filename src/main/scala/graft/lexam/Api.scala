@@ -88,31 +88,41 @@ object Api {
   }
 
   /** GET /api/filters (main.py:460-493): facet values per dimension
-    * given the other active filters; years descending. */
+    * given the other active filters, ascending; years descending. All
+    * seven dims come from one [[Filters.facetValues]] query. */
   def filters(questions: DataFrame, variants: DataFrame,
               fc: FilterConfig, search: Option[String] = None): String = {
-    def vals(dim: String): Seq[Any] =
-      Filters.viableValues(questions, variants, fc, dim, search)
-        .collect().map(_.get(0)).toSeq
+    val byDim = Filters.facetValues(questions, variants, fc, search).collect().toSeq
+      .groupBy(_.getAs[String]("dim")).withDefaultValue(Nil)
+    def vals(dim: String): Seq[String] =
+      byDim(dim).map(_.getAs[String]("value")).sorted(GroupingSets.Asc)
     render(scala.collection.immutable.ListMap(
       "configs" -> vals("config"), "splits" -> vals("split"),
       "areas" -> vals("area"), "languages" -> vals("language"),
       "courses" -> vals("course"), "jurisdictions" -> vals("jurisdiction"),
-      "years" -> vals("year").map(_.asInstanceOf[Int]).sorted.reverse))
+      "years" -> byDim("year").map(_.get(2).asInstanceOf[Int]).sorted.reverse))
   }
 
-  /** GET /api/search-summary (main.py:496-551) — by_course keeps
-    * count-desc insertion order. */
+  /** GET /api/search-summary (main.py:496-551) — by_area/by_language
+    * key-ascending, by_course the top 10 in count-desc insertion order;
+    * one [[DatasetAnalytics.searchCounts]] aggregate. A NULL key renders
+    * as "null", as the reference's JSON encoder writes a None key. */
   def searchSummary(questions: DataFrame, variants: DataFrame,
                     fc: FilterConfig, search: String): String = {
-    val (total, byArea, byLang, byCourse) =
-      DatasetAnalytics.searchSummary(questions, variants, fc, search)
-    def kv(df: DataFrame): scala.collection.immutable.ListMap[String, Any] =
-      scala.collection.immutable.ListMap(df.collect().toSeq
-        .map(r => r.get(0).toString -> (r.getLong(1): Any)): _*)
-    render(scala.collection.immutable.ListMap(
-      "total" -> total, "by_area" -> kv(byArea),
-      "by_language" -> kv(byLang), "by_course" -> kv(byCourse)))
+    import scala.collection.immutable.ListMap
+    val Seq(total, byArea, byLang, byCourse) = GroupingSets.split(
+      DatasetAnalytics.searchCounts(questions, variants, fc, search).collect().toSeq,
+      DatasetAnalytics.SearchSets)
+    def n(r: Row): Long = r.getAs[Long]("count")
+    def kv(rows: Seq[Row], key: String): ListMap[String, Any] =
+      ListMap(rows.map(r => String.valueOf(r.getAs[String](key)) -> (n(r): Any)): _*)
+    def asc(rows: Seq[Row], key: String) = rows.sortBy(_.getAs[String](key))(GroupingSets.Asc)
+    val topCourses = byCourse.sortBy(r => (-n(r), r.getAs[String]("course")))(
+      Ordering.Tuple2(Ordering.Long, GroupingSets.Asc)).take(10)
+    render(ListMap(
+      "total" -> total.headOption.fold(0L)(n), "by_area" -> kv(asc(byArea, "area"), "area"),
+      "by_language" -> kv(asc(byLang, "language"), "language"),
+      "by_course" -> kv(topCourses, "course")))
   }
 
   /** GET /api/course-summary (main.py:252-310). */
@@ -199,39 +209,37 @@ object Api {
     * routers/experiments.py:180-189), keyed by experiment id — ALL
     * experiments in one grouped pass instead of the reference's
     * per-experiment query. */
-  private def judgeBreakdowns(store: pipeline.LexamStore):
-      Map[Long, Seq[scala.collection.immutable.ListMap[String, Any]]] =
+  private def judgeBreakdowns(store: pipeline.LexamStore): Map[Long, Seq[(String, Long)]] =
     liveJudgments(store)
       .groupBy(col("eid"), col("judge_model"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("judge_model")).collect()
       .groupBy(_.getLong(0))
-      .view.mapValues(_.toSeq.map(r => scala.collection.immutable.ListMap[String, Any](
-        "model" -> r.getString(1), "count" -> r.getLong(2)))).toMap
+      .view.mapValues(_.toSeq.map(r => r.getString(1) -> r.getLong(2))).toMap
+
+  private def renderJudges(judges: Seq[(String, Long)]): Seq[Any] =
+    judges.map { case (m, n) =>
+      scala.collection.immutable.ListMap[String, Any]("model" -> m, "count" -> n) }
 
   /** GET /api/experiments (routers/experiments.py:72-95): experiments
     * newest-first, full serialization + answer/judgment counts + judge
     * breakdown — the reference's three-per-experiment N+1 queries
-    * collapse into three grouped aggregates total. */
+    * collapse into two grouped aggregates total: an experiment's
+    * judgment count is the sum of its judge breakdown (reference
+    * semantics: a judgment whose answer was deleted counts as 0,
+    * experiments.py:79-84). */
   def listExperiments(store: pipeline.LexamStore): String = {
-    // partition-column inference reads experiment_id back as int
-    val aCounts = store.answers.groupBy(col("experiment_id").cast("long"))
+    val aCounts = store.answers.groupBy(col("experiment_id"))
       .agg(count(lit(1)).as("answer_count")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // judgment counts via the answers join (reference semantics: a
-    // judgment whose answer was deleted counts as 0, experiments.py:79-84)
-    val jCounts = liveJudgments(store)
-      .groupBy(col("eid"))
-      .agg(count(lit(1)).as("judgment_count")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val judges = judgeBreakdowns(store)
+    val judges = judgeBreakdowns(store).withDefaultValue(Nil)
     val items = store.experiments
       .sortBy(e => (-e.created_at.map(_.getTime).getOrElse(0L), -e.id))
       .map { e =>
         serializeExperiment(e) ++ scala.collection.immutable.ListMap[String, Any](
           "answer_count" -> aCounts.getOrElse(e.id, 0L),
-          "judgment_count" -> jCounts.getOrElse(e.id, 0L),
-          "judges" -> judges.getOrElse(e.id, Nil))
+          "judgment_count" -> judges(e.id).map(_._2).sum,
+          "judges" -> renderJudges(judges(e.id)))
       }
     render(items)
   }
@@ -246,7 +254,7 @@ object Api {
       .where(col("eid") === experimentId).count()
     render(serializeExperiment(e) ++ scala.collection.immutable.ListMap[String, Any](
       "answer_count" -> answerCount, "judgment_count" -> judgmentCount,
-      "judges" -> judgeBreakdowns(store).getOrElse(experimentId, Nil)))
+      "judges" -> renderJudges(judgeBreakdowns(store).getOrElse(experimentId, Nil))))
   }
 
   /** GET /api/experiments/{id}/question-count
@@ -275,7 +283,10 @@ object Api {
           s"filter_config must be an object, got ${other.getClass.getSimpleName}")
     })
 
-  /** GET /api/experiments/{id}/stats (experiment_stats.py:13-114). */
+  /** GET /api/experiments/{id}/stats (experiment_stats.py:13-114):
+    * [[ExperimentAnalytics.summary]]'s two aggregates plus, for a
+    * multi-run experiment, self-consistency, over one cached enriched
+    * frame. */
   def experimentStats(store: pipeline.LexamStore, experimentId: Long,
                       modelName: Option[String] = None,
                       judgeModel: Option[String] = None): String = {
@@ -284,14 +295,13 @@ object Api {
     val enriched = ExperimentAnalytics.enriched(store.answers, store.variants,
       store.questions, store.judgments, experimentId, modelName).cache()
     try {
-    val totalAnswers = enriched.count()
-    val mcq = ExperimentAnalytics.mcqStats(enriched)
-    val open = ExperimentAnalytics.openStats(enriched, store.judgments, judgeModel)
-    val (gi, go, ji, jo) = ExperimentAnalytics.tokenTotals(enriched, store.judgments, judgeModel)
+    val s = ExperimentAnalytics.summary(enriched, store.judgments, judgeModel)
+    val (mcq, open) = (s.mcq, s.open)
+    val (gi, go, ji, jo) = s.tokens
     val consistency =
       if (exp.n_answers > 1) Some(ExperimentAnalytics.selfConsistency(enriched)) else None
     render(scala.collection.immutable.ListMap(
-      "total_answers" -> totalAnswers,
+      "total_answers" -> s.totalAnswers,
       "mcq" -> scala.collection.immutable.ListMap(
         "total" -> mcq.total, "correct" -> mcq.correct, "accuracy" -> mcq.accuracy),
       "open" -> scala.collection.immutable.ListMap(
@@ -299,10 +309,7 @@ object Api {
         "avg_score" -> open.avgScore, "median_score" -> open.medianScore,
         "score_distribution" -> open.scoreDistribution.map { case (range, n) =>
           scala.collection.immutable.ListMap("range" -> range, "count" -> n) }),
-      "by_area" -> ExperimentAnalytics.breakdownByField(enriched, store.judgments,
-        "area", judgeModel).collect().toSeq,
-      "by_course" -> ExperimentAnalytics.breakdownByField(enriched, store.judgments,
-        "course", judgeModel).collect().toSeq,
+      "by_area" -> s.byArea, "by_course" -> s.byCourse,
       "tokens" -> scala.collection.immutable.ListMap(
         "generation_input" -> gi, "generation_output" -> go,
         "judge_input" -> ji, "judge_output" -> jo,
@@ -313,96 +320,108 @@ object Api {
     } finally enriched.unpersist()
   }
 
-  /** GET /api/dashboard (main.py:312-459): composite analytics response.
-    * Every reference Python-dict accumulation is one of the
-    * [[DatasetAnalytics]] aggregations; this method only assembles the
-    * JSON shape. List orders: courses count-desc (course-asc ties,
-    * deterministic where the reference's dict order is not), facet lists
-    * name-asc, years ascending, area-keyed tables in the reference's
-    * fixed area order filtered to areas present (main.py:396,407,441). */
+  /** GET /api/dashboard (main.py:312-459): composite analytics response
+    * in three aggregates over one cached cohort —
+    * [[DatasetAnalytics.dashboardFacets]] (every question facet),
+    * [[DatasetAnalytics.dashboardSplitCounts]] and
+    * [[DatasetAnalytics.answerLengthStats]] — split, ordered and
+    * assembled here. List orders: courses count-desc (course-asc,
+    * area-asc ties, deterministic where the reference's dict order is
+    * not), facet lists name-asc, years ascending, area-keyed tables in
+    * the reference's fixed area order filtered to areas present
+    * (main.py:396,407,441). */
   def dashboard(questions: DataFrame, variants: DataFrame,
                 config: Seq[String] = Nil, language: Seq[String] = Nil): String = {
     import scala.collection.immutable.ListMap
+    import DatasetAnalytics.{Areas, Jurisdictions, WordBins}
     val qs = DatasetAnalytics
       .dashboardQuestions(questions, variants, config, language).cache()
-    val wcs = DatasetAnalytics.answerWordCounts(qs, variants).cache()
     try {
-      val courses = DatasetAnalytics.dashboardCourses(qs).collect().toSeq
-      def nameValue(df: DataFrame): Seq[Any] = df.collect().toSeq
-        .map(r => ListMap[String, Any]("name" -> r.get(0), "value" -> r.getLong(1)))
-      val years = DatasetAnalytics.dashboardYears(qs).collect().toSeq
-      val splits = DatasetAnalytics.dashboardSplits(variants, qs, config)
-        .collect().toSeq.map(r => ListMap[String, Any](
-          "name" -> r.get(0), "value" -> r.getLong(1), "pct" -> r.getString(2)))
-      def areaOrdered(df: DataFrame): Seq[Any] = {
-        val byArea = df.collect().map(r => r.getAs[String]("area") -> r).toMap
-        DatasetAnalytics.Areas.filter(byArea.contains).map(a => rowToMap(byArea(a)))
+      val Seq(courseRows, areaRows, jurisdictionRows, yearRows, total) = GroupingSets.split(
+        DatasetAnalytics.dashboardFacets(qs).collect().toSeq, DatasetAnalytics.DashboardSets)
+      val Seq(splitRows, splitTotal) = GroupingSets.split(
+        DatasetAnalytics.dashboardSplitCounts(variants, qs, config).collect().toSeq,
+        DatasetAnalytics.SplitSets)
+      val lengths = DatasetAnalytics
+        .answerLengthStats(DatasetAnalytics.answerWordCounts(qs, variants)).collect().toSeq
+
+      def n(r: Row, c: String): Long = r.getAs[Long](c)
+      def pick(r: Row, cols: Seq[String]): Seq[(String, Any)] = cols.map(c => c -> r.getAs[Any](c))
+      def key(r: Row, c: String): String = r.getAs[String](c)
+      val courses = courseRows
+        .sortBy(r => (-n(r, "count"), key(r, "course"), key(r, "area")))(
+          Ordering.Tuple3(Ordering.Long, GroupingSets.Asc, GroupingSets.Asc))
+        .map(r => ListMap(pick(r, Seq("course", "area", "count", "lang_de", "lang_en")): _*))
+      def nameValue(rows: Seq[Row], c: String): Seq[Any] =
+        rows.sortBy(key(_, c))(GroupingSets.Asc)
+          .map(r => ListMap[String, Any]("name" -> key(r, c), "value" -> n(r, "count")))
+      val years = yearRows.sortBy(_.getAs[Int]("year")).map(r =>
+        ListMap[String, Any]("year" -> r.getAs[Int]("year")) ++ pick(r, Areas) +
+          ("total" -> Areas.map(n(r, _)).sum))
+      val splitN = splitTotal.headOption.fold(0L)(n(_, "value"))
+      val splits = splitRows.sortBy(key(_, "split"))(GroupingSets.Asc).map(r =>
+        ListMap[String, Any]("name" -> key(r, "split"), "value" -> n(r, "value"),
+          "pct" -> DatasetAnalytics.pct(n(r, "value"), splitN)))
+      def areaOrdered(rows: Seq[Row])(cells: Row => Seq[(String, Any)]): Seq[Any] = {
+        val byArea = rows.map(r => key(r, "area") -> r).toMap
+        Areas.filter(byArea.contains).map(a => ListMap[String, Any]("area" -> a) ++ cells(byArea(a)))
       }
-      val histMap = DatasetAnalytics.answerLengthHistogram(wcs).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val answerLengths = DatasetAnalytics.WordBins.map { case (_, _, label) =>
-        ListMap[String, Any]("range" -> label, "count" -> histMap.getOrElse(label, 0L))
+      val answerLengths = WordBins.zipWithIndex.map { case ((_, _, label), i) =>
+        ListMap[String, Any]("range" -> label, "count" -> lengths.map(n(_, s"bin$i")).sum)
       }
       render(ListMap[String, Any](
-        "total_questions" -> qs.count(),
+        "total_questions" -> total.headOption.fold(0L)(n(_, "count")),
         "total_courses" -> courses.length,
-        "total_de" -> courses.map(_.getAs[Long]("lang_de")).sum,
-        "total_en" -> courses.map(_.getAs[Long]("lang_en")).sum,
-        "min_year" -> years.headOption.map(_.getInt(0)).getOrElse(0),
-        "max_year" -> years.lastOption.map(_.getInt(0)).getOrElse(0),
+        "total_de" -> courseRows.map(n(_, "lang_de")).sum,
+        "total_en" -> courseRows.map(n(_, "lang_en")).sum,
+        "min_year" -> years.headOption.map(_("year")).getOrElse(0),
+        "max_year" -> years.lastOption.map(_("year")).getOrElse(0),
         "courses" -> courses,
-        "areas" -> nameValue(qs.groupBy(col("area")).count().orderBy(col("area"))),
-        "jurisdictions" -> nameValue(
-          qs.groupBy(col("jurisdiction")).count().orderBy(col("jurisdiction"))),
+        "areas" -> nameValue(areaRows, "area"),
+        "jurisdictions" -> nameValue(jurisdictionRows, "jurisdiction"),
         "years" -> years,
         "splits" -> splits,
-        "area_jurisdiction" -> areaOrdered(DatasetAnalytics.dashboardAreaJurisdiction(qs)),
-        "lang_area" -> areaOrdered(DatasetAnalytics.dashboardLangArea(qs)),
+        "area_jurisdiction" -> areaOrdered(areaRows)(pick(_, Jurisdictions)),
+        "lang_area" -> areaOrdered(areaRows)(r => Seq("de" -> n(r, "lang_de"), "en" -> n(r, "en"))),
         "answer_lengths" -> answerLengths,
-        "answer_stats" -> areaOrdered(DatasetAnalytics.answerStatsByArea(wcs))))
-    } finally { wcs.unpersist(); qs.unpersist() }
+        "answer_stats" -> areaOrdered(lengths)(
+          pick(_, Seq("avgWords", "medianWords", "minWords", "maxWords")))))
+    } finally qs.unpersist()
   }
 
   /** The frontend's Open-Ended vs MCQ comparison (Dashboard.jsx:595-629)
     * served as ONE response instead of two /api/dashboard fetches merged
-    * client-side: areas / years / courses, each a full-outer zero-fill
-    * merge of the open_question side against the MCQ-config side (the
-    * U2 operator). Key names match the JSX chart fields ("Open-Ended",
-    * "MCQ"; course rows open/mcq/total). Orders are deterministic where
-    * the JSX depends on fetch/insertion order: areas follow the fixed
-    * area order filtered to areas present (AREA_ORDER, jsx:603), years
-    * ascend (jsx:614), courses sort total-desc with course-asc ties. */
+    * client-side: areas / years / courses from one
+    * [[DatasetAnalytics.comparisonCounts]] aggregate, a side without a
+    * key zero-filled (the U2 operator's merge). Key names match the JSX
+    * chart fields ("Open-Ended", "MCQ"; course rows open/mcq/total).
+    * Orders are deterministic where the JSX depends on fetch/insertion
+    * order: areas follow the fixed area order filtered to areas present
+    * (AREA_ORDER, jsx:603), years ascend (jsx:614), courses sort
+    * total-desc with course-asc, area-asc ties. */
   def dashboardComparison(questions: DataFrame, variants: DataFrame,
       mcqConfigs: Seq[String] = DatasetAnalytics.McqConfigs,
       language: Seq[String] = Nil): String = {
     import scala.collection.immutable.ListMap
-    val oe = DatasetAnalytics
-      .dashboardQuestions(questions, variants, Seq("open_question"), language)
-      .cache()
-    val mcq = DatasetAnalytics
-      .dashboardQuestions(questions, variants, mcqConfigs, language).cache()
-    try {
-      val areaRows = DatasetAnalytics.comparisonAreas(oe, mcq).collect()
-        .map(r => r.getAs[String]("area") -> r).toMap
-      val areas = DatasetAnalytics.Areas.filter(areaRows.contains).map { a =>
-        val r = areaRows(a)
-        ListMap[String, Any]("area" -> a,
-          "Open-Ended" -> r.getAs[Long]("open_ended"),
-          "MCQ" -> r.getAs[Long]("mcq"))
-      }
-      val years = DatasetAnalytics.comparisonYears(oe, mcq).collect().toSeq
-        .map(r => ListMap[String, Any]("year" -> r.getAs[Int]("year"),
-          "Open-Ended" -> r.getAs[Long]("open_ended"),
-          "MCQ" -> r.getAs[Long]("mcq")))
-      val courses = DatasetAnalytics.comparisonCourses(oe, mcq).collect().toSeq
-        .map(r => ListMap[String, Any](
-          "course" -> r.getAs[String]("course"),
-          "area" -> r.getAs[String]("area"),
-          "open" -> r.getAs[Long]("open"), "mcq" -> r.getAs[Long]("mcq"),
-          "total" -> r.getAs[Long]("total")))
-      render(ListMap[String, Any]("area_comparison" -> areas,
-        "year_comparison" -> years, "course_comparison" -> courses))
-    } finally { mcq.unpersist(); oe.unpersist() }
+    val Seq(areaRows, yearRows, courseRows) = GroupingSets.split(
+      DatasetAnalytics.comparisonCounts(questions, variants, mcqConfigs, language)
+        .collect().toSeq, DatasetAnalytics.ComparisonSets)
+    def n(r: Row, c: String): Long = r.getAs[Long](c)
+    def sides(r: Row) = ListMap[String, Any]("Open-Ended" -> n(r, "open"), "MCQ" -> n(r, "mcq"))
+    val byArea = areaRows.map(r => r.getAs[String]("area") -> r).toMap
+    val areas = DatasetAnalytics.Areas.filter(byArea.contains)
+      .map(a => ListMap[String, Any]("area" -> a) ++ sides(byArea(a)))
+    val years = yearRows.sortBy(_.getAs[Int]("year"))
+      .map(r => ListMap[String, Any]("year" -> r.getAs[Int]("year")) ++ sides(r))
+    val courses = courseRows
+      .map(r => (r, n(r, "open") + n(r, "mcq")))
+      .sortBy { case (r, t) => (-t, r.getAs[String]("course"), r.getAs[String]("area")) }(
+        Ordering.Tuple3(Ordering.Long, GroupingSets.Asc, GroupingSets.Asc))
+      .map { case (r, t) => ListMap[String, Any](
+        "course" -> r.getAs[String]("course"), "area" -> r.getAs[String]("area"),
+        "open" -> n(r, "open"), "mcq" -> n(r, "mcq"), "total" -> t) }
+    render(ListMap[String, Any]("area_comparison" -> areas,
+      "year_comparison" -> years, "course_comparison" -> courses))
   }
 
   /** GET /api/experiments/{id}/stats/compare-judges

@@ -23,33 +23,25 @@ object DatasetAnalytics {
                    byLanguage: Map[String, Long], byYear: Seq[(Int, Long)])
 
   /** main.py:223-249 — totals + four group-counts (A1/A2). The
-    * reference's six separate queries collapse into two GROUPING SETS
-    * jobs — one scan of questions (total ∪ by-area ∪ by-language ∪
-    * by-year) and one of variants (total ∪ by-config); grouping_id
-    * tells the slices apart. */
+    * reference's six separate queries collapse into two grouping-sets
+    * aggregates — one scan of questions (total ∪ by-area ∪ by-language
+    * ∪ by-year) and one of variants (total ∪ by-config). */
   def stats(questions: DataFrame, variants: DataFrame): Stats = {
-    val q = questions.groupingSets(
-        Seq(Seq.empty, Seq(col("area")), Seq(col("language")), Seq(col("year"))),
-        col("area"), col("language"), col("year"))
-      .agg(count(lit(1)).as("n"), grouping_id().as("gid"))
-      .collect()
-    // gid bit per groupBy column (MSB first), 1 = aggregated away:
-    // {area}=0b011, {language}=0b101, {year}=0b110, {}=0b111
-    def slice(gid: Long): Seq[Row] =
-      q.filter(_.getAs[Number]("gid").longValue == gid).toSeq
-    val v = variants.groupingSets(Seq(Seq.empty, Seq(col("config"))), col("config"))
-      .agg(count(lit(1)).as("n"), grouping_id().as("gid"))
-      .collect()
+    val qSets = Seq(Nil, Seq("area"), Seq("language"), Seq("year"))
+    val vSets = Seq(Nil, Seq("config"))
+    val Seq(qTotal, byArea, byLanguage, byYear) = GroupingSets.split(
+      GroupingSets.aggregate(questions, qSets, count(lit(1)).as("n")).collect(), qSets)
+    val Seq(vTotal, byConfig) = GroupingSets.split(
+      GroupingSets.aggregate(variants, vSets, count(lit(1)).as("n")).collect(), vSets)
+    def n(r: Row) = r.getAs[Long]("n")
+    def counts(rows: Seq[Row], key: String) = rows.map(r => r.getAs[String](key) -> n(r)).toMap
     Stats(
-      totalQuestions = slice(7L).head.getAs[Long]("n"),
-      totalVariants  = v.filter(_.getAs[Number]("gid").longValue == 1L)
-        .head.getAs[Long]("n"),
-      byConfig   = v.filter(_.getAs[Number]("gid").longValue == 0L)
-        .map(r => r.getString(0) -> r.getAs[Long]("n")).toMap,
-      byArea     = slice(3L).map(r => r.getString(0) -> r.getAs[Long]("n")).toMap,
-      byLanguage = slice(5L).map(r => r.getString(1) -> r.getAs[Long]("n")).toMap,
-      byYear     = slice(6L).map(r => r.getInt(2) -> r.getAs[Long]("n"))
-        .sortBy(_._1))
+      totalQuestions = qTotal.headOption.fold(0L)(n),
+      totalVariants  = vTotal.headOption.fold(0L)(n),
+      byConfig   = counts(byConfig, "config"),
+      byArea     = counts(byArea, "area"),
+      byLanguage = counts(byLanguage, "language"),
+      byYear     = byYear.map(r => r.getAs[Int]("year") -> n(r)).sortBy(_._1))
   }
 
   // ------------------------------------------------- /api/dashboard
@@ -66,6 +58,28 @@ object DatasetAnalytics {
     }
     if (language.nonEmpty) q = q.where(col("language").isin(language: _*))
     q
+  }
+
+  /** The question facets of `/api/dashboard` as the grouping sets of
+    * [[dashboardFacets]]: the courses table, areas (with the
+    * jurisdiction and language cross-tab cells), jurisdictions, years
+    * (with the area pivot cells) and the total. */
+  val DashboardSets: Seq[Seq[String]] =
+    Seq(Seq("course", "area"), Seq("area"), Seq("jurisdiction"), Seq("year"), Nil)
+
+  /** Every question facet of the dashboard (main.py:342-407) in one
+    * aggregate over the cohort: per set `count`, `lang_de`/`lang_en`
+    * (language = de / ≠ de, the courses table), `en` (language = en)
+    * and one count per fixed area and jurisdiction — the pivot cells of
+    * [[dashboardYears]], [[dashboardAreaJurisdiction]] and
+    * [[dashboardLangArea]] as conditional counts of the row's set. */
+  def dashboardFacets(qs: DataFrame): DataFrame = {
+    def n(c: Column, as: String) = sum(when(c, 1).otherwise(0)).as(as)
+    GroupingSets.aggregate(qs, DashboardSets, Seq(count(lit(1)).as("count"),
+        n(col("language") === "de", "lang_de"), n(col("language") =!= "de", "lang_en"),
+        n(col("language") === "en", "en")) ++
+      Areas.map(a => n(col("area") === a, a)) ++
+      Jurisdictions.map(j => n(col("jurisdiction") === j, j)): _*)
   }
 
   /** Courses table: per-course count + lang_de/lang_en pivot, sorted by
@@ -85,12 +99,33 @@ object DatasetAnalytics {
       .withColumn("total", Areas.map(col).reduce(_ + _))
       .orderBy(col("year"))
 
+  /** The cohort's variants of the dashboard's configs. */
+  private def cohortVariants(variants: DataFrame, qs: DataFrame,
+                             config: Seq[String]): DataFrame = {
+    val v = if (config.isEmpty) variants else variants.where(col("config").isin(config: _*))
+    v.join(qs.select(col("id").as("question_id")), Seq("question_id"), "left_semi")
+  }
+
+  val SplitSets: Seq[Seq[String]] = Seq(Seq("split"), Nil)
+
+  /** Distinct questions per split and in all (`value`), one aggregate;
+    * the caller derives pct (main.py:382-385). */
+  def dashboardSplitCounts(variants: DataFrame, qs: DataFrame,
+                           config: Seq[String]): DataFrame =
+    GroupingSets.aggregate(cohortVariants(variants, qs, config), SplitSets,
+      countDistinct(col("question_id")).as("value"))
+
+  /** `value` as a percentage of `total`, rounded half-even like Python
+    * round() (main.py:385) and Spark's bround. */
+  def pct(value: Long, total: Long): String =
+    if (total == 0) "0%"
+    else BigDecimal(value * 100.0 / total)
+      .setScale(0, BigDecimal.RoundingMode.HALF_EVEN).toInt.toString + "%"
+
   /** Distinct questions per split with pct (main.py:382-385). */
   def dashboardSplits(variants: DataFrame, qs: DataFrame,
                       config: Seq[String]): DataFrame = {
-    var v = variants
-    if (config.nonEmpty) v = v.where(col("config").isin(config: _*))
-    v = v.join(qs.select(col("id").as("question_id")), Seq("question_id"), "left_semi")
+    val v = cohortVariants(variants, qs, config)
     val total = v.agg(countDistinct(col("question_id"))).first().getLong(0)
     v.groupBy(col("split"))
       .agg(countDistinct(col("question_id")).as("value"))
@@ -102,6 +137,28 @@ object DatasetAnalytics {
   }
 
   // ------------------- open-vs-MCQ comparison (Dashboard.jsx:595-629)
+
+  val ComparisonSets: Seq[Seq[String]] = Seq(Seq("area"), Seq("year"), Seq("course", "area"))
+
+  /** The open-vs-MCQ comparison (Dashboard.jsx:595-629) in one
+    * aggregate: each question of the language cohort carries an `open`
+    * and an `mcq` flag (it has an open / an MCQ-config variant), and
+    * the sets (area), (year), (course, area) sum them. A key present on
+    * one side only reads 0 on the other — the JSX maps' `|| 0` — and a
+    * NULL key is one group, as the JSX map merges it. */
+  def comparisonCounts(questions: DataFrame, variants: DataFrame,
+                       mcqConfigs: Seq[String], language: Seq[String]): DataFrame = {
+    val isOpen = col("config") === "open_question"
+    val isMcq = col("config").isin(mcqConfigs: _*)
+    val flags = variants.where(isOpen || isMcq)
+      .groupBy(col("question_id").as("id"))
+      .agg(max(when(isOpen, 1).otherwise(0)).as("open"),
+        max(when(isMcq, 1).otherwise(0)).as("mcq"))
+    val qs = if (language.isEmpty) questions
+      else questions.where(col("language").isin(language: _*))
+    GroupingSets.aggregate(qs.join(flags, Seq("id")), ComparisonSets,
+      sum(col("open")).as("open"), sum(col("mcq")).as("mcq"))
+  }
 
   /** The frontend's client-side open-vs-MCQ area merge
     * (Dashboard.jsx:596-604) re-expressed as the engine's full-outer
@@ -170,23 +227,34 @@ object DatasetAnalytics {
     (200, 400, "200–400"), (400, 600, "400–600"),
     (600, Double.PositiveInfinity, "600+"))
 
+  private def inBin(lo: Int, hi: Double): Column =
+    col("wc") >= lo && (if (hi.isInfinite) lit(true) else col("wc") < hi)
+
   def answerLengthHistogram(wcs: DataFrame): DataFrame = {
     val bin = WordBins.foldRight(lit(null: String)) { case ((lo, hi, label), acc) =>
-      when(col("wc") >= lo && (if (hi.isInfinite) lit(true) else col("wc") < hi),
-        lit(label)).otherwise(acc)
+      when(inBin(lo, hi), lit(label)).otherwise(acc)
     }
     wcs.withColumn("range", bin).groupBy(col("range")).agg(count(lit(1)).as("count"))
   }
 
+  // bround = half-even, matching Python round(statistics.mean/median)
+  // (main.py:437-446); medians of ints land on exact .5 ties often
+  private def wordStats: Seq[Column] = Seq(
+    bround(avg(col("wc"))).cast("long").as("avgWords"),
+    bround(median(col("wc"))).cast("long").as("medianWords"),
+    min(col("wc")).as("minWords"),
+    max(col("wc")).as("maxWords"))
+
   def answerStatsByArea(wcs: DataFrame): DataFrame =
-    wcs.groupBy(col("area"))
-      .agg(
-        // bround = half-even, matching Python round(statistics.mean/median)
-        // (main.py:437-446); medians of ints land on exact .5 ties often
-        bround(avg(col("wc"))).cast("long").as("avgWords"),
-        bround(median(col("wc"))).cast("long").as("medianWords"),
-        min(col("wc")).as("minWords"),
-        max(col("wc")).as("maxWords"))
+    wcs.groupBy(col("area")).agg(wordStats.head, wordStats.tail: _*)
+
+  /** [[answerStatsByArea]] plus `bin0`…`bin5`, the area's count in each
+    * [[WordBins]] bin — the histogram is their sum over all areas
+    * (NULL area included), so both length panels are one aggregate. */
+  def answerLengthStats(wcs: DataFrame): DataFrame =
+    wcs.groupBy(col("area")).agg(wordStats.head, wordStats.tail ++
+      WordBins.zipWithIndex.map { case ((lo, hi, _), i) =>
+        sum(when(inBin(lo, hi), 1).otherwise(0)).as(s"bin$i") }: _*)
 
   // -------------------------------------------- /api/course-summary
 
@@ -223,6 +291,16 @@ object DatasetAnalytics {
   }
 
   // -------------------------------------------- /api/search-summary
+
+  val SearchSets: Seq[Seq[String]] = Seq(Nil, Seq("area"), Seq("language"), Seq("course"))
+
+  /** [[searchSummary]]'s total and per-area/-language/-course match
+    * counts (`count`) in one aggregate; the caller takes the top 10
+    * courses. */
+  def searchCounts(questions: DataFrame, variants: DataFrame,
+                   fc: FilterConfig, search: String): DataFrame =
+    GroupingSets.aggregate(Filters.filterQuestions(questions, variants, fc, Some(search)),
+      SearchSets, count(lit(1)).as("count"))
 
   /** Search summary (main.py:496-551): total + by_area/by_language +
     * top-10 courses by match count desc (A8). */

@@ -92,6 +92,40 @@ object Filters {
     }
   }
 
+  /** The question-level dims `/api/filters` lists. */
+  val QuestionFacets: Seq[String] = Seq("area", "language", "course", "jurisdiction", "year")
+
+  /** Every facet of `/api/filters` in one query: distinct rows
+    * (`dim`, `value`, `year`) — `year` carries the year dim's values,
+    * `value` every other dim's — unordered. Per dim the values are
+    * those of [[viableValues]]:
+    *  - a question row that passes every filter except the question
+    *    facet dims emits its value of dim d when every other active
+    *    facet predicate holds;
+    *  - a variant of a question that passes every question filter and
+    *    the search emits its config when the split predicate holds, and
+    *    its split when the config predicate holds. */
+  def facetValues(questions: DataFrame, variants: DataFrame,
+                  fc: FilterConfig, search: Option[String] = None): DataFrame = {
+    def holds(p: Option[Column]) = p.fold(lit(true))(coalesce(_, lit(false)))
+    def emit(dim: String, cond: Column): Column = {
+      val isYear = dim == "year"
+      when(cond, struct(lit(dim).as("dim"),
+        (if (isYear) lit(null) else col(dim)).cast("string").as("value"),
+        (if (isYear) col(dim) else lit(null)).cast("int").as("year")))
+    }
+    def emitted(rows: DataFrame, emits: Seq[Column]) =
+      rows.select(explode(array(emits: _*)).as("f")).where(col("f").isNotNull).select("f.*")
+    val qRows = filterQuestions(questions, variants, fc, search, skip = QuestionFacets.toSet)
+    val qEmits = QuestionFacets.map(d => emit(d,
+      holds(questionPredicate(fc, skip = Set(d, "negative_question", "international")))))
+    val qids = filterQuestions(questions, variants, fc, search, skip = Set("config", "split"))
+      .select(col("id").as("question_id"))
+    val vRows = variants.join(qids, Seq("question_id"), "left_semi")
+    val vEmits = Seq("config", "split").map(d => emit(d, holds(variantPredicate(fc, skip = Set(d)))))
+    emitted(qRows, qEmits).union(emitted(vRows, vEmits)).distinct()
+  }
+
   /** Facet values for one dimension given the OTHER active filters and
     * search (`_viable_values`, main.py:117-132): distinct, sorted
     * ascending (years are reversed by the caller, main.py:493). */

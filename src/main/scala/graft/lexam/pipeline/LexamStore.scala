@@ -1,11 +1,17 @@
 package graft.lexam.pipeline
 
 import java.nio.file.{Files, Path, Paths}
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.lexam._
+import graft.sources.Table
 
 /** Parquet-backed store for the five LEXam tables (S6–S9, SURVEY §2.1).
+  * Every read states its table's schema (`LexamStore.Questions` …
+  * `Experiments`), derived from the case classes the writers serialize;
+  * `appendAnswers`/`appendJudgments` still take any frame, so a batch
+  * may carry extra columns (a stated read does not show them).
   *
   * Mutations on immutable storage (SURVEY §7.4 item 7):
   *  - answers/judgments are append-only, partitioned by experiment
@@ -30,30 +36,19 @@ class LexamStore(val spark: SparkSession, val baseDir: String) {
   private def p(name: String): String = s"$baseDir/$name"
   private def exists(name: String): Boolean = Files.exists(Paths.get(p(name)))
 
-  /** True iff the table dir holds at least one parquet file — a
-    * partition drop can leave only _SUCCESS behind, which would break
-    * schema inference on read. */
-  private def hasData(name: String): Boolean = {
-    val dir = Paths.get(p(name))
-    if (!Files.exists(dir)) return false
-    val stream = Files.walk(dir)
-    try stream.anyMatch(f => f.toString.endsWith(".parquet"))
-    finally stream.close()
-  }
+  /** `t` read with its stated schema: no footer-inference job per read,
+    * and an absent table (or one whose partitions were all dropped)
+    * loads empty with the same columns in the same order. */
+  private def read(t: Table): DataFrame =
+    if (exists(t.dir)) t.read(spark, baseDir)
+    else spark.createDataFrame(java.util.List.of[Row](), t.schema)
 
   // ------------------------------------------------------------- reads
 
-  def questions: DataFrame = spark.read.parquet(p("questions"))
-  def variants: DataFrame  = spark.read.parquet(p("variants"))
-
-  def answers: DataFrame =
-    if (hasData("answers")) spark.read.parquet(p("answers"))
-    else spark.emptyDataset[ExperimentAnswer].toDF()
-
-  def judgments: DataFrame =
-    if (hasData("judgments")) spark.read.parquet(p("judgments"))
-    else spark.emptyDataset[ExperimentJudgment].toDF()
-      .withColumn("experiment_id", lit(-1L))
+  def questions: DataFrame = read(LexamStore.Questions)
+  def variants: DataFrame  = read(LexamStore.Variants)
+  def answers: DataFrame   = read(LexamStore.Answers)
+  def judgments: DataFrame = read(LexamStore.Judgments)
 
   /** Judgments still reachable through a surviving answer, with the
     * answer's experiment id as `eid`. The reference counts judgments
@@ -67,14 +62,12 @@ class LexamStore(val spark: SparkSession, val baseDir: String) {
       .map(id => answers.where(col("experiment_id") === id))
       .getOrElse(answers)
     judgments.drop("experiment_id")
-      .join(ans.select(col("id").as("answer_id"),
-        col("experiment_id").cast("long").as("eid")), Seq("answer_id"))
+      .join(ans.select(col("id").as("answer_id"), col("experiment_id").as("eid")),
+        Seq("answer_id"))
   }
 
   def experiments: Seq[Experiment] =
-    if (exists("experiments"))
-      spark.read.parquet(p("experiments")).as[Experiment].collect().toSeq
-    else Seq.empty
+    read(LexamStore.Experiments).as[Experiment].collect().toSeq
 
   def getExperiment(id: Long): Option[Experiment] = experiments.find(_.id == id)
 
@@ -88,12 +81,20 @@ class LexamStore(val spark: SparkSession, val baseDir: String) {
   /** Upsert one experiment row (S9). The dimension is tiny by contract,
     * so driver-side read-modify-overwrite is the idiomatic batch move. */
   def saveExperiment(exp: Experiment): Unit = writeLock.synchronized {
-    val others = experiments.filterNot(_.id == exp.id)
-    val all = (others :+ exp).sortBy(_.id)
+    writeExperiments(upserted(experiments, exp))
+  }
+
+  /** Replace the experiments table with `rows` (id order) through the
+    * tmp-dir swap. Every mutation reads the table once under
+    * `writeLock` and passes those rows here. */
+  private def writeExperiments(rows: Seq[Experiment]): Unit = {
     val tmp = p("experiments_tmp")
-    all.toDS().coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
+    rows.sortBy(_.id).toDS().coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
     swap(Paths.get(tmp), Paths.get(p("experiments")))
   }
+
+  private def upserted(rows: Seq[Experiment], exp: Experiment): Seq[Experiment] =
+    rows.filterNot(_.id == exp.id) :+ exp
 
   /** POST /api/experiments (routers/experiments.py:45-70): mint the next
     * autoincrement id, force status "created", stamp created_at. The
@@ -103,13 +104,14 @@ class LexamStore(val spark: SparkSession, val baseDir: String) {
     * reference's "only set when provided" loop. */
   def createExperiment(exp: Experiment): Experiment = writeLock.synchronized {
     require(exp.name != null && exp.name.nonEmpty, "experiment name required")
-    require(!experiments.exists(_.name == exp.name),
+    val rows = experiments
+    require(!rows.exists(_.name == exp.name),
       s"experiment name '${exp.name}' already exists")
     val now = new java.sql.Timestamp(System.currentTimeMillis())
     val created = exp.copy(
-      id = experiments.map(_.id).maxOption.getOrElse(0L) + 1,
+      id = rows.map(_.id).maxOption.getOrElse(0L) + 1,
       status = "created", created_at = Some(now), updated_at = Some(now))
-    saveExperiment(created)
+    writeExperiments(rows :+ created)
     created
   }
 
@@ -121,12 +123,13 @@ class LexamStore(val spark: SparkSession, val baseDir: String) {
     * experiment rejects the update instead. */
   def updateExperiment(id: Long, patch: ExperimentPatch): Experiment =
     writeLock.synchronized {
-      val exp = getExperiment(id)
+      val rows = experiments
+      val exp = rows.find(_.id == id)
         .getOrElse(throw new NoSuchElementException(s"experiment $id"))
       require(!StatusMachine.isBusy(exp.status),
         s"experiment busy: ${exp.status}")
       patch.name.filter(_ != exp.name).foreach(n =>
-        require(!experiments.exists(_.name == n),
+        require(!rows.exists(_.name == n),
           s"experiment name '$n' already exists"))
       val merged = exp.copy(
         name = patch.name.getOrElse(exp.name),
@@ -143,15 +146,20 @@ class LexamStore(val spark: SparkSession, val baseDir: String) {
         judge_max_tokens = patch.judge_max_tokens.getOrElse(exp.judge_max_tokens),
         n_answers = patch.n_answers.getOrElse(exp.n_answers),
         updated_at = Some(new java.sql.Timestamp(System.currentTimeMillis())))
-      saveExperiment(merged)
+      writeExperiments(upserted(rows, merged))
       merged
     }
 
-  def setStatus(id: Long, status: String): Unit =
-    getExperiment(id).foreach { e =>
+  /** Status transition, checked and written under one lock hold — a
+    * concurrent writer cannot move the status between the check and
+    * the write. */
+  def setStatus(id: Long, status: String): Unit = writeLock.synchronized {
+    val rows = experiments
+    rows.find(_.id == id).foreach { e =>
       StatusMachine.requireTransition(e.status, status)
-      saveExperiment(e.copy(status = status))
+      writeExperiments(upserted(rows, e.copy(status = status)))
     }
+  }
 
   /** Append a batch of answers under the experiment's partition (S7 —
     * batched, not the reference's per-row commits). */
@@ -167,18 +175,18 @@ class LexamStore(val spark: SparkSession, val baseDir: String) {
 
   /** Delete all answers of an experiment (S8): partition drop. */
   def deleteAnswers(experimentId: Long): Unit =
-    dropPartition("answers", experimentId)
+    dropPartition(LexamStore.Answers, experimentId)
 
   /** Delete judgments of an experiment, optionally one judge only
     * (routers/judging.py:80-108): partition drop or partition rewrite. */
   def deleteJudgments(experimentId: Long, judgeModel: Option[String] = None): Unit =
     judgeModel match {
-      case None => dropPartition("judgments", experimentId)
+      case None => dropPartition(LexamStore.Judgments, experimentId)
       case Some(m) =>
         // null-safe keep-predicate: judge_model is nullable in the
         // reference model (models.py:164) and its equality delete filter
         // keeps NULL-model rows — `=!=` would silently drop them
-        rewritePartition("judgments", experimentId,
+        rewritePartition(LexamStore.Judgments, experimentId,
           _.where(!(col("judge_model") <=> m)))
     }
 
@@ -187,12 +195,7 @@ class LexamStore(val spark: SparkSession, val baseDir: String) {
   def deleteExperiment(id: Long): Unit = writeLock.synchronized {
     deleteJudgments(id)
     deleteAnswers(id)
-    val rest = experiments.filterNot(_.id == id)
-    if (rest.nonEmpty || exists("experiments")) {
-      val tmp = p("experiments_tmp")
-      rest.toDS().coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-      swap(Paths.get(tmp), Paths.get(p("experiments")))
-    }
+    if (exists("experiments")) writeExperiments(experiments.filterNot(_.id == id))
   }
 
   /** Startup schema migration (main.py:14-30 `_migrate_experiments_table`):
@@ -200,7 +203,9 @@ class LexamStore(val spark: SparkSession, val baseDir: String) {
     * that predates them. ALTER TABLE ADD COLUMN on immutable parquet =
     * read → withColumn(default) → rewrite-and-swap. Idempotent like the
     * reference: a no-op when the table is absent or already carries
-    * every column. Returns the column names actually added. */
+    * every column. Returns the column names actually added. The one
+    * footer-inferred read of the store: a stated read would show the
+    * missing columns as NULLs instead of telling them apart. */
   def migrateExperimentsSchema(migrations: Seq[(String, org.apache.spark.sql.Column)]
                                  = LexamStore.ExperimentMigrations): Seq[String] =
     writeLock.synchronized {
@@ -226,23 +231,28 @@ class LexamStore(val spark: SparkSession, val baseDir: String) {
     * is the standard maintenance pass that keeps scans fast. */
   def compactAnswers(experimentId: Long, targetFiles: Int = 1): Unit =
     writeLock.synchronized {
-      rewritePartition("answers", experimentId, _.coalesce(targetFiles))
+      rewritePartition(LexamStore.Answers, experimentId, _.coalesce(targetFiles))
     }
 
   // ---------------------------------------------------------- plumbing
 
-  private def dropPartition(table: String, experimentId: Long): Unit = {
-    val dir = Paths.get(p(table), s"experiment_id=$experimentId")
+  private def partitionDir(t: Table, experimentId: Long): Path =
+    Paths.get(t.at(baseDir), s"experiment_id=$experimentId")
+
+  private def dropPartition(t: Table, experimentId: Long): Unit = {
+    val dir = partitionDir(t, experimentId)
     if (Files.exists(dir)) deleteRecursively(dir)
   }
 
-  /** Rewrite one partition through a transform (delete-as-rewrite). */
-  private def rewritePartition(table: String, experimentId: Long,
+  /** Rewrite one partition through a transform (delete-as-rewrite); the
+    * partition's files are read with the stated data columns. */
+  private def rewritePartition(t: Table, experimentId: Long,
                                f: DataFrame => DataFrame): Unit = {
-    val dir = Paths.get(p(table), s"experiment_id=$experimentId")
+    val dir = partitionDir(t, experimentId)
     if (!Files.exists(dir)) return
-    val remaining = f(spark.read.parquet(dir.toString))
-    val tmp = Paths.get(p(s"${table}_rewrite_tmp"))
+    val dataSchema = StructType(t.schema.filterNot(c => t.partitionBy.contains(c.name)))
+    val remaining = f(spark.read.schema(dataSchema).parquet(dir.toString))
+    val tmp = Paths.get(p(s"${t.dir}_rewrite_tmp"))
     remaining.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     swap(tmp, dir)
   }
@@ -262,6 +272,21 @@ class LexamStore(val spark: SparkSession, val baseDir: String) {
 object LexamStore {
   import org.apache.spark.sql.Column
   import org.apache.spark.sql.functions.lit
+
+  /** `s` as DDL with every column nullable, the way parquet reads it. */
+  private def ddl(s: StructType): String =
+    s.fields.map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
+
+  /** The stated layout of the five tables, taken from the encoders of
+    * the case classes their writers serialize. The partitioned tables
+    * state `experiment_id` last, as a partitioned read orders it. */
+  val Questions: Table = Table("questions", ddl(Encoders.product[Question].schema))
+  val Variants: Table = Table("variants", ddl(Encoders.product[Variant].schema))
+  val Answers: Table = Table("answers", ddl(StructType(Encoders.product[ExperimentAnswer]
+    .schema.filterNot(_.name == "experiment_id"))) + ", experiment_id BIGINT", "experiment_id")
+  val Judgments: Table = Table("judgments", ddl(Encoders.product[ExperimentJudgment].schema) +
+    ", experiment_id BIGINT", "experiment_id")
+  val Experiments: Table = Table("experiments", ddl(Encoders.product[Experiment].schema))
 
   /** The reference's migration set (main.py:20-26), with its defaults. */
   val ExperimentMigrations: Seq[(String, Column)] = Seq(

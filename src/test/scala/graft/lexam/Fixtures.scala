@@ -56,8 +56,37 @@ object Fixtures {
     Variant(10, "q6", "open_question", "dev",
       answer = Some("Les obligations naissent du contrat. CISG applies here.")))
 
+  /** The fixtures plus the corners a grouping-sets aggregate must keep
+    * apart from its rolled-up rows: two NULL-course questions in
+    * different areas, a NULL area, a NULL jurisdiction, NULL splits and
+    * a language other than de/en. q7 and q8 are both open and MCQ, so
+    * each NULL course sits on both sides of the open-vs-MCQ merge. */
+  val edgeQuestions: Seq[Question] = questions ++ Seq(
+    Question("q7", "Qu'est-ce qu'un contrat?", null, "fr", "Private", null, 2023,
+      negative_question = Some(false), international = None),
+    Question("q8", "Who interprets the treaty?", null, "en", "Public",
+      "International", 2020, negative_question = None, international = Some(true)),
+    Question("q9", "Was gilt im Zweifel?", "Strafrecht I", "de", null, "Swiss", 2021,
+      negative_question = Some(true), international = Some(false)))
+
+  val edgeVariants: Seq[Variant] = variants ++ Seq(
+    Variant(11, "q7", "open_question", null, answer = Some("Un accord de volontés.")),
+    Variant(12, "q7", "mcq_4_choices", "dev",
+      choices = Some(Seq("Accord", "Don", "Délit", "Rien")), gold = Some(0)),
+    Variant(13, "q8", "mcq_8_choices", null,
+      choices = Some((1 to 8).map(i => s"Court $i")), gold = Some(2)),
+    Variant(14, "q8", "open_question", "test",
+      answer = Some("The court " * 120)), // 240 words
+    Variant(15, "q9", "open_question", "dev",
+      answer = Some("Im Zweifel für den Angeklagten.")))
+
   def writeTo(store: graft.lexam.pipeline.LexamStore): Unit = {
     store.writeQuestions(questions)
     store.writeVariants(variants)
+  }
+
+  def writeEdgeTo(store: graft.lexam.pipeline.LexamStore): Unit = {
+    store.writeQuestions(edgeQuestions)
+    store.writeVariants(edgeVariants)
   }
 }

@@ -185,6 +185,41 @@ class LmSchemaDriftSpec extends AnyFunSuite {
     assertNoDrift(dir, Bpe.TokenizerArtifact.tables)
   }
 
+  test("LEXam store: every table is read as stated; absent tables and dropped partitions read empty with the same columns") {
+    import graft.lexam.{Experiment, FilterConfig, Fixtures}
+    import graft.lexam.pipeline.{DeterministicStubClient, Jobs, LexamStore, ProgressStore}
+    def cols(df: org.apache.spark.sql.DataFrame) =
+      df.schema.fields.map(f => f.name -> f.dataType).toSeq
+    def stated(t: Table) = t.schema.fields.map(f => f.name -> f.dataType).toSeq
+    val dir = tmpDir("lexamdrift")
+    val store = new LexamStore(spark, dir)
+    assert(cols(store.answers) === stated(LexamStore.Answers))
+    assert(cols(store.judgments) === stated(LexamStore.Judgments))
+    assert(store.answers.isEmpty && store.judgments.isEmpty && store.experiments.isEmpty)
+
+    Fixtures.writeTo(store)
+    store.saveExperiment(Experiment(id = 1, name = "drift",
+      filter_config = FilterConfig(language = Seq("en"))))
+    val progress = new ProgressStore
+    Jobs.runGeneration(store, progress, new DeterministicStubClient, 1L, parallelism = 2)
+    Jobs.runJudging(store, progress, new DeterministicStubClient, 1L, "j", parallelism = 2)
+    assertNoDrift(dir, Seq(LexamStore.Questions, LexamStore.Variants, LexamStore.Experiments))
+    assertNoPartitionedDrift(dir, Seq(LexamStore.Answers, LexamStore.Judgments))
+    Seq(store.questions -> LexamStore.Questions, store.variants -> LexamStore.Variants,
+        store.answers -> LexamStore.Answers, store.judgments -> LexamStore.Judgments)
+      .foreach { case (df, t) =>
+        assert(cols(df) === stated(t), t.dir)
+        assert(!df.isEmpty, t.dir)
+      }
+
+    // every partition dropped: the directories stay, the reads are empty
+    store.deleteExperiment(1L)
+    assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir, "answers")))
+    assert(cols(store.answers) === stated(LexamStore.Answers) && store.answers.isEmpty)
+    assert(cols(store.judgments) === stated(LexamStore.Judgments) && store.judgments.isEmpty)
+    assert(store.experiments.isEmpty)
+  }
+
   test("the writer refuses a frame whose column type differs from the stated DDL") {
     import spark.implicits._
     val e = intercept[IllegalArgumentException] {
