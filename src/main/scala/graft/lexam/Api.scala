@@ -201,21 +201,20 @@ object Api {
       "n_answers" -> e.n_answers, "status" -> e.status,
       "created_at" -> e.created_at, "updated_at" -> e.updated_at)
 
-  /** The one judgment read path — see LexamStore.liveJudgments. */
-  private def liveJudgments(store: pipeline.LexamStore): DataFrame =
-    store.liveJudgments()
-
   /** Per-experiment judge breakdown rows (`_judge_breakdown`,
-    * routers/experiments.py:180-189), keyed by experiment id — ALL
-    * experiments in one grouped pass instead of the reference's
+    * routers/experiments.py:180-189), keyed by experiment id, judge
+    * models ascending — all experiments (or the one asked for) in one
+    * grouped pass over the one judgment read path,
+    * `LexamStore.liveJudgments`, instead of the reference's
     * per-experiment query. */
-  private def judgeBreakdowns(store: pipeline.LexamStore): Map[Long, Seq[(String, Long)]] =
-    liveJudgments(store)
-      .groupBy(col("eid"), col("judge_model"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("judge_model")).collect()
+  private def judgeBreakdowns(store: pipeline.LexamStore,
+                              experimentId: Option[Long] = None): Map[Long, Seq[(String, Long)]] =
+    GroupingSets.sorted(store.liveJudgments(experimentId)
+        .groupBy(col("eid"), col("judge_model"))
+        .agg(count(lit(1)).as("n")).collect().toSeq,
+      GroupingSets.By("judge_model"))
       .groupBy(_.getLong(0))
-      .view.mapValues(_.toSeq.map(r => r.getString(1) -> r.getLong(2))).toMap
+      .view.mapValues(_.map(r => r.getString(1) -> r.getLong(2))).toMap
 
   private def renderJudges(judges: Seq[(String, Long)]): Seq[Any] =
     judges.map { case (m, n) =>
@@ -244,17 +243,18 @@ object Api {
     render(items)
   }
 
-  /** GET /api/experiments/{id} (routers/experiments.py:96-113). */
+  /** GET /api/experiments/{id} (routers/experiments.py:96-113): two
+    * aggregates, the answer count and the experiment's judge breakdown,
+    * whose sum is the judgment count (as in [[listExperiments]]). */
   def getExperiment(store: pipeline.LexamStore, experimentId: Long): String = {
     val e = store.getExperiment(experimentId)
       .getOrElse(throw new NoSuchElementException(s"experiment $experimentId"))
     val answerCount = store.answers
       .where(col("experiment_id") === experimentId).count()
-    val judgmentCount = liveJudgments(store)
-      .where(col("eid") === experimentId).count()
+    val judges = judgeBreakdowns(store, Some(experimentId)).getOrElse(experimentId, Nil)
     render(serializeExperiment(e) ++ scala.collection.immutable.ListMap[String, Any](
-      "answer_count" -> answerCount, "judgment_count" -> judgmentCount,
-      "judges" -> renderJudges(judgeBreakdowns(store).getOrElse(experimentId, Nil))))
+      "answer_count" -> answerCount, "judgment_count" -> judges.map(_._2).sum,
+      "judges" -> renderJudges(judges)))
   }
 
   /** GET /api/experiments/{id}/question-count
@@ -284,9 +284,9 @@ object Api {
     })
 
   /** GET /api/experiments/{id}/stats (experiment_stats.py:13-114):
-    * [[ExperimentAnalytics.summary]]'s two aggregates plus, for a
-    * multi-run experiment, self-consistency, over one cached enriched
-    * frame. */
+    * [[ExperimentAnalytics.summary]]'s two aggregates over one cached
+    * enriched frame; self-consistency is reported for a multi-run
+    * experiment. */
   def experimentStats(store: pipeline.LexamStore, experimentId: Long,
                       modelName: Option[String] = None,
                       judgeModel: Option[String] = None): String = {
@@ -298,8 +298,7 @@ object Api {
     val s = ExperimentAnalytics.summary(enriched, store.judgments, judgeModel)
     val (mcq, open) = (s.mcq, s.open)
     val (gi, go, ji, jo) = s.tokens
-    val consistency =
-      if (exp.n_answers > 1) Some(ExperimentAnalytics.selfConsistency(enriched)) else None
+    val consistency = if (exp.n_answers > 1) Some(s.consistency) else None
     render(scala.collection.immutable.ListMap(
       "total_answers" -> s.totalAnswers,
       "mcq" -> scala.collection.immutable.ListMap(
@@ -443,9 +442,8 @@ object Api {
                       judgeModel: Option[String] = None): String = {
     store.getExperiment(experimentId)
       .getOrElse(throw new NoSuchElementException(s"experiment $experimentId"))
-    val enriched = ExperimentAnalytics.enriched(store.answers, store.variants,
-      store.questions, store.judgments, experimentId, modelName)
-    render(ExperimentAnalytics.statsByQuestion(enriched, store.judgments, judgeModel)
+    render(ExperimentAnalytics.statsByQuestion(store.answers, store.variants,
+        store.questions, store.judgments, experimentId, modelName, judgeModel)
       .select("question_id", "course", "area", "config", "mcq_correct",
         "avg_score", "answer_count", "judgment_count")
       .collect().toSeq)

@@ -47,13 +47,15 @@ object DatasetAnalytics {
   // ------------------------------------------------- /api/dashboard
 
   /** Dashboard question cohort (main.py:320-337 `fq`): optional config
-    * semi-join + language filter. */
+    * semi-join + language filter. A semi-join keeps each question once
+    * however many of its variants match, so its build side is not
+    * deduplicated first. */
   def dashboardQuestions(questions: DataFrame, variants: DataFrame,
                          config: Seq[String], language: Seq[String]): DataFrame = {
     var q = questions
     if (config.nonEmpty) {
       val qids = variants.where(col("config").isin(config: _*))
-        .select(col("question_id").as("id")).distinct()
+        .select(col("question_id").as("id"))
       q = q.join(qids, Seq("id"), "left_semi")
     }
     if (language.nonEmpty) q = q.where(col("language").isin(language: _*))
@@ -259,35 +261,43 @@ object DatasetAnalytics {
   // -------------------------------------------- /api/course-summary
 
   /** Per-course rollup with distinct-qid set sizes per config bucket,
-    * set-union total, sorted (area asc, total desc) — main.py:252-310's
-    * Python set accumulation as one aggregation (A6). */
+    * set-union total, sorted (area asc, total desc, course asc) on the
+    * driver — main.py:252-310's Python set accumulation (A6) as two
+    * plain aggregates: each (course, question) gets a 0/1 flag per
+    * bucket, and a course sums its questions' flags, which counts the
+    * same distinct question ids with no `Expand`. A course's area is
+    * the area of its question with the lowest variant id, the first the
+    * reference's loop meets. Collected; a local frame. */
   def courseSummary(questions: DataFrame, variants: DataFrame,
                     language: Option[String] = None): DataFrame = {
     var joined = variants.join(questions,
       variants("question_id") === questions("id"), "inner")
     language.foreach(l => joined = joined.where(col("language") === l))
-    joined
-      .groupBy(col("course"))
-      .agg(
-        first(col("area")).as("area"),
+    val config = col("config")
+    val open = config === "open_question"
+    def has(c: Column) = max(when(c, 1).otherwise(0))
+    val buckets = Seq(
+      "mcq_4" -> (config === "mcq_4_choices"),
+      "mcq_all" -> config.isin(McqConfigs: _*),
+      "open_qa" -> open,
+      "open_dev" -> (open && col("split") === "dev"),
+      "open_test" -> (open && col("split") === "test"),
+      "total" -> (config === "mcq_4_choices" || config.isin(McqConfigs: _*) || open))
+    val perQuestion = joined.groupBy(col("course"), col("question_id"))
+      .agg(min(variants("id")).as("first_variant"), Seq(
+        first(col("area")).as("area"), first(col("jurisdiction")).as("jurisdiction"),
+        first(col("language")).as("language"),
+        has(col("international") === true).as("international")) ++
+        buckets.map { case (name, in) => has(in).as(name) }: _*)
+    val firstLanguage = min(col("language"))
+    GroupingSets.collectSorted(perQuestion.groupBy(col("course"))
+      .agg(min_by(col("area"), col("first_variant")).as("area"), Seq(
         array_join(array_sort(collect_set(col("jurisdiction"))), ", ").as("jurisdiction"),
-        (max(when(col("international") === true, 1).otherwise(0)) === 1).as("international"),
-        countDistinct(when(col("config") === "mcq_4_choices", col("question_id"))).as("mcq_4"),
-        countDistinct(when(col("config").isin(McqConfigs: _*), col("question_id"))).as("mcq_all"),
-        countDistinct(when(col("config") === "open_question", col("question_id"))).as("open_qa"),
-        countDistinct(when(col("config") === "open_question" && col("split") === "dev",
-          col("question_id"))).as("open_dev"),
-        countDistinct(when(col("config") === "open_question" && col("split") === "test",
-          col("question_id"))).as("open_test"),
-        countDistinct(when(col("config") === "mcq_4_choices" ||
-          col("config").isin(McqConfigs: _*) ||
-          col("config") === "open_question", col("question_id"))).as("total"),
-        (countDistinct(col("language")) > 1).as("multi_lang"),
-        min(col("language")).as("single_lang"))
-      .withColumn("language",
-        when(col("multi_lang"), "both").otherwise(col("single_lang")))
-      .drop("multi_lang", "single_lang")
-      .orderBy(col("area"), desc("total"), col("course"))
+        (max(col("international")) === 1).as("international")) ++
+        buckets.map { case (name, _) => sum(col(name)).as(name) } :+
+        when(firstLanguage =!= max(col("language")), "both").otherwise(firstLanguage)
+          .as("language"): _*),
+      GroupingSets.By("area"), GroupingSets.By("total", desc = true), GroupingSets.By("course"))
   }
 
   // -------------------------------------------- /api/search-summary

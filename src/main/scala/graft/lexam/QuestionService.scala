@@ -1,6 +1,6 @@
 package graft.lexam
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Explore surface: `GET /api/questions` (reference main.py:159-207) —
@@ -11,18 +11,41 @@ object QuestionService {
 
   case class Page(total: Long, offset: Int, limit: Int, items: DataFrame)
 
+  /** The nested variant fields, in struct order. */
+  private def variantStruct: Column =
+    struct(col("id"), col("config"), col("split"), col("choices"), col("gold"), col("answer"))
+
   /** Questions with their variants nested as a sorted array of structs
     * (joinedload serialization, main.py:189,554-577). Left join keeps
-    * variant-less questions with an empty array. */
+    * variant-less questions with an empty array. The collected pages
+    * ([[withVariants]]) give the rows and the schema this frame does. */
   def withNestedVariants(questions: DataFrame, variants: DataFrame): DataFrame = {
     val nested = variants
       .groupBy(col("question_id"))
-      .agg(sort_array(collect_list(struct(
-        col("id"), col("config"), col("split"),
-        col("choices"), col("gold"), col("answer")))).as("variants"))
+      .agg(sort_array(collect_list(variantStruct)).as("variants"))
       .withColumnRenamed("question_id", "id")
     questions.join(nested, Seq("id"), "left_outer")
       .withColumn("variants", coalesce(col("variants"), array()))
+  }
+
+  /** `page`'s question rows, collected, each with its own variants
+    * nested in id order, as a local frame with [[withNestedVariants]]'
+    * schema. Only the page's variants are read (`question_id IN` the
+    * page's ids) and they are nested on the driver, so a page never
+    * groups the whole variants table. */
+  private def withVariants(page: DataFrame, variants: DataFrame): DataFrame = {
+    val rows = page.collect().toSeq
+    val ids = rows.map(_.getAs[String]("id")).distinct
+    val byQuestion = if (ids.isEmpty) Map.empty[String, Seq[Row]]
+      else variants.where(col("question_id").isin(ids: _*))
+        .select(col("question_id"), variantStruct).collect().toSeq
+        .groupBy(_.getString(0))
+        .view.mapValues(vs => GroupingSets.sorted(vs.map(_.getStruct(1)), GroupingSets.By("id")))
+        .toMap
+    page.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows.map(r =>
+        Row.fromSeq(r.toSeq :+ byQuestion.getOrElse(r.getAs[String]("id"), Nil))): _*),
+      withNestedVariants(page, variants).schema)
   }
 
   /** Sort-key whitelist (main.py:135-156). The `config`/`split` keys are
@@ -46,43 +69,40 @@ object QuestionService {
     * cache, one source scan), paged from the cache
     * (spec-pinned: the page plan reads InMemoryTableScan, zero
     * question-source scans), and released before returning — `items`
-    * is the collected page re-wrapped as a local DataFrame, which is
-    * exactly a page-size (≤ 200-row, main.py:174) serving result, so
-    * pinning executor cache blocks for a lazy consumer would buy
-    * nothing. Deliberately NOT `count(*) over ()`: that form computes
-    * the total inside the page query but forces the whole cohort
-    * through a single-partition window — the plan shape this library
-    * rejects everywhere else. */
+    * is the collected page with its variants ([[withVariants]]) as a
+    * local DataFrame, which is exactly a page-size (≤ 200-row,
+    * main.py:174) serving result, so pinning executor cache blocks for
+    * a lazy consumer would buy nothing. Deliberately NOT
+    * `count(*) over ()`: that form computes the total inside the page
+    * query but forces the whole cohort through a single-partition
+    * window — the plan shape this library rejects everywhere else. */
   def listQuestions(questions: DataFrame, variants: DataFrame,
                     fc: FilterConfig = FilterConfig(),
                     search: Option[String] = None,
                     sortBy: Option[String] = None, sortDir: String = "asc",
                     offset: Int = 0, limit: Int = 50): Page = {
-    val spark = questions.sparkSession
     val filtered = Filters.filterQuestions(questions, variants, fc, search).cache()
     try {
       val total = filtered.count()
-      val pageDf = pageFrame(filtered, variants, sortBy, sortDir, offset, limit)
-      val rows = pageDf.collect()
-      Page(total, offset, limit,
-        spark.createDataFrame(java.util.Arrays.asList(rows: _*), pageDf.schema))
+      Page(total, offset, limit, withVariants(
+        pageFrame(filtered, variants, sortBy, sortDir, offset, limit), variants))
     } finally filtered.unpersist(blocking = false)
   }
 
-  /** The ordered/offset/limited page over an (already cached) filtered
-    * cohort — split out so the plan is inspectable: its only reads are
-    * the cache and the variants side. */
+  /** The ordered/offset/limited question rows of a page over an
+    * (already cached) filtered cohort, without their variants — split
+    * out so the plan is inspectable: its only reads are the cache and,
+    * for a `config`/`split` sort, the variants side. */
   private[lexam] def pageFrame(filtered: DataFrame, variants: DataFrame,
                                sortBy: Option[String], sortDir: String,
                                offset: Int, limit: Int): DataFrame = {
-    val base = withNestedVariants(filtered, variants)
     val withSortKeys = sortBy match {
       case Some(k @ ("config" | "split")) =>
         val minKeys = variants.groupBy(col("question_id"))
           .agg(min(col(k)).as(s"_min_$k"))
           .withColumnRenamed("question_id", "id")
-        base.join(minKeys, Seq("id"), "left_outer")
-      case _ => base
+        filtered.join(minKeys, Seq("id"), "left_outer")
+      case _ => filtered
     }
     val sortCol: Option[Column] = sortBy.collect {
       case k @ ("config" | "split") if SortableColumns(k) => col(s"_min_$k")
@@ -97,7 +117,8 @@ object QuestionService {
     ordered.drop("_min_config", "_min_split").offset(offset).limit(limit)
   }
 
-  /** Single question with nested variants (main.py:210-221). */
+  /** Single question with nested variants (main.py:210-221), collected
+    * as a local frame: one read of the question, one of its variants. */
   def getQuestion(questions: DataFrame, variants: DataFrame, id: String): DataFrame =
-    withNestedVariants(questions.where(col("id") === id), variants)
+    withVariants(questions.where(col("id") === id), variants)
 }

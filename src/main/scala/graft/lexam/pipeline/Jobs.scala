@@ -60,7 +60,9 @@ object Jobs {
 
   /** Run generation for one experiment. Returns the number of answers
     * written. The LLM call is the only imperative stage; grading is
-    * declarative afterwards (X1/X3/X8). */
+    * declarative afterwards (X1/X3/X8). The work list is materialized
+    * once: its count is the progress total and the LLM stage reads the
+    * same rows, without re-running the work list's joins. */
   def runGeneration(store: LexamStore, progress: ProgressStore,
                     client: LlmClient, experimentId: Long,
                     parallelism: Int = 32): Long = {
@@ -72,10 +74,11 @@ object Jobs {
     val key = s"generate:$experimentId"
     val completed = spark.sparkContext.longAccumulator(s"$key:completed")
     val failed = spark.sparkContext.longAccumulator(s"$key:failed")
+    val work = withPrompt(generationWorkList(store, exp), exp)
+      .select(col("id").as("variant_id"), col("run_index"),
+        col("config"), col("gold"), col("prompt"))
+      .persist()
     try {
-      val work = withPrompt(generationWorkList(store, exp), exp)
-        .select(col("id").as("variant_id"), col("run_index"),
-          col("config"), col("gold"), col("prompt"))
       val total = work.count()
       progress.create(key, total, completed, failed)
       store.setStatus(experimentId, "generating")
@@ -143,7 +146,7 @@ object Jobs {
         store.setStatus(experimentId, "error")
         progress.finish(key, Some(e.getMessage))
         throw e
-    }
+    } finally work.unpersist()
   }
 
   // ---------------------------------------------------------- judging
@@ -176,6 +179,8 @@ object Jobs {
         when(cleanAnswer === "", "(no answer)").otherwise(cleanAnswer)))
   }
 
+  /** Run judging for one experiment and judge; the work list is
+    * materialized once, as in [[runGeneration]]. */
   def runJudging(store: LexamStore, progress: ProgressStore,
                  client: LlmClient, experimentId: Long, judgeModel: String,
                  parallelism: Int = 32): Long = {
@@ -186,9 +191,10 @@ object Jobs {
     val key = s"judge:$experimentId:$judgeModel"
     val completed = spark.sparkContext.longAccumulator(s"$key:completed")
     val failed = spark.sparkContext.longAccumulator(s"$key:failed")
+    val work = withJudgePrompt(judgingWorkList(store, exp, judgeModel), exp)
+      .select(col("id").as("answer_id"), col("judge_user_prompt"))
+      .persist()
     try {
-      val work = withJudgePrompt(judgingWorkList(store, exp, judgeModel), exp)
-        .select(col("id").as("answer_id"), col("judge_user_prompt"))
       val total = work.count()
       progress.create(key, total, completed, failed)
       store.setStatus(experimentId, "judging")
@@ -249,7 +255,7 @@ object Jobs {
         store.setStatus(experimentId, "error")
         progress.finish(key, Some(e.getMessage))
         throw e
-    }
+    } finally work.unpersist()
   }
 
   /** DELETE /{id}/answers (routers/generation.py:73-84): drop the
@@ -257,38 +263,39 @@ object Jobs {
     * entry. Judgments are left in place like the reference's bulk
     * `query.delete()` (which bypasses ORM cascade) — they become
     * unreachable either way, since every judgment read path joins
-    * through answers. */
+    * through answers. The row is read, the answers dropped and the
+    * status written under one store lock hold. */
   def deleteAnswers(store: LexamStore, progress: ProgressStore,
                     experimentId: Long): Unit = {
-    val exp = store.getExperiment(experimentId)
-      .getOrElse(throw new NoSuchElementException(s"experiment $experimentId"))
-    store.deleteAnswers(experimentId)
-    store.saveExperiment(exp.copy(status = "created"))
+    store.modifyExperiment(experimentId) { exp =>
+      store.deleteAnswers(experimentId)
+      exp.copy(status = "created")
+    }.getOrElse(throw new NoSuchElementException(s"experiment $experimentId"))
     progress.remove(s"generate:$experimentId")
   }
 
   /** DELETE /{id}/judgments (routers/judging.py:80-108): drop the
     * experiment's judgments (optionally one judge model only); when no
     * judgments remain and the experiment was "completed", roll status
-    * back to "generated" — written via saveExperiment like reset-status,
-    * since completed→generated is exactly the data-repair transition the
-    * guard table forbids for workers. */
+    * back to "generated" — written without the transition guard like
+    * reset-status, since completed→generated is exactly the data-repair
+    * transition the guard table forbids for workers. */
   def deleteJudgments(store: LexamStore, experimentId: Long,
-                      judgeModel: Option[String] = None): Unit = {
-    val exp = store.getExperiment(experimentId)
-      .getOrElse(throw new NoSuchElementException(s"experiment $experimentId"))
-    store.deleteJudgments(experimentId, judgeModel)
-    val remaining = store.liveJudgments(Some(experimentId)).count()
-    if (remaining == 0 && exp.status == "completed")
-      store.saveExperiment(exp.copy(status = "generated"))
-  }
+                      judgeModel: Option[String] = None): Unit =
+    store.modifyExperiment(experimentId) { exp =>
+      store.deleteJudgments(experimentId, judgeModel)
+      if (exp.status == "completed" && store.liveJudgments(Some(experimentId)).isEmpty)
+        exp.copy(status = "generated")
+      else exp
+    }.getOrElse(throw new NoSuchElementException(s"experiment $experimentId"))
 
-  /** reset-status from data (routers/experiments.py:140-162). */
+  /** reset-status from data (routers/experiments.py:140-162); the
+    * status of a missing experiment is still computed and returned. */
   def resetStatus(store: LexamStore, experimentId: Long): String = {
-    val answerCount = store.answers.where(col("experiment_id") === experimentId).count()
-    val judgmentCount = store.liveJudgments(Some(experimentId)).count()
-    val status = StatusMachine.recompute(answerCount, judgmentCount)
-    store.getExperiment(experimentId).foreach(e => store.saveExperiment(e.copy(status = status)))
-    status
+    def fromData = StatusMachine.recompute(
+      store.answers.where(col("experiment_id") === experimentId).count(),
+      store.liveJudgments(Some(experimentId)).count())
+    store.modifyExperiment(experimentId)(_.copy(status = fromData))
+      .fold(fromData)(_.status)
   }
 }

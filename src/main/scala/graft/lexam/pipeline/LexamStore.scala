@@ -22,6 +22,17 @@ import graft.sources.Table
   *    (models.py:23,38,136; routers/experiments.py:130-137);
   *  - the tiny `experiments` dimension is read-modify-overwrite through
   *    the driver (S9 status transitions).
+  *
+  * The experiments table is served from a driver-side snapshot
+  * `(stamp, rows)`. The stamp is the name, size and mtime of every file
+  * under `experiments/`, taken with one directory listing and no Spark
+  * job; a read whose listing differs from the snapshot's stamp re-reads
+  * the table through Spark. Every rewrite of the table (through any
+  * store instance or process) swaps in files with fresh UUID names, so
+  * a rewrite always changes the stamp. A write through this store
+  * installs the rows it wrote, as a stated read would return them, with
+  * the stamp taken after the swap — the next read sees it without a
+  * Spark job.
   */
 class LexamStore(val spark: SparkSession, val baseDir: String) {
   import spark.implicits._
@@ -32,6 +43,10 @@ class LexamStore(val spark: SparkSession, val baseDir: String) {
     * per table. Coarse lock; writes are small and infrequent next to
     * the LLM calls. */
   private val writeLock = new Object
+
+  /** Rows last read or written, with the stamp of the files they came
+    * from; an absent table has the empty stamp and reads empty. */
+  @volatile private var snapshot: (Seq[(String, Long, Long)], Seq[Experiment]) = (Nil, Nil)
 
   private def p(name: String): String = s"$baseDir/$name"
   private def exists(name: String): Boolean = Files.exists(Paths.get(p(name)))
@@ -66,8 +81,41 @@ class LexamStore(val spark: SparkSession, val baseDir: String) {
         Seq("answer_id"))
   }
 
-  def experiments: Seq[Experiment] =
-    read(LexamStore.Experiments).as[Experiment].collect().toSeq
+  /** The experiments table, from the snapshot while the files are the
+    * ones it was taken from. The stamp is listed before the Spark read,
+    * so a rewrite racing the read leaves a stamp the next read does not
+    * match. */
+  def experiments: Seq[Experiment] = {
+    val stamp = experimentsStamp
+    val (seen, rows) = snapshot
+    if (stamp.contains(seen)) rows
+    else {
+      val fresh = read(LexamStore.Experiments).as[Experiment].collect().toSeq
+      stamp.foreach(s => snapshot = (s, fresh))
+      fresh
+    }
+  }
+
+  /** (name, size, mtime) of every file under `experiments/`, sorted;
+    * empty when the table is absent, None when a concurrent swap moved
+    * the files while they were listed. */
+  private def experimentsStamp: Option[Seq[(String, Long, Long)]] = {
+    import java.nio.file.attribute.BasicFileAttributes
+    import scala.jdk.CollectionConverters._
+    val dir = Paths.get(p(LexamStore.Experiments.dir))
+    try {
+      val files = Files.walk(dir)
+      try Some(files.iterator().asScala.toSeq.flatMap { f =>
+        val a = Files.readAttributes(f, classOf[BasicFileAttributes])
+        if (a.isDirectory) None
+        else Some((dir.relativize(f).toString, a.size, a.lastModifiedTime.toMillis))
+      }.sorted)
+      finally files.close()
+    } catch {
+      case _: java.nio.file.NoSuchFileException if !Files.exists(dir) => Some(Nil)
+      case _: java.io.IOException | _: java.io.UncheckedIOException => None
+    }
+  }
 
   def getExperiment(id: Long): Option[Experiment] = experiments.find(_.id == id)
 
@@ -89,8 +137,10 @@ class LexamStore(val spark: SparkSession, val baseDir: String) {
     * `writeLock` and passes those rows here. */
   private def writeExperiments(rows: Seq[Experiment]): Unit = {
     val tmp = p("experiments_tmp")
-    rows.sortBy(_.id).toDS().coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
+    val sorted = rows.sortBy(_.id)
+    sorted.toDS().coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
     swap(Paths.get(tmp), Paths.get(p("experiments")))
+    experimentsStamp.foreach(s => snapshot = (s, sorted.map(LexamStore.storedForm)))
   }
 
   private def upserted(rows: Seq[Experiment], exp: Experiment): Seq[Experiment] =
@@ -122,16 +172,13 @@ class LexamStore(val spark: SparkSession, val baseDir: String) {
     * stale row and the edit silently half-applies); here a busy
     * experiment rejects the update instead. */
   def updateExperiment(id: Long, patch: ExperimentPatch): Experiment =
-    writeLock.synchronized {
-      val rows = experiments
-      val exp = rows.find(_.id == id)
-        .getOrElse(throw new NoSuchElementException(s"experiment $id"))
+    modifyExperiment(id) { exp =>
       require(!StatusMachine.isBusy(exp.status),
         s"experiment busy: ${exp.status}")
       patch.name.filter(_ != exp.name).foreach(n =>
-        require(!rows.exists(_.name == n),
+        require(!experiments.exists(_.name == n),
           s"experiment name '$n' already exists"))
-      val merged = exp.copy(
+      exp.copy(
         name = patch.name.getOrElse(exp.name),
         description = patch.description.orElse(exp.description),
         filter_config = patch.filter_config.getOrElse(exp.filter_config),
@@ -146,20 +193,31 @@ class LexamStore(val spark: SparkSession, val baseDir: String) {
         judge_max_tokens = patch.judge_max_tokens.getOrElse(exp.judge_max_tokens),
         n_answers = patch.n_answers.getOrElse(exp.n_answers),
         updated_at = Some(new java.sql.Timestamp(System.currentTimeMillis())))
-      writeExperiments(upserted(rows, merged))
-      merged
-    }
+    }.getOrElse(throw new NoSuchElementException(s"experiment $id"))
 
   /** Status transition, checked and written under one lock hold — a
     * concurrent writer cannot move the status between the check and
     * the write. */
-  def setStatus(id: Long, status: String): Unit = writeLock.synchronized {
-    val rows = experiments
-    rows.find(_.id == id).foreach { e =>
+  def setStatus(id: Long, status: String): Unit =
+    modifyExperiment(id) { e =>
       StatusMachine.requireTransition(e.status, status)
-      writeExperiments(upserted(rows, e.copy(status = status)))
+      e.copy(status = status)
     }
-  }
+
+  /** Experiment `id` rewritten as `f` returns it, read once and written
+    * under one lock hold, so a status another thread writes cannot land
+    * between the read and the write and be overwritten; `f` may act on
+    * the store first (a delete) under the same hold. No write when `f`
+    * returns the row unchanged; None when there is no such id. */
+  private[pipeline] def modifyExperiment(id: Long)(f: Experiment => Experiment): Option[Experiment] =
+    writeLock.synchronized {
+      val rows = experiments
+      rows.find(_.id == id).map { e =>
+        val next = f(e)
+        if (next != e) writeExperiments(upserted(rows, next))
+        next
+      }
+    }
 
   /** Append a batch of answers under the experiment's partition (S7 —
     * batched, not the reference's per-row commits). */
@@ -287,6 +345,16 @@ object LexamStore {
   val Judgments: Table = Table("judgments", ddl(Encoders.product[ExperimentJudgment].schema) +
     ", experiment_id BIGINT", "experiment_id")
   val Experiments: Table = Table("experiments", ddl(Encoders.product[Experiment].schema))
+
+  private lazy val (toRow, fromRow) = {
+    val enc = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Experiment]()
+    (enc.createSerializer(), enc.resolveAndBind().createDeserializer())
+  }
+
+  /** `e` as a stated read of the written table returns it: through the
+    * encoder and back, so a timestamp keeps microseconds as parquet
+    * does. */
+  private def storedForm(e: Experiment): Experiment = synchronized(fromRow(toRow(e).copy()))
 
   /** The reference's migration set (main.py:20-26), with its defaults. */
   val ExperimentMigrations: Seq[(String, Column)] = Seq(

@@ -1206,8 +1206,13 @@ object Similarity {
     * dial recall against cost from there. */
   def pqIvfSearch(spark: org.apache.spark.sql.SparkSession, path: String,
                   queries: DataFrame, k: Int, nProbe: Int,
-                  rescoreK: Int): DataFrame = {
-    val (cand0, cells) = pqIvfAdcCandidates(spark, path, queries, nProbe)
+                  rescoreK: Int): DataFrame =
+    rescoredTopK(pqIvfAdcCandidates(spark, path, queries, nProbe), k, rescoreK)
+
+  /** [[pqIvfSearch]]'s exact-cosine rescore of the ADC candidates. */
+  private def rescoredTopK(candidates: (DataFrame, DataFrame), k: Int,
+                           rescoreK: Int): DataFrame = {
+    val (cand0, cells) = candidates
     val wq = Window.partitionBy(col("q_id")).orderBy(desc("qscore"), col("vec_id"))
     val cand = cand0
       .withColumn("qrank", row_number().over(wq))
@@ -1241,7 +1246,13 @@ object Similarity {
     // table does not yet hold — ADC scores would be silently wrong;
     // fail loudly instead (heal by re-running the rebuild)
     graft.sources.Rebuild.assertNotInflight(spark, path)
-    val PqIvf(m, kCode, index, cbFlat, cells) = loadPqIvf(spark, path)
+    adcCandidates(spark, loadPqIvf(spark, path), queries, nProbe)
+  }
+
+  /** [[pqIvfAdcCandidates]] over an index already loaded. */
+  private def adcCandidates(spark: org.apache.spark.sql.SparkSession, pq: PqIvf,
+                            queries: DataFrame, nProbe: Int): (DataFrame, DataFrame) = {
+    val PqIvf(m, kCode, index, cbFlat, cells) = pq
     val bc = spark.sparkContext.broadcast(index)
     import spark.implicits._
     val qCells = queries.select(col("vec_id").as("q_id"), col("embedding"))
@@ -1294,11 +1305,13 @@ object Similarity {
                       sampleMod: Int, k: Int, nProbe: Int, rescoreK: Int,
                       skewBound: Double = 4.0,
                       recallFloor: Double = 0.9): PqIvfDriftReport = {
+    graft.sources.Rebuild.assertNotInflight(spark, path)
+    // one load serves the occupancy, the sample and the serving probe
     val pq = loadPqIvf(spark, path)
     val vectors = pq.cells.select(col("vec_id"), col("embedding"))
     val queries = vectors.where(col("vec_id") % sampleMod === 0)
     val truth = bruteForceTopK(vectors, sampleMod, k)
-    val approx = pqIvfSearch(spark, path, queries, k, nProbe, rescoreK)
+    val approx = rescoredTopK(adcCandidates(spark, pq, queries, nProbe), k, rescoreK)
     val truthPairs = truth.select(col("q_id"), col("neighbor_id"))
     val hit = approx.select(col("q_id"), col("neighbor_id"))
       .join(truthPairs, Seq("q_id", "neighbor_id")).count()

@@ -1,10 +1,7 @@
 package graft.lexam
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.immutable.ListMap
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.TestSpark
@@ -20,33 +17,9 @@ import graft.lexam.pipeline._
   */
 class AggregateEndpointsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  import spark.implicits._
 
-  /** A parquet store holding `write`'s questions and variants and one
-    * generated, twice-judged experiment (id 1, every question, two runs)
-    * plus a NULL-score judgment of an open answer. */
-  private def experimentStore(write: LexamStore => Unit): LexamStore = {
-    val store = new LexamStore(spark,
-      java.nio.file.Files.createTempDirectory("agg_endpoints").toString)
-    write(store)
-    store.saveExperiment(Experiment(id = 1, name = "agg", n_answers = 2))
-    val progress = new ProgressStore
-    val client = new DeterministicStubClient
-    Jobs.runGeneration(store, progress, client, 1L, parallelism = 2)
-    Jobs.runJudging(store, progress, client, 1L, "j1", parallelism = 2)
-    Jobs.runJudging(store, progress, client, 1L, "j2", parallelism = 2)
-    val openAnswer = store.answers.join(store.variants
-        .where(col("config") === "open_question").select(col("id").as("variant_id")),
-        Seq("variant_id"), "left_semi")
-      .orderBy("id").select("id").head().getLong(0)
-    store.appendJudgments(Seq(ExperimentJudgment(id = 424242L, answer_id = openAnswer,
-      judge_model = "j1", judgment_text = "unscored", input_tokens = 7, output_tokens = 3))
-      .toDS().toDF().withColumn("experiment_id", lit(1L)))
-    store
-  }
-
-  private lazy val fixtureStore = experimentStore(Fixtures.writeTo)
-  private lazy val edgeStore = experimentStore(Fixtures.writeEdgeTo)
+  private lazy val fixtureStore = Fixtures.experimentStore(spark, Fixtures.writeTo)
+  private lazy val edgeStore = Fixtures.experimentStore(spark, Fixtures.writeEdgeTo)
 
   /** (store name, store, case) for every case, on both stores. */
   private def cases[A](fixtures: Seq[A], edge: Seq[A]): Seq[(String, LexamStore, A)] =
@@ -111,58 +84,54 @@ class AggregateEndpointsSpec extends AnyFunSuite {
       """"self_consistency": {"total_variants": 0, "unanimous": 0, "unanimous_rate": 0.0}}""")
   }
 
-  /** Spark jobs `body` starts, counted through its job group (which
-    * the threads it hands work to inherit). A marker job started after
-    * `body` returns is seen last, so every earlier job start has been
-    * counted by then. */
-  private def jobs(body: => Any): Int = {
-    val sc = spark.sparkContext
-    val group = s"agg-endpoints-${java.util.UUID.randomUUID}"
-    val n = new AtomicInteger
-    val marker = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
-          if (e.properties.getProperty("spark.job.description") == "marker") marker.countDown()
-          else n.incrementAndGet()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "endpoint")
-      body
-      sc.setJobDescription("marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(marker.await(60, TimeUnit.SECONDS), "marker job not seen")
-      n.get
-    } finally {
-      sc.clearJobGroup()
-      sc.setJobDescription(null)
-      sc.removeSparkListener(listener)
-    }
-  }
+  private def jobs(body: => Any): Int = Fixtures.sparkJobs(spark)(body)._2
 
   test("job bounds per endpoint on the fixtures store") {
     val s = fixtureStore
     def q = s.questions
     def v = s.variants
-    val calls = Seq[(String, Int, () => Any, () => Any)](
+    // fresh experiments for the generation+judging run, warm-up and measured
+    val runs = scala.collection.mutable.Queue.tabulate(2)(i => s.createExperiment(Experiment(
+      id = 0L, name = s"bounds-$i", filter_config = FilterConfig(language = Seq("en")))).id)
+    def generateAndJudge(): Unit = {
+      val (id, progress, client) = (runs.dequeue(), new ProgressStore, new DeterministicStubClient)
+      Jobs.runGeneration(s, progress, client, id, parallelism = 2)
+      Jobs.runJudging(s, progress, client, id, "jb", parallelism = 2)
+    }
+    // (endpoint, bound, call, the form before it, when kept)
+    val calls = Seq[(String, Int, () => Any, Option[() => Any])](
       ("dashboard", 12, () => Api.dashboard(q, v, Seq("open_question"), Seq("en")),
-        () => Oracle.dashboard(q, v, Seq("open_question"), Seq("en"))),
+        Some(() => Oracle.dashboard(q, v, Seq("open_question"), Seq("en")))),
       ("dashboard_comparison", 4, () => Api.dashboardComparison(q, v, language = Seq("en")),
-        () => Oracle.comparison(q, v, Seq("en"))),
+        Some(() => Oracle.comparison(q, v, Seq("en")))),
       ("filters", 3, () => Api.filters(q, v, FilterConfig(area = Seq("Private"))),
-        () => Oracle.filters(q, v, FilterConfig(area = Seq("Private")), None)),
+        Some(() => Oracle.filters(q, v, FilterConfig(area = Seq("Private")), None))),
       ("search_summary", 2, () => Api.searchSummary(q, v, FilterConfig(language = Seq("en")), "the"),
-        () => Oracle.searchSummary(q, v, FilterConfig(language = Seq("en")), "the")),
+        Some(() => Oracle.searchSummary(q, v, FilterConfig(language = Seq("en")), "the"))),
       ("experiment_stats", 14, () => Api.experimentStats(s, 1L),
-        () => Oracle.experimentStats(s, 1L, None, None)))
-    calls.foreach { case (_, _, call, oracle) => call(); oracle() } // warm up
-    calls.foreach { case (ep, bound, call, oracle) =>
-      val (got, before) = (jobs(call()), jobs(oracle()))
-      info(s"$ep: $got jobs (per-facet assembly: $before)")
+        Some(() => Oracle.experimentStats(s, 1L, None, None))),
+      ("question", 2, () => Api.question(q, v, "q1"),
+        Some(() => EarlierForms.question(q, v, "q1"))),
+      ("questions_page", 5, () => Api.questionsPage(q, v, offset = 1, limit = 3),
+        Some(() => EarlierForms.questionsPage(q, v, FilterConfig(), None, None, "asc", 1, 3))),
+      ("course_summary", 4, () => Api.courseSummary(q, v),
+        Some(() => EarlierForms.courseSummary(q, v, None))),
+      ("stats_by_question", 7, () => Api.statsByQuestion(s, 1L),
+        Some(() => EarlierForms.statsByQuestion(s, 1L, None, None))),
+      ("compare_judges", 3, () => Api.compareJudges(s, 1L),
+        Some(() => EarlierForms.compareJudges(s, 1L))),
+      ("judge_summary", 3, () => Api.judgeSummary(s, 1L),
+        Some(() => EarlierForms.judgeSummary(s, 1L))),
+      ("list_experiments", 5, () => Api.listExperiments(s),
+        Some(() => EarlierForms.listExperiments(s))),
+      ("generation+judging", 26, () => generateAndJudge(), None))
+    calls.foreach { case (_, _, call, before) => call(); before.foreach(_()) } // warm up
+    calls.foreach { case (ep, bound, call, before) =>
+      val got = jobs(call())
+      val was = before.map(b => jobs(b()))
+      info(s"$ep: $got jobs" + was.fold("")(n => s" (the form before: $n)"))
       assert(got <= bound, s"$ep started $got Spark jobs, bound $bound")
-      assert(got < before, s"$ep: $got jobs, per-facet assembly $before")
+      was.foreach(n => assert(got < n, s"$ep: $got jobs, the form before $n"))
     }
   }
 }

@@ -1,5 +1,12 @@
 package graft.lexam
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, lit}
+import graft.lexam.pipeline._
+
 /** Hand-checkable LEXam fixture rows exercising every semantic corner
   * FIXTURES.md §A calls for: all areas/jurisdictions/both languages/3
   * years, tri-state booleans (true/false/null), multi- and single-config
@@ -88,5 +95,60 @@ object Fixtures {
   def writeEdgeTo(store: graft.lexam.pipeline.LexamStore): Unit = {
     store.writeQuestions(edgeQuestions)
     store.writeVariants(edgeVariants)
+  }
+
+  /** A parquet store holding `write`'s questions and variants and one
+    * generated, twice-judged experiment (id 1, every question, two runs)
+    * plus a NULL-score judgment of an open answer. */
+  def experimentStore(spark: SparkSession, write: LexamStore => Unit): LexamStore = {
+    import spark.implicits._
+    val store = new LexamStore(spark,
+      java.nio.file.Files.createTempDirectory("agg_endpoints").toString)
+    write(store)
+    store.saveExperiment(Experiment(id = 1, name = "agg", n_answers = 2))
+    val progress = new ProgressStore
+    val client = new DeterministicStubClient
+    Jobs.runGeneration(store, progress, client, 1L, parallelism = 2)
+    Jobs.runJudging(store, progress, client, 1L, "j1", parallelism = 2)
+    Jobs.runJudging(store, progress, client, 1L, "j2", parallelism = 2)
+    val openAnswer = store.answers.join(store.variants
+        .where(col("config") === "open_question").select(col("id").as("variant_id")),
+        Seq("variant_id"), "left_semi")
+      .orderBy("id").select("id").head().getLong(0)
+    store.appendJudgments(Seq(ExperimentJudgment(id = 424242L, answer_id = openAnswer,
+      judge_model = "j1", judgment_text = "unscored", input_tokens = 7, output_tokens = 3))
+      .toDS().toDF().withColumn("experiment_id", lit(1L)))
+    store
+  }
+
+  /** `body`'s result and the Spark jobs it starts, counted through its
+    * job group (which the threads it hands work to inherit). A marker
+    * job started after `body` returns is seen last, so every earlier job
+    * start has been counted by then. */
+  def sparkJobs[A](spark: SparkSession)(body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"counted-${java.util.UUID.randomUUID}"
+    val n = new AtomicInteger
+    val marker = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
+          if (e.properties.getProperty("spark.job.description") == "marker") marker.countDown()
+          else n.incrementAndGet()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val a = body
+      sc.setJobDescription("marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(60, TimeUnit.SECONDS), "marker job not seen")
+      (a, n.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
   }
 }

@@ -78,7 +78,8 @@ class PipelineSpec extends AnyFunSuite {
     assert(byArea.count() > 0)
     val judges = ExperimentAnalytics.compareJudges(store.answers, store.judgments, 1L)
     assert(judges.count() === 2)
-    val byQ = ExperimentAnalytics.statsByQuestion(enriched, store.judgments)
+    val byQ = ExperimentAnalytics.statsByQuestion(store.answers, store.variants,
+      store.questions, store.judgments, 1L)
     assert(byQ.count() === 4) // q1,q3,q5,q6
 
     // reset-status recomputation (P6)
