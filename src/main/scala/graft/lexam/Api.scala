@@ -209,12 +209,12 @@ object Api {
     * per-experiment query. */
   private def judgeBreakdowns(store: pipeline.LexamStore,
                               experimentId: Option[Long] = None): Map[Long, Seq[(String, Long)]] =
-    GroupingSets.sorted(store.liveJudgments(experimentId)
-        .groupBy(col("eid"), col("judge_model"))
-        .agg(count(lit(1)).as("n")).collect().toSeq,
-      GroupingSets.By("judge_model"))
+    store.liveJudgments(experimentId)
+      .groupBy(col("eid"), col("judge_model"))
+      .agg(count(lit(1)).as("n"))
+      .coalesce(1).orderBy(col("judge_model")).collect() // one partition: no range exchange
       .groupBy(_.getLong(0))
-      .view.mapValues(_.map(r => r.getString(1) -> r.getLong(2))).toMap
+      .view.mapValues(_.toSeq.map(r => r.getString(1) -> r.getLong(2))).toMap
 
   private def renderJudges(judges: Seq[(String, Long)]): Seq[Any] =
     judges.map { case (m, n) =>
@@ -284,9 +284,9 @@ object Api {
     })
 
   /** GET /api/experiments/{id}/stats (experiment_stats.py:13-114):
-    * [[ExperimentAnalytics.summary]]'s two aggregates over one cached
-    * enriched frame; self-consistency is reported for a multi-run
-    * experiment. */
+    * [[ExperimentAnalytics.summary]]'s two aggregates plus, for a
+    * multi-run experiment, self-consistency, over one cached enriched
+    * frame. */
   def experimentStats(store: pipeline.LexamStore, experimentId: Long,
                       modelName: Option[String] = None,
                       judgeModel: Option[String] = None): String = {
@@ -298,7 +298,8 @@ object Api {
     val s = ExperimentAnalytics.summary(enriched, store.judgments, judgeModel)
     val (mcq, open) = (s.mcq, s.open)
     val (gi, go, ji, jo) = s.tokens
-    val consistency = if (exp.n_answers > 1) Some(s.consistency) else None
+    val consistency =
+      if (exp.n_answers > 1) Some(ExperimentAnalytics.selfConsistency(enriched)) else None
     render(scala.collection.immutable.ListMap(
       "total_answers" -> s.totalAnswers,
       "mcq" -> scala.collection.immutable.ListMap(

@@ -261,13 +261,13 @@ object DatasetAnalytics {
   // -------------------------------------------- /api/course-summary
 
   /** Per-course rollup with distinct-qid set sizes per config bucket,
-    * set-union total, sorted (area asc, total desc, course asc) on the
-    * driver — main.py:252-310's Python set accumulation (A6) as two
+    * set-union total, sorted (area asc, total desc, course asc) in one
+    * partition — main.py:252-310's Python set accumulation (A6) as two
     * plain aggregates: each (course, question) gets a 0/1 flag per
     * bucket, and a course sums its questions' flags, which counts the
     * same distinct question ids with no `Expand`. A course's area is
     * the area of its question with the lowest variant id, the first the
-    * reference's loop meets. Collected; a local frame. */
+    * reference's loop meets. */
   def courseSummary(questions: DataFrame, variants: DataFrame,
                     language: Option[String] = None): DataFrame = {
     var joined = variants.join(questions,
@@ -290,14 +290,14 @@ object DatasetAnalytics {
         has(col("international") === true).as("international")) ++
         buckets.map { case (name, in) => has(in).as(name) }: _*)
     val firstLanguage = min(col("language"))
-    GroupingSets.collectSorted(perQuestion.groupBy(col("course"))
+    perQuestion.groupBy(col("course"))
       .agg(min_by(col("area"), col("first_variant")).as("area"), Seq(
         array_join(array_sort(collect_set(col("jurisdiction"))), ", ").as("jurisdiction"),
         (max(col("international")) === 1).as("international")) ++
         buckets.map { case (name, _) => sum(col(name)).as(name) } :+
         when(firstLanguage =!= max(col("language")), "both").otherwise(firstLanguage)
-          .as("language"): _*),
-      GroupingSets.By("area"), GroupingSets.By("total", desc = true), GroupingSets.By("course"))
+          .as("language"): _*)
+      .coalesce(1).orderBy(col("area"), desc("total"), col("course")) // no range exchange
   }
 
   // -------------------------------------------- /api/search-summary

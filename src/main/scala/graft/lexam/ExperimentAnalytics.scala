@@ -155,20 +155,18 @@ object ExperimentAnalytics {
 
   // ------------------------------ /stats in two aggregates (A9–A13)
 
-  val AnswerSets: Seq[Seq[String]] = Seq(Nil, Seq("area"), Seq("course"), Seq("variant_id"))
+  val AnswerSets: Seq[Seq[String]] = Seq(Nil, Seq("area"), Seq("course"))
 
   /** The breakdown columns of [[breakdownByField]], after `name`. */
   val BreakdownColumns: Seq[String] =
     Seq("mcq_accuracy", "mcq_total", "open_avg_score", "open_total")
 
   /** One aggregate over the enriched answers ⟕ a per-answer rollup of
-    * their judgments (judge-filtered), sets (), (area), (course),
-    * (variant_id): the answer, MCQ and open counts, the generation and
-    * judge token sums, the [[BreakdownColumns]] and the least and
-    * greatest extracted letter (the (variant_id) rows give
-    * [[selfConsistency]]). Judge tokens count every judgment of an open
-    * answer; score sums and counts skip NULL scores — the scopes of
-    * [[tokenTotals]] and [[scopedJudgments]]. */
+    * their judgments (judge-filtered), sets (), (area), (course): the
+    * answer, MCQ and open counts, the generation and judge token sums
+    * and the [[BreakdownColumns]]. Judge tokens count every judgment of
+    * an open answer; score sums and counts skip NULL scores — the
+    * scopes of [[tokenTotals]] and [[scopedJudgments]]. */
   def answerRollup(enriched: DataFrame, judgments: DataFrame,
                    judgeModel: Option[String] = None): DataFrame = {
     val j = judgeModel.fold(judgments)(m => judgments.where(col("judge_model") === m))
@@ -188,8 +186,7 @@ object ExperimentAnalytics {
         sum(when(open, col("score_n"))).as("open_scored"),
         total(col("input_tokens")).as("gen_in"), total(col("output_tokens")).as("gen_out"),
         total(when(open, col("j_in"))).as("judge_in"),
-        total(when(open, col("j_out"))).as("judge_out"),
-        min(col("extracted_letter")).as("min_letter"), max(col("extracted_letter")).as("max_letter"))
+        total(when(open, col("j_out"))).as("judge_out"))
       .withColumn("mcq_accuracy", when(col("mcq_total") > 0,
         round(col("mcq_correct_n").cast("double") / col("mcq_total"), 4)))
       .withColumn("open_avg_score", when(col("open_scored") > 0,
@@ -212,17 +209,16 @@ object ExperimentAnalytics {
 
   case class Summary(totalAnswers: Long, mcq: McqStats, open: OpenStats,
                      tokens: (Long, Long, Long, Long),
-                     byArea: Seq[ListMap[String, Any]], byCourse: Seq[ListMap[String, Any]],
-                     consistency: Consistency)
+                     byArea: Seq[ListMap[String, Any]], byCourse: Seq[ListMap[String, Any]])
 
-  /** `/stats` (experiment_stats.py:13-114): [[answerRollup]] and
-    * [[scoreRollup]], one collect each — the same figures as
-    * [[mcqStats]], [[openStats]], [[tokenTotals]], [[breakdownByField]]
-    * and [[selfConsistency]]. Breakdown rows are `name` then the
+  /** `/stats` without self-consistency (experiment_stats.py:13-114):
+    * [[answerRollup]] and [[scoreRollup]], one collect each — the same
+    * figures as [[mcqStats]], [[openStats]], [[tokenTotals]] and
+    * [[breakdownByField]]. Breakdown rows are `name` then the
     * [[BreakdownColumns]], name-ascending. */
   def summary(enriched: DataFrame, judgments: DataFrame,
               judgeModel: Option[String] = None): Summary = {
-    val Seq(all, byArea, byCourse, byVariant) = GroupingSets.split(
+    val Seq(all, byArea, byCourse) = GroupingSets.split(
       answerRollup(enriched, judgments, judgeModel).collect().toSeq, AnswerSets)
     val Seq(scored, byBucket) = GroupingSets.split(
       scoreRollup(enriched, judgments, judgeModel).collect().toSeq, ScoreSets)
@@ -240,52 +236,42 @@ object ExperimentAnalytics {
         if (judged > 0) distribution(byBucket.map(r =>
           r.getAs[Int]("bucket") -> r.getAs[Long]("n")).toMap) else Nil),
       (total("gen_in"), total("gen_out"), total("judge_in"), total("judge_out")),
-      breakdown(byArea, "area"), breakdown(byCourse, "course"), consistency(byVariant))
-  }
-
-  /** [[selfConsistency]] from the (variant_id) rows of [[answerRollup]]:
-    * a variant with a letter counts, and is unanimous when its least
-    * letter is its greatest. */
-  private def consistency(byVariant: Seq[Row]): Consistency = {
-    val lettered = byVariant.filter(_.getAs[String]("min_letter") != null)
-    val unanimous = lettered.count(r => r.getAs[String]("min_letter") == r.getAs[String]("max_letter"))
-    Consistency(lettered.size, unanimous, rate(unanimous, lettered.size))
+      breakdown(byArea, "area"), breakdown(byCourse, "course"))
   }
 
   /** Per-judge comparison (experiment_stats.py:117-160): count, avg,
     * exact median — the reference's per-judge median refetch loop is
-    * the same single groupBy here (A16). Collected, judge-ascending. */
+    * the same single groupBy here (A16). */
   def compareJudges(answers: DataFrame, judgments: DataFrame,
                     experimentId: Long): DataFrame = {
     val expAnswers = answers.where(col("experiment_id") === experimentId)
       .select(col("id").as("answer_id"))
-    GroupingSets.collectSorted(judgments.where(col("score").isNotNull)
+    judgments.where(col("score").isNotNull)
       .join(expAnswers, Seq("answer_id"), "left_semi")
       .groupBy(col("judge_model"))
       .agg(count(lit(1)).as("judged"),
         round(avg(col("score")), 4).as("avg_score"),
-        round(median(col("score")), 4).as("median_score")),
-      GroupingSets.By("judge_model"))
+        round(median(col("score")), 4).as("median_score"))
+      .coalesce(1).orderBy(col("judge_model")) // one partition: no range exchange
   }
 
   /** Per-judge judgment counts + avg score (routers/judging.py:111-132).
     * Unlike [[compareJudges]], the count includes NULL-score judgments
     * (the reference's `/judge-summary` has no `score.isnot(None)`
-    * filter); avg naturally skips nulls and is null when all are.
-    * Collected, judge-ascending. */
+    * filter); avg naturally skips nulls and is null when all are. */
   def judgeSummary(answers: DataFrame, judgments: DataFrame,
                    experimentId: Long): DataFrame = {
     val expAnswers = answers.where(col("experiment_id") === experimentId)
       .select(col("id").as("answer_id"))
-    GroupingSets.collectSorted(judgments.join(expAnswers, Seq("answer_id"), "left_semi")
+    judgments.join(expAnswers, Seq("answer_id"), "left_semi")
       .groupBy(col("judge_model"))
       .agg(count(lit(1)).as("count"),
-        bround(avg(col("score")), 4).as("avg_score")),
-      GroupingSets.By("judge_model"))
+        bround(avg(col("score")), 4).as("avg_score"))
+      .coalesce(1).orderBy(col("judge_model")) // one partition: no range exchange
   }
 
   /** Per-question rollup of the experiment's answers (optionally of
-    * one generation model), collected and sorted by avg score desc
+    * one generation model), sorted by avg score desc
     * (NULLs last), question id asc (experiment_stats.py:163-222, A14).
     * `mcq_correct`: any non-null value across runs (the reference keeps
     * the last seen; with homogeneous MCQ grading per variant these
@@ -301,7 +287,7 @@ object ExperimentAnalytics {
     val j = scopedJudgments(judgments, own.select(col("id").as("answer_id")),
       judgeModel).groupBy(col("answer_id"))
       .agg(sum(col("score")).as("score_sum"), count(lit(1)).as("score_n"))
-    GroupingSets.collectSorted(enriched.join(j, enriched("id") === j("answer_id"), "left_outer")
+    enriched.join(j, enriched("id") === j("answer_id"), "left_outer")
       .groupBy(col("question_id"))
       .agg(
         first(col("course")).as("course"),
@@ -310,7 +296,7 @@ object ExperimentAnalytics {
         max(col("mcq_correct")).as("mcq_correct"),
         count(lit(1)).as("answer_count"),
         coalesce(sum(col("score_n")), lit(0L)).as("judgment_count"),
-        round(sum(col("score_sum")) / sum(col("score_n")), 4).as("avg_score")),
-      GroupingSets.By("avg_score", desc = true), GroupingSets.By("question_id"))
+        round(sum(col("score_sum")) / sum(col("score_n")), 4).as("avg_score"))
+      .coalesce(1).orderBy(desc_nulls_last("avg_score"), col("question_id")) // no range exchange
   }
 }

@@ -55,8 +55,8 @@ object Filters {
                       skip: Set[String] = Set.empty): DataFrame = {
     var q = questionPredicate(fc, skip).map(questions.where).getOrElse(questions)
     variantPredicate(fc, skip).foreach { vp =>
-      // a semi-join keeps each question once, so its build side is not deduplicated
-      q = q.join(variants.where(vp).select(col("question_id").as("id")), Seq("id"), "left_semi")
+      val vq = variants.where(vp).select(col("question_id").as("id")).distinct()
+      q = q.join(vq, Seq("id"), "left_semi")
     }
     search.filter(_.nonEmpty).foreach { term =>
       val t = term.toLowerCase

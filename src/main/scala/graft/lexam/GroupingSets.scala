@@ -39,39 +39,4 @@ object GroupingSets {
   val Asc: Ordering[String] = (a: String, b: String) =>
     if (a == null || b == null) java.lang.Boolean.compare(a != null, b != null)
     else UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
-
-  /** One sort key of [[sorted]]: column `name`, ascending unless `desc`. */
-  final case class By(name: String, desc: Boolean = false)
-
-  /** Collected rows in the order `orderBy(keys)` gives, sorted on the
-    * driver: a small result needs no range-partitioning exchange (a
-    * sampling job plus a shuffle stage) to come back ordered. As Spark
-    * orders: ascending keys put NULLs first, descending keys last;
-    * strings compare by UTF-8 bytes; doubles compare with -0.0 = 0.0
-    * and NaN = NaN above every other value. */
-  def sorted(rows: Seq[Row], keys: By*): Seq[Row] =
-    rows.sorted(keys.map { k =>
-      val asc: Ordering[Row] = (a, b) => {
-        val (i, j) = (a.fieldIndex(k.name), b.fieldIndex(k.name))
-        if (a.isNullAt(i) || b.isNullAt(j)) java.lang.Boolean.compare(!a.isNullAt(i), !b.isNullAt(j))
-        else compareValues(a.get(i), b.get(j))
-      }
-      if (!k.desc) asc
-      else asc.reverse // a reversed NULLS FIRST order puts NULLs last
-    }.reduceLeft(_ orElse _))
-
-  /** `df` collected and [[sorted]] by `keys`, as a local frame: the
-    * actions callers run on it start no Spark job. */
-  def collectSorted(df: DataFrame, keys: By*): DataFrame =
-    df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(sorted(df.collect().toSeq, keys: _*): _*), df.schema)
-
-  private def compareValues(a: Any, b: Any): Int = (a, b) match {
-    case (x: String, y: String) => Asc.compare(x, y)
-    case (x: Double, y: Double) => if (x == y) 0 else java.lang.Double.compare(x, y)
-    case (x: Float, y: Float) => if (x == y) 0 else java.lang.Float.compare(x, y)
-    case (x: Comparable[Any] @unchecked, y) => x.compareTo(y) // integers, decimals, booleans, dates
-    case _ => throw new IllegalArgumentException(
-      s"no Spark order for ${a.getClass.getName} in a collected sort")
-  }
 }

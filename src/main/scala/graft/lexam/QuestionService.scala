@@ -40,7 +40,7 @@ object QuestionService {
       else variants.where(col("question_id").isin(ids: _*))
         .select(col("question_id"), variantStruct).collect().toSeq
         .groupBy(_.getString(0))
-        .view.mapValues(vs => GroupingSets.sorted(vs.map(_.getStruct(1)), GroupingSets.By("id")))
+        .view.mapValues(_.map(_.getStruct(1)).sortBy(_.getLong(0)))
         .toMap
     page.sparkSession.createDataFrame(
       java.util.Arrays.asList(rows.map(r =>

@@ -14,13 +14,12 @@ import org.apache.spark.sql.util.QueryExecutionListener
 import graft.TestSpark
 import graft.lexam.pipeline._
 
-/** The session endpoints that collect their small results and order
-  * them on the driver, nest only a page's variants, count course
-  * buckets without distinct aggregates and derive an experiment's
-  * judgment count from its judge breakdown give the JSON their earlier
-  * Spark forms ([[EarlierForms]]) give, on the fixtures and on the
-  * NULL-corner fixtures; no endpoint plans a range-partitioning
-  * exchange; and the driver-side order is Spark's order.
+/** The session endpoints that sort their small results in one
+  * partition, nest only a page's variants, count course buckets without
+  * distinct aggregates and derive an experiment's judgment count from
+  * its judge breakdown give the JSON their earlier Spark forms
+  * ([[EarlierForms]]) give, on the fixtures and on the NULL-corner
+  * fixtures; and no endpoint plans a range-partitioning exchange.
   */
 class SessionEndpointsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
@@ -100,25 +99,6 @@ class SessionEndpointsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(avgs.contains("null") && avgs.dropWhile(_ != "null").forall(_ == "null"), byQuestion)
   }
 
-  test("the driver-side order is Spark's: NULL placement, UTF-8 strings, NaN and -0.0, ties") {
-    val nan = Double.NaN
-    val rows = Seq[(Option[String], Option[Double], Long)](
-      (Some("b"), Some(1.0), 1), (None, Some(0.0), 2), (Some("a"), Some(-0.0), 3),
-      (Some("é"), Some(nan), 4), (Some("z"), None, 5), (Some("a"), Some(0.0), 6),
-      (None, Some(nan), 7), (Some("�"), Some(Double.NegativeInfinity), 8),
-      (Some("𝒜"), Some(-1.5), 9), (Some("b"), None, 10), (Some("B"), Some(2.0), 11))
-    val df = rows.toDF("s", "d", "id").repartition(3)
-    val collected = df.collect().toSeq
-    import GroupingSets.By
-    for (keys <- Seq(Seq(By("s"), By("id")), Seq(By("s", desc = true), By("id")),
-        Seq(By("d"), By("id")), Seq(By("d", desc = true), By("id", desc = true)),
-        Seq(By("s"), By("d", desc = true), By("id")), Seq(By("d"), By("s"), By("id")))) {
-      val order = keys.map(k => if (k.desc) col(k.name).desc else col(k.name).asc)
-      assert(GroupingSets.sorted(collected, keys: _*).map(_.getLong(2)) ===
-        df.orderBy(order: _*).collect().toSeq.map(_.getLong(2)), keys.toString)
-    }
-  }
-
   test("the progress total is the number of rows the LLM stage calls for") {
     val s = fixtureStore
     val e = s.createExperiment(Experiment(id = 0L, name = "progress-total",
@@ -196,8 +176,8 @@ class SessionEndpointsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 }
 
-/** The endpoints in the forms they had before they collected first and
-  * ordered on the driver: Spark `orderBy`s before each collect, every
+/** The endpoints in the forms they had before they sorted in one
+  * partition: a range-partitioned `orderBy` before each collect, every
   * variant nested before a page is cut, distinct aggregates per course,
   * the all-experiments judge breakdown and a separate judgment count —
   * kept as the oracle. */
