@@ -24,7 +24,9 @@ families by hand. The second-to-last stdout line is the id-prefix list to
 pass to `sbt "runMain graft.Bench <prefixes>"`; add an untouched control
 query. The last line names the perfbench workloads the change must A/B
 (`perfbench/run.py --workload W`): `lexam_session` for any change under
-src/main/scala/graft/lexam/, `curation_bulk` when the ids include a v7 or
+src/main/scala/graft/lexam/ or to a src/main/scala/graft/sources/ file
+whose classes or objects graft.lexam's code uses (directly, or through
+another such sources file), `curation_bulk` when the ids include a v7 or
 m6 query; "none" when neither applies.
 """
 import os, re, subprocess, sys
@@ -32,6 +34,7 @@ import os, re, subprocess, sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 LIB = "src/main/scala/graft/"
 LEXAM = LIB + "lexam/"
+SOURCES = LIB + "sources/"
 # perfbench's curation_bulk workload runs exactly these query families
 CURATION_BULK = ("v7", "m6")
 HARNESS = {LIB + f for f in ("Bench.scala", "Verify.scala", "Explain.scala")}
@@ -48,6 +51,18 @@ def read(rel):
         return f.read()
 
 
+def code(rel):
+    """`rel` without its comments."""
+    return re.sub(r"//[^\n]*", "", re.sub(r"/\*.*?\*/", "", read(rel), flags=re.S))
+
+
+def scala_files(prefix):
+    for d, _, files in os.walk(os.path.join(ROOT, prefix)):
+        for f in sorted(files):
+            if f.endswith(".scala"):
+                yield os.path.relpath(os.path.join(d, f), ROOT)
+
+
 def changed_files(base):
     def git(*args):
         return subprocess.run(["git", *args], cwd=ROOT, check=True,
@@ -58,10 +73,8 @@ def changed_files(base):
 
 def all_query_ids():
     ids = set()
-    for d, _, files in os.walk(os.path.join(ROOT, LIB)):
-        for f in files:
-            if f.endswith(".scala"):
-                ids |= set(QUERY_ID.findall(read(os.path.relpath(os.path.join(d, f), ROOT))))
+    for f in scala_files(LIB):
+        ids |= set(QUERY_ID.findall(read(f)))
     return ids
 
 
@@ -121,10 +134,26 @@ def families(path, rows, cross, known):
     return hits, "COVERAGE rows naming " + ", ".join(sorted(names))
 
 
+def lexam_sources():
+    """The sources files whose top-level names graft.lexam's library code
+    (the Demo main aside) uses, directly or through another such file."""
+    texts = [code(f) for f in scala_files(LEXAM) if f not in OTHER_MAINS]
+    names = {f: top_level_names(f) for f in scala_files(SOURCES)}
+    used = set()
+    while True:
+        more = {f for f, ns in names.items() if f not in used and any(
+            re.search(r"\b%s\b" % re.escape(n), t) for n in ns for t in texts)}
+        if not more:
+            return used
+        used |= more
+        texts += [code(f) for f in more]
+
+
 def workloads(files, selected):
     """The perfbench workloads whose code paths the change touches."""
     out = []
-    if any(f.startswith(LEXAM) for f in files):
+    lexam = lexam_sources()
+    if any(f.startswith(LEXAM) or f in lexam for f in files):
         out.append("lexam_session")
     if any(q.split("_")[0] in CURATION_BULK for q in selected):
         out.append("curation_bulk")

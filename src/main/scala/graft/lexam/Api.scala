@@ -155,21 +155,18 @@ object Api {
       "items" -> enrichedPage.collect().toSeq))
   }
 
-  /** GET /api/experiments/{id}/judgments (routers/judging.py:35-78). */
+  /** GET /api/experiments/{id}/judgments (routers/judging.py:35-78):
+    * the experiment's `LexamStore.liveJudgments`, which carry their
+    * answer's variant and text. */
   def judgmentsPage(store: pipeline.LexamStore, experimentId: Long,
                     judgeModel: Option[String] = None,
                     offset: Int = 0, limit: Int = 50): String = {
-    var j = store.judgments
-      .join(store.answers.where(col("experiment_id") === experimentId)
-        .select(col("id").as("answer_id")), Seq("answer_id"), "left_semi")
+    var j = store.liveJudgments(Some(experimentId))
     judgeModel.foreach(m => j = j.where(col("judge_model") === m))
     val total = j.count()
     val page = j.orderBy(col("id")).offset(offset).limit(limit)
-      .join(broadcast(store.answers.select(col("id").as("answer_id"),
-        col("variant_id"), col("answer_text"))), Seq("answer_id"), "left_outer")
       .select("id", "answer_id", "variant_id", "judge_model", "judgment_text",
         "score", "answer_text", "input_tokens", "output_tokens", "created_at")
-      .orderBy(col("id"))
     render(scala.collection.immutable.ListMap(
       "total" -> total, "offset" -> offset, "limit" -> limit,
       "items" -> page.collect().toSeq))

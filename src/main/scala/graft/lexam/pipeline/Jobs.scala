@@ -243,10 +243,8 @@ object Jobs {
           "input_tokens", "output_tokens", "created_at", "experiment_id")
 
       store.appendJudgments(scored)
-      val written = store.judgments.where(col("judge_model") === judgeModel)
-        .join(store.answers.where(col("experiment_id") === experimentId)
-          .select(col("id").as("answer_id")), Seq("answer_id"), "left_semi")
-        .count()
+      val written = store.liveJudgments(Some(experimentId))
+        .where(col("judge_model") === judgeModel).count()
       store.setStatus(experimentId, "completed")
       progress.finish(key)
       written

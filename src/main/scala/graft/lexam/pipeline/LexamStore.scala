@@ -1,6 +1,6 @@
 package graft.lexam.pipeline
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -13,7 +13,8 @@ import graft.sources.Table
   * `appendAnswers`/`appendJudgments` still take any frame, so a batch
   * may carry extra columns (a stated read does not show them).
   *
-  * Mutations on immutable storage (SURVEY §7.4 item 7):
+  * Mutations on immutable storage (SURVEY §7.4 item 7), each taking
+  * `writeLock` itself:
   *  - answers/judgments are append-only, partitioned by experiment
   *    (the 100 TB layout: partition pruning makes per-experiment reads
   *    and deletes touch only their own files);
@@ -22,17 +23,20 @@ import graft.sources.Table
   *    (models.py:23,38,136; routers/experiments.py:130-137);
   *  - the tiny `experiments` dimension is read-modify-overwrite through
   *    the driver (S9 status transitions).
+  * All but the two appends go through the `sources.TableSwap` swap
+  * (`Table.rewrite`, `rewritePartition`, `dropPartition`), which
+  * recovers a crashed swap's leftovers at entry.
   *
   * The experiments table is served from a driver-side snapshot
   * `(stamp, rows)`. The stamp is the name, size and mtime of every file
   * under `experiments/`, taken with one directory listing and no Spark
   * job; a read whose listing differs from the snapshot's stamp re-reads
-  * the table through Spark. Every rewrite of the table (through any
-  * store instance or process) swaps in files with fresh UUID names, so
-  * a rewrite always changes the stamp. A write through this store
-  * installs the rows it wrote, as a stated read would return them, with
-  * the stamp taken after the swap — the next read sees it without a
-  * Spark job.
+  * the table under `writeLock`, so it waits out a swap in progress.
+  * Every rewrite of the table (through any store instance or process)
+  * swaps in files with fresh UUID names, so a rewrite always changes the
+  * stamp. A write through this store installs the rows it wrote, as a
+  * stated read would return them, with the stamp taken after the swap —
+  * the next read sees it without a Spark job.
   */
 class LexamStore(val spark: SparkSession, val baseDir: String) {
   import spark.implicits._
@@ -45,17 +49,17 @@ class LexamStore(val spark: SparkSession, val baseDir: String) {
   private val writeLock = new Object
 
   /** Rows last read or written, with the stamp of the files they came
-    * from; an absent table has the empty stamp and reads empty. */
-  @volatile private var snapshot: (Seq[(String, Long, Long)], Seq[Experiment]) = (Nil, Nil)
+    * from; an absent table has the empty stamp and reads empty. None
+    * until the first read, which recovers the table first. */
+  @volatile private var snapshot: Option[(Seq[(String, Long, Long)], Seq[Experiment])] = None
 
-  private def p(name: String): String = s"$baseDir/$name"
-  private def exists(name: String): Boolean = Files.exists(Paths.get(p(name)))
+  private def exists(t: Table): Boolean = Files.exists(Paths.get(t.at(baseDir)))
 
   /** `t` read with its stated schema: no footer-inference job per read,
     * and an absent table (or one whose partitions were all dropped)
     * loads empty with the same columns in the same order. */
   private def read(t: Table): DataFrame =
-    if (exists(t.dir)) t.read(spark, baseDir)
+    if (exists(t)) t.read(spark, baseDir)
     else spark.createDataFrame(java.util.List.of[Row](), t.schema)
 
   // ------------------------------------------------------------- reads
@@ -66,35 +70,39 @@ class LexamStore(val spark: SparkSession, val baseDir: String) {
   def judgments: DataFrame = read(LexamStore.Judgments)
 
   /** Judgments still reachable through a surviving answer, with the
-    * answer's experiment id as `eid`. The reference counts judgments
-    * via the ExperimentAnswer join (routers/experiments.py:79-84,
-    * 183-189; routers/judging.py:96-101), so judgments orphaned by a
-    * bulk answer delete never surface anywhere — this is THE single
-    * judgment read path; Api counts/breakdowns and Jobs' status
-    * rollback both consume it, so the rule can't drift between them. */
+    * answer's experiment id as `eid`, `variant_id` and `answer_text`.
+    * The reference counts judgments via the ExperimentAnswer join
+    * (routers/experiments.py:79-84, 183-189; routers/judging.py:96-101),
+    * so judgments orphaned by a bulk answer delete never surface
+    * anywhere — this is THE single judgment read path for Api and Jobs,
+    * so the rule can't drift between them. */
   def liveJudgments(experimentId: Option[Long] = None): DataFrame = {
     val ans = experimentId
       .map(id => answers.where(col("experiment_id") === id))
       .getOrElse(answers)
     judgments.drop("experiment_id")
-      .join(ans.select(col("id").as("answer_id"), col("experiment_id").as("eid")),
-        Seq("answer_id"))
+      .join(ans.select(col("id").as("answer_id"), col("experiment_id").as("eid"),
+        col("variant_id"), col("answer_text")), Seq("answer_id"))
   }
 
   /** The experiments table, from the snapshot while the files are the
-    * ones it was taken from. The stamp is listed before the Spark read,
-    * so a rewrite racing the read leaves a stamp the next read does not
-    * match. */
-  def experiments: Seq[Experiment] = {
-    val stamp = experimentsStamp
-    val (seen, rows) = snapshot
-    if (stamp.contains(seen)) rows
-    else {
-      val fresh = read(LexamStore.Experiments).as[Experiment].collect().toSeq
-      stamp.foreach(s => snapshot = (s, fresh))
-      fresh
-    }
-  }
+    * ones it was taken from (lock-free, no Spark job); else recovered,
+    * listed and read under `writeLock`. The stamp is listed before the
+    * Spark read, so another process's rewrite racing the read leaves a
+    * stamp the next read does not match. */
+  def experiments: Seq[Experiment] =
+    served(experimentsStamp).getOrElse(writeLock.synchronized {
+      LexamStore.Experiments.recover(spark, baseDir)
+      val stamp = experimentsStamp
+      served(stamp).getOrElse {
+        val fresh = read(LexamStore.Experiments).as[Experiment].collect().toSeq
+        stamp.foreach(s => snapshot = Some((s, fresh)))
+        fresh
+      }
+    })
+
+  private def served(stamp: Option[Seq[(String, Long, Long)]]): Option[Seq[Experiment]] =
+    snapshot.collect { case (seen, rows) if stamp.contains(seen) => rows }
 
   /** (name, size, mtime) of every file under `experiments/`, sorted;
     * empty when the table is absent, None when a concurrent swap moved
@@ -102,7 +110,7 @@ class LexamStore(val spark: SparkSession, val baseDir: String) {
   private def experimentsStamp: Option[Seq[(String, Long, Long)]] = {
     import java.nio.file.attribute.BasicFileAttributes
     import scala.jdk.CollectionConverters._
-    val dir = Paths.get(p(LexamStore.Experiments.dir))
+    val dir = Paths.get(LexamStore.Experiments.at(baseDir))
     try {
       val files = Files.walk(dir)
       try Some(files.iterator().asScala.toSeq.flatMap { f =>
@@ -122,9 +130,9 @@ class LexamStore(val spark: SparkSession, val baseDir: String) {
   // ------------------------------------------------------------ writes
 
   def writeQuestions(qs: Seq[Question]): Unit =
-    qs.toDS().write.mode(SaveMode.Overwrite).parquet(p("questions"))
+    writeLock.synchronized(LexamStore.Questions.rewrite(spark, baseDir)(qs.toDF()))
   def writeVariants(vs: Seq[Variant]): Unit =
-    vs.toDS().write.mode(SaveMode.Overwrite).parquet(p("variants"))
+    writeLock.synchronized(LexamStore.Variants.rewrite(spark, baseDir)(vs.toDF()))
 
   /** Upsert one experiment row (S9). The dimension is tiny by contract,
     * so driver-side read-modify-overwrite is the idiomatic batch move. */
@@ -132,15 +140,13 @@ class LexamStore(val spark: SparkSession, val baseDir: String) {
     writeExperiments(upserted(experiments, exp))
   }
 
-  /** Replace the experiments table with `rows` (id order) through the
-    * tmp-dir swap. Every mutation reads the table once under
+  /** Replace the experiments table with `rows` (id order, one file)
+    * through `Table.rewrite`. Every mutation reads the table once under
     * `writeLock` and passes those rows here. */
   private def writeExperiments(rows: Seq[Experiment]): Unit = {
-    val tmp = p("experiments_tmp")
     val sorted = rows.sortBy(_.id)
-    sorted.toDS().coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-    swap(Paths.get(tmp), Paths.get(p("experiments")))
-    experimentsStamp.foreach(s => snapshot = (s, sorted.map(LexamStore.storedForm)))
+    LexamStore.Experiments.rewrite(spark, baseDir)(sorted.toDF().coalesce(1))
+    experimentsStamp.foreach(s => snapshot = Some((s, sorted.map(LexamStore.storedForm))))
   }
 
   private def upserted(rows: Seq[Experiment], exp: Experiment): Seq[Experiment] =
@@ -223,29 +229,31 @@ class LexamStore(val spark: SparkSession, val baseDir: String) {
     * batched, not the reference's per-row commits). */
   def appendAnswers(batch: DataFrame): Unit = writeLock.synchronized {
     batch.write.mode(SaveMode.Append)
-      .partitionBy("experiment_id").parquet(p("answers"))
+      .partitionBy("experiment_id").parquet(LexamStore.Answers.at(baseDir))
   }
 
   def appendJudgments(batch: DataFrame): Unit = writeLock.synchronized {
     batch.write.mode(SaveMode.Append)
-      .partitionBy("experiment_id").parquet(p("judgments"))
+      .partitionBy("experiment_id").parquet(LexamStore.Judgments.at(baseDir))
   }
 
   /** Delete all answers of an experiment (S8): partition drop. */
   def deleteAnswers(experimentId: Long): Unit =
-    dropPartition(LexamStore.Answers, experimentId)
+    writeLock.synchronized(LexamStore.Answers.dropPartition(spark, baseDir, experimentId))
 
   /** Delete judgments of an experiment, optionally one judge only
     * (routers/judging.py:80-108): partition drop or partition rewrite. */
   def deleteJudgments(experimentId: Long, judgeModel: Option[String] = None): Unit =
-    judgeModel match {
-      case None => dropPartition(LexamStore.Judgments, experimentId)
-      case Some(m) =>
-        // null-safe keep-predicate: judge_model is nullable in the
-        // reference model (models.py:164) and its equality delete filter
-        // keeps NULL-model rows — `=!=` would silently drop them
-        rewritePartition(LexamStore.Judgments, experimentId,
-          _.where(!(col("judge_model") <=> m)))
+    writeLock.synchronized {
+      judgeModel match {
+        case None => LexamStore.Judgments.dropPartition(spark, baseDir, experimentId)
+        case Some(m) =>
+          // null-safe keep-predicate: judge_model is nullable in the
+          // reference model (models.py:164) and its equality delete filter
+          // keeps NULL-model rows — `=!=` would silently drop them
+          LexamStore.Judgments.rewritePartition(spark, baseDir, experimentId)(
+            _.where(!(col("judge_model") <=> m)))
+      }
     }
 
   /** Cascade delete (routers/experiments.py:130-137): judgments →
@@ -253,13 +261,14 @@ class LexamStore(val spark: SparkSession, val baseDir: String) {
   def deleteExperiment(id: Long): Unit = writeLock.synchronized {
     deleteJudgments(id)
     deleteAnswers(id)
-    if (exists("experiments")) writeExperiments(experiments.filterNot(_.id == id))
+    val rows = experiments
+    if (rows.exists(_.id == id)) writeExperiments(rows.filterNot(_.id == id))
   }
 
   /** Startup schema migration (main.py:14-30 `_migrate_experiments_table`):
     * add late columns with defaults to an EXISTING experiments table
     * that predates them. ALTER TABLE ADD COLUMN on immutable parquet =
-    * read → withColumn(default) → rewrite-and-swap. Idempotent like the
+    * read → withColumn(default) → `Table.rewrite`. Idempotent like the
     * reference: a no-op when the table is absent or already carries
     * every column. Returns the column names actually added. The one
     * footer-inferred read of the store: a stated read would show the
@@ -267,20 +276,16 @@ class LexamStore(val spark: SparkSession, val baseDir: String) {
   def migrateExperimentsSchema(migrations: Seq[(String, org.apache.spark.sql.Column)]
                                  = LexamStore.ExperimentMigrations): Seq[String] =
     writeLock.synchronized {
-      if (!exists("experiments")) Seq.empty
+      val t = LexamStore.Experiments
+      t.recover(spark, baseDir)
+      if (!exists(t)) Seq.empty
       else {
-        val df = spark.read.parquet(p("experiments"))
+        val df = spark.read.parquet(t.at(baseDir))
         val missing = migrations.filterNot { case (n, _) => df.columns.contains(n) }
-        if (missing.isEmpty) Seq.empty
-        else {
-          val migrated = missing.foldLeft(df) {
-            case (d, (n, default)) => d.withColumn(n, default)
-          }
-          val tmp = p("experiments_tmp")
-          migrated.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-          swap(Paths.get(tmp), Paths.get(p("experiments")))
-          missing.map(_._1)
-        }
+        if (missing.nonEmpty) t.rewrite(spark, baseDir)(missing.foldLeft(df) {
+          case (d, (n, default)) => d.withColumn(n, default)
+        }.coalesce(1))
+        missing.map(_._1)
       }
     }
 
@@ -289,42 +294,9 @@ class LexamStore(val spark: SparkSession, val baseDir: String) {
     * is the standard maintenance pass that keeps scans fast. */
   def compactAnswers(experimentId: Long, targetFiles: Int = 1): Unit =
     writeLock.synchronized {
-      rewritePartition(LexamStore.Answers, experimentId, _.coalesce(targetFiles))
+      LexamStore.Answers.rewritePartition(spark, baseDir, experimentId)(
+        _.coalesce(targetFiles))
     }
-
-  // ---------------------------------------------------------- plumbing
-
-  private def partitionDir(t: Table, experimentId: Long): Path =
-    Paths.get(t.at(baseDir), s"experiment_id=$experimentId")
-
-  private def dropPartition(t: Table, experimentId: Long): Unit = {
-    val dir = partitionDir(t, experimentId)
-    if (Files.exists(dir)) deleteRecursively(dir)
-  }
-
-  /** Rewrite one partition through a transform (delete-as-rewrite); the
-    * partition's files are read with the stated data columns. */
-  private def rewritePartition(t: Table, experimentId: Long,
-                               f: DataFrame => DataFrame): Unit = {
-    val dir = partitionDir(t, experimentId)
-    if (!Files.exists(dir)) return
-    val dataSchema = StructType(t.schema.filterNot(c => t.partitionBy.contains(c.name)))
-    val remaining = f(spark.read.schema(dataSchema).parquet(dir.toString))
-    val tmp = Paths.get(p(s"${t.dir}_rewrite_tmp"))
-    remaining.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    swap(tmp, dir)
-  }
-
-  private def swap(tmp: Path, target: Path): Unit = {
-    if (Files.exists(target)) deleteRecursively(target)
-    Files.move(tmp, target)
-  }
-
-  private def deleteRecursively(path: Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    Files.walk(path).iterator().asScala.toSeq.reverse
-      .foreach(Files.deleteIfExists(_))
-  }
 }
 
 object LexamStore {

@@ -39,12 +39,40 @@ final case class Table(dir: String, ddl: String, partitionBy: String*) {
     writer(spark.createDataFrame(java.util.List.of(Row(values: _*)), schema)
       .coalesce(1)).mode("overwrite").parquet(path)
 
+  /** Restore or drop what a crashed [[TableSwap]] swap of the table left. */
+  def recover(spark: SparkSession, root: String): Unit =
+    TableSwap.recover(Hdfs.forPath(spark, root), root, dir)
+
   /** Replace the live table with `rows` (evaluated after recovering an
     * earlier swap's crash leftovers) through the [[TableSwap]] swap. */
   def rewrite(spark: SparkSession, root: String)(rows: => DataFrame): Unit = {
-    val fs = Hdfs.forPath(spark, root)
-    TableSwap.recover(fs, root, dir)
-    TableSwap.rewrite(spark, fs, root, dir)(writer(rows).parquet(_))
+    recover(spark, root)
+    TableSwap.rewrite(spark, Hdfs.forPath(spark, root), root, dir)(writer(rows).parquet(_))
+  }
+
+  /** Replace partition `value` of the first partition column with `f`
+    * of its rows (stated data columns) through the [[TableSwap]] swap,
+    * run inside the table dir; an absent partition stays absent. */
+  def rewritePartition(spark: SparkSession, root: String, value: Any)(
+      f: DataFrame => DataFrame): Unit = {
+    val (fs, part) = recoverPartition(spark, root, value)
+    if (fs.exists(part)) TableSwap.rewrite(spark, fs, at(root), part.getName)(
+      f(spark.read.schema(StructType(schema.filterNot(c => partitionBy.contains(c.name))))
+        .parquet(part.toString)).write.parquet(_))
+  }
+
+  /** Delete partition `value` of the first partition column, and with it
+    * any copy a crashed swap staged aside, which would otherwise be
+    * restored by the next rewrite. */
+  def dropPartition(spark: SparkSession, root: String, value: Any): Unit = {
+    val (fs, part) = recoverPartition(spark, root, value)
+    fs.delete(part, true)
+  }
+
+  private def recoverPartition(spark: SparkSession, root: String, value: Any) = {
+    val (fs, part) = (Hdfs.forPath(spark, root), s"${partitionBy.head}=$value")
+    TableSwap.recover(fs, at(root), part)
+    (fs, new org.apache.hadoop.fs.Path(at(root), part))
   }
 
   /** [[Compaction.compactPartitions]] over the first partition column. */

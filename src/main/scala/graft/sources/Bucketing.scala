@@ -20,16 +20,9 @@ object Bucketing {
                     buckets: Int): Unit = {
     val spark = df.sparkSession
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-      .stripPrefix("file:")
-    val stale = java.nio.file.Paths.get(warehouse, table)
-    if (java.nio.file.Files.exists(stale)) {
-      import scala.jdk.CollectionConverters._
-      val s = java.nio.file.Files.walk(stale)
-      try s.iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-      finally s.close()
-    }
+    val stale = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"), table)
+    Hdfs.forPath(spark, stale.toString).delete(stale, true)
     df.write.mode(SaveMode.Overwrite)
       .bucketBy(buckets, bucketCol)
       .sortBy(bucketCol)

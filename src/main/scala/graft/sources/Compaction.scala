@@ -27,13 +27,14 @@ object Hdfs {
       spark.sessionState.newHadoopConf())
 }
 
-/** The one table-swap protocol for rewriting a live index table in
-  * place (LSH bands/docs/stats, PQ-IVF cells): `write` materializes
-  * the replacement into a tmp dir, the live dir is staged aside, the
-  * replacement renamed in, the stage deleted — every crash point
-  * leaves the data recoverable by [[TableSwap.recover]], which every
-  * caller runs at entry. Shared so the repair/backfill surfaces of
-  * both index families audit ONE protocol.
+/** The one table-swap protocol for rewriting a live table in place
+  * (LSH bands/docs/stats, PQ-IVF cells, the LEXam store's tables and
+  * experiment partitions): `write` materializes the replacement into a
+  * tmp dir, the live dir is staged aside, the replacement renamed in,
+  * the stage deleted — every crash point leaves the data recoverable
+  * by [[TableSwap.recover]], which every caller runs at entry. `table`
+  * may be a partition dir of the table at `path`. Shared so every
+  * rewrite audits ONE protocol.
   *
   * SINGLE-MAINTAINER protocol: a writer that appends to the live dir
   * CONCURRENTLY with the swap (e.g. a curation sink's
@@ -55,7 +56,7 @@ object TableSwap {
               table: String): Unit = {
     import org.apache.hadoop.fs.{Path => HPath}
     val root = new HPath(path)
-    val old = new HPath(root, s"_repair_old_$table")
+    val old = new HPath(root, aside("repair_old", table))
     val live = new HPath(root, table)
     if (fs.exists(old)) {
       if (!fs.exists(live)) {
@@ -63,9 +64,15 @@ object TableSwap {
           s"staged-table recovery could not restore $old to $live")
       } else fs.delete(old, true)
     }
-    val tmp = new HPath(root, s"_repair_tmp_$table")
+    val tmp = new HPath(root, aside("repair_tmp", table))
     if (fs.exists(tmp)) fs.delete(tmp, true)
   }
+
+  /** `table`'s stage name for `kind`; `.`-prefixed for a partition dir
+    * (`col=value`), as Spark's file listing reads a `_`-prefixed name
+    * holding `=` as a partition of the table around it. */
+  private def aside(kind: String, table: String): String =
+    s"${if (table.contains("=")) "." else "_"}${kind}_$table"
 
   /** Rewrite `path/table` via the stage-aside swap. A live dir that
     * does not exist yet (e.g. backfilling a side table onto a legacy
@@ -75,10 +82,10 @@ object TableSwap {
     import org.apache.hadoop.fs.{Path => HPath}
     val root = new HPath(path)
     val live = new HPath(root, table)
-    val tmp = new HPath(root, s"_repair_tmp_$table")
+    val tmp = new HPath(root, aside("repair_tmp", table))
     write(tmp.toString)
     if (fs.exists(live)) {
-      val old = new HPath(root, s"_repair_old_$table")
+      val old = new HPath(root, aside("repair_old", table))
       if (!fs.rename(live, old))
         throw new java.io.IOException(s"staged rewrite could not stage $live aside")
       if (!fs.rename(tmp, live)) {
@@ -86,7 +93,7 @@ object TableSwap {
         throw new java.io.IOException(s"staged rewrite rename failed for $live")
       }
       guardNestedRename(fs, live, tmp, old,
-        conflictPath(root, s"_swap_conflict_$table"))
+        conflictPath(root, aside("swap_conflict", table)))
       fs.delete(old, true)
     } else if (!fs.rename(tmp, live))
       throw new java.io.IOException(s"staged rewrite could not install $live")

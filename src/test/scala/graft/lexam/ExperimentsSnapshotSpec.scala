@@ -8,10 +8,12 @@ import graft.lexam.pipeline._
   * with the table's files: a write through this store is read back
   * without a Spark job, as a stated read would return it; a rewrite
   * through another store on the same directory changes the stamp and
-  * is seen by the next read; an absent table reads empty.
+  * is seen by the next read; an absent table reads empty; a read racing
+  * a rewrite, or following a crash inside one, sees the table.
   */
 class ExperimentsSnapshotSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+  import spark.implicits._
 
   private def freshDir(): String =
     java.nio.file.Files.createTempDirectory("experiments_snapshot").toString
@@ -69,5 +71,52 @@ class ExperimentsSnapshotSpec extends AnyFunSuite {
     // a delete through the first store is seen by the second
     first.deleteExperiment(2L)
     assert(second.experiments.map(_.id) === Seq(1L))
+  }
+
+  test("a reader racing 200 rewrites of the table finds the experiment on every call") {
+    val store = new LexamStore(spark, freshDir())
+    store.saveExperiment(Experiment(id = 1, name = "raced"))
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val writer = new Thread(() =>
+      try (1 to 200).foreach(i => store.saveExperiment(
+        Experiment(id = 1, name = "raced", description = Some(s"rewrite $i"))))
+      catch { case t: Throwable => failure.set(t) })
+    writer.start()
+    var reads = 0
+    try while (writer.isAlive) {
+      assert(store.getExperiment(1L).map(_.name) === Some("raced"), s"after $reads reads")
+      reads += 1
+    } finally writer.join()
+    assert(failure.get === null)
+    assert(reads > 0)
+    assert(store.getExperiment(1L).flatMap(_.description) === Some("rewrite 200"))
+  }
+
+  test("a crash between the swap's two renames loses no experiment: the next read and status write see the old rows") {
+    val dir = freshDir()
+    val store = new LexamStore(spark, dir)
+    store.saveExperiment(Experiment(id = 1, name = "one"))
+    store.saveExperiment(Experiment(id = 2, name = "two"))
+    val root = java.nio.file.Paths.get(dir)
+    // the state such a crash leaves: the live table staged aside and the
+    // unfinished rewrite in its tmp dir
+    def crash(): Unit = {
+      java.nio.file.Files.move(root.resolve("experiments"),
+        root.resolve("_repair_old_experiments"))
+      Seq(Experiment(id = 3, name = "unfinished")).toDF()
+        .write.parquet(root.resolve("_repair_tmp_experiments").toString)
+    }
+    def leftovers = Seq("_repair_old_experiments", "_repair_tmp_experiments")
+      .filter(n => java.nio.file.Files.exists(root.resolve(n)))
+    crash()
+    // a restarted process
+    assert(new LexamStore(spark, dir).getExperiment(1L).map(_.name) === Some("one"))
+    assert(leftovers === Nil)
+    crash()
+    // the store that was writing
+    store.setStatus(2L, "generating")
+    assert(leftovers === Nil)
+    assert(new LexamStore(spark, dir).experiments.map(e => (e.id, e.status)) ===
+      Seq(1L -> "created", 2L -> "generating"))
   }
 }

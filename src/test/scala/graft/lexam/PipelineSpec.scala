@@ -290,6 +290,42 @@ class PipelineSpec extends AnyFunSuite {
     assert(store.getExperiment(4L).isEmpty)
   }
 
+  test("a judgments partition a crashed swap staged aside: reads skip the stage, the next rewrite restores it, a drop takes it along") {
+    val store = freshStore()
+    store.appendAnswers(Seq(
+      ExperimentAnswer(id = 11, experiment_id = 1, variant_id = 1, run_index = 0,
+        model_name = "m", answer_text = "a"),
+      ExperimentAnswer(id = 21, experiment_id = 2, variant_id = 1, run_index = 0,
+        model_name = "m", answer_text = "b")).toDF())
+    def judge(eid: Long, js: ExperimentJudgment*): Unit =
+      store.appendJudgments(js.toDF().withColumn("experiment_id", lit(eid)))
+    judge(1L, ExperimentJudgment(101, 11, "j1", "t"), ExperimentJudgment(102, 11, "j2", "t"))
+    judge(2L, ExperimentJudgment(201, 21, "j1", "t"))
+    def ids = store.judgments.select("id").as[Long].collect().sorted.toSeq
+    val root = java.nio.file.Paths.get(store.baseDir, "judgments")
+    def dir(n: String) = root.resolve(n).toFile
+    import org.apache.commons.io.FileUtils.{copyDirectory, deleteDirectory, moveDirectory}
+    // after the install rename, before the stage is deleted: both copies
+    copyDirectory(dir("experiment_id=1"), dir(".repair_old_experiment_id=1"))
+    assert(ids === Seq(101L, 102L, 201L))
+    // between the two renames: only the staged copy, and the unfinished
+    // rewrite in its tmp dir — the partition reads absent until recovered
+    deleteDirectory(dir("experiment_id=1"))
+    copyDirectory(dir(".repair_old_experiment_id=1"), dir(".repair_tmp_experiment_id=1"))
+    assert(ids === Seq(201L))
+    store.deleteJudgments(1L, Some("j2"))
+    assert(ids === Seq(101L, 201L))
+    assert(store.liveJudgments(Some(1L)).select("id").as[Long].collect().toSeq === Seq(101L))
+    // a drop after the same crash takes the staged copy along, so a
+    // later rewrite has nothing to restore
+    moveDirectory(dir("experiment_id=2"), dir(".repair_old_experiment_id=2"))
+    store.deleteJudgments(2L)
+    store.deleteJudgments(2L, Some("j2"))
+    assert(ids === Seq(101L))
+    assert(root.toFile.list().filterNot(_.endsWith(".crc")).sorted.toSeq ===
+      Seq("_SUCCESS", "experiment_id=1"))
+  }
+
   test("schema migration: late columns land with the reference defaults, idempotently (main.py:14-30)") {
     val store = freshStore()
     // a pre-upgrade experiments table: written before the tuning/judge
