@@ -12,7 +12,7 @@ tree, plus untracked files) to the `SparkEntry.queries` ids it can move:
   nested-loop joins), plus the COVERAGE.md rows naming the file's objects;
 - any other library file: the ids on the COVERAGE.md rows (operator ->
   library -> oracle query tables) that name one of the file's top-level
-  classes or objects;
+  classes or objects (for a deleted file, the ones it held at BASE);
 - src/main/scala/graft/LocalSession.scala: every id (it builds the
   session every Bench plan runs in);
 - the harness (Bench, Verify, Explain), the mains Bench never runs
@@ -108,7 +108,16 @@ def top_level_names(rel):
     return set(TOP_LEVEL.findall(read(rel)))
 
 
-def families(path, rows, cross, known):
+def rows_naming(names, rows):
+    """The ids on the COVERAGE rows that name one of `names`."""
+    hits = set()
+    for line, ids in rows:
+        if any(re.search(r"\b%s\b" % re.escape(n), line) for n in names):
+            hits |= ids
+    return hits
+
+
+def families(path, rows, cross, known, base):
     """(ids, reason) for one changed file."""
     if path == SESSION:
         return set(known), "session config: every query"
@@ -119,16 +128,17 @@ def families(path, rows, cross, known):
     if not path.startswith(LIB) or not path.endswith(".scala"):
         return set(), "not a library source"
     if not os.path.exists(os.path.join(ROOT, path)):
-        return set(), "deleted: pick its callers by hand"
+        old = subprocess.run(["git", "show", f"{base}:{path}"], cwd=ROOT,
+                             capture_output=True, text=True).stdout
+        names = set(TOP_LEVEL.findall(old))
+        return rows_naming(names, rows), "deleted; COVERAGE rows naming its " + \
+            ", ".join(sorted(names))
     if path.startswith(LIB + "queries/"):
         ids = set(QUERY_ID.findall(read(path)))
         if ids:
             return ids, "defines these queries"
     names = top_level_names(path)
-    hits = set()
-    for line, ids in rows:
-        if any(re.search(r"\b%s\b" % re.escape(n), line) for n in names):
-            hits |= ids
+    hits = rows_naming(names, rows)
     if path.startswith(LIB + "plans/"):
         return hits | cross, "physical-plan rule: PlanSpec intendedCross hosts + COVERAGE rows"
     return hits, "COVERAGE rows naming " + ", ".join(sorted(names))
@@ -164,12 +174,13 @@ def main(argv):
     if any(a in ("-h", "--help") for a in argv):
         print(__doc__.strip())
         return
-    files = changed_files(argv[0] if argv else "HEAD")
+    base = argv[0] if argv else "HEAD"
+    files = changed_files(base)
     known = all_query_ids()
     rows, cross = coverage_rows(known), intended_cross()
     selected, unmapped = set(), []
     for path in files:
-        ids, why = families(path, rows, cross, known)
+        ids, why = families(path, rows, cross, known, base)
         if not ids and why.startswith(("COVERAGE", "deleted")):
             unmapped.append(path)
         selected |= ids

@@ -75,13 +75,15 @@ class LexamStore(val spark: SparkSession, val baseDir: String) {
     * (routers/experiments.py:79-84, 183-189; routers/judging.py:96-101),
     * so judgments orphaned by a bulk answer delete never surface
     * anywhere — this is THE single judgment read path for Api and Jobs,
-    * so the rule can't drift between them. */
+    * so the rule can't drift between them. A judgment is stored in its
+    * answer's experiment partition (`Jobs.runJudging` judges only that
+    * experiment's answers), so `Some(id)` reads that one partition of
+    * both tables. */
   def liveJudgments(experimentId: Option[Long] = None): DataFrame = {
-    val ans = experimentId
-      .map(id => answers.where(col("experiment_id") === id))
-      .getOrElse(answers)
-    judgments.drop("experiment_id")
-      .join(ans.select(col("id").as("answer_id"), col("experiment_id").as("eid"),
+    def scoped(t: DataFrame) =
+      experimentId.fold(t)(id => t.where(col("experiment_id") === id))
+    scoped(judgments).drop("experiment_id")
+      .join(scoped(answers).select(col("id").as("answer_id"), col("experiment_id").as("eid"),
         col("variant_id"), col("answer_text")), Seq("answer_id"))
   }
 
@@ -289,13 +291,12 @@ class LexamStore(val spark: SparkSession, val baseDir: String) {
       }
     }
 
-  /** Compact one experiment's partition into `targetFiles` files —
+  /** Compact one experiment's partition into one file —
     * streaming/incremental appends (S7) accumulate small files; compaction
     * is the standard maintenance pass that keeps scans fast. */
-  def compactAnswers(experimentId: Long, targetFiles: Int = 1): Unit =
+  def compactAnswers(experimentId: Long): Unit =
     writeLock.synchronized {
-      LexamStore.Answers.rewritePartition(spark, baseDir, experimentId)(
-        _.coalesce(targetFiles))
+      LexamStore.Answers.rewritePartition(spark, baseDir, experimentId)(_.coalesce(1))
     }
 }
 

@@ -739,17 +739,16 @@ object Dedup {
     * so a daily loop accretes tiny files until the pruned probe scans
     * go metadata-bound — the same accretion the IVF cell table
     * suffers, fixed by the same crash-safe swap
-    * ([[graft.sources.Compaction.compactPartitions]]). Compacting
+    * ([[graft.sources.Table.compact]]). Compacting
     * stats merges FILES, never rows (probes sum slices regardless), so
     * probe results are unchanged either way (spec-asserted); returns
     * the compacted band part ids. */
   def compactLshBands(spark: org.apache.spark.sql.SparkSession, path: String,
-                      maxFilesPerPart: Int, targetFiles: Int = 1): Seq[Int] = {
+                      maxFilesPerPart: Int): Seq[Int] = {
     LshArtifact.requireSaved(spark, path)
     if (lshStatsCommitted(spark, path))
-      LshArtifact("stats").compact(spark, path, maxFilesPerPart, targetFiles)
-    LshArtifact("bands").compact(spark, path, maxFilesPerPart, targetFiles)
-      .map(_.toInt)
+      LshArtifact("stats").compact(spark, path, maxFilesPerPart)
+    LshArtifact("bands").compact(spark, path, maxFilesPerPart).map(_.toInt)
   }
 
   /** Re-bucket (and optionally re-band) a persisted LSH index from its
@@ -2736,14 +2735,12 @@ object Dedup {
   /** Nightly small-file repair for an append-grown Hamming index —
     * [[compactLshBands]] minus the stats table (this index has none):
     * partitions holding more than `maxFilesPerPart` files are rewritten
-    * to `targetFiles`; probe verdicts are bit-identical before and
+    * to one file each; probe verdicts are bit-identical before and
     * after (spec-pinned). Returns the rewritten partition ids. */
   def compactHammingBands(spark: org.apache.spark.sql.SparkSession,
-                          path: String, maxFilesPerPart: Int,
-                          targetFiles: Int = 1): Seq[Int] = {
+                          path: String, maxFilesPerPart: Int): Seq[Int] = {
     HammingArtifact.requireSaved(spark, path)
-    HammingArtifact("bands").compact(spark, path, maxFilesPerPart, targetFiles)
-      .map(_.toInt)
+    HammingArtifact("bands").compact(spark, path, maxFilesPerPart).map(_.toInt)
   }
 
   /** Row hygiene for an append-grown Hamming index — the containment

@@ -109,15 +109,14 @@ object Maintenance {
     // for the LSH/PQ layouts, which never swap their roots — without
     // it a decon index whose live dir died mid-swap has no meta/ to
     // detect the family from. ONLY the live-missing crash class: a
-    // present live dir plus a staged _repair_tmp is what an
+    // present live dir plus a swap's tmp copy is what an
     // IN-PROGRESS re-save looks like from outside (its multi-minute
     // staging write), and recovering there would delete the staging
     // dir out from under the writer — the next save's own recover
     // handles that litter if it really was a crash
     val root = new org.apache.hadoop.fs.Path(path)
     val rootStaged = !fs.exists(root) &&
-      fs.exists(new org.apache.hadoop.fs.Path(root.getParent,
-        s"_repair_old_${root.getName}"))
+      graft.sources.TableSwap.isStaged(fs, root.getParent.toString, root.getName)
     if (rootStaged)
       graft.sources.TableSwap.recover(fs, root.getParent.toString,
         root.getName)
@@ -183,12 +182,12 @@ object Maintenance {
       return nightlyHamming(spark, path, maxFilesPerPart, lsh, repair)
     // registry analogue: a [[Clusters.compactRegistry]] fold that died
     // between TableSwap's two renames leaves members/ absent with the
-    // full table staged at _repair_old_members — recover it BEFORE the
-    // family detection below, or the require throws on exactly the
-    // crash state this nightly exists to heal. remaps/ and the staged
+    // full table staged aside — recover it BEFORE the family detection
+    // below, or the require throws on exactly the crash state this
+    // nightly exists to heal. remaps/ and the staged
     // members dir are registry-specific layout (no other family has
     // either), so this touches nothing on the index families' roots.
-    if (exists("remaps") || exists("_repair_old_members"))
+    if (exists("remaps") || graft.sources.TableSwap.isStaged(fs, path, "members"))
       graft.sources.TableSwap.recover(fs, path, "members")
     val inflight = graft.sources.Rebuild.isInflight(spark, path)
     // family detection must survive the crash class the heal exists
@@ -292,7 +291,7 @@ object Maintenance {
     * rewritten fingerprint-stably ([[Dedup.bumpDeconMeta]]) so a probe
     * spanning the whole window still fails its closing token check.
     * The bracket is taken ONLY when the needs-work probe
-    * ([[graft.sources.Compaction.compactionWork]]) finds something to
+    * ([[graft.sources.Table.compactionWork]]) finds something to
     * move (fragmented partitions, staged crash leftovers, or an
     * orphaned marker) — a healthy night neither seals the marker nor
     * bumps meta, so live probes see no abort window at all. When work
@@ -318,8 +317,7 @@ object Maintenance {
     // partitions will actually move — the bracket's cost is paid only
     // when its protection is needed
     val store = Dedup.DeconArtifact("hashes")
-    val (staged, fragmented) = graft.sources.Compaction.compactionWork(fs,
-      store.at(path), "part=", maxFilesPerPart)
+    val (staged, fragmented) = store.compactionWork(spark, path, maxFilesPerPart)
     if (orphaned || staged || fragmented > 0) {
       fs.create(marker, true).close()
       val compacted = store.compact(spark, path, maxFilesPerPart)

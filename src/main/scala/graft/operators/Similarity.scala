@@ -292,18 +292,15 @@ object Similarity {
     * [[appendToIvf]] batch adds at least one file per arriving cell, so
     * a daily-ingest index accretes small files until probe scans go
     * metadata-bound. Cells whose parquet file count exceeds
-    * `maxFilesPerCell` are rewritten to `targetFiles` files, in place
-    * (read → coalesce → tmp → atomic-ish dir swap); untouched cells
+    * `maxFilesPerCell` are rewritten to one file each, in place
+    * ([[graft.sources.Table.compact]]); untouched cells
     * keep their files byte-identical, and search results are unchanged
     * because compaction only rewrites row layout, never content
     * (asserted in TrainedIvfSpec). Returns the compacted cell ids. */
   def compactIvfCells(spark: org.apache.spark.sql.SparkSession, path: String,
-                      maxFilesPerCell: Int, targetFiles: Int = 1): Seq[Int] = {
+                      maxFilesPerCell: Int): Seq[Int] = {
     IvfArtifact.requireSaved(spark, path)
-    // swap protocol + crash recovery live in sources.Compaction — ONE
-    // audited implementation for every partitioned index in the engine
-    IvfArtifact("cells").compact(spark, path, maxFilesPerCell, targetFiles)
-      .map(_.toInt)
+    IvfArtifact("cells").compact(spark, path, maxFilesPerCell).map(_.toInt)
   }
 
   /** Cell-occupancy statistics for an IVF index — the post-append drift
@@ -1161,8 +1158,8 @@ object Similarity {
     * same codes — spec-asserted via exhaustive-probe ≡ brute force
     * over the union). Fragmentation from repeated appends is the
     * [[compactIvfCells]] story: the shared
-    * [[graft.sources.Compaction.compactPartitions]] applies to
-    * `$$path/cells` verbatim. Codebook/centroid drift under a shifted
+    * [[graft.sources.Table.compact]] applies to
+    * `PqIvfArtifact("cells")` verbatim. Codebook/centroid drift under a shifted
     * ingest distribution is the [[ivfCellStats]] tripwire, unchanged. */
   def appendToPqIvf(newVectors: DataFrame, path: String): Unit = {
     val spark = newVectors.sparkSession
@@ -1300,7 +1297,7 @@ object Similarity {
     * — size the mod so the sample is hundreds of queries, the same
     * dial as PQ training's bounded sample). The daily loop this guards:
     * append → driftCheck → ([[rebuildPqIvf]] if drifted, else
-    * [[graft.sources.Compaction.compactPartitions]] when fragmented). */
+    * `PqIvfArtifact("cells").compact` when fragmented). */
   def pqIvfDriftCheck(spark: org.apache.spark.sql.SparkSession, path: String,
                       sampleMod: Int, k: Int, nProbe: Int, rescoreK: Int,
                       skewBound: Double = 4.0,

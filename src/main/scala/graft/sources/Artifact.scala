@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -72,14 +73,76 @@ final case class Table(dir: String, ddl: String, partitionBy: String*) {
   private def recoverPartition(spark: SparkSession, root: String, value: Any) = {
     val (fs, part) = (Hdfs.forPath(spark, root), s"${partitionBy.head}=$value")
     TableSwap.recover(fs, at(root), part)
-    (fs, new org.apache.hadoop.fs.Path(at(root), part))
+    (fs, new HPath(at(root), part))
   }
 
-  /** [[Compaction.compactPartitions]] over the first partition column. */
-  def compact(spark: SparkSession, root: String, maxFilesPerPart: Int,
-              targetFiles: Int = 1): Seq[String] =
-    Compaction.compactPartitions(spark, at(root), s"${partitionBy.head}=",
-      maxFilesPerPart, targetFiles)
+  /** Small-file compaction over the first partition column — the
+    * maintenance pass every append-grown index needs (IVF cells, LSH
+    * bands, decon hashes): each appended batch adds at least one file
+    * per touched partition, and probe scans go metadata-bound once
+    * partitions hold hundreds of tiny files. Recovers every partition
+    * swap a crash left in the table dir, then rewrites each partition
+    * holding more than `maxFilesPerPart` parquet files into one file:
+    * ALL of them in ONE Spark job (hash-repartitioning on the partition
+    * column gives each partition one task, hence one file) into a
+    * `.`-prefixed batch dir inside the table dir, which reads skip and
+    * the next entry drops after a crash. Each partition is then
+    * installed through the [[TableSwap]] swap. Content is never
+    * changed, only row layout: readers see identical rows before and
+    * after. Returns the compacted partition values. */
+  def compact(spark: SparkSession, root: String, maxFilesPerPart: Int): Seq[String] = {
+    require(maxFilesPerPart >= 1)
+    val fs = Hdfs.forPath(spark, root)
+    val dir = tableDir(fs, root)
+    TableSwap.leftovers(fs, at(root)).foreach(TableSwap.recover(fs, at(root), _))
+    val batch = batchDir(dir)
+    fs.delete(batch, true)
+    val frag = fragmented(fs, dir, maxFilesPerPart)
+    if (frag.nonEmpty) {
+      spark.read.option("basePath", at(root)).parquet(frag.map(_.toString): _*)
+        .repartition(frag.length, col(partitionBy.head))
+        .write.partitionBy(partitionBy.head).mode("overwrite").parquet(batch.toString)
+      frag.foreach { part =>
+        TableSwap.rewrite(spark, fs, at(root), part.getName) { tmp =>
+          if (!fs.rename(new HPath(batch, part.getName), new HPath(tmp)))
+            throw new java.io.IOException(
+              s"batched compaction rewrite produced no dir for $part")
+        }
+      }
+      fs.delete(batch, true)
+      // Spark caches parquet file listings per path: readers opened
+      // after the rewrite would otherwise chase deleted files
+      spark.catalog.refreshByPath(at(root))
+    }
+    frag.map(_.getName.stripPrefix(s"${partitionBy.head}="))
+  }
+
+  /** What [[compact]] would do now: whether a crashed swap or batch
+    * left leftovers in the table dir, and how many partitions hold more
+    * than `maxFilesPerPart` parquet files. Read-only; callers that take
+    * a reader-visible bracket around the compaction (the decon
+    * nightly's `_compacting` marker) skip it on healthy nights. */
+  def compactionWork(spark: SparkSession, root: String,
+                     maxFilesPerPart: Int): (Boolean, Int) = {
+    val fs = Hdfs.forPath(spark, root)
+    val dir = tableDir(fs, root)
+    (TableSwap.leftovers(fs, at(root)).nonEmpty || fs.exists(batchDir(dir)),
+      fragmented(fs, dir, maxFilesPerPart).size)
+  }
+
+  private def batchDir(dir: HPath) = new HPath(dir, ".compact_batch")
+
+  private def tableDir(fs: FileSystem, root: String): HPath = {
+    val dir = new HPath(at(root))
+    require(fs.exists(dir), s"no partitioned table at $dir")
+    dir
+  }
+
+  private def fragmented(fs: FileSystem, dir: HPath, maxFilesPerPart: Int): Seq[HPath] =
+    fs.listStatus(dir).toSeq.filter(_.isDirectory).map(_.getPath)
+      .filter(_.getName.startsWith(s"${partitionBy.head}="))
+      .filter(part => fs.listStatus(part)
+        .count(f => f.isFile && f.getPath.getName.endsWith(".parquet")) > maxFilesPerPart)
 }
 
 /** The on-disk contract of one persisted family (every index, model and

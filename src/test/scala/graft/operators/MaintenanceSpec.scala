@@ -383,7 +383,7 @@ class MaintenanceSpec extends AnyFunSuite {
       new org.apache.hadoop.fs.Path(path).toUri,
       spark.sessionState.newHadoopConf())
     assert(fs.rename(new org.apache.hadoop.fs.Path(s"$path/hashes/part=1"),
-      new org.apache.hadoop.fs.Path(s"$path/_compact_old_part=1")))
+      graft.sources.TableSwap.stageDirs(s"$path/hashes", "part=1")._1))
     val night = Maintenance.nightly(spark, path, maxFilesPerPart = 8)
     assert(!night.actions.contains("rebuild-bloom"),
       s"restored store must count clean — a rebuild here means the " +

@@ -404,15 +404,16 @@ class TrainedIvfSpec extends AnyFunSuite {
     val someCell = Files.list(cellsDir).iterator().asScala
       .find(_.getFileName.toString.startsWith("cell=")).get
     val cellName = someCell.getFileName.toString
-    Files.move(someCell, Paths.get(path, s"_compact_old_$cellName"))
-    Files.createDirectory(Paths.get(path, s"_compact_tmp_$cellName"))
+    val (staged, tmp) = graft.sources.TableSwap.stageDirs(s"$path/cells", cellName)
+    Files.move(someCell, Paths.get(staged.toString))
+    Files.createDirectory(Paths.get(tmp.toString))
     spark.catalog.refreshByPath(s"$path/cells")
     assert(spark.read.parquet(s"$path/cells").count() < nBefore) // data IS missing
     // next maintenance entry must restore the stranded cell and drop litter
     Similarity.compactIvfCells(spark, path, maxFilesPerCell = 1000)
     assert(Files.exists(someCell), "stranded cell was not restored")
-    assert(!Files.exists(Paths.get(path, s"_compact_old_$cellName")))
-    assert(!Files.exists(Paths.get(path, s"_compact_tmp_$cellName")))
+    assert(!Files.exists(Paths.get(staged.toString)))
+    assert(!Files.exists(Paths.get(tmp.toString)))
     val after = Similarity.ivfTopK(index, spark.read.parquet(s"$path/cells"),
       queries, k = 5, nProbe = 8).collect().map(_.toSeq).toSeq
     assert(after === before)
@@ -539,8 +540,8 @@ class TrainedIvfSpec extends AnyFunSuite {
     // append fragmented cells; the shared compactor applies verbatim
     val before = Similarity.pqIvfSearch(spark, path, queries, k = 5,
       nProbe = 3, rescoreK = 20).collect().map(_.toSeq).toSeq
-    val compacted = graft.sources.Compaction.compactPartitions(spark,
-      s"$path/cells", "cell=", maxFilesPerPart = 1)
+    val compacted = Similarity.PqIvfArtifact("cells").compact(spark, path,
+      maxFilesPerPart = 1)
     assert(compacted.nonEmpty, "append should have fragmented some cell")
     val after = Similarity.pqIvfSearch(spark, path, queries, k = 5,
       nProbe = 3, rescoreK = 20).collect().map(_.toSeq).toSeq
