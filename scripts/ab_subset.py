@@ -12,7 +12,7 @@ tree, plus untracked files) to the `SparkEntry.queries` ids it can move:
   nested-loop joins), plus the COVERAGE.md rows naming the file's objects;
 - any other library file: the ids on the COVERAGE.md rows (operator ->
   library -> oracle query tables) that name one of the file's top-level
-  classes or objects (for a deleted file, the ones it held at BASE);
+  classes or objects;
 - src/main/scala/graft/LocalSession.scala: every id (it builds the
   session every Bench plan runs in);
 - the harness (Bench, Verify, Explain), the mains Bench never runs
@@ -108,16 +108,7 @@ def top_level_names(rel):
     return set(TOP_LEVEL.findall(read(rel)))
 
 
-def rows_naming(names, rows):
-    """The ids on the COVERAGE rows that name one of `names`."""
-    hits = set()
-    for line, ids in rows:
-        if any(re.search(r"\b%s\b" % re.escape(n), line) for n in names):
-            hits |= ids
-    return hits
-
-
-def families(path, rows, cross, known, base):
+def families(path, rows, cross, known):
     """(ids, reason) for one changed file."""
     if path == SESSION:
         return set(known), "session config: every query"
@@ -128,17 +119,16 @@ def families(path, rows, cross, known, base):
     if not path.startswith(LIB) or not path.endswith(".scala"):
         return set(), "not a library source"
     if not os.path.exists(os.path.join(ROOT, path)):
-        old = subprocess.run(["git", "show", f"{base}:{path}"], cwd=ROOT,
-                             capture_output=True, text=True).stdout
-        names = set(TOP_LEVEL.findall(old))
-        return rows_naming(names, rows), "deleted; COVERAGE rows naming its " + \
-            ", ".join(sorted(names))
+        return set(), "deleted: pick its callers by hand"
     if path.startswith(LIB + "queries/"):
         ids = set(QUERY_ID.findall(read(path)))
         if ids:
             return ids, "defines these queries"
     names = top_level_names(path)
-    hits = rows_naming(names, rows)
+    hits = set()
+    for line, ids in rows:
+        if any(re.search(r"\b%s\b" % re.escape(n), line) for n in names):
+            hits |= ids
     if path.startswith(LIB + "plans/"):
         return hits | cross, "physical-plan rule: PlanSpec intendedCross hosts + COVERAGE rows"
     return hits, "COVERAGE rows naming " + ", ".join(sorted(names))
@@ -174,13 +164,12 @@ def main(argv):
     if any(a in ("-h", "--help") for a in argv):
         print(__doc__.strip())
         return
-    base = argv[0] if argv else "HEAD"
-    files = changed_files(base)
+    files = changed_files(argv[0] if argv else "HEAD")
     known = all_query_ids()
     rows, cross = coverage_rows(known), intended_cross()
     selected, unmapped = set(), []
     for path in files:
-        ids, why = families(path, rows, cross, known, base)
+        ids, why = families(path, rows, cross, known)
         if not ids and why.startswith(("COVERAGE", "deleted")):
             unmapped.append(path)
         selected |= ids

@@ -364,6 +364,10 @@ object Maintenance {
                         maxFilesPerPart: Int, pq: PqConfig,
                         repair: Boolean): NightlyReport = {
     val actions = Seq.newBuilder[String]
+    // restore a cell a crashed compaction staged aside BEFORE anything
+    // reads cells: the drift check, repair and rebuild all read the
+    // table without it, and the latter two replace the table dir
+    Similarity.PqIvfArtifact("cells").recover(spark, path)
     if (repair) { Similarity.repairPqIvf(spark, path); actions += "repair" }
     val report = Similarity.pqIvfDriftCheck(spark, path, pq.sampleMod,
       pq.k, pq.nProbe, pq.rescoreK, pq.skewBound, pq.recallFloor)
@@ -397,6 +401,8 @@ object Maintenance {
                              maxFilesPerPart: Int, lsh: LshConfig,
                              repair: Boolean): NightlyReport = {
     val actions = Seq.newBuilder[String]
+    // as in nightlyPq: staged partitions back before the bands are read
+    Dedup.HammingArtifact("bands").recover(spark, path)
     if (repair) { Dedup.repairHammingIndex(spark, path); actions += "repair" }
     grow(path, "hamming", actions,
       Dedup.HammingArtifact.meta(spark, path).getAs[Int]("n_bucket_parts"),
@@ -430,6 +436,8 @@ object Maintenance {
                          maxFilesPerPart: Int, lsh: LshConfig,
                          repair: Boolean): NightlyReport = {
     val actions = Seq.newBuilder[String]
+    // as in nightlyPq: staged partitions back before the tables are read
+    Seq("bands", "stats").foreach(Dedup.LshArtifact(_).recover(spark, path))
     if (repair) { Dedup.repairLshIndex(spark, path); actions += "repair" }
     else if (!Dedup.lshStatsCommitted(spark, path)) {
       // legacy or torn stats: put capped probes back on the

@@ -40,9 +40,17 @@ final case class Table(dir: String, ddl: String, partitionBy: String*) {
     writer(spark.createDataFrame(java.util.List.of(Row(values: _*)), schema)
       .coalesce(1)).mode("overwrite").parquet(path)
 
-  /** Restore or drop what a crashed [[TableSwap]] swap of the table left. */
-  def recover(spark: SparkSession, root: String): Unit =
-    TableSwap.recover(Hdfs.forPath(spark, root), root, dir)
+  /** Restore or drop what a crashed [[TableSwap]] swap left: of the
+    * whole table, then of each of its partitions. A compaction stages
+    * partitions aside inside the table dir, where a whole-table read
+    * skips them, so a rewrite that did not restore them first would
+    * delete them with the old table. */
+  def recover(spark: SparkSession, root: String): Unit = {
+    val fs = Hdfs.forPath(spark, root)
+    TableSwap.recover(fs, root, dir)
+    if (partitionBy.nonEmpty && fs.exists(new HPath(at(root))))
+      TableSwap.leftovers(fs, at(root)).foreach(TableSwap.recover(fs, at(root), _))
+  }
 
   /** Replace the live table with `rows` (evaluated after recovering an
     * earlier swap's crash leftovers) through the [[TableSwap]] swap. */
@@ -80,8 +88,8 @@ final case class Table(dir: String, ddl: String, partitionBy: String*) {
     * maintenance pass every append-grown index needs (IVF cells, LSH
     * bands, decon hashes): each appended batch adds at least one file
     * per touched partition, and probe scans go metadata-bound once
-    * partitions hold hundreds of tiny files. Recovers every partition
-    * swap a crash left in the table dir, then rewrites each partition
+    * partitions hold hundreds of tiny files. [[recover]]s every swap
+    * a crash left of the table or its partitions, then rewrites each partition
     * holding more than `maxFilesPerPart` parquet files into one file:
     * ALL of them in ONE Spark job (hash-repartitioning on the partition
     * column gives each partition one task, hence one file) into a
@@ -93,8 +101,8 @@ final case class Table(dir: String, ddl: String, partitionBy: String*) {
   def compact(spark: SparkSession, root: String, maxFilesPerPart: Int): Seq[String] = {
     require(maxFilesPerPart >= 1)
     val fs = Hdfs.forPath(spark, root)
+    recover(spark, root)
     val dir = tableDir(fs, root)
-    TableSwap.leftovers(fs, at(root)).foreach(TableSwap.recover(fs, at(root), _))
     val batch = batchDir(dir)
     fs.delete(batch, true)
     val frag = fragmented(fs, dir, maxFilesPerPart)

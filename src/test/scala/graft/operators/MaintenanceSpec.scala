@@ -509,6 +509,37 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(full.nonEmpty)
   }
 
+  test("PQ-IVF: a cell staged aside by a crashed compaction survives a repair night") {
+    val emb = graft.sources.Tables.embeddings(spark, sf)
+      .select(col("vec_id"), col("embedding"))
+    val path = java.nio.file.Files.createTempDirectory("mnt_pq_torn").toString
+    Similarity.savePqIvf(emb.where(col("vec_id") % 4 =!= 0), nCentroids = 8,
+      m = 8, kCode = 16, path)
+    Similarity.appendToPqIvf(emb.where(col("vec_id") % 4 === 0), path)
+    val cells = Similarity.PqIvfArtifact("cells")
+    def rows() = {
+      spark.catalog.refreshByPath(cells.at(path))
+      cells.read(spark, path).orderBy(col("vec_id")).collect().map(_.toSeq).toSeq
+    }
+    val before = rows()
+    // compaction's window between its two renames: the live cell is
+    // staged aside, its compacted copy sits at the tmp path. The repair
+    // night rewrites cells/ whole, reading a table that skips the stage
+    val fs = graft.sources.Hdfs.forPath(spark, path)
+    val cell = fs.listStatus(new org.apache.hadoop.fs.Path(cells.at(path)))
+      .map(_.getPath).find(_.getName.startsWith("cell=")).get
+    val (staged, tmp) = graft.sources.TableSwap.stageDirs(cells.at(path), cell.getName)
+    assert(fs.rename(cell, staged))
+    org.apache.hadoop.fs.FileUtil.copy(fs, staged, fs, tmp, false, fs.getConf)
+    assert(rows().size < before.size, "the staged cell must read absent")
+    val night = Maintenance.nightly(spark, path, maxFilesPerPart = 1,
+      pq = Maintenance.PqConfig(sampleMod = 10, k = 5, nProbe = 3,
+        rescoreK = 20, skewBound = 4.0, recallFloor = 0.0), repair = true)
+    assert(night.actions.contains("repair") && !night.rebuilt, s"$night")
+    assert(!fs.exists(staged) && !fs.exists(tmp))
+    assert(rows() === before)
+  }
+
   test("LM retrain-and-swap: the new model replaces the old atomically; a mid-swap crash heals to ONE consistent model") {
     val v1Train = Seq((1L, "en", "a b a b a b"), (2L, "de", "x y x y"))
       .toDF("doc_id", "lang", "text")

@@ -99,6 +99,17 @@ class TableSwapSpec extends AnyFunSuite {
     assert(rows(root) === before)
   }
 
+  test("a whole-table rewrite after a crashed compaction keeps the partition staged aside") {
+    val root = fragmentedTable(nParts = 3, appends = 2)
+    val before = rows(root)
+    val fs = Hdfs.forPath(spark, root)
+    val (staged, _) = TableSwap.stageDirs(Parts.at(root), "p=2")
+    assert(fs.rename(new HPath(Parts.at(root), "p=2"), staged))
+    Parts.rewrite(spark, root)(Parts.read(spark, root))
+    assert(!fs.exists(staged))
+    assert(rows(root) === before)
+  }
+
   /** Spark jobs `body` starts, and how many of them wrote output rows.
     * A marker job started after `body` is seen last, so every earlier
     * job and task event has been counted by then. */
