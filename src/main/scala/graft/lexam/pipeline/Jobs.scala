@@ -161,8 +161,10 @@ object Jobs {
       .join(openVariants, Seq("variant_id"), "inner")
       .join(broadcast(store.questions.select(col("id").as("question_id"),
         col("question"))), Seq("question_id"), "inner")
+    // answer ids hash in experiment_id, so only this experiment's
+    // judgments can match: prune the scan to its partition
     val alreadyJudged = store.judgments
-      .where(col("judge_model") === judgeModel)
+      .where(col("experiment_id") === exp.id && col("judge_model") === judgeModel)
       .select(col("answer_id").as("id"))
     answers.join(alreadyJudged, Seq("id"), "left_anti")
   }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.{Artifact, Table}
+import graft.sources.{Artifact, Slices, Table}
 
 /** Persisted incremental near-dup CLUSTER REGISTRY — the operational
   * tail of the dedup lifecycle. The batch operators turn pairs into
@@ -123,11 +123,6 @@ object Clusters {
           "completes (an orphaned marker means it crashed; re-run " +
           "Maintenance.nightly to heal)")
 
-  private def hasBatchDirs(fs: org.apache.hadoop.fs.FileSystem,
-                           dir: String): Boolean =
-    fs.exists(hp(dir)) && fs.listStatus(hp(dir))
-      .exists(_.getPath.getName.startsWith("batch_id="))
-
   /** The persisted registry layout. The lifecycle re-opens
     * members+remaps+meta on every update/resolve/lookup. batch_id is
     * BIGINT, not the INT directory inference yields on small ids: the
@@ -152,14 +147,14 @@ object Clusters {
                           path: String): Option[DataFrame] = {
     val fs = graft.sources.Hdfs.forPath(spark, path)
     graft.sources.TableSwap.recover(fs, path, "members")
-    if (!hasBatchDirs(fs, s"$path/members")) None
+    if (Slices.ids(fs, s"$path/members").isEmpty) None
     else Some(RegistryArtifact("members").read(spark, path))
   }
 
   private def readRemaps(spark: SparkSession,
                          path: String): Option[DataFrame] = {
     val fs = graft.sources.Hdfs.forPath(spark, path)
-    if (!hasBatchDirs(fs, s"$path/remaps")) None
+    if (Slices.ids(fs, s"$path/remaps").isEmpty) None
     else Some(RegistryArtifact("remaps").read(spark, path))
   }
 
@@ -356,9 +351,8 @@ object Clusters {
       .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("root"))
       .withColumn("part", pmod(col("doc_id"), lit(parts.toLong)).cast("int"))
       .withColumn("batch_id", lit(batchId))
-    RegistryArtifact("members").writer(members).mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(RegistryArtifact("members").at(path))
+    Slices.overwrite(RegistryArtifact("members").writer(members),
+      RegistryArtifact("members").at(path))
     // merge edges: every absorbed pre-existing root points at the
     // component label (strictly smaller — the acyclicity invariant)
     val remapRows = checked.select(col("root")).distinct()
@@ -366,9 +360,8 @@ object Clusters {
       .where(col("comp") =!= col("root"))
       .select(col("root").as("old_root"), col("comp").as("new_root"))
       .withColumn("batch_id", lit(batchId))
-    RegistryArtifact("remaps").writer(remapRows).mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(RegistryArtifact("remaps").at(path))
+    Slices.overwrite(RegistryArtifact("remaps").writer(remapRows),
+      RegistryArtifact("remaps").at(path))
   }
 
   /** The registry's answer: (doc_id, cluster_id) for every registered
@@ -467,11 +460,7 @@ object Clusters {
     val archiveWanted = consolidateUpTo.exists { upTo =>
       // a members rewrite is warranted only if >1 batch dir would
       // collapse (listing is metadata-cheap; the rewrite is not)
-      fs.exists(hp(s"$path/members")) &&
-        fs.listStatus(hp(s"$path/members"))
-          .map(_.getPath.getName).filter(_.startsWith("batch_id="))
-          .flatMap(_.stripPrefix("batch_id=").toLongOption)
-          .count(_ <= upTo) > 1
+      Slices.ids(fs, s"$path/members").count(_ <= upTo) > 1
     }
     if (remaps.isEmpty && !archiveWanted) { if (orphaned) clearMarker(); return }
     val m = readMembers(spark, path)
@@ -501,14 +490,12 @@ object Clusters {
     // racing the truncation are already safe
     clearMarker()
     if (remaps.nonEmpty) {
-      fs.listStatus(hp(s"$path/remaps")).map(_.getPath)
-        .filter(_.getName.startsWith("batch_id="))
-        .foreach { d =>
-          if (!fs.delete(d, true)) throw new java.io.IOException(
-            s"could not truncate merge-log slice $d after folding — " +
-              "harmless to correctness (re-application is a no-op) but " +
-              "the next compaction must retry it")
-        }
+      Slices.ids(fs, s"$path/remaps").foreach { id =>
+        if (!Slices.dropSlice(fs, s"$path/remaps", id)) throw new java.io.IOException(
+          s"could not truncate merge-log slice $id after folding — " +
+            "harmless to correctness (re-application is a no-op) but " +
+            "the next compaction must retry it")
+      }
       spark.catalog.refreshByPath(s"$path/remaps")
     }
   }

@@ -242,11 +242,7 @@ object Maintenance {
                               path: String): NightlyReport = {
     val fs = graft.sources.Hdfs.forPath(spark, path)
     graft.sources.TableSwap.recover(fs, path, "members")
-    val remapsDir = new org.apache.hadoop.fs.Path(s"$path/remaps")
-    val slices =
-      if (fs.exists(remapsDir))
-        fs.listStatus(remapsDir).count(_.getPath.getName.startsWith("batch_id="))
-      else 0
+    val slices = graft.sources.Slices.ids(fs, s"$path/remaps").size
     // an orphaned _compacting marker = a fold crashed mid-run and every
     // resolver/update is refusing on it; the compaction owns the heal
     // (recover + refold + clear) — run it even with zero slices left,

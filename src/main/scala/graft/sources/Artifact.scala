@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** One table of a persisted [[Artifact]]: directory under the root,
@@ -107,7 +107,8 @@ final case class Table(dir: String, ddl: String, partitionBy: String*) {
     fs.delete(batch, true)
     val frag = fragmented(fs, dir, maxFilesPerPart)
     if (frag.nonEmpty) {
-      spark.read.option("basePath", at(root)).parquet(frag.map(_.toString): _*)
+      spark.read.schema(schema).option("basePath", at(root))
+        .parquet(frag.map(_.toString): _*)
         .repartition(frag.length, col(partitionBy.head))
         .write.partitionBy(partitionBy.head).mode("overwrite").parquet(batch.toString)
       frag.foreach { part =>
@@ -151,6 +152,42 @@ final case class Table(dir: String, ddl: String, partitionBy: String*) {
       .filter(_.getName.startsWith(s"${partitionBy.head}="))
       .filter(part => fs.listStatus(part)
         .count(f => f.isFile && f.getPath.getName.endsWith(".parquet")) > maxFilesPerPart)
+}
+
+/** Per-batch slices: tables partitioned by `batch_id` whose partitions
+  * are each written whole by one batch — the streaming sinks' verdicts,
+  * probe pairs, enrichments and quarantine trail, and the cluster
+  * registry's members and merge log. A slice is written by a dynamic
+  * partition overwrite, so a replayed batch replaces its own partitions
+  * and no other; a batch that writes zero rows creates no partition. */
+private[graft] object Slices {
+  private def dir(root: String, id: Long) = new HPath(s"$root/batch_id=$id")
+
+  /** Replace under `root` exactly the partitions `w`'s rows fall in. */
+  def overwrite(w: DataFrameWriter[Row], root: String): Unit =
+    w.mode("overwrite").option("partitionOverwriteMode", "dynamic").parquet(root)
+
+  /** Write `df` as batch `id`'s slice under `root`. */
+  def writeSlice(df: DataFrame, root: String, id: Long): Unit =
+    overwrite(df.withColumn("batch_id", lit(id)).write.partitionBy("batch_id"), root)
+
+  /** Batch `id`'s slice under `root` (without the `batch_id` column),
+    * or None when the batch wrote no partition there. Reads the one
+    * partition dir, so the listing is O(1) in the batches committed. */
+  def readSlice(spark: SparkSession, root: String, id: Long): Option[DataFrame] =
+    if (Hdfs.forPath(spark, root).exists(dir(root, id)))
+      Some(spark.read.parquet(dir(root, id).toString))
+    else None
+
+  /** Delete batch `id`'s slice under `root`; whether it is gone. */
+  def dropSlice(fs: FileSystem, root: String, id: Long): Boolean =
+    fs.delete(dir(root, id), true) || !fs.exists(dir(root, id))
+
+  /** The batch ids holding a slice under `root`. */
+  def ids(fs: FileSystem, root: String): Seq[Long] =
+    if (!fs.exists(new HPath(root))) Nil
+    else fs.listStatus(new HPath(root)).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith("batch_id=")).flatMap(_.stripPrefix("batch_id=").toLongOption)
 }
 
 /** The on-disk contract of one persisted family (every index, model and

@@ -211,8 +211,9 @@ object DocStreams {
     * BATCH consumer mid-stream.
     *
     * Delivery contract, stated honestly: verdicts are EXACTLY-ONCE —
-    * two-phase: the probe's verdicts are written (dynamic partition
-    * overwrite keyed by batch_id) and sealed by a verdicts marker
+    * the sealed-batch protocol every curation sink runs
+    * ([[SinkMarkers.sealedBatch]]): the probe's verdicts are written (a
+    * batch_id slice, [[graft.sources.Slices]]) and sealed by a verdicts marker
     * BEFORE the append, so a replay after any later crash point reuses
     * the sealed verdicts verbatim instead of re-probing (re-probing
     * would see the batch's own appended rows and flip intra-batch
@@ -241,8 +242,8 @@ object DocStreams {
     *   is skipped first-writer-wins (its original registration stands;
     *   its pairs drop with it — `Clusters.Skip`). Registry updates are
     *   replay-pure, so the sink's at-least-once crash windows leave it
-    *   exactly-once like the verdicts; [[gcSinkMarkers]] prunes pairs
-    *   dirs at or below the marker floor on the same cadence. */
+    *   exactly-once like the verdicts; [[gcSinkMarkers]] prunes pair
+    *   slices at or below the marker floor on the same cadence. */
   def indexedDedupSink(docs: DataFrame, indexPath: String,
                        verdictsPath: String, threshold: Double,
                        maxBucket: Option[Int] = None,
@@ -273,11 +274,14 @@ object DocStreams {
       Dedup.appendToLshIndex(_, indexPath),
       Dedup.compactLshBands(batch.sparkSession, indexPath, maxFilesPerPart))
 
-  /** The sealed-verdict protocol shared by [[processIndexedBatch]] and
-    * [[processImageBatch]], over the index's probes keyed by `idCol`:
-    * `verdicts` and `pairs` probe a batch, `population` is the verdict
-    * population (`doc_id`) of a batch, `append` adds survivors to the
-    * index and `compact` runs on the `compactEvery` cadence. */
+  /** The doc sinks' parts of the sealed-batch protocol
+    * ([[SinkMarkers.sealedBatch]], phase seal `_verdicts`), shared by
+    * [[processIndexedBatch]] and [[processImageBatch]] over the index's
+    * probes keyed by `idCol`: `verdicts` and `pairs` probe a batch,
+    * `population` is the verdict population (`doc_id`) of a batch,
+    * `append` adds survivors (the non-dups of the sealed verdicts; none
+    * when the probe wrote no verdict rows) to the index and `compact`
+    * runs on the `compactEvery` cadence. */
   private def sealedIndexBatch(batch: DataFrame, id: Long,
       verdictsPath: String, idCol: String, compactEvery: Int,
       registryPath: Option[String])(
@@ -287,127 +291,89 @@ object DocStreams {
     import org.apache.hadoop.fs.{Path => HPath}
     val spark = batch.sparkSession
     val fs = graft.sources.Hdfs.forPath(spark, verdictsPath)
-    val marker = new HPath(s"$verdictsPath/_committed/batch_$id")
-    // replayed, fully committed (marker present, or the id sits under
-    // the marker-GC floor — [[gcSinkMarkers]]): no-op
-    if (SinkMarkers.isCommitted(fs, verdictsPath, id)) return
-    def seal(p: HPath): Unit = SinkMarkers.seal(fs, p)
-    val cached = batch.cache()
-    try {
-      if (!cached.isEmpty) {
-        // phase 1 — verdicts, sealed BEFORE any append so a replay
-        // can never recompute them against an index that already
-        // holds this batch's survivors
-        val verdictSeal = new HPath(s"$verdictsPath/_verdicts/batch_$id")
-        def pairsDir = new HPath(s"$verdictsPath/_pairs/batch_id=$id")
-        // the pairs slice's own commit marker: a zero-pair batch
-        // writes NOTHING under _pairs (dynamic overwrite of an empty
-        // frame creates no dir), so dir-absence alone cannot
-        // distinguish "legitimately no matches" from "slice lost /
-        // stream predates registry mode" — the seal makes the
-        // artifact unambiguous
-        val pairsSeal = new HPath(s"$verdictsPath/_pairs_sealed/batch_$id")
-        def storedPairs = if (fs.exists(pairsDir))
-          spark.read.parquet(pairsDir.toString).select(col("bid"), col("cid"))
-        else spark.range(0).select(col("id").as("bid"), col("id").as("cid"))
-        if (!fs.exists(verdictSeal)) {
-          registryPath match {
-            case None =>
-              verdicts(cached)
-                .withColumn("batch_id", lit(id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id").parquet(verdictsPath)
-            case Some(_) =>
-              // registry mode: the PAIRS are the primary probe
-              // artifact (the registry needs every match, not the min
-              // rollup) — persist them first, derive the verdicts from
-              // the persisted form (one band-scan probe total; the
-              // read-back is the same materialization barrier as the
-              // verdict reuse on replay), seal both under one marker
-              pairs(cached)
-                .withColumn("batch_id", lit(id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id").parquet(s"$verdictsPath/_pairs")
-              seal(pairsSeal)
-              Dedup.verdictsFromPairs(population(cached), storedPairs)
-                .withColumnRenamed("doc_id", idCol)
-                .withColumn("batch_id", lit(id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id").parquet(verdictsPath)
-          }
-          seal(verdictSeal)
-        }
-        // phase 2 — survivors come off the SEALED verdicts (the same
-        // materialization barrier as the batch lifecycle, and the
-        // replay path by construction). Reading the one partition dir
-        // directly keeps the per-trigger listing O(1), not O(every
-        // batch ever committed). An LSH batch whose docs ALL had empty
-        // shingle sets (blank/too-short text) probes to zero rows, so
-        // the partition dir never exists — nothing to append; reading
-        // it anyway would throw on every replay behind the seal.
-        val verdictDir = new HPath(s"$verdictsPath/batch_id=$id")
-        if (fs.exists(verdictDir)) {
-          val survivors = cached.join(
-            spark.read.parquet(verdictDir.toString)
-              .where(!col("is_dup")).select(col(idCol)),
-            idCol)
-          if (!survivors.isEmpty) append(survivors)
-        }
-        if (compactEvery > 0 && id % compactEvery == compactEvery - 1)
-          compact
-        // phase 3 — cluster registry, off the SEALED pairs (never a
-        // re-probe: the index already holds this batch's survivors on
-        // a replay). updateRegistry is replay-pure, so any crash
-        // between here and the final marker re-lands identical rows.
-        registryPath.foreach { reg =>
-          // the registry consumes the sealed pairs verbatim — a batch
-          // whose verdicts are sealed but whose pairs artifact is
-          // unaccounted for (no seal, no dir: the stream ran its
-          // earlier batches without registryPath, or the slice was
-          // lost/GC'd prematurely) must NOT register as all-singletons
-          // behind sealed match verdicts. The dir-presence disjunct
-          // grandfathers registry-mode batches sealed before the
-          // pairs seal existed.
-          if (!fs.exists(pairsSeal) && !fs.exists(pairsDir))
-            throw new IllegalStateException(
-              s"registry mode: batch $id has sealed verdicts but no " +
-                s"pairs artifact ($pairsDir absent and no $pairsSeal) — " +
-                "its match pairs are unknowable, so updating the " +
-                "registry would register the whole batch as singletons. " +
-                "Re-run the batch's probe (discard its _verdicts marker " +
-                "and verdict partition, then replay), or register this " +
-                "history with a one-shot backfill, before enabling " +
-                "registry mode over it.")
-          // Skip = first-writer-wins (the engine's S2 semantics): an
-          // at-least-once upstream redelivering an old doc in a NEW
-          // batch must neither wedge the stream (Refuse) nor mint a
-          // duplicate member row (Trust) — its original registration
-          // stands and its pairs are dropped with it, deterministically
-          graft.operators.Clusters.updateRegistry(spark, reg, id,
-            cached.select(col(idCol).as("doc_id")), storedPairs,
-            onRegistered = graft.operators.Clusters.Skip)
-          if (compactEvery > 0 && id % compactEvery == compactEvery - 1)
-            graft.operators.Clusters.compactRegistry(spark, reg)
-        }
+    val pairsRoot = s"$verdictsPath/_pairs"
+    // the pairs slice's own commit marker: a zero-pair batch writes
+    // NOTHING under _pairs (dynamic overwrite of an empty frame creates
+    // no dir), so dir-absence alone cannot distinguish "legitimately no
+    // matches" from "slice lost / stream predates registry mode" — the
+    // seal makes the artifact unambiguous
+    val pairsSeal = new HPath(s"$verdictsPath/_pairs_sealed/batch_$id")
+    def storedPairs(slice: Option[DataFrame]) = slice
+      .map(_.select(col("bid"), col("cid")))
+      .getOrElse(spark.range(0).select(col("id").as("bid"), col("id").as("cid")))
+    def probe(cached: DataFrame): DataFrame = registryPath match {
+      case None => verdicts(cached)
+      case Some(_) =>
+        // registry mode: the PAIRS are the primary probe artifact (the
+        // registry needs every match, not the min rollup) — persist
+        // them first, derive the verdicts from the persisted form (one
+        // band-scan probe total; the read-back is the same
+        // materialization barrier as the verdict reuse on replay), seal
+        // both under the verdicts seal
+        graft.sources.Slices.writeSlice(pairs(cached), pairsRoot, id)
+        SinkMarkers.seal(fs, pairsSeal)
+        Dedup.verdictsFromPairs(population(cached),
+            storedPairs(graft.sources.Slices.readSlice(spark, pairsRoot, id)))
+          .withColumnRenamed("doc_id", idCol)
+    }
+    def maintain(cached: DataFrame): Unit = {
+      if (SinkMarkers.onCadence(compactEvery, id)) compact
+      // phase 3 — cluster registry, off the SEALED pairs (never a
+      // re-probe: the index already holds this batch's survivors on a
+      // replay). updateRegistry is replay-pure, so any crash between
+      // here and the final marker re-lands identical rows.
+      registryPath.foreach { reg =>
+        val slice = graft.sources.Slices.readSlice(spark, pairsRoot, id)
+        // the registry consumes the sealed pairs verbatim — a batch
+        // whose verdicts are sealed but whose pairs artifact is
+        // unaccounted for (no seal, no slice: the stream ran its
+        // earlier batches without registryPath, or the slice was
+        // lost/GC'd prematurely) must NOT register as all-singletons
+        // behind sealed match verdicts. The slice-presence disjunct
+        // grandfathers registry-mode batches sealed before the pairs
+        // seal existed.
+        if (!fs.exists(pairsSeal) && slice.isEmpty)
+          throw new IllegalStateException(
+            s"registry mode: batch $id has sealed verdicts but no " +
+              s"pairs artifact (no slice under $pairsRoot and no " +
+              s"$pairsSeal) — its match pairs are unknowable, so updating " +
+              "the registry would register the whole batch as singletons. " +
+              "Re-run the batch's probe (discard its _verdicts marker " +
+              "and verdict partition, then replay), or register this " +
+              "history with a one-shot backfill, before enabling " +
+              "registry mode over it.")
+        // Skip = first-writer-wins (the engine's S2 semantics): an
+        // at-least-once upstream redelivering an old doc in a NEW batch
+        // must neither wedge the stream (Refuse) nor mint a duplicate
+        // member row (Trust) — its original registration stands and its
+        // pairs are dropped with it, deterministically
+        graft.operators.Clusters.updateRegistry(spark, reg, id,
+          cached.select(col(idCol).as("doc_id")), storedPairs(slice),
+          onRegistered = graft.operators.Clusters.Skip)
+        if (SinkMarkers.onCadence(compactEvery, id))
+          graft.operators.Clusters.compactRegistry(spark, reg)
       }
-      seal(marker)
-    } finally cached.unpersist(blocking = false)
+    }
+    SinkMarkers.sealedBatch(batch, id, verdictsPath, "_verdicts")(probe,
+      (cached, sealedVerdicts) => sealedVerdicts.map(v =>
+        cached.join(v.where(!col("is_dup")).select(col(idCol)), idCol)),
+      append, maintain)
   }
 
-  /** Retention GC for [[indexedDedupSink]]'s marker dirs: every
-    * committed micro-batch leaves one `_committed/batch_<id>` and one
-    * `_verdicts/batch_<id>` file forever — months of 1-minute triggers
-    * accrete ~10⁵ small files of pure metadata on an object store.
-    * Prunes both for ids `<= upTo` via [[SinkMarkers.gc]], which first
-    * records the floor as a single name-encoded file so a replay of a
-    * pruned id is STILL a no-op (the exactly-once contract survives
-    * GC — spec-pinned). Run it on the operational cadence with an
-    * `upTo` at or below the stream checkpoint's committed offset; the
-    * verdict DATA partitions are never touched — EXCEPT the per-batch
-    * probe-pair partitions a registry-mode stream persists
+  /** Marker retention GC for every sealed-batch sink
+    * ([[indexedDedupSink]], [[imageDedupSink]], [[curationSink]],
+    * [[VectorStreams.indexedVectorSink]]): every committed micro-batch
+    * leaves a `_committed/batch_<id>` file and its phase markers
+    * (`_verdicts` or `_enriched`, plus `_pairs_sealed` in registry mode
+    * and `_decon` on curation streams) forever — months of 1-minute
+    * triggers accrete ~10⁵ small files of pure metadata on an object
+    * store. Prunes them all for ids `<= upTo` via [[SinkMarkers.gc]],
+    * which first records the floor as a single name-encoded file so a
+    * replay of a pruned id is STILL a no-op (the exactly-once contract
+    * survives GC — spec-pinned). Run it on the operational cadence with
+    * an `upTo` at or below the stream checkpoint's committed offset;
+    * the data slices are never touched — EXCEPT the per-batch
+    * probe-pair slices a registry-mode stream persists
     * (`_pairs/batch_id=<id>`), which exist only to make replays
     * re-derive identical verdicts and registry rows: at or below the
     * floor a replay no-ops before ever reading them, so they are
@@ -422,66 +388,28 @@ object DocStreams {
     * never concurrently with a live batch — the TableSwap
     * single-maintainer rule. Returns the floor now in effect. */
   def gcSinkMarkers(spark: org.apache.spark.sql.SparkSession,
-                    verdictsPath: String, upTo: Long): Long = {
-    val floor = SinkMarkers.gc(spark, verdictsPath, upTo,
-      Seq("_verdicts", "_pairs_sealed"))
-    gcPairSlices(spark, verdictsPath, floor)
-    floor
-  }
+                    outPath: String, upTo: Long): Long =
+    SinkMarkers.gc(spark, outPath, upTo)
 
-  /** [[gcSinkMarkers]] for [[curationSink]] streams: additionally
-    * prunes the per-batch decon-fingerprint markers (`_decon/
-    * batch_<id>_<fp>`) on the same committed floor — a batch at or
-    * below the floor replays as a no-op before the fingerprint is
-    * ever consulted, so its marker is dead weight. */
-  def gcCurationMarkers(spark: org.apache.spark.sql.SparkSession,
-                        verdictsPath: String, upTo: Long): Long = {
-    val floor = SinkMarkers.gc(spark, verdictsPath, upTo,
-      Seq("_verdicts", "_decon", "_pairs_sealed"))
-    gcPairSlices(spark, verdictsPath, floor)
-    floor
-  }
-
-  private def gcPairSlices(spark: org.apache.spark.sql.SparkSession,
-                           verdictsPath: String, floor: Long): Unit = {
-    val fs = graft.sources.Hdfs.forPath(spark, verdictsPath)
-    val root = new org.apache.hadoop.fs.Path(s"$verdictsPath/_pairs")
-    if (!fs.exists(root)) return
-    fs.listStatus(root).map(_.getPath)
-      .filter(_.getName.startsWith("batch_id="))
-      .filter(_.getName.stripPrefix("batch_id=").toLongOption
-        .exists(_ <= floor))
-      .foreach { p =>
-        // checked like compactRegistry's remap-slice truncation: a
-        // persistently undeletable slice must surface, not be silently
-        // re-attempted forever (harmless to replays — the id is under
-        // the marker floor — but an operator needs to see a stuck GC)
-        if (!fs.delete(p, true) && fs.exists(p))
-          throw new java.io.IOException(
-            s"pairs-slice GC could not delete $p (batch is at or below " +
-              s"the committed floor $floor) — check filesystem " +
-              "permissions; replays are unaffected but the slice will " +
-              "be retried every GC until removed")
-      }
-  }
-
-  /** Delete an UNSEALED attempt's verdict + pairs partitions (and the
-    * pairs seal — seal first, so no crash state leaves a seal vouching
-    * for a purged slice). Only callable before anything for the batch
-    * is sealed; the recomputation is the only legitimate source of the
-    * batch's rows from that point. */
+  /** Delete an UNSEALED attempt's verdict, pairs and quarantine slices
+    * (and the pairs seal — seal first, so no crash state leaves a seal
+    * vouching for a purged slice). Only callable before anything for the
+    * batch is sealed; the recomputation is the only legitimate source of
+    * the batch's rows from that point. */
   private def purgeUnsealedAttempt(fs: org.apache.hadoop.fs.FileSystem,
-                                   verdictsPath: String, id: Long): Unit =
-    Seq(s"$verdictsPath/_pairs_sealed/batch_$id",
-        s"$verdictsPath/batch_id=$id",
-        s"$verdictsPath/_pairs/batch_id=$id").foreach { p =>
-      val dir = new org.apache.hadoop.fs.Path(p)
-      if (fs.exists(dir) && !fs.delete(dir, true))
-        throw new IllegalStateException(
-          s"could not delete the stale attempt's partition $dir " +
-            "written against the superseded decon index — " +
-            "aborting before it could leak into a committed batch")
+      verdictsPath: String, quarantinePath: Option[String], id: Long): Unit = {
+    def fail(what: String): Nothing = throw new IllegalStateException(
+      s"could not delete the stale attempt's $what written against the " +
+        "superseded decon index — aborting before it could leak into a " +
+        "committed batch")
+    val pairsSeal = new org.apache.hadoop.fs.Path(
+      s"$verdictsPath/_pairs_sealed/batch_$id")
+    if (!fs.delete(pairsSeal, false) && fs.exists(pairsSeal)) fail(s"$pairsSeal")
+    (Seq(verdictsPath, s"$verdictsPath/_pairs") ++ quarantinePath).foreach { root =>
+      if (!graft.sources.Slices.dropSlice(fs, root, id))
+        fail(s"batch $id slice under $root")
     }
+  }
 
   /** Gate threshold for [[curationSink]]'s repetition stage: a doc
     * whose positional duplicate-`dupN`-gram character coverage
@@ -526,9 +454,9 @@ object DocStreams {
     * that finds sealed verdicts under a different — or missing —
     * fingerprint throws instead of silently appending the wrong
     * survivors (all spec-pinned; a fingerprint change before the seal
-    * is safe and just re-records). Use [[gcCurationMarkers]] — not
-    * [[gcSinkMarkers]] — for marker retention on these streams so the
-    * `_decon` markers are pruned on the same floor. */
+    * is safe and just re-records, purging the superseded attempt's
+    * verdict, pairs and quarantine slices). [[gcSinkMarkers]], the one
+    * marker GC, prunes the `_decon` markers on the same floor. */
   def curationSink(docs: DataFrame, indexPath: String, deconPath: String,
                    verdictsPath: String, threshold: Double,
                    maxContainment: Double = 0.8,
@@ -620,7 +548,7 @@ object DocStreams {
             "mismatch, re-seal the _decon marker with the current " +
             "fingerprint), or discard the batch's _verdicts/_decon markers " +
             "AND its verdict partition, then restart; re-save benchmarks " +
-            "only between committed batches (the gcCurationMarkers " +
+            "only between committed batches (the gcSinkMarkers " +
             "cadence).")
       }
       SinkMarkers.suffixOf(fs, deconDir, id) match {
@@ -639,18 +567,19 @@ object DocStreams {
                 s"$stale; sealing a second marker for batch $id would " +
                 "make the replay tripwire nondeterministic — aborting " +
                 "this trigger (the replay re-enters cleanly)")
-          // the crashed attempt may have written verdict (and, in
-          // registry mode, probe-pair) partitions against the OLD
+          // the crashed attempt may have written verdict, quarantine
+          // (and, in registry mode, probe-pair) slices against the OLD
           // index before dying unsealed. The recomputation under the
           // new index rewrites them via dynamic overwrite — EXCEPT
           // when it produces zero rows, which overwrites nothing: the
-          // stale partitions would then survive into a committed batch
-          // (phantom verdicts; in registry mode, verdictsFromPairs and
-          // updateRegistry would consume the stale pairs outright).
+          // stale slices would then survive into a committed batch
+          // (phantom verdicts or contamination rows; in registry mode,
+          // verdictsFromPairs and updateRegistry would consume the
+          // stale pairs outright).
           // Nothing is sealed yet, so deleting them here is always
           // safe — the recomputation is the only legitimate source of
           // this batch's rows.
-          purgeUnsealedAttempt(fs, verdictsPath, id)
+          purgeUnsealedAttempt(fs, verdictsPath, quarantinePath, id)
           SinkMarkers.seal(fs, new org.apache.hadoop.fs.Path(deconDir,
             s"batch_${id}_$fp"))
         case Some(_) => // same index — the idempotent-replay case
@@ -666,7 +595,7 @@ object DocStreams {
           // purging — both replay as None with partitions whose index
           // provenance is unknowable, and a zero-row recomputation
           // would commit around them exactly like the Some(old) case
-          purgeUnsealedAttempt(fs, verdictsPath, id)
+          purgeUnsealedAttempt(fs, verdictsPath, quarantinePath, id)
           SinkMarkers.seal(fs, new org.apache.hadoop.fs.Path(deconDir,
             s"batch_${id}_$fp"))
       }
@@ -714,14 +643,12 @@ object DocStreams {
       // marker seals, and dynamic overwrite keyed by batch_id makes a
       // replayed write byte-for-byte idempotent (stages are pure)
       quarantinePath.foreach { qp =>
-        repBad.map(_.withColumn("stage", lit("repetition")))
-          .getOrElse(spark.emptyDataFrame
-            .select(lit(0L).as("doc_id"), lit("").as("stage")).limit(0))
-          .unionByName(contaminated.withColumn("stage", lit("contamination")))
-          .withColumn("batch_id", lit(id))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(qp)
+        graft.sources.Slices.writeSlice(
+          repBad.map(_.withColumn("stage", lit("repetition")))
+            .getOrElse(spark.emptyDataFrame
+              .select(lit(0L).as("doc_id"), lit("").as("stage")).limit(0))
+            .unionByName(contaminated.withColumn("stage", lit("contamination"))),
+          qp, id)
       }
       // stage 3 — the exactly-once dedup lifecycle, unchanged
       processIndexedBatch(curated, id, indexPath, verdictsPath,

@@ -1,13 +1,17 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.{Hdfs, Slices}
 
-/** Commit-marker bookkeeping shared by the foreachBatch curation sinks
-  * ([[DocStreams.indexedDedupSink]] and its vector twin): each
-  * micro-batch seals per-phase markers under the sink's output dir —
-  * `_committed/batch_<id>` (fully committed, replay is a no-op) plus a
-  * phase-1 seal (`_verdicts/…` / `_enriched/…`). One small file per
+/** The sealed-batch protocol every foreachBatch curation sink runs
+  * ([[DocStreams.indexedDedupSink]], [[DocStreams.imageDedupSink]],
+  * [[DocStreams.curationSink]], [[VectorStreams.indexedVectorSink]]),
+  * and its commit-marker bookkeeping. Each micro-batch seals per-phase
+  * markers under the sink's output dir — `_committed/batch_<id>` (fully
+  * committed, replay is a no-op) plus a phase-1 seal (`_verdicts/…` /
+  * `_enriched/…`) and the sinks' side records (`_pairs_sealed/…`,
+  * `_decon/…`). One small file per
   * trigger per dir is real metadata pressure on object stores over a
   * long-running stream (months of 1-minute triggers ≈ 10⁵ files), so
   * retention GC prunes markers for batch ids at or below a FLOOR and
@@ -29,7 +33,9 @@ import org.apache.spark.sql.SparkSession
   * Cost model per trigger: a committed replay is one `exists` call;
   * a new batch additionally lists `_committed/` once to read the
   * floor — O(markers since the last GC), which the GC itself keeps
-  * small. The data partitions (`batch_id=<id>`) are never touched. */
+  * small. The batch's data slices (`batch_id=<id>`, [[Slices]]) are
+  * never touched by the GC, except the `_pairs` slices, which exist
+  * only for replays. */
 private[graft] object SinkMarkers {
 
   private def committedDir(outPath: String) = new HPath(s"$outPath/_committed")
@@ -89,15 +95,23 @@ private[graft] object SinkMarkers {
     found.headOption
   }
 
-  /** Prune markers for batch ids `<= upTo` from `_committed` and each
-    * of `phaseDirs`, after raising the floor. The floor only rises to
-    * the highest PRESENT commit marker at or below `upTo` (never past
-    * committed work), and the floor file is written BEFORE any marker
-    * is deleted — a crash mid-GC leaves the contract intact and the
-    * next GC resumes the deletes. Returns the floor now in effect. */
-  def gc(spark: SparkSession, outPath: String, upTo: Long,
-         phaseDirs: Seq[String]): Long = {
-    val fs = graft.sources.Hdfs.forPath(spark, outPath)
+  /** Every dir of per-batch markers a sink may keep besides
+    * `_committed`: the phase-1 seals (`_verdicts` for the doc sinks,
+    * `_enriched` for the vector sink), the pairs seal of registry mode
+    * and the curation sink's decon fingerprints. */
+  private val phaseDirs = Seq("_verdicts", "_pairs_sealed", "_decon", "_enriched")
+
+  /** Prune markers for batch ids `<= upTo` from `_committed` and every
+    * phase dir, after raising the floor, then the `_pairs` slices at or
+    * below it (a replay at or below the floor no-ops before reading
+    * them). An absent dir is a no-op, so one GC serves every sink. The
+    * floor only rises to the highest PRESENT commit marker at or below
+    * `upTo` (never past committed work), and the floor file is written
+    * BEFORE any marker is deleted — a crash mid-GC leaves the contract
+    * intact and the next GC resumes the deletes. Returns the floor now
+    * in effect. */
+  def gc(spark: SparkSession, outPath: String, upTo: Long): Long = {
+    val fs = Hdfs.forPath(spark, outPath)
     val dir = committedDir(outPath)
     val prev = floor(fs, outPath)
     if (!fs.exists(dir)) return prev
@@ -118,6 +132,58 @@ private[graft] object SinkMarkers {
       .filter(_.getName.startsWith("_floor_"))
       .filter(_.getName.stripPrefix("_floor_").toLongOption.exists(_ < newFloor))
       .foreach(fs.delete(_, false))
+    val pairs = s"$outPath/_pairs"
+    Slices.ids(fs, pairs).filter(_ <= newFloor).foreach { id =>
+      // a persistently undeletable slice must surface, not be silently
+      // re-attempted forever (harmless to replays — the id is under the
+      // marker floor — but an operator needs to see a stuck GC)
+      if (!Slices.dropSlice(fs, pairs, id))
+        throw new java.io.IOException(
+          s"pairs-slice GC could not delete batch $id under $pairs (at or " +
+            s"below the committed floor $newFloor) — check filesystem " +
+            "permissions; replays are unaffected but the slice will be " +
+            "retried every GC until removed")
+    }
     newFloor
+  }
+
+  /** Whether batch `id` falls on an every-`n`-batches cadence (0 = never). */
+  def onCadence(n: Int, id: Long): Boolean = n > 0 && id % n == n - 1
+
+  /** One micro-batch of a sealed-batch sink writing under `outPath`.
+    * A committed batch (marker present, or under the GC floor) is a
+    * no-op. Otherwise, for a non-empty batch:
+    *  1. unless `sealDir/batch_<id>` is sealed, `probe` the batch (it
+    *     may write and seal side artifacts of its own first) and write
+    *     its rows as the batch's slice, then seal — BEFORE any append,
+    *     so a replay never re-probes an index that already holds this
+    *     batch's rows;
+    *  2. `survivors` of the batch given its SEALED slice (None when the
+    *     probe wrote zero rows, so no partition exists; the replay path
+    *     by construction) are passed to `append`, if any;
+    *  3. `maintain` runs the sink's cadences over the batch.
+    * The commit marker seals last. Appends and maintenance are
+    * AT-LEAST-ONCE: a crash before the commit marker replays them. */
+  def sealedBatch(batch: DataFrame, id: Long, outPath: String, sealDir: String)(
+      probe: DataFrame => DataFrame,
+      survivors: (DataFrame, Option[DataFrame]) => Option[DataFrame],
+      append: DataFrame => Unit, maintain: DataFrame => Unit): Unit = {
+    val spark = batch.sparkSession
+    val fs = Hdfs.forPath(spark, outPath)
+    if (isCommitted(fs, outPath, id)) return
+    val cached = batch.cache()
+    try {
+      if (!cached.isEmpty) {
+        val phaseSeal = new HPath(s"$outPath/$sealDir/batch_$id")
+        if (!fs.exists(phaseSeal)) {
+          Slices.writeSlice(probe(cached), outPath, id)
+          seal(fs, phaseSeal)
+        }
+        survivors(cached, Slices.readSlice(spark, outPath, id))
+          .filterNot(_.isEmpty).foreach(append)
+        maintain(cached)
+      }
+      seal(fs, new HPath(committedDir(outPath), s"batch_$id"))
+    } finally cached.unpersist(blocking = false)
   }
 }

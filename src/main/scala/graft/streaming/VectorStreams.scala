@@ -201,9 +201,10 @@ object VectorStreams {
     * files). `vec_id`s must be unique stream-wide, the analog of the
     * dedup sink's doc_id-disjointness.
     *
-    * Delivery contract, same shape as the dedup sink's: enrichment
-    * verdicts are EXACTLY-ONCE — written first and sealed by an
-    * `_enriched` marker BEFORE any append, so a replay after a later
+    * Delivery contract, the dedup sinks' sealed-batch protocol
+    * ([[SinkMarkers.sealedBatch]]): enrichment verdicts are
+    * EXACTLY-ONCE — written first and sealed by an `_enriched` marker
+    * BEFORE any append, so a replay after a later
     * crash reuses them verbatim; re-probing after the append would see
     * the batch's own novel vectors as candidate neighbors (the
     * self-exclusion covers only identical vec_ids) and flip
@@ -213,7 +214,7 @@ object VectorStreams {
     * can rank a duplicated neighbor twice until
     * [[Similarity.repairPqIvf]] restores row-level hygiene (run it on
     * the operational cadence, like compaction). Markers are GC'd by
-    * [[gcSinkMarkers]]. */
+    * the one sink GC, [[DocStreams.gcSinkMarkers]]. */
   def indexedVectorSink(vectors: DataFrame, indexPath: String,
                         enrichedPath: String, k: Int, nProbe: Int,
                         rescoreK: Int, novelCos: Double,
@@ -229,66 +230,34 @@ object VectorStreams {
     }
 
   /** One micro-batch of [[indexedVectorSink]] — exposed so the replay
-    * and crash-window specs can drive it directly. */
+    * and crash-window specs can drive it directly. The sealed-batch
+    * protocol ([[SinkMarkers.sealedBatch]], phase seal `_enriched`) with
+    * this sink's parts: novelty comes off the SEALED enrichment, and a
+    * batch whose arrivals found NO candidates at all (every probed cell
+    * empty) seals zero rows — every arrival is novel. */
   private[graft] def processVectorBatch(batch: DataFrame, id: Long,
       indexPath: String, enrichedPath: String, k: Int, nProbe: Int,
       rescoreK: Int, novelCos: Double, driftCheckEvery: Int,
       driftSampleMod: Int, skewBound: Double, recallFloor: Double,
       compactEvery: Int, maxFilesPerPart: Int): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
     val spark = batch.sparkSession
-    val fs = graft.sources.Hdfs.forPath(spark, enrichedPath)
-    if (SinkMarkers.isCommitted(fs, enrichedPath, id)) return
-    val cached = batch.cache()
-    try {
-      if (!cached.isEmpty) {
-        // phase 1 — enrichment, sealed BEFORE any append
-        val seal1 = new HPath(s"$enrichedPath/_enriched/batch_$id")
-        if (!fs.exists(seal1)) {
-          Similarity.pqIvfSearch(spark, indexPath, cached, k, nProbe,
-              rescoreK)
-            .withColumn("batch_id", lit(id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id").parquet(enrichedPath)
-          SinkMarkers.seal(fs, seal1)
-        }
-        // phase 2 — novelty comes off the SEALED enrichment (the same
-        // materialization barrier as the dedup sink's survivors read;
-        // one partition dir, O(1) listing per trigger). A batch whose
-        // arrivals found NO candidates at all (every probed cell
-        // empty) commits zero rows, so the partition dir never exists
-        // — everything is novel; reading it anyway would throw on
-        // every replay behind the already-written seal.
-        val partDir = new HPath(s"$enrichedPath/batch_id=$id")
-        val novel =
-          if (!fs.exists(partDir)) cached
-          else cached.join(
-            spark.read.parquet(partDir.toString)
-              .where(col("cos") >= novelCos)
-              .select(col("q_id").as("vec_id")).distinct(),
-            Seq("vec_id"), "left_anti")
-        if (!novel.isEmpty) Similarity.appendToPqIvf(novel, indexPath)
-        if (compactEvery > 0 && id % compactEvery == compactEvery - 1)
+    SinkMarkers.sealedBatch(batch, id, enrichedPath, "_enriched")(
+      Similarity.pqIvfSearch(spark, indexPath, _, k, nProbe, rescoreK),
+      (cached, enriched) => Some(enriched.fold(cached)(e => cached.join(
+        e.where(col("cos") >= novelCos).select(col("q_id").as("vec_id")).distinct(),
+        Seq("vec_id"), "left_anti"))),
+      Similarity.appendToPqIvf(_, indexPath),
+      _ => {
+        if (SinkMarkers.onCadence(compactEvery, id))
           Similarity.PqIvfArtifact("cells").compact(spark, indexPath,
             maxFilesPerPart)
-        if (driftCheckEvery > 0 && id % driftCheckEvery == driftCheckEvery - 1) {
+        if (SinkMarkers.onCadence(driftCheckEvery, id)) {
           val report = Similarity.pqIvfDriftCheck(spark, indexPath,
             driftSampleMod, k, nProbe, rescoreK, skewBound, recallFloor)
           if (report.drifted) Similarity.rebuildPqIvf(spark, indexPath)
         }
-      }
-      SinkMarkers.seal(fs, new HPath(s"$enrichedPath/_committed/batch_$id"))
-    } finally cached.unpersist(blocking = false)
+      })
   }
-
-  /** Marker retention GC for [[indexedVectorSink]] — the
-    * [[DocStreams.gcSinkMarkers]] contract with this sink's phase dir:
-    * prunes `_committed` and `_enriched` markers at or below `upTo`
-    * behind a floor file; replays of pruned ids stay no-ops. */
-  def gcSinkMarkers(spark: org.apache.spark.sql.SparkSession,
-                    enrichedPath: String, upTo: Long): Long =
-    SinkMarkers.gc(spark, enrichedPath, upTo, Seq("_enriched"))
 
   /** Descending-cosine sort key matching Spark's `desc("cos")`
     * ordering rules exactly on the degenerate doubles: Spark orders

@@ -146,6 +146,38 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("the judging work list scans only its own experiment's judgments partition") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    val store = freshStore()
+    val progress = new ProgressStore
+    val client = new DeterministicStubClient
+    Seq(exp, exp.copy(id = 2, name = "e2e-2")).foreach { e =>
+      store.saveExperiment(e)
+      Jobs.runGeneration(store, progress, client, e.id, parallelism = 4)
+      Jobs.runJudging(store, progress, client, e.id, "judge-1", parallelism = 4)
+    }
+    assert(store.judgments.select("experiment_id").distinct().count() === 2)
+    // judge-1 judged every open answer: both join sides are non-empty,
+    // so the final adaptive plan keeps the judgments scan
+    val work = Jobs.judgingWorkList(store, store.getExperiment(1L).get, "judge-1")
+    assert(work.collect().isEmpty)
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case _ => p +: p.children.flatMap(walk)
+    }
+    val plan = work.queryExecution.executedPlan
+    val scans = walk(plan).collect {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.toString.contains("judgments")) => s
+    }
+    assert(scans.size === 1, plan)
+    assert(scans.head.partitionFilters.exists(_.references.exists(_.name == "experiment_id")),
+      plan)
+    assert(scans.head.selectedPartitions.partitionCount === 1, plan)
+  }
+
   test("judging an experiment with no answers judges zero and completes") {
     // reference: _judge_worker on a 'created' experiment sets
     // status="judging" unconditionally, finds zero open answers, and

@@ -156,5 +156,7 @@ class TableSwapSpec extends AnyFunSuite {
       all
     }
     assert(counts.distinct.size === 1, s"jobs grow with the partitions: $counts")
+    // the stated-schema read starts no footer-inference job
+    assert(counts.head === 2, s"jobs: $counts")
   }
 }

@@ -50,6 +50,14 @@ class CurationSinkSpec extends AnyFunSuite {
     d
   }
 
+  /** A decon index over a benchmark no fixture doc overlaps. */
+  private def mkDisjointDecon(): String = {
+    val d = tmp("cur_decon") + "/decon"
+    Dedup.saveDeconIndex(Seq((1L, (1 to 12).map(i => s"qzxv$i").mkString(" ")))
+      .toDF("doc_id", "text"), k = 8, d, nHashParts = 8)
+    d
+  }
+
   /** The batch twin of one curation micro-batch: gate → decon → the
     * manual probe/append loop against `idx`. Returns the probe's
     * verdict rows (collected BEFORE the append — rerunning the probe
@@ -372,6 +380,37 @@ class CurationSinkSpec extends AnyFunSuite {
       === Some(Dedup.deconIndexFingerprint(spark, decon)))
   }
 
+  test("fingerprint re-record purges the superseded attempt's quarantine slice (a recompute that quarantines nothing cannot commit around it)") {
+    val idx = tmp("cur_idx10")
+    val verdicts = tmp("cur_verd10")
+    val q = tmp("cur_q10")
+    // the recomputation quarantines nothing, so its dynamic overwrite
+    // writes no partition
+    val decon = mkDisjointDecon()
+    Dedup.saveLshIndex(role(0), k = 3, bands = 8, rowsPerBand = 4, idx,
+      nBucketParts = 8)
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new org.apache.hadoop.fs.Path(verdicts).toUri,
+      spark.sessionState.newHadoopConf())
+    // attempt 1 under a SUPERSEDED decon index quarantined doc 999 and
+    // crashed before the verdict seal
+    Seq((999L, "contamination")).toDF("doc_id", "stage")
+      .withColumn("batch_id", lit(0L))
+      .write.partitionBy("batch_id").mode("overwrite").parquet(q)
+    SinkMarkers.seal(fs,
+      new org.apache.hadoop.fs.Path(s"$verdicts/_decon/batch_0_deadbeef"))
+    DocStreams.processCurationBatch(role(1), 0L, idx, decon, verdicts,
+      threshold = 0.05, maxContainment = 0.5, gate = None,
+      quarantinePath = Some(q), maxBucket = Some(3), compactEvery = 0,
+      maxFilesPerPart = 8)
+    assert(fs.exists(new org.apache.hadoop.fs.Path(
+      s"$verdicts/_committed/batch_0")), "the batch must commit")
+    val slice = new org.apache.hadoop.fs.Path(s"$q/batch_id=0")
+    assert(!fs.exists(slice) ||
+      spark.read.parquet(slice.toString).where(col("doc_id") === 999L).isEmpty,
+      "the superseded attempt's quarantine rows must be purged")
+  }
+
   test("two coexisting fingerprint markers for one batch fail loudly (ambiguous record)") {
     val verdicts = tmp("cur_verd7b")
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -407,7 +446,7 @@ class CurationSinkSpec extends AnyFunSuite {
       quarantinePath = None, maxBucket = Some(3), compactEvery = 0,
       maxFilesPerPart = 8)
     drive(0); drive(1)
-    assert(DocStreams.gcCurationMarkers(spark, verdicts, upTo = 1L) === 1L)
+    assert(DocStreams.gcSinkMarkers(spark, verdicts, upTo = 1L) === 1L)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new org.apache.hadoop.fs.Path(verdicts).toUri,
       spark.sessionState.newHadoopConf())
@@ -425,6 +464,37 @@ class CurationSinkSpec extends AnyFunSuite {
     val before = state()
     drive(0)
     assert(state() === before)
+    // the one GC serves every sink: on a registry-mode curation dir it
+    // prunes the _decon and _pairs_sealed markers and the _pairs slices
+    // together with _committed/_verdicts (the unsynthesized corpus
+    // slices, ungated and uncontaminated, so batch 2 carries pairs)
+    val idxR = tmp("cur_idx8r")
+    val verdR = tmp("cur_verd8r")
+    val reg = tmp("cur_reg8r") + "/reg"
+    val deconR = mkDisjointDecon()
+    def plain(b: Int) = docsAll.where(pmod(col("doc_id"), lit(12)) === b)
+    Dedup.saveLshIndex(plain(0), k = 3, bands = 8, rowsPerBand = 4, idxR,
+      nBucketParts = 8)
+    graft.operators.Clusters.updateRegistry(spark, reg, -1L,
+      plain(0).select(col("doc_id")),
+      Seq.empty[(Long, Long)].toDF("bid", "cid"), nDocParts = 8)
+    (0 to 2).foreach { b =>
+      DocStreams.processCurationBatch(plain(b + 1), b.toLong, idxR, deconR,
+        verdR, threshold = 0.05, maxContainment = 0.5, gate = None,
+        quarantinePath = None, maxBucket = Some(3), compactEvery = 0,
+        maxFilesPerPart = 8, registryPath = Some(reg))
+    }
+    def names(d: String, prefix: String) = fs.listStatus(
+        new org.apache.hadoop.fs.Path(s"$verdR/$d"))
+      .map(_.getPath.getName).filter(_.startsWith(prefix)).sorted.toSeq
+    assert(names("_pairs_sealed", "batch_") === Seq("batch_0", "batch_1", "batch_2"))
+    assert(names("_decon", "batch_").size === 3)
+    assert(names("_pairs", "batch_id=").nonEmpty, "fixture must persist pair slices")
+    assert(DocStreams.gcSinkMarkers(spark, verdR, upTo = 2L) === 2L)
+    Seq("_committed", "_verdicts", "_decon", "_pairs_sealed").foreach { d =>
+      assert(names(d, "batch_").isEmpty, s"$d still holds ${names(d, "batch_")}")
+    }
+    assert(names("_pairs", "batch_id=").isEmpty, "pair slices must be pruned")
   }
 
   test("empty batch and gate=None both commit cleanly") {

@@ -101,7 +101,7 @@ class IndexedVectorSinkSpec extends AnyFunSuite {
     drive(role(1), 0L, idx, out)
     assert(state() === before, "marker replay must change nothing")
     // GC both marker dirs behind the floor; pruned ids still no-op
-    assert(VectorStreams.gcSinkMarkers(spark, out, upTo = 1L) === 1L)
+    assert(DocStreams.gcSinkMarkers(spark, out, upTo = 1L) === 1L)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new org.apache.hadoop.fs.Path(out).toUri,
       spark.sessionState.newHadoopConf())
