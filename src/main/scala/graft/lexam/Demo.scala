@@ -40,10 +40,10 @@ object Demo {
     val client = new DeterministicStubClient
 
     val nAnswers = Jobs.runGeneration(store, progress, client, 1L, parallelism = 4)
-    println(s"[generate] answers=$nAnswers progress=${progress.get("generate:1")}")
+    println(s"[generate] answers=$nAnswers progress=${progress.get(Jobs.generationKey(1L))}")
 
     val nJudged = Jobs.runJudging(store, progress, client, 1L, "stub-judge", parallelism = 4)
-    println(s"[judge] judgments=$nJudged progress=${progress.get("judge:1:stub-judge")}")
+    println(s"[judge] judgments=$nJudged progress=${progress.get(Jobs.judgingKey(1L, "stub-judge"))}")
 
     val enriched = ExperimentAnalytics.enriched(store.answers, store.variants,
       store.questions, store.judgments, 1L).cache()

@@ -120,15 +120,4 @@ object Ingest {
       col("choices"), col("gold"), col("answer"))
     (questions, variants)
   }
-
-  /** Startup schema migration (main.py:14-30's `ALTER TABLE ... ADD
-    * COLUMN IF NOT EXISTS`): add any column of `target` missing from
-    * the table with its default (batch equivalent: withColumn +
-    * rewrite). Existing columns are untouched. */
-  def ensureColumns(df: DataFrame,
-                    target: Seq[(String, org.apache.spark.sql.types.DataType, Any)]): DataFrame =
-    target.foldLeft(df) { case (acc, (name, dt, default)) =>
-      if (acc.columns.contains(name)) acc
-      else acc.withColumn(name, lit(default).cast(dt))
-    }
 }

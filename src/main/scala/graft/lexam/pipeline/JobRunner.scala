@@ -38,17 +38,17 @@ class JobRunner(store: LexamStore, progress: ProgressStore,
   /** POST /api/experiments/{id}/generate — rejects when already busy
     * (the router's 409 guard). */
   def startGeneration(experimentId: Long): Future[Long] =
-    launch(s"generate:$experimentId")(
+    launch(Jobs.generationKey(experimentId))(
       Jobs.runGeneration(store, progress, client, experimentId, parallelism))
 
   /** POST /api/experiments/{id}/judge */
   def startJudging(experimentId: Long, judgeModel: String): Future[Long] =
-    launch(s"judge:$experimentId:$judgeModel")(
+    launch(Jobs.judgingKey(experimentId, judgeModel))(
       Jobs.runJudging(store, progress, client, experimentId, judgeModel, parallelism))
 
   /** GET progress — the poll endpoint shape. */
   def pollGeneration(experimentId: Long): Map[String, Any] =
-    progress.get(s"generate:$experimentId")
+    progress.get(Jobs.generationKey(experimentId))
   def pollJudging(experimentId: Long, judgeModel: String): Map[String, Any] =
-    progress.get(s"judge:$experimentId:$judgeModel")
+    progress.get(Jobs.judgingKey(experimentId, judgeModel))
 }

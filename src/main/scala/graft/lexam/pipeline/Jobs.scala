@@ -1,8 +1,8 @@
 package graft.lexam.pipeline
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{IntegerType, StringType}
 import graft.lexam._
 import graft.functions.{TextFunctions => TF}
 
@@ -16,6 +16,15 @@ import graft.functions.{TextFunctions => TF}
   * (`parallelism`), where the reference is a single sequential thread
   * (generation.py:85-125).
   *
+  * Both jobs run one lifecycle, [[runLlmJob]] (the reference's two
+  * workers share its shape, generation.py:76-135 and judging.py:30-112):
+  * busy check, counted work list, busy status, the LLM stage, the
+  * finishing columns, the append, the done status or the error path.
+  * [[runGeneration]] and [[runJudging]] pass only their own parts. The
+  * LLM stage runs to completion once, before the append takes the
+  * store's write lock, so status writes and experiment edits on the same
+  * store never wait out a run's LLM calls.
+  *
   * Idempotence (P7): the answer/judgment primary key is a deterministic
   * hash of the business key, and resume anti-joins existing rows — so
   * re-runs and Spark task retries never double-bill LLM calls
@@ -28,6 +37,92 @@ object Jobs {
   private def answerId = xxhash64(lit("ans"), col("experiment_id"),
     col("variant_id"), col("run_index"))
   private def judgmentId = xxhash64(lit("jdg"), col("answer_id"), col("judge_model"))
+
+  /** Job and progress keys, in the reference convention
+    * (generation.py:69, judging.py:23). */
+  def generationKey(experimentId: Long): String = s"generate:$experimentId"
+  def judgingKey(experimentId: Long, judgeModel: String): String =
+    s"judge:$experimentId:$judgeModel"
+
+  /** One LLM job's own parts, built from its experiment. `work` holds a
+    * `prompt` column; every other work column passes through the LLM
+    * stage, which adds `text` and the `input_tokens`/`output_tokens`
+    * columns. `finish` maps the answered rows, given `experiment_id` and
+    * `created_at`, to the stored columns; `append` stores them and
+    * `written` counts the stored rows. */
+  private final case class LlmJob(work: DataFrame, model: String,
+                                  system: Option[String], temperature: Double,
+                                  maxTokens: Int, text: String,
+                                  finish: DataFrame => DataFrame,
+                                  append: DataFrame => Unit, written: () => Long)
+
+  /** The one LLM job lifecycle. The work list is materialized once: its
+    * count is the progress total and the LLM stage reads the same rows,
+    * without re-running the work list's joins. The stage is then
+    * checkpointed eagerly: the calls run exactly once, outside the
+    * store's write lock, and the append reads their stored output
+    * (a `persist` could be evicted and recomputed, re-billing the calls
+    * and double-counting `completed`). Returns the written count. */
+  private def runLlmJob(store: LexamStore, progress: ProgressStore,
+                        client: LlmClient, experimentId: Long, parallelism: Int,
+                        key: String, busy: String, done: String)(
+                        parts: Experiment => LlmJob): Long = {
+    val spark = store.spark
+    val exp = store.getExperiment(experimentId)
+      .getOrElse(throw new NoSuchElementException(s"experiment $experimentId"))
+    require(!StatusMachine.isBusy(exp.status),
+      s"experiment busy: ${exp.status}") // routers/generation.py:14-22
+    val job = parts(exp)
+    val completed = spark.sparkContext.longAccumulator(s"$key:completed")
+    val failed = spark.sparkContext.longAccumulator(s"$key:failed")
+    val work = job.work.persist()
+    try {
+      // an RDD count is one job over the cached rows; `Dataset.count`
+      // plans an aggregate whose exchange AQE runs as two more jobs
+      progress.create(key, work.rdd.count(), completed, failed)
+      store.setStatus(experimentId, busy)
+
+      // locals: the task closure must not capture the job's frames
+      val LlmJob(_, model, system, temp, maxTok, text, _, _, _) = job
+      val prompt = work.columns.indexOf("prompt")
+      val keep = work.columns.indices.filter(_ != prompt)
+      val enc = Encoders.row(work.drop("prompt").schema.add(text, StringType)
+        .add("input_tokens", IntegerType).add("output_tokens", IntegerType))
+      // P3/P4: per-item external call with retry; failures isolated to
+      // the row (NULL text) and counted, job continues.
+      val raw = work.repartition(parallelism).mapPartitions { rows =>
+        val retrying = new RetryingClient(client)
+        rows.map { r =>
+          val reply = try {
+            val messages = system.map(LlmMessage("system", _)).toSeq :+
+              LlmMessage("user", r.getString(prompt))
+            val res = retrying.complete(model, messages, temp, maxTok)
+            completed.add(1)
+            Seq(res.content, res.inputTokens, res.outputTokens)
+          } catch {
+            case scala.util.control.NonFatal(_) =>
+              failed.add(1)
+              Seq(null, null, null)
+          }
+          Row.fromSeq(keep.map(r.get) ++ reply)
+        }
+      }(enc).localCheckpoint()
+
+      job.append(job.finish(raw
+        .where(col(text).isNotNull) // failed calls are not persisted
+        .withColumn("experiment_id", lit(experimentId))
+        .withColumn("created_at", current_timestamp())))
+      val written = job.written()
+      store.setStatus(experimentId, done)
+      progress.finish(key)
+      written
+    } catch {
+      case scala.util.control.NonFatal(e) =>
+        store.setStatus(experimentId, "error")
+        progress.finish(key, Some(e.getMessage))
+        throw e
+    } finally work.unpersist()
+  }
 
   // ------------------------------------------------------- generation
 
@@ -60,94 +155,33 @@ object Jobs {
 
   /** Run generation for one experiment. Returns the number of answers
     * written. The LLM call is the only imperative stage; grading is
-    * declarative afterwards (X1/X3/X8). The work list is materialized
-    * once: its count is the progress total and the LLM stage reads the
-    * same rows, without re-running the work list's joins. */
+    * declarative afterwards (X1/X3/X8). */
   def runGeneration(store: LexamStore, progress: ProgressStore,
                     client: LlmClient, experimentId: Long,
-                    parallelism: Int = 32): Long = {
-    val spark = store.spark
-    val exp = store.getExperiment(experimentId)
-      .getOrElse(throw new NoSuchElementException(s"experiment $experimentId"))
-    require(!StatusMachine.isBusy(exp.status),
-      s"experiment busy: ${exp.status}") // routers/generation.py:14-22
-    val key = s"generate:$experimentId"
-    val completed = spark.sparkContext.longAccumulator(s"$key:completed")
-    val failed = spark.sparkContext.longAccumulator(s"$key:failed")
-    val work = withPrompt(generationWorkList(store, exp), exp)
-      .select(col("id").as("variant_id"), col("run_index"),
-        col("config"), col("gold"), col("prompt"))
-      .persist()
-    try {
-      val total = work.count()
-      progress.create(key, total, completed, failed)
-      store.setStatus(experimentId, "generating")
-
-      val model = exp.model_name; val temp = exp.temperature
-      val maxTok = exp.max_tokens
-      val outSchema = StructType(Seq(
-        StructField("variant_id", LongType), StructField("run_index", IntegerType),
-        StructField("config", StringType), StructField("gold", IntegerType),
-        StructField("answer_text", StringType),
-        StructField("input_tokens", IntegerType),
-        StructField("output_tokens", IntegerType)))
-      val enc = org.apache.spark.sql.Encoders.row(outSchema)
-
-      // P3/P4: per-item external call with retry; failures isolated to
-      // the row (null answer) and counted, job continues.
-      val raw = work.repartition(parallelism).mapPartitions { rows =>
-        val retrying = new RetryingClient(client)
-        rows.map { r =>
-          val prompt = r.getAs[String]("prompt")
-          try {
-            val res = retrying.complete(model,
-              Seq(LlmMessage("user", prompt)), temp, maxTok)
-            completed.add(1)
-            Row(r.getAs[Long]("variant_id"), r.getAs[Int]("run_index"),
-              r.getAs[String]("config"),
-              if (r.isNullAt(r.fieldIndex("gold"))) null else r.getAs[Int]("gold"),
-              res.content, res.inputTokens, res.outputTokens)
-          } catch {
-            case scala.util.control.NonFatal(_) =>
-              failed.add(1)
-              Row(r.getAs[Long]("variant_id"), r.getAs[Int]("run_index"),
-                r.getAs[String]("config"),
-                if (r.isNullAt(r.fieldIndex("gold"))) null else r.getAs[Int]("gold"),
-                null, null, null)
-          }
-        }
-      }(enc)
-
+                    parallelism: Int = 32): Long =
+    runLlmJob(store, progress, client, experimentId, parallelism,
+        generationKey(experimentId), "generating", "generated") { exp =>
       // Declarative grading (generation.py:110-118): letter + correctness
       // only for MCQ variants with a gold index.
-      val isMcq = col("config").startsWith("mcq_")
-      val graded = raw
-        .where(col("answer_text").isNotNull) // failed calls are not persisted
-        .withColumn("experiment_id", lit(experimentId))
-        .withColumn("model_name", lit(model))
-        .withColumn("extracted_letter",
-          when(isMcq && col("gold").isNotNull, TF.extractLetter(col("answer_text"))))
-        .withColumn("mcq_correct",
-          when(isMcq && col("gold").isNotNull,
-            TF.mcqCorrect(col("extracted_letter"), col("gold"))))
-        .withColumn("id", answerId)
-        .withColumn("created_at", current_timestamp())
-        .select("id", "experiment_id", "variant_id", "run_index", "model_name",
-          "answer_text", "extracted_letter", "mcq_correct",
-          "input_tokens", "output_tokens", "created_at")
-
-      store.appendAnswers(graded)
-      val written = store.answers.where(col("experiment_id") === experimentId).count()
-      store.setStatus(experimentId, "generated")
-      progress.finish(key)
-      written
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        store.setStatus(experimentId, "error")
-        progress.finish(key, Some(e.getMessage))
-        throw e
-    } finally work.unpersist()
-  }
+      val graded = col("config").startsWith("mcq_") && col("gold").isNotNull
+      LlmJob(
+        work = withPrompt(generationWorkList(store, exp), exp)
+          .select(col("id").as("variant_id"), col("run_index"),
+            col("config"), col("gold"), col("prompt")),
+        model = exp.model_name, system = None, temperature = exp.temperature,
+        maxTokens = exp.max_tokens, text = "answer_text",
+        finish = _.withColumn("model_name", lit(exp.model_name))
+          .withColumn("extracted_letter",
+            when(graded, TF.extractLetter(col("answer_text"))))
+          .withColumn("mcq_correct",
+            when(graded, TF.mcqCorrect(col("extracted_letter"), col("gold"))))
+          .withColumn("id", answerId)
+          .select("id", "experiment_id", "variant_id", "run_index", "model_name",
+            "answer_text", "extracted_letter", "mcq_correct",
+            "input_tokens", "output_tokens", "created_at"),
+        append = store.appendAnswers,
+        written = () => store.answers.where(col("experiment_id") === experimentId).count())
+    }
 
   // ---------------------------------------------------------- judging
 
@@ -181,82 +215,30 @@ object Jobs {
         when(cleanAnswer === "", "(no answer)").otherwise(cleanAnswer)))
   }
 
-  /** Run judging for one experiment and judge; the work list is
-    * materialized once, as in [[runGeneration]]. */
+  /** Run judging for one experiment and judge. Scores come from the
+    * think-stripped judgment (judging.py:85-87, X2/X4). */
   def runJudging(store: LexamStore, progress: ProgressStore,
                  client: LlmClient, experimentId: Long, judgeModel: String,
-                 parallelism: Int = 32): Long = {
-    val spark = store.spark
-    val exp = store.getExperiment(experimentId)
-      .getOrElse(throw new NoSuchElementException(s"experiment $experimentId"))
-    require(!StatusMachine.isBusy(exp.status), s"experiment busy: ${exp.status}")
-    val key = s"judge:$experimentId:$judgeModel"
-    val completed = spark.sparkContext.longAccumulator(s"$key:completed")
-    val failed = spark.sparkContext.longAccumulator(s"$key:failed")
-    val work = withJudgePrompt(judgingWorkList(store, exp, judgeModel), exp)
-      .select(col("id").as("answer_id"), col("judge_user_prompt"))
-      .persist()
-    try {
-      val total = work.count()
-      progress.create(key, total, completed, failed)
-      store.setStatus(experimentId, "judging")
-
-      val sysPrompt = exp.judge_system_prompt
-      val temp = exp.judge_temperature; val maxTok = exp.judge_max_tokens
-      val outSchema = StructType(Seq(
-        StructField("answer_id", LongType),
-        StructField("judgment_text", StringType),
-        StructField("input_tokens", IntegerType),
-        StructField("output_tokens", IntegerType)))
-      val enc = org.apache.spark.sql.Encoders.row(outSchema)
-
-      val raw = work.repartition(parallelism).mapPartitions { rows =>
-        val retrying = new RetryingClient(client)
-        rows.map { r =>
-          val prompt = r.getAs[String]("judge_user_prompt")
-          try {
-            val messages =
-              (if (sysPrompt != null && sysPrompt.nonEmpty)
-                Seq(LlmMessage("system", sysPrompt)) else Nil) :+
-                LlmMessage("user", prompt)
-            val res = retrying.complete(judgeModel, messages, temp, maxTok)
-            completed.add(1)
-            Row(r.getAs[Long]("answer_id"), res.content,
-              res.inputTokens, res.outputTokens)
-          } catch {
-            case scala.util.control.NonFatal(_) =>
-              failed.add(1)
-              Row(r.getAs[Long]("answer_id"), null, null, null)
-          }
-        }
-      }(enc)
-
-      // Score from the think-stripped judgment (judging.py:85-87, X2/X4).
-      val scored = raw
-        .where(col("judgment_text").isNotNull)
-        .withColumn("judge_model", lit(judgeModel))
-        .withColumn("score", TF.extractScore(TF.stripThinking(col("judgment_text"))))
-        .withColumn("id", judgmentId)
-        .withColumn("created_at", current_timestamp())
+                 parallelism: Int = 32): Long =
+    runLlmJob(store, progress, client, experimentId, parallelism,
+        judgingKey(experimentId, judgeModel), "judging", "completed") { exp =>
+      LlmJob(
+        work = withJudgePrompt(judgingWorkList(store, exp, judgeModel), exp)
+          .select(col("id").as("answer_id"), col("judge_user_prompt").as("prompt")),
+        model = judgeModel, system = Option(exp.judge_system_prompt).filter(_.nonEmpty),
+        temperature = exp.judge_temperature, maxTokens = exp.judge_max_tokens,
+        text = "judgment_text",
         // experiment_id is the storage partition key (not in the
         // reference schema — derived, harmless extra column)
-        .withColumn("experiment_id", lit(experimentId))
-        .select("id", "answer_id", "judge_model", "judgment_text", "score",
-          "input_tokens", "output_tokens", "created_at", "experiment_id")
-
-      store.appendJudgments(scored)
-      val written = store.liveJudgments(Some(experimentId))
-        .where(col("judge_model") === judgeModel).count()
-      store.setStatus(experimentId, "completed")
-      progress.finish(key)
-      written
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        store.setStatus(experimentId, "error")
-        progress.finish(key, Some(e.getMessage))
-        throw e
-    } finally work.unpersist()
-  }
+        finish = _.withColumn("judge_model", lit(judgeModel))
+          .withColumn("score", TF.extractScore(TF.stripThinking(col("judgment_text"))))
+          .withColumn("id", judgmentId)
+          .select("id", "answer_id", "judge_model", "judgment_text", "score",
+            "input_tokens", "output_tokens", "created_at", "experiment_id"),
+        append = store.appendJudgments,
+        written = () => store.liveJudgments(Some(experimentId))
+          .where(col("judge_model") === judgeModel).count())
+    }
 
   /** DELETE /{id}/answers (routers/generation.py:73-84): drop the
     * answers, force status "created", clear the generation progress
@@ -271,7 +253,7 @@ object Jobs {
       store.deleteAnswers(experimentId)
       exp.copy(status = "created")
     }.getOrElse(throw new NoSuchElementException(s"experiment $experimentId"))
-    progress.remove(s"generate:$experimentId")
+    progress.remove(generationKey(experimentId))
   }
 
   /** DELETE /{id}/judgments (routers/judging.py:80-108): drop the

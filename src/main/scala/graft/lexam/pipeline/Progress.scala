@@ -6,9 +6,9 @@ import org.apache.spark.util.LongAccumulator
   * `backend/app/progress.py`). Counters are Spark `LongAccumulator`s so
   * executor tasks report progress live to the driver; the snapshot
   * shape (total/completed/failed/status/elapsed/rate/eta, rounded the
-  * same way) matches `progress.py:45-65`. Keys follow the reference
-  * convention: `generate:<id>` / `judge:<id>:<model>`
-  * (generation.py:69, judging.py:23).
+  * same way) matches `progress.py:45-65`. Keys are
+  * `Jobs.generationKey`/`Jobs.judgingKey`, in the reference convention
+  * `generate:<id>` / `judge:<id>:<model>` (generation.py:69, judging.py:23).
   *
   * Note: Spark re-runs failed tasks, so accumulator counts can
   * transiently over-report during retries — same monotone-progress

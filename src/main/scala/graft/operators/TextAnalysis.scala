@@ -37,9 +37,6 @@ object TextAnalysis {
   def langHitsFromTokens(tokens: Column, words: Seq[String]): Column =
     size(filter(tokens, t => t.isInCollection(words)))
 
-  def langHits(text: Column, words: Seq[String]): Column =
-    langHitsFromTokens(toks(text), words)
-
   /** Predicted language from a pre-tokenized array: argmax of stopword
     * hits, priority-ordered tiebreak, "und" when zero hits. Hit counts
     * come from ONE native pass over the tokens

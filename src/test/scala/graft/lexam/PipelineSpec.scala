@@ -1,5 +1,8 @@
 package graft.lexam
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
@@ -110,6 +113,33 @@ class PipelineSpec extends AnyFunSuite {
     val prog = progress.get("generate:2")
     assert(prog("completed") === 1L && prog("failed") === 1L)
     assert(store.getExperiment(2L).get.status === "generated") // job continues
+
+    // judging leg: the open answers of q1,q3,q4,q6 (variants 3,5,6,8,10);
+    // the judge call on q4's answer fails permanently
+    store.saveExperiment(exp.copy(id = 6, name = "flaky-judge",
+      filter_config = FilterConfig(config = Seq("open_question")), n_answers = 1))
+    assert(Jobs.runGeneration(store, progress, new DeterministicStubClient, 6L,
+      parallelism = 2) === 5)
+    val flakyJudge = new LlmClient {
+      private val stub = new DeterministicStubClient
+      override def complete(model: String, messages: Seq[LlmMessage],
+                            temperature: Double, maxTokens: Int): LlmResult = {
+        if (messages.exists(_.content.contains("juristische Person")))
+          throw new RuntimeException("permanent upstream failure")
+        stub.complete(model, messages, temperature, maxTokens)
+      }
+    }
+    val judged = Jobs.runJudging(store, progress, flakyJudge, 6L, "judge-1", parallelism = 2)
+    assert(judged === 4)
+    val failedAnswer = store.answers.where(col("experiment_id") === 6 && col("variant_id") === 8)
+      .select("id").as[Long].collect().toSeq
+    assert(failedAnswer.size === 1)
+    val judgedAnswers = store.judgments.where(col("experiment_id") === 6)
+      .select("answer_id").as[Long].collect().toSet
+    assert(judgedAnswers.size === 4 && !judgedAnswers.contains(failedAnswer.head))
+    val judgeProg = progress.get("judge:6:judge-1")
+    assert(judgeProg("completed") === 4L && judgeProg("failed") === 1L)
+    assert(store.getExperiment(6L).get.status === "completed")
   }
 
   test("retry with backoff recovers transient errors (P3)") {
@@ -217,6 +247,24 @@ class PipelineSpec extends AnyFunSuite {
     val n2 = scala.concurrent.Await.result(runner.startGeneration(5L),
       scala.concurrent.duration.Duration("60s"))
     assert(n2 === 7)
+  }
+
+  test("the LLM calls run outside the store's write lock: a create completes during a generation") {
+    val store = freshStore()
+    store.saveExperiment(exp.copy(id = 8, name = "locked", n_answers = 1))
+    val progress = new ProgressStore
+    BlockingClient.reset()
+    val runner = new JobRunner(store, progress, new BlockingClient, parallelism = 2)
+    val f = runner.startGeneration(8L)
+    try {
+      assert(BlockingClient.started.await(60, TimeUnit.SECONDS))
+      val created = Future(store.createExperiment(
+        Experiment(id = 0, name = "created-while-generating")))(ExecutionContext.global)
+      assert(Await.result(created, Duration("30s")).status === "created")
+    } finally BlockingClient.release.countDown()
+    val generated = Await.result(f, Duration("60s"))
+    assert(generated === 7)
+    assert(progress.get("generate:8")("completed") === generated)
   }
 
   test("delete endpoints: judgments roll completed→generated, answers reset to created") {
@@ -394,5 +442,27 @@ class PipelineSpec extends AnyFunSuite {
     val byId = merged.select("id", "tokens_used").collect()
       .map(r => r.getLong(0) -> Option(r.get(1))).toMap
     assert(byId === Map(10L -> None, 11L -> Some(42)))
+  }
+}
+
+/** A stub client whose every call waits for `release`, counting down
+  * `started` first. The client is serialized into the tasks, so its
+  * latches live in this object, not in the instance. */
+class BlockingClient extends LlmClient {
+  private val stub = new DeterministicStubClient
+  override def complete(model: String, messages: Seq[LlmMessage],
+                        temperature: Double, maxTokens: Int): LlmResult = {
+    BlockingClient.started.countDown()
+    BlockingClient.release.await(120, TimeUnit.SECONDS)
+    stub.complete(model, messages, temperature, maxTokens)
+  }
+}
+
+object BlockingClient {
+  @volatile var started = new CountDownLatch(1)
+  @volatile var release = new CountDownLatch(1)
+  def reset(): Unit = {
+    started = new CountDownLatch(1)
+    release = new CountDownLatch(1)
   }
 }
