@@ -61,11 +61,11 @@ object Filters {
     search.filter(_.nonEmpty).foreach { term =>
       val t = term.toLowerCase
       val matchingVariants = variants
-        .where(lower(col("answer")).contains(t))
+        .where(IcuLower.lower(variants.sparkSession, "answer").contains(t))
         .select(col("question_id").as("id")).distinct()
         .withColumn("_ans_match", lit(true))
       q = q.join(matchingVariants, Seq("id"), "left_outer")
-        .where(lower(col("question")).contains(t) || col("_ans_match").isNotNull)
+        .where(IcuLower.lower(q.sparkSession, "question").contains(t) || col("_ans_match").isNotNull)
         .drop("_ans_match")
     }
     q

@@ -56,6 +56,11 @@ object Jobs {
                                   finish: DataFrame => DataFrame,
                                   append: DataFrame => Unit, written: () => Long)
 
+  /** `df`'s row count as an RDD count: one job over `df`'s last stage,
+    * where `Dataset.count` plans an aggregate whose exchange AQE runs as
+    * one more job. Only the first column is read. */
+  private def rowCount(df: DataFrame): Long = df.select(df.columns.head).rdd.count()
+
   /** The one LLM job lifecycle. The work list is materialized once: its
     * count is the progress total and the LLM stage reads the same rows,
     * without re-running the work list's joins. The stage is then
@@ -77,9 +82,7 @@ object Jobs {
     val failed = spark.sparkContext.longAccumulator(s"$key:failed")
     val work = job.work.persist()
     try {
-      // an RDD count is one job over the cached rows; `Dataset.count`
-      // plans an aggregate whose exchange AQE runs as two more jobs
-      progress.create(key, work.rdd.count(), completed, failed)
+      progress.create(key, rowCount(work), completed, failed)
       store.setStatus(experimentId, busy)
 
       // locals: the task closure must not capture the job's frames
@@ -180,7 +183,7 @@ object Jobs {
             "answer_text", "extracted_letter", "mcq_correct",
             "input_tokens", "output_tokens", "created_at"),
         append = store.appendAnswers,
-        written = () => store.answers.where(col("experiment_id") === experimentId).count())
+        written = () => rowCount(store.answers.where(col("experiment_id") === experimentId)))
     }
 
   // ---------------------------------------------------------- judging
@@ -236,8 +239,8 @@ object Jobs {
           .select("id", "answer_id", "judge_model", "judgment_text", "score",
             "input_tokens", "output_tokens", "created_at", "experiment_id"),
         append = store.appendJudgments,
-        written = () => store.liveJudgments(Some(experimentId))
-          .where(col("judge_model") === judgeModel).count())
+        written = () => rowCount(store.liveJudgments(Some(experimentId))
+          .where(col("judge_model") === judgeModel)))
     }
 
   /** DELETE /{id}/answers (routers/generation.py:73-84): drop the

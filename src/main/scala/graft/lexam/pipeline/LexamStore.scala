@@ -37,8 +37,29 @@ import graft.sources.Table
   * stamp. A write through this store installs the rows it wrote, as a
   * stated read would return them, with the stamp taken after the swap —
   * the next read sees it without a Spark job.
+  *
+  * The store runs every read, write and job in a session of its own,
+  * `spark`, which evaluates interpreted: no expression or whole-stage
+  * code is generated at runtime. It is derived from the caller's session
+  * (`newSession()` over the same SparkContext, extensions and shared
+  * state, then every modifiable SQL conf the caller has set), and the
+  * caller's session is not modified. Every frame the store hands out
+  * belongs to this session, so `Api`, `Jobs` and the analytics evaluate
+  * interpreted too; join store frames only with store frames. Why: the
+  * LEXam calls plan small queries over KB–MB tables, where compiling a
+  * query costs more than running it. One cold perfbench `lexam_session`
+  * JVM (seed 1) compiled 365 Janino classes (5.7 s of compile time)
+  * with codegen and 39 (1.3 s) with the store interpreted; Spark's
+  * codegen cache holds 100 classes, fewer than one session compiles, so
+  * a warm session would recompile them all. On 4 cores, over 10
+  * alternating parent/change pairs (seeds 1–10), the median
+  * `op_gmean_ms` fell from 1206 to 910 ms and `cycle_p50_s` from 30.3
+  * to 22.2 s, with every pinned digest and every endpoint's job count
+  * unchanged.
   */
-class LexamStore(val spark: SparkSession, val baseDir: String) {
+class LexamStore(caller: SparkSession, val baseDir: String) {
+  /** The store's own session; see the class doc. */
+  val spark: SparkSession = LexamStore.interpreted(caller)
   import spark.implicits._
 
   /** In-process write lock: concurrent jobs (JobRunner) may mutate the
@@ -303,6 +324,18 @@ class LexamStore(val spark: SparkSession, val baseDir: String) {
 object LexamStore {
   import org.apache.spark.sql.Column
   import org.apache.spark.sql.functions.lit
+  import org.apache.spark.sql.internal.SQLConf
+
+  /** A new session over `caller`'s context, with every modifiable SQL
+    * conf `caller` has set, that generates no code at runtime: in Spark
+    * 4.1 the factory mode `NO_CODEGEN` turns off expression codegen and
+    * whole-stage codegen (`CollapseCodegenStages` checks it). */
+  private def interpreted(caller: SparkSession): SparkSession = {
+    val s = caller.newSession()
+    caller.conf.getAll.foreach { case (k, v) => if (caller.conf.isModifiable(k)) s.conf.set(k, v) }
+    s.conf.set(SQLConf.CODEGEN_FACTORY_MODE.key, "NO_CODEGEN")
+    s
+  }
 
   /** `s` as DDL with every column nullable, the way parquet reads it. */
   private def ddl(s: StructType): String =

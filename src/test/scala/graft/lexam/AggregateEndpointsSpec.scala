@@ -124,7 +124,7 @@ class AggregateEndpointsSpec extends AnyFunSuite {
         Some(() => EarlierForms.judgeSummary(s, 1L))),
       ("list_experiments", 5, () => Api.listExperiments(s),
         Some(() => EarlierForms.listExperiments(s))),
-      ("generation+judging", 26, () => generateAndJudge(), None))
+      ("generation+judging", 24, () => generateAndJudge(), None))
     calls.foreach { case (_, _, call, before) => call(); before.foreach(_()) } // warm up
     calls.foreach { case (ep, bound, call, before) =>
       val got = jobs(call())

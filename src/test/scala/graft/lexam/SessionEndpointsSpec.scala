@@ -143,7 +143,7 @@ class SessionEndpointsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       "get_experiment" -> (() => Api.getExperiment(s, 1L)),
       "question_count" -> (() => Api.questionCount(s, FilterConfig(language = Seq("en")))))
     for ((ep, call) <- calls) {
-      val plans = executedPlans(call())
+      val plans = executedPlans(s.spark)(call())
       assert(plans.nonEmpty, s"$ep ran no query")
       val ranged = plans.flatMap(p => collectWithSubqueries(p) {
         case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
@@ -152,11 +152,12 @@ class SessionEndpointsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
   }
 
-  /** The executed plans of the queries `body` runs, seen by a
-    * [[QueryExecutionListener]]. The listener bus delivers them after
-    * the action returns, so a marker query run after `body` is waited
-    * for: every earlier query has been delivered by then. */
-  private def executedPlans(body: => Any) = {
+  /** The executed plans of the queries `body` runs in `session`, seen by
+    * a [[QueryExecutionListener]] (a session's listeners see only its own
+    * queries). The listener bus delivers them after the action returns,
+    * so a marker query run after `body` is waited for: every earlier
+    * query has been delivered by then. */
+  private def executedPlans(session: org.apache.spark.sql.SparkSession)(body: => Any) = {
     val marker = "plan-shape-marker-" + java.util.UUID.randomUUID
     val seen = mutable.ArrayBuffer[org.apache.spark.sql.execution.SparkPlan]()
     val done = new CountDownLatch(1)
@@ -166,13 +167,13 @@ class SessionEndpointsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         else seen.synchronized(seen += qe.executedPlan)
       override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    spark.listenerManager.register(listener)
+    session.listenerManager.register(listener)
     try {
       body
-      spark.range(1).select(lit(marker)).collect()
+      session.range(1).select(lit(marker)).collect()
       assert(done.await(60, TimeUnit.SECONDS), "marker query not seen")
       seen.synchronized(seen.toList)
-    } finally spark.listenerManager.unregister(listener)
+    } finally session.listenerManager.unregister(listener)
   }
 }
 
